@@ -129,11 +129,12 @@ object SparkEntry {
       TranscriptPipeline.routed(t(s, dir))
         .select("conv_id", "turn_idx", "sink", "text", "doc_id")),
 
-    // --- snapshot-table end-to-end: run the CHECKPOINTED pipeline (staged
-    //     fan-out → per-sink snapshot commits → offsets MERGE → commit-log
-    //     ack) to a scratch root, then read the per-sink counts BACK through
-    //     the read-committed view — the whole table-format protocol inside
-    //     the oracle gate, not just the declarative plan ---
+    // --- snapshot-table end-to-end: run the CHECKPOINTED pipeline (one
+    //     staged fan-out for every group → one offsets MERGE → per group:
+    //     sink snapshot commits, then the commit-log ack) to a scratch root,
+    //     then read the per-sink counts BACK through the read-committed view
+    //     — the whole table-format protocol inside the oracle gate, not just
+    //     the declarative plan ---
     "q_snapshot_sinks" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-q-snap").toString
       graft.pipeline.PipelineRunner.run(t(s, dir), root, groups = 2)

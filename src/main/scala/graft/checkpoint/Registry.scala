@@ -3,6 +3,7 @@ package graft.checkpoint
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
 
 /** Checkpoint registry — the Spark-native rebuild of Filebeat's registrar
   * (filebeat/registrar/registrar.go:139-214) and the filestream cursor store
@@ -13,23 +14,29 @@ import org.apache.spark.sql.functions.lit
   *   <root>/sinks/<sink>/     one snapshot table per sink (append-only)
   *   <root>/registry/         offsets table — per-partition high-water marks,
   *                            updated by copy-on-write MERGE INTO on
-  *                            partition_key
+  *                            partition_key, once per run
   *   <root>/commits/          the pipeline commit log — one lineage row per
   *                            group recording counts, the winning run and
   *                            the PER-SINK SNAPSHOT IDS that group produced
   * }}}
   *
-  * Per group, the protocol is:
-  *   1. append the group's rows to each sink table with txn key
+  * Per run, the protocol is:
+  *   1. stage every pending group's fan-out in ONE write under
+  *      [[stagingRunDir]] (`group=<g>/sink=<s>` — each group's slice is
+  *      [[stagingGroupDir]]);
+  *   2. MERGE the offsets of all pending groups into the registry table
+  *      ONCE, without a txn key — a group's offsets stay invisible until its
+  *      ack (see [[registry]]), and a resume re-merges identical rows;
+  * then per group:
+  *   3. append the group's rows to each sink table with txn key
   *      `group-<g>` — idempotent: a retry or a racing runner gets
   *      `alreadyCommitted` with the original snapshot id, never a duplicate;
-  *   2. MERGE the group's offsets into the registry table (same txn key);
-  *   3. append the lineage row to the commit log (same txn key) — THE ack
+  *   4. append the lineage row to the commit log (same txn key) — THE ack
   *      point (reference registrar persists offsets only after the output
   *      ACKs, filebeat/beater/acker.go:37-68). Exactly one runner's append
   *      wins; the loser reports defeat and cleans its staging.
   *
-  * Crash between 1 and 3 (a PARTIAL sink commit) reconciles on resume: the
+  * Crash between 3 and 4 (a PARTIAL sink commit) reconciles on resume: the
   * group is absent from the commit log so it re-runs, and each sink table's
   * txn key turns the re-append into a no-op returning the crashed run's
   * snapshot id — effectively-once without ever scanning data.
@@ -64,22 +71,35 @@ final class Registry(root: String, spark: SparkSession,
   def markerRun(group: Int): Option[String] =
     commitLog.snapshotForTxn(txnKey(group)).map(_.run)
 
-  /** this runner's private staging dir for a group's fan-out write. */
-  def stagingGroupDir(group: Int): String =
-    s"$root/_staging/run=$runId/group=$group"
+  /** this runner's private staging dir: the run's single fan-out write
+    * lands here, partitioned by group and sink. */
+  def stagingRunDir: String = s"$root/_staging/run=$runId"
 
-  /** step 1: commit one sink's staged slice of the group into its table. */
-  def commitSinkStaged(sink: String, group: Int,
-                       stagedDir: String): SnapshotTable.CommitResult =
-    sinkTable(sink).commitStagedDir(stagedDir, Some(txnKey(group)))
+  /** one group's slice of the run's staged fan-out. */
+  def stagingGroupDir(group: Int): String = s"$stagingRunDir/group=$group"
 
-  /** step 2: MERGE the group's offset rows into the registry table —
-    * partition_key is the merge key, so a re-run of a conversation's data
-    * advances its high-water mark instead of duplicating the row. */
+  /** step 3: commit one sink's staged slice of the group into its table
+    * (`schema`: the staged files' schema, recorded so reads skip
+    * inference). */
+  def commitSinkStaged(sink: String, group: Int, stagedDir: String,
+                       schema: Option[StructType] = None): SnapshotTable.CommitResult =
+    sinkTable(sink).commitStagedDir(stagedDir, Some(txnKey(group)), schema)
+
+  /** step 2: MERGE offset rows (any mix of groups, each row carrying its
+    * `group`) into the registry table — partition_key is the merge key, so
+    * a re-run of a conversation's data advances its high-water mark
+    * instead of duplicating the row. No txn key: rows of unacked groups
+    * are invisible through [[registry]], and a resume re-merges the same
+    * rows. */
+  def mergeOffsets(offsets: DataFrame): SnapshotTable.CommitResult =
+    offsetsTable.merge(offsets, Seq("partition_key"), None)
+
+  /** one group's offsets under its txn key — a retry of the same group is
+    * `alreadyCommitted`. */
   def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult =
     offsetsTable.merge(offsets, Seq("partition_key"), Some(txnKey(group)))
 
-  /** step 3 — the ACK: append the group's lineage row (counts + per-sink
+  /** step 4 — the ACK: append the group's lineage row (counts + per-sink
     * snapshot ids, under this runner's fence) to the commit log. Returns
     * true when THIS run owns the group afterwards; false when a concurrent
     * runner's append won — the caller lost and must not count the group. */
@@ -93,20 +113,30 @@ final class Registry(root: String, spark: SparkSession,
   /** drop this runner's staged files for a group (post-commit or defeat). */
   def cleanupStaging(group: Int): Unit = {
     fs.delete(new Path(stagingGroupDir(group)), true)
-    // drop the now-empty scope dirs so a finished runner leaves no residue.
-    // The empty-check + non-recursive delete races a CONCURRENT runner
-    // creating its own staging underneath (check-then-act); losing that race
-    // just means the shared dir survives — never fail the finishing runner.
-    Seq(new Path(s"$root/_staging/run=$runId"), new Path(s"$root/_staging"))
-      .foreach { d =>
-        try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
-        catch { case _: java.io.IOException => () }
-      }
+    dropEmptyScopes()
   }
+
+  /** drop ALL of this runner's staging — the end of a run, finished or not
+    * (the fan-out write's `_SUCCESS` marker keeps the run dir non-empty
+    * after every group is cleaned, and a failed run leaves unacked groups). */
+  def cleanupRunStaging(): Unit = {
+    fs.delete(new Path(stagingRunDir), true)
+    dropEmptyScopes()
+  }
+
+  /** drop the now-empty scope dirs so a finished runner leaves no residue.
+    * The empty-check + non-recursive delete races a CONCURRENT runner
+    * creating its own staging underneath (check-then-act); losing that race
+    * just means the shared dir survives — never fail the finishing runner. */
+  private def dropEmptyScopes(): Unit =
+    Seq(new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
+      try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+      catch { case _: java.io.IOException => () }
+    }
 
   /** All committed registry rows (the queryable "registrar state"): the
     * offsets table's current snapshot, gated on the commit log — offsets
-    * MERGE in step 2, the ack lands in step 3, and a crash in between must
+    * MERGE in step 2, the ack lands in step 4, and a crash in between must
     * not surface a group's offsets before its sinks are acked (the
     * registrar invariant: offsets persist only after the output ACKs,
     * filebeat/beater/acker.go:37-68). */

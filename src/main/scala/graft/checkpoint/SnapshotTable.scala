@@ -2,8 +2,10 @@ package graft.checkpoint
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A minimal, from-scratch SNAPSHOT TABLE FORMAT — the Iceberg metadata
   * pattern (immutable data files + a versioned metadata pointer advanced by
@@ -38,7 +40,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Snapshot isolation: readers resolve the largest committed version and
   * read EXACTLY the files it lists — concurrent writers never perturb an
   * in-flight read, and a killed writer's staged files are garbage, not
-  * corruption.
+  * corruption. Each version also records the files' Spark schema, so a
+  * read resolves from metadata instead of running a schema-inference job.
   *
   * Transactional idempotence: a commit may carry a `txn` key. The metadata
   * records every committed txn key; a commit whose key is already present
@@ -165,12 +168,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   private def buildMeta(prev: TableState, snap: SnapshotInfo,
                         manifests: Seq[ManifestRef],
-                        files: Seq[FileEntry]): ObjectNode = {
+                        files: Seq[FileEntry],
+                        schema: Option[StructType]): ObjectNode = {
     val doc = Mapper.createObjectNode()
     doc.put("format", "graft-snapshot-v1")
     doc.put("version", prev.version + 1)
     doc.put("snapshot_id", snap.id)
     prev.snapshotId.foreach(doc.put("parent_snapshot_id", _))
+    schema.foreach(t => doc.put("schema", t.json))
     if (manifests.nonEmpty) {
       val mArr = doc.putArray("manifests")
       manifests.foreach { m =>
@@ -202,10 +207,18 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   private def absolute(files: Seq[FileEntry]): Seq[String] =
     files.map(f => new Path(root, f.path).toString)
 
+  /** read `files` as a DataFrame. With the version's recorded `schema` the
+    * read resolves without Spark's parquet schema inference, which costs a
+    * footer-reading job per read; a version without one (written before
+    * schemas were recorded, or holding files of no known schema) falls back
+    * to inference. */
+  private def load(files: Seq[FileEntry], schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(absolute(files): _*)
+
   /** snapshot-isolated read of the current table state. None when empty. */
   def read(): Option[DataFrame] = {
     val st = state()
-    if (st.files.isEmpty) None else Some(spark.read.parquet(absolute(st.files): _*))
+    if (st.files.isEmpty) None else Some(load(st.files, st.schema))
   }
 
   /** read ONLY the files added by snapshots whose txn key passes `admit`
@@ -217,7 +230,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val files = st.snapshots
       .filter(s => s.operation == "append" && s.txn.forall(admit))
       .flatMap(_.added)
-    if (files.isEmpty) None else Some(spark.read.parquet(absolute(files): _*))
+    if (files.isEmpty) None else Some(load(files, st.schema))
   }
 
   def snapshotForTxn(txn: String): Option[SnapshotInfo] =
@@ -249,7 +262,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * read-as-of-snapshot — resolve ids via [[readSnapshot]]. */
   def readVersion(version: Long): Option[DataFrame] =
     stateAt(version).filter(_.files.nonEmpty)
-      .map(st => spark.read.parquet(absolute(st.files): _*))
+      .map(st => load(st.files, st.schema))
 
   /** read the table as of the commit that produced `snapshotId` (the id
     * recorded in sink lineage rows and [[CommitResult]]s). */
@@ -265,15 +278,18 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * append snapshot. Files become visible atomically at the CAS. The
     * txn pre-check runs BEFORE the move, so a resumed group's re-commit
     * never churns files through data/ (and cannot strand them if the
-    * process dies before the already-committed branch cleans up). */
-  def commitStagedDir(stagedDir: String, txn: Option[String]): CommitResult = {
+    * process dies before the already-committed branch cleans up).
+    * `schema` is the staged files' Spark schema, when the caller knows it;
+    * without it the table records none and reads infer. */
+  def commitStagedDir(stagedDir: String, txn: Option[String],
+                      schema: Option[StructType] = None): CommitResult = {
     state() match {
       case st if txn.exists(st.txnKeys.contains) =>
         return alreadyCommittedResult(st, txn.get)
       case _ =>
     }
     val staged = listParquet(fs, new Path(stagedDir))
-    commitMoved(moveIn(staged), txn)
+    commitMoved(moveIn(staged), txn, schema.map(asNullable))
   }
 
   /** append a DataFrame as one snapshot (stages through a temp dir). */
@@ -285,44 +301,68 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     }
     val tmp = new Path(root, s"_tmp-append-$runId-${java.util.UUID.randomUUID()}")
     df.write.mode("overwrite").parquet(tmp.toString)
-    val res = commitMoved(moveIn(listParquet(fs, tmp)), txn)
+    val res = commitMoved(moveIn(listParquet(fs, tmp)), txn, Some(asNullable(df.schema)))
     fs.delete(tmp, true)
     res
   }
 
   /** MERGE INTO (copy-on-write): rows of `df` replace current rows with the
     * same `keys` values; everything else survives. The committed snapshot's
-    * file list REPLACES the table contents. Retries recompute the merge
-    * against the fresh state, so concurrent mergers serialize correctly. */
+    * file list REPLACES the table contents.
+    *
+    * `df` is evaluated exactly ONCE: it is staged and moved under data/
+    * first (invisible until the CAS lists it), and the survivors are the
+    * current rows anti-joined against the STAGED keys, cast to the incoming
+    * schema so every file of the snapshot agrees. The snapshot adds
+    * incoming + survivors. A CAS retry reuses the staged incoming files and
+    * recomputes only the survivors against the fresh state, so concurrent
+    * mergers serialize correctly without re-running `df`'s plan. */
   def merge(df: DataFrame, keys: Seq[String], txn: Option[String]): CommitResult = {
+    val pre = state() // cheap pre-check: a retry of a committed txn stages nothing
+    txn.filter(pre.txnKeys.contains).foreach(t => return alreadyCommittedResult(pre, t))
+    val incoming = stageIn(df)
+    val inSchema = asNullable(df.schema)
+    def discard(files: Seq[FileEntry]): Unit =
+      files.foreach(f => fs.delete(new Path(root, f.path), false))
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       val st = state()
       txn.filter(st.txnKeys.contains).foreach { t =>
+        discard(incoming)
         return alreadyCommittedResult(st, t)
       }
-      val merged = if (st.files.isEmpty) df else {
-        val cur = spark.read.parquet(absolute(st.files): _*)
-        df.unionByName(
-          cur.join(df.select(keys.map(org.apache.spark.sql.functions.col): _*)
-            .distinct(), keys, "left_anti"))
+      val survivors = if (st.files.isEmpty) Seq.empty else {
+        val cur = load(st.files, st.schema)
+        val rows = if (incoming.isEmpty) cur else {
+          val in = load(incoming, Some(inSchema))
+          cur.join(in.select(keys.map(col): _*).distinct(), keys, "left_anti")
+            .select(in.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+        }
+        stageIn(rows)
       }
-      val tmp = new Path(root, s"_tmp-merge-$runId-$attempt-${java.util.UUID.randomUUID()}")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      val moved = moveIn(listParquet(fs, tmp))
-      fs.delete(tmp, true)
-      val snap = SnapshotInfo(newSnapId(st), runId, txn, "merge", moved)
-      val (refs, inline, written) = planFiles(st, moved, replace = true)
-      if (casCommit(st, buildMeta(st, snap, refs, inline)))
+      val added = incoming ++ survivors
+      val snap = SnapshotInfo(newSnapId(st), runId, txn, "merge", added)
+      val (refs, inline, written) = planFiles(st, added, replace = true)
+      val schema = if (incoming.isEmpty) st.schema else Some(inSchema)
+      if (casCommit(st, buildMeta(st, snap, refs, inline, schema)))
         return CommitResult(snap.id, alreadyCommitted = false,
-          moved.map(_.size).sum, moved.size)
-      moved.foreach(f => fs.delete(new Path(root, f.path), false)) // lost: retry
+          added.map(_.size).sum, added.size)
+      discard(survivors) // lost: retry against the new state
       written.foreach(p => fs.delete(new Path(root, p), false))
       attempt += 1
     }
+    discard(incoming)
     throw new java.io.IOException(
       s"merge into $root failed after $MaxCommitAttempts CAS attempts — " +
         "the metadata pointer is not advancing (filesystem fault?)")
+  }
+
+  /** write `df` through a private temp dir and move its files under data/
+    * (referenced by no version until a commit lists them). */
+  private def stageIn(df: DataFrame): Seq[FileEntry] = {
+    val tmp = new Path(root, s"_tmp-merge-$runId-${java.util.UUID.randomUUID()}")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    try moveIn(listParquet(fs, tmp)) finally fs.delete(tmp, true)
   }
 
   /** Maintenance: expire old table versions — the Iceberg expire_snapshots
@@ -332,7 +372,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * predecessors' files — this is what reclaims them). Returns the number
     * of data files deleted. Run as a maintenance job, never concurrently
     * with readers that may still be resolving an expired version; writers
-    * are unaffected (they CAS against the newest version only). Note
+    * are unaffected (they CAS against the newest version only, and a
+    * staging dir survives while anything under it is younger than
+    * `orphanGraceMs`). Note
     * [[readCommittedTxns]] is an append-only-table view: on such tables
     * every snapshot's added files are still in the current file list, so
     * expiry never deletes files that view can reach. */
@@ -389,17 +431,27 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     // staging directory (_tmp-append-*/_tmp-merge-*) was consumed. Never
     // referenced by any version, so only the age grace gates deletion —
     // without this pass a crashed writer's staged parquet (potentially the
-    // size of a whole commit) accumulates forever.
+    // size of a whole commit) accumulates forever. A staging DIRECTORY is
+    // aged by the newest entry under it, not by its own mtime: a live
+    // append/merge keeps writing fresh files into a dir created long ago.
     fs.listStatus(metaDir).foreach { f =>
       if (f.getPath.getName.startsWith(".tmp-") && f.getModificationTime < cutoff)
         fs.delete(f.getPath, false)
     }
     fs.listStatus(new Path(root)).foreach { f =>
-      if (f.getPath.getName.startsWith("_tmp-") && f.getModificationTime < cutoff)
+      if (f.getPath.getName.startsWith("_tmp-") && newestMtime(f) < cutoff)
         fs.delete(f.getPath, true)
     }
     deleted
   }
+
+  /** newest modification time of `f` and everything under it. A path that
+    * vanishes mid-walk belongs to a writer that just finished: report it as
+    * fresh so the caller leaves it alone. */
+  private def newestMtime(f: FileStatus): Long =
+    if (!f.isDirectory) f.getModificationTime
+    else try (f.getModificationTime +: fs.listStatus(f.getPath).map(newestMtime)).max
+    catch { case _: java.io.FileNotFoundException => Long.MaxValue }
 
   // ------------------------------------------------------------- internals
 
@@ -426,7 +478,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   /** append pre-moved files with txn idempotence via the CAS loop. */
-  private def commitMoved(moved: Seq[FileEntry], txn: Option[String]): CommitResult = {
+  private def commitMoved(moved: Seq[FileEntry], txn: Option[String],
+                          movedSchema: Option[StructType]): CommitResult = {
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
@@ -439,7 +492,12 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       }
       val snap = SnapshotInfo(newSnapId(st), runId, txn, "append", moved)
       val (refs, inline, written) = planFiles(st, moved, replace = false)
-      if (casCommit(st, buildMeta(st, snap, refs, inline)))
+      // recorded only while every listed file agrees; otherwise reads infer
+      val schema =
+        if (moved.isEmpty) st.schema
+        else if (st.files.isEmpty) movedSchema
+        else st.schema.filter(movedSchema.contains)
+      if (casCommit(st, buildMeta(st, snap, refs, inline, schema)))
         return CommitResult(snap.id, alreadyCommitted = false,
           moved.map(_.size).sum, moved.size)
       written.foreach(p => fs.delete(new Path(root, p), false))
@@ -505,11 +563,15 @@ object SnapshotTable {
   final case class SnapshotInfo(id: String, run: String, txn: Option[String],
                                 operation: String, added: Seq[FileEntry])
 
+  /** `schema`: the data files' Spark schema, recorded at commit so reads
+    * skip inference; None when some listed file's schema is unknown or
+    * differs. */
   final case class TableState(version: Long, snapshotId: Option[String],
                               files: Seq[FileEntry],
                               txnKeys: Map[String, String],
                               snapshots: Seq[SnapshotInfo],
-                              manifestRefs: Seq[ManifestRef] = Seq.empty)
+                              manifestRefs: Seq[ManifestRef] = Seq.empty,
+                              schema: Option[StructType] = None)
   object TableState {
     val Empty: TableState = TableState(0L, None, Seq.empty, Map.empty, Seq.empty)
   }
@@ -518,6 +580,18 @@ object SnapshotTable {
                                 addedBytes: Long, addedFiles: Int)
 
   private val Mapper = new ObjectMapper()
+
+  /** the schema a parquet read infers for data written with schema `t`:
+    * file reads make every field nullable, at every depth */
+  private def asNullable(t: StructType): StructType = nullable(t).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
@@ -566,7 +640,8 @@ object SnapshotTable {
     }.getOrElse(Seq.empty)
     TableState(doc.get("version").asLong(),
       Option(doc.get("snapshot_id")).map(_.asText()),
-      fileEntries(doc.get("files")), txn, snaps, manifests)
+      fileEntries(doc.get("files")), txn, snaps, manifests,
+      Option(doc.get("schema")).map(n => DataType.fromJson(n.asText()).asInstanceOf[StructType]))
   }
 
   /** parse a manifest file: {"entries":[{path,size}…]}. */

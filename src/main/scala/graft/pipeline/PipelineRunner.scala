@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.Registry
 import graft.model.Sinks
@@ -11,31 +12,37 @@ import graft.model.Sinks
   * ACK → registrar) rebuilt on Spark's batch model:
   *
   *  - the input is split into `groups` conv_id-bucket groups (the analogue of
-  *    queue batches, libbeat/publisher/queue/memqueue/broker.go:114-184);
-  *    each group is processed and committed independently, so a kill between
-  *    groups loses no acknowledged work
-  *  - per-group: ONE transform pass fans out to sink_es / sink_ls / dropped
-  *    via a dynamic `partitionBy(sink)` parquet write with observe()-attached
-  *    per-sink counters (sortWithinPartitions(sink, conv_id, turn_idx) so the
-  *    north-rule per-turn ordering is physically materialized — never a
-  *    global sort); each sink's slice then commits as a SNAPSHOT into that
-  *    sink's table, the offsets MERGE INTO the registry table, and the
-  *    lineage row (counts + per-sink snapshot ids) appends to the commit
-  *    log — the ACK (see [[graft.checkpoint.Registry]] for the protocol and
+  *    queue batches, libbeat/publisher/queue/memqueue/broker.go:114-184).
+  *    `groups` sets only the COMMIT granularity: every run reads the input a
+  *    fixed number of times, however many groups it has, and each group then
+  *    acks independently
+  *  - per run, two input passes: ONE transform pass fans out every pending
+  *    group to sink_es / sink_ls / dropped via a dynamic
+  *    `partitionBy(group, sink)` parquet write with observe()-attached
+  *    per-(group, sink) counters (sortWithinPartitions(group, sink, conv_id,
+  *    turn_idx) so the north-rule per-turn ordering is physically
+  *    materialized — never a global sort); and ONE status-only pass whose
+  *    per-conversation offsets MERGE INTO the registry table once
+  *  - per group: each sink's staged slice commits as a SNAPSHOT into that
+  *    sink's table, then the lineage row (counts + per-sink snapshot ids)
+  *    appends to the commit log — the ACK (see
+  *    [[graft.checkpoint.Registry]] for the protocol and
   *    [[graft.checkpoint.SnapshotTable]] for the table format)
-  *  - resume = rerun the same command; acked groups are skipped (filebeat
-  *    registrar semantics: offsets persisted only after ACK,
-  *    filebeat/beater/acker.go:37-68); a crash between a sink's snapshot
-  *    commit and the group ack reconciles through the per-table txn keys —
-  *    the re-append is a no-op returning the crashed run's snapshot id →
-  *    effectively-once end-to-end, even across PARTIAL sink commits
+  *  - a kill during the fan-out or the offsets merge loses that run's
+  *    unacked work; a kill between group acks loses nothing acked. Resume =
+  *    rerun the same command; acked groups are skipped and only the pending
+  *    buckets are read (filebeat registrar semantics: offsets visible only
+  *    after ACK, filebeat/beater/acker.go:37-68); a crash between a sink's
+  *    snapshot commit and the group ack reconciles through the per-table txn
+  *    keys — the re-append is a no-op returning the crashed run's snapshot
+  *    id → effectively-once end-to-end, even across PARTIAL sink commits
   *  - CONCURRENT runners on the same root are safe: staged files carry
   *    run-unique names and every commit is an optimistic CAS with txn-key
   *    idempotence; the commit-log append decides the winner per group and
   *    the loser cleans its staging (PipelineRunnerSpec races two runners)
   *
-  * At cluster scale each group is a full distributed job over one bucket
-  * range; `groups` trades failure-domain granularity against job overhead
+  * Batches are cut from one harvest, not re-read per batch; `groups`
+  * trades failure-domain granularity against per-group commit overhead
   * (reference flush-coalescing, registrar.go:160-190).
   */
 object PipelineRunner {
@@ -58,90 +65,100 @@ object PipelineRunner {
           failAfterGroup: Int = Int.MaxValue): Seq[GroupResult] = {
     val spark = input.sparkSession
     val reg = new Registry(root, spark)
-    val bucketed = input.withColumn("_grp", bucketCol(groups))
+    val pending = (0 until groups).filterNot(reg.isCommitted)
+    if (pending.isEmpty) return Seq.empty
+    val pendingInput =
+      if (pending.size == groups) input
+      else input.filter(bucketCol(groups).isin(pending: _*))
 
-    val results = scala.collection.mutable.ArrayBuffer.empty[GroupResult]
-    var done = 0
-    for (g <- 0 until groups if !reg.isCommitted(g)) {
-      val slice = bucketed.filter(col("_grp") === g).drop("_grp")
-      // ONE pass over the transformed group (no persist — at 100 TB a
-      // MEMORY_AND_DISK persist is a full extra copy of the group):
-      // dynamic fan-out write partitioned by sink (outil selector fan-out,
-      // libbeat/outputs/outil/select.go:90-93), with the per-sink counts
-      // attached to the SAME job via observe() accumulators, so counting
-      // costs no extra scan. `filtered` rows are counted but never written
-      // (monitoring.go:139). The sortWithinPartitions leads with `sink` so
-      // the dynamic-partition writer's required task ordering is already
-      // satisfied (no extra sort inserted) and rows inside each sink file
-      // stay in the north-rule (conv_id, turn_idx) order.
+    try {
+      // pass 1 — ONE fan-out job over every pending group (no persist — at
+      // 100 TB a MEMORY_AND_DISK persist is a full extra copy of the input):
+      // dynamic write partitioned by group and sink (outil selector
+      // fan-out, libbeat/outputs/outil/select.go:90-93), with the
+      // per-(group, sink) counts attached to the SAME job via observe()
+      // accumulators, so counting costs no extra scan. `filtered` rows are
+      // counted but never written (monitoring.go:139). The group column is
+      // added AFTER transform (parse projects away extra columns), and the
+      // sortWithinPartitions leads with (group, sink) so the dynamic-partition
+      // writer's required task ordering is already satisfied (no extra sort
+      // inserted) and rows inside each file stay in the north-rule
+      // (conv_id, turn_idx) order. Files land in this run's private staging
+      // and become table-visible only at each sink's snapshot commit below.
       val obs = org.apache.spark.sql.Observation()
       val sinkNames = Sinks.All :+ TranscriptPipeline.Filtered
-      val countCols = sinkNames.map(s =>
-        sum(when(col("sink") === s, 1L).otherwise(0L)).as(s))
-      // the fan-out write stages into THIS run's private directory; files
-      // become table-visible only at each sink's snapshot commit below
-      val staging = reg.stagingGroupDir(g)
-      TranscriptPipeline.transform(slice)
+      def counter(g: Int, s: String) = s"$g/$s"
+      val countCols = for (g <- pending; s <- sinkNames) yield
+        sum(when(col("group") === g && col("sink") === s, 1L).otherwise(0L))
+          .as(counter(g, s))
+      val fanout = TranscriptPipeline.transform(pendingInput)
+        .withColumn("group", bucketCol(groups))
         .observe(obs, countCols.head, countCols.tail: _*)
         .filter(col("sink") =!= TranscriptPipeline.Filtered)
-        .sortWithinPartitions("sink", "conv_id", "turn_idx")
-        .write.mode("overwrite").partitionBy("sink")
-        .parquet(staging)
-      val counts = {
-        val m = obs.get
-        sinkNames.map(s => s -> m(s).asInstanceOf[Long])
+        .sortWithinPartitions("group", "sink", "conv_id", "turn_idx")
+      fanout.write.mode("overwrite").partitionBy("group", "sink")
+        .parquet(reg.stagingRunDir)
+      // the staged files hold every column but the partition columns
+      val stagedSchema = StructType(fanout.schema.filterNot(f => f.name == "group" || f.name == "sink"))
+      val observed = obs.get
+      val counts = pending.map { g =>
+        g -> sinkNames.map(s => s -> observed(counter(g, s)).asInstanceOf[Long])
           .filter(_._2 > 0).toMap
-      }
-
-      // snapshot-commit each sink's staged slice (txn key = the group, so a
-      // crashed run's partial commits reconcile to no-ops on resume)
-      val sinkSnaps = Sinks.All.flatMap { s =>
-        val dir = s"$staging/sink=$s"
-        if (counts.getOrElse(s, 0L) > 0)
-          Some(s -> reg.commitSinkStaged(s, g, dir))
-        else None
       }.toMap
 
-      // offsets/lineage rows (file.State analogue): a second, CHEAP pass via
-      // the status-only routing fast path — identical sink decision to the
-      // full transform (pinned by PipelineSpec) without the 13-field
-      // extraction, so the group is never materialized twice at full width
-      val offsets = TranscriptPipeline.sinkFast(slice)
-        .groupBy(col("conv_id").as("partition_key"))
+      // pass 2 — offsets rows (file.State analogue) for every pending group
+      // via the status-only routing fast path — identical sink decision to
+      // the full transform (pinned by PipelineSpec) without the 13-field
+      // extraction — merged into the registry ONCE. Invisible until each
+      // group's ack: Registry.registry() reads through the commit log.
+      val offsets = TranscriptPipeline.sinkFast(pendingInput)
+        .groupBy(col("conv_id").as("partition_key"), bucketCol(groups).as("group"))
         .agg(max("turn_idx").as("max_turn_idx"),
           count(lit(1)).as("row_count"),
           sum(when(col("sink") === TranscriptPipeline.Filtered, 1L).otherwise(0L)).as("filtered"),
           sum(when(col("sink") === Sinks.Dropped, 1L).otherwise(0L)).as("dropped"))
-        .withColumn("group", lit(g))
+        .select("partition_key", "max_turn_idx", "row_count", "filtered",
+          "dropped", "group")
         .withColumn("committed_at", current_timestamp())
-      reg.mergeOffsets(g, offsets)
+      reg.mergeOffsets(offsets)
 
-      // lineage row: counts + per-write output stats (bytes/files per sink —
-      // the reference's per-output-worker metrics, libbeat/outputs/metrics.go,
-      // read straight off the snapshot metadata) + the PER-SINK SNAPSHOT IDS
-      // this group produced, so any historical pipeline state can be
-      // reconstructed table-version by table-version
-      val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
-      val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val bytesJson = writeStats
-        .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
-        .mkString("{", ",", "}")
-      val snapsJson = sinkSnaps
-        .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
-        .mkString("{", ",", "}")
-      val won = reg.commitGroup(g,
-        s"""{"group":$g,"counts":$lineage,"writes":$bytesJson,"snapshots":$snapsJson}""")
-      if (won)
-        results += GroupResult(g, counts, writeStats.map { case (k, (b, _)) => k -> b })
-      // staged files were either moved into tables or discarded by the
-      // txn-key check; the scratch directory is garbage either way
-      reg.cleanupStaging(g)
+      val results = scala.collection.mutable.ArrayBuffer.empty[GroupResult]
+      for ((g, i) <- pending.zipWithIndex) {
+        // snapshot-commit each sink's staged slice (txn key = the group, so a
+        // crashed run's partial commits reconcile to no-ops on resume)
+        val staging = reg.stagingGroupDir(g)
+        val sinkSnaps = Sinks.All.flatMap { s =>
+          if (counts(g).getOrElse(s, 0L) > 0)
+            Some(s -> reg.commitSinkStaged(s, g, s"$staging/sink=$s", Some(stagedSchema)))
+          else None
+        }.toMap
 
-      done += 1
-      if (done > failAfterGroup) // test hook: simulate a crash between commits
-        throw new RuntimeException(s"injected failure after group $g")
-    }
-    results.toSeq
+        // lineage row: counts + per-write output stats (bytes/files per sink —
+        // the reference's per-output-worker metrics, libbeat/outputs/metrics.go,
+        // read straight off the snapshot metadata) + the PER-SINK SNAPSHOT IDS
+        // this group produced, so any historical pipeline state can be
+        // reconstructed table-version by table-version
+        val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
+        val lineage = counts(g).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+        val bytesJson = writeStats
+          .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
+          .mkString("{", ",", "}")
+        val snapsJson = sinkSnaps
+          .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
+          .mkString("{", ",", "}")
+        val won = reg.commitGroup(g,
+          s"""{"group":$g,"counts":$lineage,"writes":$bytesJson,"snapshots":$snapsJson}""")
+        if (won)
+          results += GroupResult(g, counts(g), writeStats.map { case (k, (b, _)) => k -> b })
+        // staged files were either moved into tables or discarded by the
+        // txn-key check; the scratch directory is garbage either way
+        reg.cleanupStaging(g)
+
+        if (i >= failAfterGroup) // test hook: simulate a crash between commits
+          throw new RuntimeException(s"injected failure after group $g")
+      }
+      results.toSeq
+    } finally reg.cleanupRunStaging()
   }
 
   /** Pipeline-level metric counters over all committed groups, mirroring the

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.Registry
@@ -17,6 +18,20 @@ class PipelineRunnerSpec extends SparkSpec {
     Files.createTempDirectory("graft-runner").toString
 
   private lazy val input = Transcripts.fromEvents(spark, "/root/testdata/sf0.001").cache()
+
+  /** the runner's conv bucket, restated independently of its code */
+  private def bucket(groups: Int) =
+    pmod(abs(crc32(coalesce(col("conv_id"), lit("")))), lit(groups.toLong)).cast("int")
+
+  /** per-group `counts` of every lineage row in the commit log */
+  private def lineageCounts(root: String): Map[Int, Map[String, Long]] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    new Registry(root, spark).commitLog.read().get.collect().map { r =>
+      val counts = mapper.readTree(r.getAs[String]("lineage")).get("counts")
+      r.getAs[Int]("group") -> counts.properties().asScala
+        .map(e => e.getKey -> e.getValue.asLong()).toMap
+    }.toMap
+  }
 
   test("full run: sink fan-out + atomic commits + observer metrics parity") {
     val root = tmpDir()
@@ -67,6 +82,10 @@ class PipelineRunnerSpec extends SparkSpec {
     val reg = new Registry(rootCrash, spark)
     val committedBefore = reg.committedGroups()
     assert(committedBefore.nonEmpty && committedBefore.size < 4)
+    // the failed run still dropped its staging (unacked groups included)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(rootCrash), spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$rootCrash/_staging")))
 
     // resume: same command; previously committed groups must be skipped
     val resumed = PipelineRunner.run(input, rootCrash, groups = 4)
@@ -202,5 +221,69 @@ class PipelineRunnerSpec extends SparkSpec {
       PipelineRunner.observedMetrics(rootClean, spark))
     val es = reg.readSink(Sinks.Es).get
     assert(es.select("doc_id").distinct().count() == es.count())
+  }
+
+  test("a groups = 4 run reads its input exactly twice") {
+    // every row the input plan produces passes through the tap: one pass
+    // for the fan-out, one for the offsets — not one pair per group
+    val reads = spark.sparkContext.longAccumulator("runner-input-rows")
+    val tap = udf { () => reads.add(1); true }.asNondeterministic()
+    val results = PipelineRunner.run(input.filter(tap()), tmpDir(), groups = 4)
+    assert(results.map(_.group) == Seq(0, 1, 2, 3))
+    assert(reads.value == 2 * input.count(), s"input rows read: ${reads.value}")
+  }
+
+  test("empty buckets: fewer conversations than groups still ack every group") {
+    val root = tmpDir()
+    val conv = input.select("conv_id").where(col("conv_id").isNotNull).first().getString(0)
+    val one = input.filter(col("conv_id") === conv)
+    val n = one.count()
+    val busy = one.select(bucket(4)).first().getInt(0)
+    val results = PipelineRunner.run(one, root, groups = 4)
+    assert(results.map(_.group) == Seq(0, 1, 2, 3))
+    assert(new Registry(root, spark).committedGroups() == Seq(0, 1, 2, 3))
+    val lineage = lineageCounts(root)
+    for (g <- 0 until 4 if g != busy) {
+      assert(lineage(g).values.forall(_ == 0L), s"group $g: ${lineage(g)}")
+      assert(results(g).counts.values.forall(_ == 0L))
+    }
+    assert(lineage(busy).values.sum == n)
+    val m = PipelineRunner.observedMetrics(root, spark)
+    assert(m("events.total") == n)
+    assert(m("events.published") + m("events.filtered") + m("events.dropped") == n)
+  }
+
+  test("lineage counts and registry offsets match per-bucket oracles, clean and resumed") {
+    val expectedCounts: Map[Int, Map[String, Long]] = (0 until 4).map { g =>
+      g -> TranscriptPipeline.metrics(input.filter(bucket(4) === g)).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }.toMap
+    val expectedOffsets = input.groupBy("conv_id")
+      .agg(max("turn_idx"), count(lit(1))).collect()
+      .map(r => r.getString(0) -> ((r.getInt(1), r.getLong(2)))).toMap
+    def check(root: String): Unit = {
+      assert(lineageCounts(root) == expectedCounts)
+      val offsets = new Registry(root, spark).registry().collect().map(r =>
+        r.getAs[String]("partition_key") ->
+          ((r.getAs[Int]("max_turn_idx"), r.getAs[Long]("row_count")))).toMap
+      assert(offsets == expectedOffsets)
+    }
+
+    val clean = tmpDir()
+    PipelineRunner.run(input, clean, groups = 4)
+    check(clean)
+
+    // resume after a crash: only the pending buckets are read, and each
+    // resumed group's counts are exactly its bucket's
+    val crashed = tmpDir()
+    intercept[RuntimeException] {
+      PipelineRunner.run(input, crashed, groups = 4, failAfterGroup = 0)
+    }
+    val acked = new Registry(crashed, spark).committedGroups()
+    assert(acked == Seq(0))
+    val resumed = PipelineRunner.run(input, crashed, groups = 4)
+    assert(resumed.map(_.group) == Seq(1, 2, 3))
+    resumed.foreach(r => assert(r.counts == expectedCounts(r.group), s"group ${r.group}"))
+    check(crashed)
   }
 }

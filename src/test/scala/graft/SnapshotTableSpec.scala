@@ -238,10 +238,12 @@ class SnapshotTableSpec extends SparkSpec {
     val staleAppend = new java.io.File(s"$root/_tmp-append-dead-writer-y")
     val staleMerge = new java.io.File(s"$root/_tmp-merge-dead-writer-z")
     staleAppend.mkdirs(); staleMerge.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(staleAppend, "part-0.parquet").toPath, Array[Byte](1, 2, 3))
+    // a dead writer's staged file is as old as its dir (staging dirs are
+    // aged by their newest entry)
+    val stalePart = new java.io.File(staleAppend, "part-0.parquet")
+    java.nio.file.Files.write(stalePart.toPath, Array[Byte](1, 2, 3))
     val old = System.currentTimeMillis() - 7200000L
-    Seq(staleMeta, staleAppend, staleMerge).foreach(_.setLastModified(old))
+    Seq(staleMeta, stalePart, staleAppend, staleMerge).foreach(_.setLastModified(old))
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     assert(!staleMeta.exists() && !staleAppend.exists() && !staleMerge.exists(),
       "aged temp debris must be reclaimed")
@@ -251,6 +253,75 @@ class SnapshotTableSpec extends SparkSpec {
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     assert(fresh.exists(), "fresh temp state is protected by the grace window")
     assert(t.read().get.count() == 1)
+  }
+
+  test("expireSnapshots keeps an aged staging dir while a fresh file is inside") {
+    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val t = new SnapshotTable(root, spark)
+    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    // a LIVE long merge: its staging dir (and the task dirs under it) were
+    // created hours ago, but a task is still writing a part file right now
+    val live = new java.io.File(s"$root/_tmp-merge-long-writer")
+    val task = new java.io.File(live, "_temporary/0")
+    task.mkdirs()
+    val part = new java.io.File(task, "part-7.parquet")
+    java.nio.file.Files.write(part.toPath, Array[Byte](1, 2, 3))
+    val old = System.currentTimeMillis() - 7200000L
+    Seq(task, task.getParentFile, live).foreach(_.setLastModified(old))
+    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
+    assert(live.exists() && part.exists(),
+      "a staging dir with a fresh file inside is a live writer's, not debris")
+    // once the newest entry ages past the grace, the dir is debris
+    part.setLastModified(old)
+    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
+    assert(!live.exists())
+    assert(t.read().get.count() == 1)
+  }
+
+  test("merge evaluates its input once, into a non-empty table") {
+    val t = tmpTable()
+    t.append(Seq(("c1", 1L), ("c2", 2L)).toDF("k", "v"), None)
+    // every row the input plan produces passes through the tap; a merge
+    // that re-ran the plan (union side + distinct-keys side) would count
+    // each row twice
+    val produced = spark.sparkContext.longAccumulator("merge-input-rows")
+    val tap = udf { (k: String) => produced.add(1); k }.asNondeterministic()
+    val df = spark.range(2, 5)
+      .select(tap(concat(lit("c"), col("id").cast("string"))).as("k"),
+        (col("id") * 10).as("v"))
+    t.merge(df, keys = Seq("k"), txn = None)
+    assert(produced.value == 3L, s"input rows produced: ${produced.value}")
+    val rows = t.read().get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rows == Map("c1" -> 1L, "c2" -> 20L, "c3" -> 30L, "c4" -> 40L))
+    val st = t.state()
+    assert(st.files.toSet == st.snapshots.last.added.toSet)
+  }
+
+  test("versions record the data schema; a doc without one still reads") {
+    val t = tmpTable()
+    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    t.merge(Seq((1, "b"), (2, "c")).toDF("id", "v"), keys = Seq("id"), txn = None)
+    val st = t.state()
+    val inferred = spark.read.parquet(st.files.map(f => s"${t.root}/${f.path}"): _*).schema
+    assert(st.schema.contains(inferred))
+    assert(t.stateAt(1).get.schema.contains(inferred))
+    assert(t.read().get.schema == inferred)
+    // a version written before schemas were recorded: reads fall back to
+    // inference (the .crc sidecar goes too, or the checksum would not match)
+    val doc = new java.io.File(s"${t.root}/metadata/v000002.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("schema")
+    mapper.writeValue(doc, node)
+    new java.io.File(s"${t.root}/metadata/.v000002.json.crc").delete()
+    assert(t.state().schema.isEmpty)
+    val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(rows == Map(1 -> "b", 2 -> "c"))
+    // files that disagree on the schema record none: reads infer
+    val u = tmpTable()
+    u.append(Seq((1, "a")).toDF("id", "v"), None)
+    u.append(Seq((2, "b", 3L)).toDF("id", "v", "w"), None)
+    assert(u.state().schema.isEmpty && u.read().get.count() == 2)
   }
 
   test("time travel window is bounded by expireSnapshots retention") {
