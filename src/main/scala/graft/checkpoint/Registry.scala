@@ -15,9 +15,12 @@ import org.apache.spark.sql.types.StructType
   *   <root>/registry/         offsets table — per-partition high-water marks,
   *                            updated by copy-on-write MERGE INTO on
   *                            partition_key, once per run
-  *   <root>/commits/          the pipeline commit log — one lineage row per
-  *                            group recording counts, the winning run and
-  *                            the PER-SINK SNAPSHOT IDS that group produced
+  *   <root>/commits/          the pipeline commit log — NO data files: one
+  *                            metadata-only snapshot per acked group (txn
+  *                            key `group-<g>`, run = the winner) whose
+  *                            summary is the group's lineage JSON: counts,
+  *                            per-sink write stats and the PER-SINK
+  *                            SNAPSHOT IDS that group produced
   * }}}
   *
   * Per run, the protocol is:
@@ -31,10 +34,13 @@ import org.apache.spark.sql.types.StructType
   *   3. append the group's rows to each sink table with txn key
   *      `group-<g>` — idempotent: a retry or a racing runner gets
   *      `alreadyCommitted` with the original snapshot id, never a duplicate;
-  *   4. append the lineage row to the commit log (same txn key) — THE ack
+  *   4. commit the group's lineage to the commit log as a METADATA-ONLY
+  *      snapshot (same txn key, lineage as the snapshot summary) — THE ack
   *      point (reference registrar persists offsets only after the output
-  *      ACKs, filebeat/beater/acker.go:37-68). Exactly one runner's append
-  *      wins; the loser reports defeat and cleans its staging.
+  *      ACKs, filebeat/beater/acker.go:37-68), and, like the registrar's,
+  *      a small state write: no data file, no Spark job. Exactly one
+  *      runner's commit wins; the loser reports defeat and cleans its
+  *      staging.
   *
   * Crash between 3 and 4 (a PARTIAL sink commit) reconciles on resume: the
   * group is absent from the commit log so it re-runs, and each sink table's
@@ -45,6 +51,10 @@ import org.apache.spark.sql.types.StructType
   * resolves through the commit log (only snapshots whose group is in the
   * log are visible), so a partially-committed group is invisible to
   * consumers until its ack lands — the cross-table read-committed view.
+  *
+  * Run bookkeeping is answered from the commit log's metadata alone:
+  * [[lineage]] returns every acked group's lineage in one metadata read,
+  * which is what the pipeline's metrics sum (O(groups), not O(data)).
   */
 final class Registry(root: String, spark: SparkSession,
                      val runId: String = Registry.newRunId()) {
@@ -99,16 +109,31 @@ final class Registry(root: String, spark: SparkSession,
   def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult =
     offsetsTable.merge(offsets, Seq("partition_key"), Some(txnKey(group)))
 
-  /** step 4 — the ACK: append the group's lineage row (counts + per-sink
-    * snapshot ids, under this runner's fence) to the commit log. Returns
-    * true when THIS run owns the group afterwards; false when a concurrent
-    * runner's append won — the caller lost and must not count the group. */
+  /** step 4 — the ACK: a metadata-only commit-log snapshot under the
+    * group's txn key whose summary is `lineageJson` (counts + per-sink
+    * write stats + snapshot ids, under this runner's fence). Writes no data
+    * file and runs no Spark job. Returns true when THIS run owns the group
+    * afterwards; false when a concurrent runner's commit won — the caller
+    * lost and must not count the group. */
   def commitGroup(group: Int, lineageJson: String): Boolean = {
-    import spark.implicits._
-    val row = Seq((group, runId, lineageJson)).toDF("group", "run", "lineage")
-    val res = commitLog.append(row, Some(txnKey(group)))
+    val res = commitLog.commitSummary(txnKey(group), lineageJson)
     !res.alreadyCommitted || markerRun(group).contains(runId)
   }
+
+  /** every acked group's lineage JSON (the summary of its commit-log
+    * snapshot), from ONE metadata read. Empty on a fresh root. A root whose
+    * acks were written before lineage summaries existed (one parquet row
+    * per ack) is refused with a named error rather than read a second way. */
+  def lineage(): Map[Int, String] =
+    commitLog.state().snapshots.flatMap { s =>
+      s.txn.filter(_.startsWith("group-")).map { t =>
+        t.stripPrefix("group-").toInt -> s.summary.getOrElse(
+          throw new IllegalStateException(
+            s"checkpoint root $root predates lineage summaries: the commit-log " +
+              s"snapshot ${s.id} acking $t carries no lineage summary; " +
+              "re-run the pipeline into a fresh root"))
+      }
+    }.toMap
 
   /** drop this runner's staged files for a group (post-commit or defeat). */
   def cleanupStaging(group: Int): Unit = {
@@ -154,25 +179,6 @@ final class Registry(root: String, spark: SparkSession,
     sinkTable(sink).readCommittedTxns(committed.contains)
       .map(_.withColumn("sink", lit(sink)))
   }
-
-  /** (bytes, files) one sink's snapshot for a group added — the per-write
-    * output stats the reference tracks per output worker
-    * (libbeat/outputs/metrics.go), straight from the table metadata: no
-    * filesystem walk. */
-  def sinkGroupStats(sink: String, group: Int): (Long, Long) =
-    sinkTable(sink).snapshotForTxn(txnKey(group))
-      .map(s => (s.added.map(_.size).sum, s.added.size.toLong))
-      .getOrElse((0L, 0L))
-
-  /** per-group (bytes, files) for one sink in ONE metadata read — the
-    * metrics roll-up shape; [[sinkGroupStats]]'s per-(sink, group) form
-    * would re-read and re-resolve the table state once per pair. */
-  def sinkGroupStatsAll(sink: String): Map[Int, (Long, Long)] =
-    sinkTable(sink).state().snapshots.flatMap { s =>
-      s.txn.filter(_.startsWith("group-")).map(t =>
-        t.stripPrefix("group-").toInt ->
-          (s.added.map(_.size).sum, s.added.size.toLong))
-    }.toMap
 }
 
 object Registry {

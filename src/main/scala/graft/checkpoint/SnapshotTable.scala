@@ -4,6 +4,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -40,8 +44,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Snapshot isolation: readers resolve the largest committed version and
   * read EXACTLY the files it lists — concurrent writers never perturb an
   * in-flight read, and a killed writer's staged files are garbage, not
-  * corruption. Each version also records the files' Spark schema, so a
-  * read resolves from metadata instead of running a schema-inference job.
+  * corruption. Each version also records the files' Spark schema, and a
+  * read of a version with one is LISTING-FREE: the recorded (path, size)
+  * entries are the scan's file list, so planning makes no filesystem call
+  * (no existence check, no directory listing, no schema-inference job) —
+  * a stray file under data/ is never read, and a listed file deleted out
+  * of band fails the read by name instead of shrinking it.
   *
   * Transactional idempotence: a commit may carry a `txn` key. The metadata
   * records every committed txn key; a commit whose key is already present
@@ -52,8 +60,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *
   * Operations: `append` (adds files), `merge` (copy-on-write MERGE INTO —
   * latest rows win by key columns; the snapshot's file list REPLACES the
-  * previous one). Every version's metadata is retained, so any historical
-  * snapshot remains readable (time travel).
+  * previous one), and `commitSummary` (a METADATA-ONLY commit: no files,
+  * just a txn key and a summary). Every version's metadata is retained, so
+  * any historical snapshot remains readable (time travel).
+  *
+  * Snapshot summaries: a snapshot may carry an optional `summary` string,
+  * stored in the version doc next to its txn key (the role of Iceberg's
+  * snapshot summary). A caller that records what a commit did there —
+  * the pipeline's commit log stores each group's lineage this way — can
+  * answer questions about the table from one metadata read, with no Spark
+  * job and no pass over the data.
   *
   * Manifest splitting (the Iceberg manifest-file shape): up to
   * `inlineFileLimit` files the version doc carries the file list inline;
@@ -194,6 +210,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       val o = sArr.addObject()
       o.put("id", s.id); o.put("run", s.run); o.put("operation", s.operation)
       s.txn.foreach(o.put("txn", _))
+      s.summary.foreach(o.put("summary", _))
       val a = o.putArray("added")
       s.added.foreach { f =>
         val fo = a.addObject(); fo.put("path", f.path); fo.put("size", f.size)
@@ -204,16 +221,27 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   // ------------------------------------------------------------- reading
 
-  private def absolute(files: Seq[FileEntry]): Seq[String] =
-    files.map(f => new Path(root, f.path).toString)
-
   /** read `files` as a DataFrame. With the version's recorded `schema` the
-    * read resolves without Spark's parquet schema inference, which costs a
-    * footer-reading job per read; a version without one (written before
-    * schemas were recorded, or holding files of no known schema) falls back
-    * to inference. */
-  private def load(files: Seq[FileEntry], schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(absolute(files): _*)
+    * plan is built straight from the metadata — the recorded (path, size)
+    * entries become the scan's file list ([[ListedFiles]]), so planning
+    * makes no filesystem call: no existence check, no listing, no
+    * schema-inference job (how Iceberg and Delta plan from manifests). A
+    * file deleted out of band then fails the scan, naming the file. A
+    * version without a schema (written before schemas were recorded, or
+    * holding files of no known schema) falls back to `spark.read.parquet`,
+    * which checks, lists and infers. */
+  private def load(files: Seq[FileEntry], schema: Option[StructType]): DataFrame = {
+    val paths = files.map(f => fs.makeQualified(new Path(root, f.path)))
+    schema match {
+      case Some(s) =>
+        val index = ListedFiles(paths.zip(files).map { case (p, f) =>
+          new FileStatus(f.size, false, 1, f.size, 0L, p)
+        })
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), s,
+          None, new ParquetFileFormat, Map.empty)(spark))
+      case None => spark.read.parquet(paths.map(_.toString): _*)
+    }
+  }
 
   /** snapshot-isolated read of the current table state. None when empty. */
   def read(): Option[DataFrame] = {
@@ -291,6 +319,13 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val staged = listParquet(fs, new Path(stagedDir))
     commitMoved(moveIn(staged), txn, schema.map(asNullable))
   }
+
+  /** metadata-only commit: one snapshot that adds no files and carries only
+    * `txn` and `summary` (operation `metadata`). Same CAS loop and txn
+    * idempotence as [[append]]: a key already committed returns
+    * `alreadyCommitted` with the original snapshot id. No Spark job runs. */
+  def commitSummary(txn: String, summary: String): CommitResult =
+    commitMoved(Seq.empty, Some(txn), None, "metadata", Some(summary))
 
   /** append a DataFrame as one snapshot (stages through a temp dir). */
   def append(df: DataFrame, txn: Option[String]): CommitResult = {
@@ -479,7 +514,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** append pre-moved files with txn idempotence via the CAS loop. */
   private def commitMoved(moved: Seq[FileEntry], txn: Option[String],
-                          movedSchema: Option[StructType]): CommitResult = {
+                          movedSchema: Option[StructType],
+                          operation: String = "append",
+                          summary: Option[String] = None): CommitResult = {
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
@@ -490,7 +527,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         moved.foreach(f => fs.delete(new Path(root, f.path), false))
         return alreadyCommittedResult(st, t)
       }
-      val snap = SnapshotInfo(newSnapId(st), runId, txn, "append", moved)
+      val snap = SnapshotInfo(newSnapId(st), runId, txn, operation, moved, summary)
       val (refs, inline, written) = planFiles(st, moved, replace = false)
       // recorded only while every listed file agrees; otherwise reads infer
       val schema =
@@ -560,8 +597,11 @@ object SnapshotTable {
     * the manifest). */
   final case class ManifestRef(path: String, count: Int, bytes: Long)
 
+  /** `summary`: free-form text the committer attached to the snapshot (the
+    * role of Iceberg's snapshot summary), stored in the version doc. */
   final case class SnapshotInfo(id: String, run: String, txn: Option[String],
-                                operation: String, added: Seq[FileEntry])
+                                operation: String, added: Seq[FileEntry],
+                                summary: Option[String] = None)
 
   /** `schema`: the data files' Spark schema, recorded at commit so reads
     * skip inference; None when some listed file's schema is unknown or
@@ -580,6 +620,21 @@ object SnapshotTable {
                                 addedBytes: Long, addedFiles: Int)
 
   private val Mapper = new ObjectMapper()
+
+  /** the scan's file list, given rather than discovered: the entries of
+    * one table version, so planning never touches the filesystem. A case
+    * class, so two reads of the same files are the same relation (cache
+    * lookups match, as with a listing index over the same paths). */
+  private final case class ListedFiles(files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[Path] = files.map(_.getPath)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 
   /** the schema a parquet read infers for data written with schema `t`:
     * file reads make every field nullable, at every depth */
@@ -624,7 +679,8 @@ object SnapshotTable {
           s.get("id").asText(), s.get("run").asText(),
           Option(s.get("txn")).map(_.asText()),
           s.get("operation").asText(),
-          fileEntries(s.get("added")))
+          fileEntries(s.get("added")),
+          Option(s.get("summary")).map(_.asText()))
       }
       buf.toSeq
     }

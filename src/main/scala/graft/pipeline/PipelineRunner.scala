@@ -24,8 +24,10 @@ import graft.model.Sinks
   *    materialized — never a global sort); and ONE status-only pass whose
   *    per-conversation offsets MERGE INTO the registry table once
   *  - per group: each sink's staged slice commits as a SNAPSHOT into that
-  *    sink's table, then the lineage row (counts + per-sink snapshot ids)
-  *    appends to the commit log — the ACK (see
+  *    sink's table, then the group's lineage (counts + per-sink write
+  *    stats + snapshot ids) commits to the commit log as the summary of a
+  *    metadata-only snapshot — the ACK, which writes no data file and runs
+  *    no Spark job (see
   *    [[graft.checkpoint.Registry]] for the protocol and
   *    [[graft.checkpoint.SnapshotTable]] for the table format)
   *  - a kill during the fan-out or the offsets merge loses that run's
@@ -133,10 +135,11 @@ object PipelineRunner {
           else None
         }.toMap
 
-        // lineage row: counts + per-write output stats (bytes/files per sink —
-        // the reference's per-output-worker metrics, libbeat/outputs/metrics.go,
-        // read straight off the snapshot metadata) + the PER-SINK SNAPSHOT IDS
-        // this group produced, so any historical pipeline state can be
+        // lineage, the ack's snapshot summary: counts + per-write output
+        // stats (bytes/files per sink — the reference's per-output-worker
+        // metrics, libbeat/outputs/metrics.go, read straight off the
+        // snapshot metadata) + the PER-SINK SNAPSHOT IDS this group
+        // produced, so any historical pipeline state can be
         // reconstructed table-version by table-version
         val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
         val lineage = counts(g).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
@@ -162,31 +165,29 @@ object PipelineRunner {
   }
 
   /** Pipeline-level metric counters over all committed groups, mirroring the
-    * reference observer names (libbeat/publisher/pipeline/monitoring.go:94-104). */
+    * reference observer names (libbeat/publisher/pipeline/monitoring.go:94-104).
+    *
+    * Read from the commit log's metadata alone — O(groups), not O(data):
+    * each acked group's lineage holds the exact per-sink counts its fan-out
+    * job observed and the bytes its sink snapshots added, so the metrics
+    * are their sums (total = every routed row, filtered included). Runs no
+    * Spark job. A fresh root (or one read before the first ack) reports
+    * zeros; a root whose acks predate lineage summaries is refused by
+    * [[graft.checkpoint.Registry.lineage]]. */
   def observedMetrics(root: String, spark: SparkSession): Map[String, Long] = {
-    val reg = new Registry(root, spark)
-    def cnt(s: String): Long = reg.readSink(s).map(_.count()).getOrElse(0L)
-    val published = cnt(Sinks.Es) + cnt(Sinks.Ls)
-    val dropped = cnt(Sinks.Dropped)
-    // a monitoring caller may arrive before the first group commits (or on
-    // a fresh root): report zeros, never throw — registry() requires
-    // committed offsets and an empty filter sums to NULL
-    val committed = reg.committedGroups().toSet
-    val (total, filtered) =
-      if (committed.isEmpty) (0L, 0L)
-      else {
-        val r = reg.registry().agg(sum("row_count"), sum("filtered")).collect()(0)
-        (if (r.isNullAt(0)) 0L else r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    val writeBytes = Sinks.All.map(s =>
-      reg.sinkGroupStatsAll(s)
-        .collect { case (g, (bytes, _)) if committed(g) => bytes }.sum).sum
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val counts = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    var writeBytes = 0L
+    new Registry(root, spark).lineage().values.foreach { json =>
+      val doc = mapper.readTree(json)
+      doc.get("counts").properties().forEach(e => counts(e.getKey) += e.getValue.asLong())
+      doc.get("writes").properties().forEach(e => writeBytes += e.getValue.get("bytes").asLong())
+    }
     Map(
-      "events.total" -> total,
-      "events.published" -> published,
-      "events.filtered" -> filtered,
-      "events.dropped" -> dropped,
+      "events.total" -> counts.values.sum,
+      "events.published" -> (counts(Sinks.Es) + counts(Sinks.Ls)),
+      "events.filtered" -> counts(TranscriptPipeline.Filtered),
+      "events.dropped" -> counts(Sinks.Dropped),
       "output.write_bytes" -> writeBytes
     )
   }

@@ -23,14 +23,31 @@ class PipelineRunnerSpec extends SparkSpec {
   private def bucket(groups: Int) =
     pmod(abs(crc32(coalesce(col("conv_id"), lit("")))), lit(groups.toLong)).cast("int")
 
-  /** per-group `counts` of every lineage row in the commit log */
+  /** per-group `counts` of every acked group's lineage in the commit log */
   private def lineageCounts(root: String): Map[Int, Map[String, Long]] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    new Registry(root, spark).commitLog.read().get.collect().map { r =>
-      val counts = mapper.readTree(r.getAs[String]("lineage")).get("counts")
-      r.getAs[Int]("group") -> counts.properties().asScala
+    new Registry(root, spark).lineage().map { case (g, json) =>
+      g -> mapper.readTree(json).get("counts").properties().asScala
         .map(e => e.getKey -> e.getValue.asLong()).toMap
-    }.toMap
+    }
+  }
+
+  /** `observedMetrics`, read from lineage metadata alone, equals the data
+    * itself: read-committed sink rows, the registry's offsets aggregate,
+    * and the file sizes of the acked groups' sink snapshots. */
+  private def assertMetricsMatchData(root: String): Unit = {
+    val m = PipelineRunner.observedMetrics(root, spark)
+    val reg = new Registry(root, spark)
+    def rows(s: String) = reg.readSink(s).map(_.count()).getOrElse(0L)
+    assert(m("events.published") == rows(Sinks.Es) + rows(Sinks.Ls), s"$m")
+    assert(m("events.dropped") == rows(Sinks.Dropped), s"$m")
+    val r = reg.registry().agg(sum("row_count"), sum("filtered")).collect()(0)
+    assert(m("events.total") == r.getLong(0), s"$m")
+    assert(m("events.filtered") == r.getLong(1), s"$m")
+    val acked = reg.committedGroups().map(g => s"group-$g").toSet
+    val snapshotBytes = Sinks.All.map(s => reg.sinkTable(s).state().snapshots
+      .filter(_.txn.exists(acked)).flatMap(_.added).map(_.size).sum).sum
+    assert(m("output.write_bytes") == snapshotBytes, s"$m")
   }
 
   test("full run: sink fan-out + atomic commits + observer metrics parity") {
@@ -53,6 +70,7 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(reg.readSink(Sinks.Ls).get.count() == expected(Sinks.Ls))
     assert(reg.readSink(Sinks.Dropped).map(_.count()).getOrElse(0L) ==
       expected.getOrElse(Sinks.Dropped, 0L))
+    assertMetricsMatchData(root)
   }
 
   test("a null conv_id row is routed and counted, never silently lost") {
@@ -97,6 +115,7 @@ class PipelineRunnerSpec extends SparkSpec {
     val a = PipelineRunner.observedMetrics(rootCrash, spark)
     val b = PipelineRunner.observedMetrics(rootClean, spark)
     assert(a == b)
+    assertMetricsMatchData(rootCrash)
 
     // no duplicate doc_ids across the resumed sinks
     val es = reg.readSink(Sinks.Es).get
@@ -149,6 +168,7 @@ class PipelineRunnerSpec extends SparkSpec {
       PipelineRunner.observedMetrics(rootClean, spark))
     val es = reg.readSink(Sinks.Es).get
     assert(es.select("doc_id").distinct().count() == es.count())
+    assertMetricsMatchData(root)
 
     // losers left no residue: staging is gone, and every physical file in
     // each sink table's data/ dir is referenced by the table's current
@@ -221,6 +241,7 @@ class PipelineRunnerSpec extends SparkSpec {
       PipelineRunner.observedMetrics(rootClean, spark))
     val es = reg.readSink(Sinks.Es).get
     assert(es.select("doc_id").distinct().count() == es.count())
+    assertMetricsMatchData(root)
   }
 
   test("a groups = 4 run reads its input exactly twice") {
@@ -285,5 +306,50 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(resumed.map(_.group) == Seq(1, 2, 3))
     resumed.foreach(r => assert(r.counts == expectedCounts(r.group), s"group ${r.group}"))
     check(crashed)
+  }
+
+  test("observedMetrics starts no Spark job, and acks add none (groups = 4 vs 1)") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Any): Int = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      PipelineRunner.run(input, tmpDir(), groups = 1) // warm: the input cache is built
+      val (one, four) = (tmpDir(), tmpDir())
+      val oneJobs = jobsOf(PipelineRunner.run(input, one, groups = 1))
+      val fourJobs = jobsOf(PipelineRunner.run(input, four, groups = 4))
+      assert(oneJobs > 0)
+      assert(fourJobs == oneJobs, s"groups = 4: $fourJobs jobs, groups = 1: $oneJobs")
+      for (root <- Seq(one, four)) {
+        var m = Map.empty[String, Long]
+        assert(jobsOf { m = PipelineRunner.observedMetrics(root, spark) } == 0)
+        assert(m("events.total") == 1000)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a commit log whose acks predate lineage summaries is refused by name") {
+    import spark.implicits._
+    val root = tmpDir()
+    // an ack as roots written before lineage summaries hold it: one parquet
+    // row appended under the group's txn key
+    val reg = new Registry(root, spark)
+    reg.commitLog.append(Seq((0, reg.runId, """{"group":0}""")).toDF("group", "run", "lineage"),
+      Some("group-0"))
+    assert(reg.committedGroups() == Seq(0))
+    val errors = Seq(
+      intercept[IllegalStateException](reg.lineage()),
+      intercept[IllegalStateException](PipelineRunner.observedMetrics(root, spark)))
+    errors.foreach(e => assert(e.getMessage.contains(s"root $root predates lineage summaries"),
+      e.getMessage))
   }
 }

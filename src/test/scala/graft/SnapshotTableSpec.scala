@@ -336,4 +336,95 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.readVersion(3).get.count() == 3)
     assert(t.read().get.count() == 3)
   }
+
+  /** every message along an exception's cause chain */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("metadata-only commit: no files, summary round-trips, txn effectively-once") {
+    val t = tmpTable()
+    t.append(Seq((1, "a")).toDF("id", "v"), Some("data-1"))
+    val files = t.state().files
+    val c = t.commitSummary("ack-1", """{"n":1}""")
+    assert(!c.alreadyCommitted && c.addedFiles == 0 && c.addedBytes == 0)
+    val retry = t.commitSummary("ack-1", """{"n":2}""")
+    assert(retry.alreadyCommitted && retry.snapshotId == c.snapshotId)
+    val st = t.state()
+    assert(st.version == 2, "the rejected retry must not add a version")
+    assert(st.files == files && st.schema.isDefined)
+    val snap = t.snapshotForTxn("ack-1").get
+    assert(snap.operation == "metadata" && snap.added.isEmpty)
+    assert(snap.summary.contains("""{"n":1}"""))
+    assert(t.snapshotForTxn("data-1").get.summary.isEmpty)
+    assert(t.read().get.count() == 1)
+    // a table of metadata commits alone holds no files and reads as empty
+    val log = tmpTable()
+    log.commitSummary("group-0", "{}")
+    assert(log.read().isEmpty && log.state().txnKeys.keySet == Set("group-0"))
+  }
+
+  test("a listed data file deleted out of band fails the read by name") {
+    val t = tmpTable()
+    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
+    val gone = t.snapshotForTxn("b2").get.added.head.path
+    val name = gone.stripPrefix("data/")
+    new java.io.File(s"${t.root}/$gone").delete()
+    new java.io.File(s"${t.root}/data/.$name.crc").delete()
+    // planning touches no file, so the reads resolve; running them fails
+    // on the missing file, by name — never a silently shorter result
+    val reads = Seq(t.read(), t.readVersion(2), t.readCommittedTxns(_ => true)).map(_.get)
+    reads.foreach { df =>
+      assert(df.inputFiles.exists(_.endsWith(name)))
+      val e = intercept[Exception](df.collect())
+      assert(messages(e).contains(name), messages(e))
+    }
+    // a version that does not list the file still reads in full
+    assert(t.readVersion(1).get.count() == 2)
+    assert(t.readCommittedTxns(_ == "b1").get.count() == 2)
+  }
+
+  test("a stray unreferenced parquet file under data/ is never read") {
+    val t = tmpTable()
+    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    val tmp = Files.createTempDirectory("graft-stray").toString
+    Seq((9, "stray")).toDF("id", "v").write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, java.nio.file.Paths.get(s"${t.root}/data/f-stray-0.parquet"))
+    for (df <- Seq(t.read(), t.readVersion(1), t.readCommittedTxns(_ => true)).map(_.get)) {
+      assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+      assert(!df.inputFiles.exists(_.contains("f-stray")))
+    }
+  }
+
+  test("listing-free reads return what a listing read of the same files returns") {
+    val t = tmpTable()
+    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
+    t.merge(Seq((2, "B2"), (4, "d")).toDF("id", "v"), keys = Seq("id"), txn = Some("m1"))
+    t.append(Seq((5, "e")).toDF("id", "v"), Some("b3"))
+    def listed(files: Seq[SnapshotTable.FileEntry]) =
+      spark.read.parquet(files.map(f => s"${t.root}/${f.path}"): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
+    for (v <- t.liveVersions()) {
+      val st = t.stateAt(v).get
+      assert(st.schema.isDefined, s"v$v records its schema")
+      val df = t.readVersion(v).get
+      assert(df.schema == listed(st.files).schema)
+      assert(rows(df) == rows(listed(st.files)), s"v$v")
+    }
+    assert(rows(t.readVersion(2).get) == Seq((1, "a"), (2, "b"), (3, "c")))
+    assert(rows(t.read().get) == Seq((1, "a"), (2, "B2"), (3, "c"), (4, "d"), (5, "e")))
+    // the read-committed view: the append snapshots whose txn is admitted
+    val st = t.state()
+    for (admit <- Seq(Set("b1"), Set("b1", "b3"), Set.empty[String])) {
+      val files = st.snapshots.filter(s => s.operation == "append" && s.txn.forall(admit))
+        .flatMap(_.added)
+      assert(t.readCommittedTxns(admit).map(rows) ==
+        (if (files.isEmpty) None else Some(rows(listed(files)))), s"$admit")
+    }
+    assert(rows(t.readCommittedTxns(Set("b1", "b3")).get) ==
+      Seq((1, "a"), (2, "b"), (5, "e")))
+  }
 }

@@ -8,9 +8,9 @@ import graft.functions.{DecodeWinEventLog, WinEventLogKernel}
 
 /** decode_xml_wineventlog vs the reference
   * (libbeat/processors/decode_xml_wineventlog + winlogbeat/sys/winevent):
-  * the reference's own processor_test.go event replayed through the kernel
-  * (the XML is EXTRACTED from the Go source at test time), plus closed-form
-  * edges for every enrichment/AddOptional/AddPairs rule the decoder mirrors.
+  * a Security 4672 event (in-repo fixture) checked field by field against
+  * the reference's expected decode, plus closed-form edges for every
+  * enrichment/AddOptional/AddPairs rule the decoder mirrors.
   */
 class WinEventLogSpec extends SparkSpec {
 
@@ -41,45 +41,13 @@ class WinEventLogSpec extends SparkSpec {
     }.toMap
   }
 
-  /** The processor_test.go "Decodes properly with default config" event,
-    * reassembled from the Go string-literal concatenation at test time. */
+  /** A Security 4672 ("Special privileges assigned to new logon") event,
+    * hand-written in the Windows event XML schema with exactly the fields
+    * the assertions below pin (test resource `graft/security_4672.xml`). */
   private lazy val refXml: String = {
-    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/libbeat/processors/decode_xml_wineventlog/processor_test.go")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val start = src.indexOf("\"<Event ")
-    require(start > 0, "reference corpus not found")
-    val slice = src.substring(start)
-    val lit = java.util.regex.Pattern.compile("\"((?:[^\"\\\\]|\\\\.)*)\"")
-    val m = lit.matcher(slice)
-    val sb = new StringBuilder
-    var lastEnd = 0
-    var done = false
-    while (!done && m.find()) {
-      val sep = slice.substring(lastEnd, m.start())
-      if (lastEnd != 0 && !sep.matches("(?s)\\s*\\+\\s*")) done = true
-      else { sb.append(unGo(m.group(1))); lastEnd = m.end() }
-    }
-    sb.toString
-  }
-
-  private def unGo(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n'  => sb.append('\n')
-          case 't'  => sb.append('\t')
-          case 'r'  => sb.append('\r')
-          case '"'  => sb.append('"')
-          case '\\' => sb.append('\\')
-          case o    => sb.append('\\').append(o)
-        }
-        i += 2
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+    val in = getClass.getResourceAsStream("/graft/security_4672.xml")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   test("reference corpus event decodes to the reference's expected fields") {
