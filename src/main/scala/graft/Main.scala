@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.PipelineRunner
 import graft.sources.Transcripts
 
@@ -18,17 +16,9 @@ import graft.sources.Transcripts
 object Main {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Main <sfDir|synth:N> <outRoot> [groups] [failAfterGroup]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = LocalSession("graft-pipeline", cpus,
+      master = sys.env.get("SPARK_GRAFT_MASTER"))
 
     val input =
       if (args(0).startsWith("synth:"))

@@ -56,8 +56,7 @@ object SparkEntry {
   }
 
   /** deterministic 4-variant CEF line (standard / escaped / malformed+
-    * recovery / headerless), shared by q_decode_cef and the parser
-    * throughput probe. */
+    * recovery / headerless), the input of q_decode_cef. */
   private[graft] def cefLine: Column = {
     val v = pmod(col("turn_idx"), lit(4))
     val oct = pmod(col("turn_idx") * 7, lit(300)) // > 255 → invalid IP drop
@@ -75,8 +74,8 @@ object SparkEntry {
   }
 
   /** deterministic 9-variant Windows-event XML (plain System enrichment /
-    * RenderingInfo override / EventData pairs / malformed), shared by
-    * q_decode_wineventlog and the parser throughput probe. */
+    * RenderingInfo override / EventData pairs / malformed), the input of
+    * q_decode_wineventlog. */
   private[graft] def winevtXml: Column = {
     val v = col("turn_idx") % 9
     val eid = (col("turn_idx") % 10 + 4600).cast("string")

@@ -20,13 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * constant-pool limits).
   *
   * PRECONDITION — rank-consistent table: any rule whose side is a merge
-  * product must appear AFTER the rule producing it. Every trained table
-  * (ours or any published tokenizer's) satisfies this by construction — a
-  * symbol cannot be chosen before it exists — and under it the min-rank
-  * loop is exactly the fold's rank-order rewrite (a later merge can only
-  * create pairs INVOLVING its new symbol, whose rules all rank later, so
-  * no earlier rule's occurrence is ever created after its pass).
-  * Equivalence is spec-pinned at 1k+ learned merges (TextOpsSpec).
+  * product must appear AFTER the rule producing it, and each symbol has one
+  * producing rule. A trained table meets the first because a symbol cannot
+  * be chosen before it exists, and the second by the argument in
+  * [[graft.textops.BpeTrainer]] (a symbol's derivation does not depend on
+  * its context). Under it the min-rank loop is exactly the fold's
+  * rank-order rewrite (a later merge can only create pairs INVOLVING its
+  * new symbol, whose rules all rank later, so no earlier rule's occurrence
+  * is ever created after its pass). Hand-written tables may break it.
+  * Equivalence is spec-pinned at 1k+ learned merges and on run-parity
+  * corpora (TextOpsSpec).
   *
   * Zipf makes word frequencies extremely skewed, so each task keeps a
   * bounded per-thread word→subwords cache (the standard tokenizer-apply

@@ -23,7 +23,18 @@ import graft.functions.BpeKernel
   * [[TextOps.bpeSegmentFold]] would compute with the learned prefix — the
   * argmax each round therefore matches the former per-iteration Spark
   * aggregation row for row (count ties broken by pair codepoint order,
-  * Spark's binary string sort). */
+  * Spark's binary string sort).
+  *
+  * No pair is ever learned twice. A left-to-right pass of rule (p, q) only
+  * reaches outside a span of the word by pairing the span's first (last)
+  * symbol with its neighbour, which puts a merge across the span's edge for
+  * good. So a span that ends up as one symbol s has evolved, rule by rule,
+  * exactly as the word `s` alone would: every occurrence of s is built at
+  * the same rank by the same rule, and the table has one split per symbol.
+  * After rule (x, y) no x sits before a y; a later merge builds only
+  * symbols that did not exist at (x, y)'s rank, and x and y both did, so
+  * the pair never comes back and its count stays zero (spec-pinned on
+  * run-parity corpora in TextOpsSpec). */
 private[textops] object BpeTrainer {
 
   private final case class Entry(count: Long, a: String, b: String)

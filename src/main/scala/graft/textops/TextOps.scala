@@ -178,11 +178,12 @@ object TextOps {
     * DuckDB-oracled path); above it, the tokenizer-real kernel
     * ([[bpeSegmentKernel]]), whose per-word cost is independent of table
     * size (30k–100k-merge production tables). The two agree exactly on
-    * rank-consistent tables — every TRAINED table is, by construction;
-    * equivalence at 1k+ learned merges is spec-pinned — so the switch is a
-    * plan choice, not a semantics choice, for any table [[trainBpe]] (or a
-    * real tokenizer) emits. Hand-written rank-INCONSISTENT tables larger
-    * than the threshold should call [[bpeSegmentFold]] directly. */
+    * rank-consistent tables — every TRAINED table is (see
+    * [[BpeTrainer]]); equivalence on learned tables is spec-pinned — so the
+    * switch is a plan choice, not a semantics choice, for any table
+    * [[trainBpe]] (or a real tokenizer) emits. Hand-written
+    * rank-INCONSISTENT tables larger than the threshold should call
+    * [[bpeSegmentFold]] directly. */
   def bpeSegment(text: Column, merges: Seq[(String, String)]): Column =
     if (merges.length > BpeFoldLimit) bpeSegmentKernel(text, merges)
     else bpeSegmentFold(text, merges)

@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions.{col, posexplode}
 
 import graft.functions.FramingKernel
 
-/** RFC6587 / custom-delimiter TCP frame splitting vs the reference
-  * (filebeat/inputsource/common/streaming/scan.go): both SplitFunc test
-  * tables in scan_test.go are parsed from the reference tree at test time
-  * and replayed through [[FramingKernel]], plus the scanner edge semantics
-  * (Atoi abort, incomplete-octet drop, 1-byte tail, zero-count frame).
+/** RFC6587 / custom-delimiter TCP frame splitting with the stream
+  * semantics of the reference scanner
+  * (filebeat/inputsource/common/streaming/scan.go): a table of RFC 6587
+  * cases per mode (test resource `graft/rfc6587_framing.json`) replayed
+  * through [[FramingKernel]], plus the scanner edge semantics (Atoi abort,
+  * incomplete-octet drop, 1-byte tail, zero-count frame).
   */
 class FramingSpec extends SparkSpec {
   import spark.implicits._
@@ -20,63 +21,36 @@ class FramingSpec extends SparkSpec {
       delim.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       rfc6587).map(_.toString).toSeq
 
-  // ---- the reference scan_test.go tables ---------------------------------
+  // ---- the RFC 6587 case tables ------------------------------------------
 
-  private val goPath =
-    "/root/reference/filebeat/inputsource/common/streaming/scan_test.go"
+  private case class Case(name: String, input: String,
+                          expected: Seq[String], delimiter: String)
 
-  private def goUnescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n'  => sb += '\n'; i += 2
-          case 't'  => sb += '\t'; i += 2
-          case 'r'  => sb += '\r'; i += 2
-          case o    => sb += o; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
+  private lazy val table: com.fasterxml.jackson.databind.JsonNode = {
+    val in = getClass.getResourceAsStream("/graft/rfc6587_framing.json")
+    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    finally in.close()
   }
 
-  private case class GoCase(name: String, input: String,
-                            expected: Seq[String], delimiter: String)
-
-  private def loadCases(src: String): Seq[GoCase] = {
-    val entry = ("""(?s)\{\s*name:\s*"((?:\\.|[^"\\])*)",\s*""" +
-      """(?:text|input):\s*"((?:\\.|[^"\\])*)",\s*""" +
-      """expected:\s*\[\]string(?:\(nil\)|\{(.*?)\})\s*,\s*""" +
-      """delimiter:\s*\[\]byte\("((?:\\.|[^"\\])*)"\)""").r
-    val lit = """"((?:\\.|[^"\\])*)"""".r
-    entry.findAllMatchIn(src).map { m =>
-      val exp = Option(m.group(3)).toSeq.flatMap(body =>
-        lit.findAllMatchIn(body).map(x => goUnescape(x.group(1))).toSeq)
-      GoCase(goUnescape(m.group(1)), goUnescape(m.group(2)), exp,
-        goUnescape(m.group(4)))
+  private def cases(mode: String): Seq[Case] = {
+    import scala.jdk.CollectionConverters._
+    table.get(mode).elements().asScala.map { c =>
+      Case(c.get("name").asText, c.get("input").asText,
+        c.get("expected").elements().asScala.map(_.asText).toSeq,
+        c.get("delimiter").asText)
     }.toSeq
   }
 
-  private lazy val (delimCases, octetCases) = {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(goPath)), java.nio.charset.StandardCharsets.UTF_8)
-    val split = src.indexOf("func TestOctetCounting")
-    assert(split > 0, "scan_test.go shape changed")
-    (loadCases(src.substring(0, split)), loadCases(src.substring(split)))
-  }
-
-  test("reference TestCustomDelimiter table replays (delimiter mode)") {
+  test("RFC 6587 custom-delimiter table replays (delimiter mode)") {
+    val delimCases = cases("delimiter")
     assert(delimCases.size >= 6)
     for (c <- delimCases)
       assert(frames(c.input, c.delimiter, rfc6587 = false) == c.expected,
         s"case '${c.name}'")
   }
 
-  test("reference TestOctetCounting table replays (rfc6587 mode)") {
+  test("RFC 6587 octet-counting table replays (rfc6587 mode)") {
+    val octetCases = cases("rfc6587")
     assert(octetCases.size >= 5)
     for (c <- octetCases)
       assert(frames(c.input, c.delimiter) == c.expected, s"case '${c.name}'")

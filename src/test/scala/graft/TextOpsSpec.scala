@@ -180,6 +180,34 @@ class TextOpsSpec extends SparkSpec {
     assert(seg(1) == Seq("z", "a", "p"))
   }
 
+  test("trained tables never repeat a rule or rebuild a symbol; kernel equals fold") {
+    import spark.implicits._
+    // one- and two-letter words with runs of every parity: the shapes where
+    // a merge's left-to-right pairing depends on the run around it, so the
+    // same string could only ever be rebuilt from a second split here
+    for (seed <- 1 to 6) {
+      val rnd = new scala.util.Random(seed)
+      val words = Seq.fill(12) {
+        Seq.fill(1 + rnd.nextInt(4))(
+          (if (rnd.nextBoolean()) "a" else "b") * (1 + rnd.nextInt(5))).mkString
+      }
+      val d = words.zipWithIndex.map { case (w, i) =>
+        (i.toLong, Seq.fill(1 + rnd.nextInt(4))(w).mkString(" "))
+      }.toDF("doc_id", "text")
+      val merges = TextOps.trainBpe(d, numMerges = 48, minCount = 1)
+      assert(merges.nonEmpty)
+      assert(merges.distinct == merges, s"seed $seed: a rule was learned twice")
+      val products = merges.groupBy { case (a, b) => a + b }
+      assert(products.forall(_._2.size == 1),
+        s"seed $seed: one symbol from two splits: ${products.filter(_._2.size > 1)}")
+      val fold = d.select(TextOps.bpeSegmentFold(col("text"), merges))
+        .as[Seq[Seq[String]]].collect().toSeq
+      val kern = d.select(TextOps.bpeSegmentKernel(col("text"), merges))
+        .as[Seq[Seq[String]]].collect().toSeq
+      assert(kern == fold, s"seed $seed")
+    }
+  }
+
   test("compressionRatio: boilerplate compresses far below prose; empty is null") {
     import spark.implicits._
     val d = Seq(
