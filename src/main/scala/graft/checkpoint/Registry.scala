@@ -2,8 +2,10 @@ package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
+
+import graft.functions.deterministic_id
 
 /** Checkpoint registry — the Spark-native rebuild of Filebeat's registrar
   * (filebeat/registrar/registrar.go:139-214) and the filestream cursor store
@@ -11,7 +13,10 @@ import org.apache.spark.sql.types.StructType
   * layered on the real snapshot table format ([[SnapshotTable]]):
   *
   * {{{
-  *   <root>/sinks/<sink>/     one snapshot table per sink (append-only)
+  *   <root>/sinks/<sink>/     one snapshot table per sink (append-only),
+  *                            rows in [[Registry.stored]] layout: no
+  *                            `doc_id` (a pure function of conv_id and
+  *                            turn_idx — [[readSink]] derives it)
   *   <root>/registry/         offsets table — per-partition high-water marks,
   *                            updated by copy-on-write MERGE INTO on
   *                            partition_key, once per run
@@ -173,15 +178,26 @@ final class Registry(root: String, spark: SparkSession,
   }
 
   /** Read-committed view of one sink table: snapshot-isolated AND resolved
-    * through the commit log, so only acked groups are visible. */
+    * through the commit log, so only acked groups are visible. `doc_id` is
+    * derived here, not read (the table stores no copy of it); on files of
+    * older roots that still hold one, the derived value replaces the
+    * stored, equal, value. A query that never selects it computes no hash. */
   def readSink(sink: String): Option[DataFrame] = {
     val committed = commitLog.state().txnKeys.keySet
     sinkTable(sink).readCommittedTxns(committed.contains)
-      .map(_.withColumn("sink", lit(sink)))
+      .map(_.withColumn("doc_id", deterministic_id(col("conv_id"), col("turn_idx")))
+        .withColumn("sink", lit(sink)))
   }
 }
 
 object Registry {
+  /** The layout every writer of a sink table stores: routed rows without
+    * `doc_id`, which is 64 incompressible hex characters per row and a
+    * pure function of two stored columns ([[Registry.readSink]] derives it
+    * on read — as Beats keeps `_id` in `@metadata`, outside the stored
+    * document, libbeat/beat/event.go:55-60). */
+  def stored(routed: DataFrame): DataFrame = routed.drop("doc_id")
+
   /** process-unique fence id. The leading letter is LOAD-BEARING: the id
     * becomes a directory-name component, and a non-numeric first character
     * keeps every downstream parser (and Spark partition inference, should a

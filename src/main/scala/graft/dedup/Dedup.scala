@@ -354,14 +354,22 @@ object Dedup {
     * full lineage of why each document left the corpus, which is what a
     * 100 TB curation run needs for auditability. Later stages only process
     * earlier survivors, so the expensive near-dup step sees the smallest
-    * corpus. */
-  /** With `bench` set, a DECONTAMINATION stage runs between the quality
+    * corpus.
+    *
+    * With `bench` set, a DECONTAMINATION stage runs between the quality
     * gate and exact dedup (the canonical slot: cheap narrow gates first,
     * then the broadcast n-gram probe over quality survivors only, then the
     * shuffling dedup stages over the clean set): documents sharing a word
     * `deconN`-gram with the benchmark corpus leave as
     * `dropped_contaminated`. `bench = None` (default) is byte-identical to
-    * the three-stage pipeline. */
+    * the three-stage pipeline.
+    *
+    * EAGER: the call runs the whole chain before it returns. The verdict
+    * frame `(doc_id, stage, kept)` is persisted `DISK_ONLY` and counted
+    * once, and every intermediate the call persisted is released by then.
+    * The returned frame is the handle to that one cache: the caller
+    * `unpersist()`s it when done, and nothing else of the call stays
+    * cached. */
   def curate(docs: DataFrame, tau: Int = 80, bench: Option[DataFrame] = None,
              deconN: Int = 8): DataFrame = {
     // quality verdict as an inline column — a narrow map in the SAME scan,

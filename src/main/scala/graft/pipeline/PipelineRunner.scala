@@ -22,7 +22,10 @@ import graft.model.Sinks
   *    per-(group, sink) counters (sortWithinPartitions(group, sink, conv_id,
   *    turn_idx) so the north-rule per-turn ordering is physically
   *    materialized — never a global sort); and ONE status-only pass whose
-  *    per-conversation offsets MERGE INTO the registry table once
+  *    per-conversation offsets MERGE INTO the registry table once. The
+  *    fan-out writes [[graft.checkpoint.Registry.stored]] rows: no
+  *    `doc_id`, which [[graft.checkpoint.Registry.readSink]] derives on
+  *    read, so the write path computes no SHA-256
   *  - per group: each sink's staged slice commits as a SNAPSHOT into that
   *    sink's table, then the group's lineage (counts + per-sink write
   *    stats + snapshot ids) commits to the commit log as the summary of a
@@ -93,10 +96,13 @@ object PipelineRunner {
       val countCols = for (g <- pending; s <- sinkNames) yield
         sum(when(col("group") === g && col("sink") === s, 1L).otherwise(0L))
           .as(counter(g, s))
-      val fanout = TranscriptPipeline.transform(pendingInput)
+      val routed = TranscriptPipeline.transform(pendingInput)
         .withColumn("group", bucketCol(groups))
         .observe(obs, countCols.head, countCols.tail: _*)
         .filter(col("sink") =!= TranscriptPipeline.Filtered)
+      // the sink tables' stored layout: `doc_id` is pruned through the
+      // observe, so the write path computes no per-row hash at all
+      val fanout = Registry.stored(routed)
         .sortWithinPartitions("group", "sink", "conv_id", "turn_idx")
       fanout.write.mode("overwrite").partitionBy("group", "sink")
         .parquet(reg.stagingRunDir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.checkpoint.Registry
 import graft.model.{Sinks, TranscriptEvent}
 import graft.pipeline.TranscriptPipeline
 
@@ -66,7 +67,9 @@ object StreamingPipeline {
     * and appends — at-least-once for the changed data, never silent loss
     * (a bare batch-id key would skip it; cf. Delta's txnAppId caveat).
     * Concurrent readers get snapshot isolation throughout: a half-written
-    * batch is invisible until its CAS commit. */
+    * batch is invisible until its CAS commit. Rows are stored in the batch
+    * runner's layout ([[graft.checkpoint.Registry.stored]]: no `doc_id`,
+    * which `deterministic_id(conv_id, turn_idx)` derives on read). */
   def startSnapshotSinks(input: DataFrame, root: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     input.writeStream
@@ -74,7 +77,9 @@ object StreamingPipeline {
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val routed = TranscriptPipeline.transform(batch)
+        // the batch runner's stored sink layout (no `doc_id`), dropped
+        // BEFORE the persist so the cached batch never pays for the hash
+        val routed = Registry.stored(TranscriptPipeline.transform(batch))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val sig = routed

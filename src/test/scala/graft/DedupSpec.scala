@@ -421,4 +421,25 @@ class DedupSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"curate left caches beyond its returned frame: $leaked")
   }
+
+  test("unpersisting curate's result releases every cache the call made") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps over a lazy sleeping dog while " +
+      "many birds watch from tall green trees and several cats hide under " +
+      "old wooden fences near quiet village roads today"
+    val docs = Seq((1L, text), (2L, text + " extra tail words"), (3L, "short"))
+      .toDF("doc_id", "text")
+    // with a benchmark corpus the decontamination stage persists its
+    // contaminated-id set too
+    val bench = Seq((9L, text)).toDF("doc_id", "text")
+    for (b <- Seq(None, Some(bench))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val result = Dedup.curate(docs, bench = b)
+      assert(spark.sparkContext.getPersistentRDDs.keySet != before,
+        "curate returns its verdict persisted")
+      result.unpersist(blocking = true)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"bench = ${b.isDefined}: RDDs still persisted: $left")
+    }
+  }
 }

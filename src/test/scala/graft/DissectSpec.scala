@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 
-/** Dissect tokenizer spec: behavior cases for every modifier plus the
-  * reference's 27-case golden corpus (dissect/testdata/dissect_tests.json),
-  * replayed at test time directly from the read-only reference checkout. */
+/** Dissect tokenizer spec: behavior cases for every modifier plus a table
+  * of cases written from the public dissect syntax (test resource
+  * `graft/dissect_syntax.json`), replayed through the map kernel. */
 class DissectSpec extends SparkSpec {
   import spark.implicits._
 
@@ -167,24 +167,21 @@ class DissectSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Dissect.compile("%{x} %{&nope}") }
   }
 
-  // --- the reference golden corpus, replayed verbatim --------------------
+  // --- the dissect syntax table (test resource graft/dissect_syntax.json) --
 
-  private val goldenPath =
-    "/root/reference/libbeat/processors/dissect/testdata/dissect_tests.json"
-
-  test("reference golden corpus (27 cases)") {
-    val f = new java.io.File(goldenPath)
-    assume(f.exists(), s"reference corpus not present at $goldenPath")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(f)
+  test("dissect syntax table replays (27+ cases)") {
+    val in = getClass.getResourceAsStream("/graft/dissect_syntax.json")
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in).get("cases")
+      finally in.close()
     assert(root.isArray && root.size() >= 27)
     var ran = 0
     root.forEach { c =>
       val name = c.get("name").asText()
       val tok = c.get("tok").asText()
       val msg = c.get("msg").asText()
-      val skip = c.get("skip").asBoolean(false)
-      val fail = c.get("fail").asBoolean(false)
+      val skip = c.path("skip").asBoolean(false)
+      val fail = c.path("fail").asBoolean(false)
       if (!skip) {
         ran += 1
         val got = runMap(tok, msg)

@@ -12,7 +12,8 @@ import graft.sources.Transcripts
 /** E2E checkpoint/resume gates, mirroring the reference's registrar system
   * tests (filebeat/tests/system/test_registrar.py: offset equality after
   * restart, no duplicate publication). */
-class PipelineRunnerSpec extends SparkSpec {
+class PipelineRunnerSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-runner").toString
@@ -212,7 +213,7 @@ class PipelineRunnerSpec extends SparkSpec {
       .withColumn("_grp", pmod(abs(crc32(col("conv_id"))), lit(4L)).cast("int"))
       .filter(col("_grp") === 0).drop("_grp")
     val staging = crashed.stagingGroupDir(0)
-    TranscriptPipeline.transform(g0)
+    Registry.stored(TranscriptPipeline.transform(g0))
       .filter(col("sink") =!= TranscriptPipeline.Filtered)
       .write.mode("overwrite").partitionBy("sink").parquet(staging)
     val partial = crashed.commitSinkStaged(Sinks.Es, 0, s"$staging/sink=${Sinks.Es}")
@@ -351,5 +352,150 @@ class PipelineRunnerSpec extends SparkSpec {
       intercept[IllegalStateException](PipelineRunner.observedMetrics(root, spark)))
     errors.foreach(e => assert(e.getMessage.contains(s"root $root predates lineage summaries"),
       e.getMessage))
+  }
+
+  // --- sink layout: `doc_id` is derived on read, never stored ------------
+
+  /** readSink's rows equal transform's rows of the same sink, as multisets,
+    * `doc_id` included, and its columns are the transform's with `doc_id`
+    * and `sink` last, in that order */
+  private def assertSinksMatchTransform(root: String): Unit = {
+    val routed = TranscriptPipeline.transform(input)
+    val order = routed.columns.filterNot(Set("doc_id", "sink")).toSeq :+ "doc_id" :+ "sink"
+    for (s <- Sinks.All if routed.filter(col("sink") === s).count() > 0) {
+      val keys = Seq("conv_id", "turn_idx", "doc_id", "text").map(col)
+      val want = routed.filter(col("sink") === s).select(keys: _*)
+      val read = new Registry(root, spark).readSink(s).get
+      val got = read.select(keys: _*)
+      assert(got.count() == want.count(), s"$s rows")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$s rows differ")
+      assert(read.columns.toSeq == order, s"$s columns")
+    }
+  }
+
+  /** the column names in a parquet file's footer */
+  private def footerColumns(file: String): Seq[String] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    finally reader.close()
+  }
+
+  private def tableFiles(root: String, s: String): Seq[String] = {
+    val tbl = new Registry(root, spark).sinkTable(s)
+    tbl.state().files.map(f => s"${tbl.root}/${f.path}")
+  }
+
+  test("readSink derives doc_id equal to transform's, clean and resumed") {
+    val clean = tmpDir()
+    PipelineRunner.run(input, clean, groups = 4)
+    assertSinksMatchTransform(clean)
+
+    val resumed = tmpDir()
+    intercept[RuntimeException] {
+      PipelineRunner.run(input, resumed, groups = 4, failAfterGroup = 0)
+    }
+    PipelineRunner.run(input, resumed, groups = 4)
+    assertSinksMatchTransform(resumed)
+  }
+
+  test("sink files store no doc_id: every committed file's footer lacks it") {
+    val root = tmpDir()
+    PipelineRunner.run(input, root, groups = 2)
+    val files = Sinks.All.flatMap(tableFiles(root, _))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val cols = footerColumns(f)
+      assert(cols.contains("conv_id") && cols.contains("turn_idx"), s"$f: $cols")
+      assert(!cols.contains("doc_id"), s"$f stores doc_id: $cols")
+    }
+  }
+
+  test("a root mixing the old (doc_id stored) and new layouts reads the same") {
+    val root = tmpDir()
+    // group 0 committed the old way: its staged slices still hold doc_id,
+    // and its ack carries the lineage of exactly those rows
+    val old = new Registry(root, spark)
+    val g0 = TranscriptPipeline.transform(input.filter(bucket(4) === 0))
+    val staging = old.stagingGroupDir(0)
+    g0.filter(col("sink") =!= TranscriptPipeline.Filtered)
+      .write.mode("overwrite").partitionBy("sink").parquet(staging)
+    val counts = g0.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (s <- Sinks.All if counts.getOrElse(s, 0L) > 0)
+      old.commitSinkStaged(s, 0, s"$staging/sink=$s")
+    val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    assert(old.commitGroup(0, s"""{"group":0,"counts":$lineage,"writes":{},"snapshots":{}}"""))
+    old.cleanupRunStaging()
+
+    // resume: groups 1-3 are written in the new layout
+    assert(PipelineRunner.run(input, root, groups = 4).map(_.group) == Seq(1, 2, 3))
+    val layouts = tableFiles(root, Sinks.Ls).map(f => footerColumns(f).contains("doc_id")).toSet
+    assert(layouts == Set(true, false), s"sink_ls must mix both layouts: $layouts")
+    assertSinksMatchTransform(root)
+  }
+
+  test("plan pin: the fan-out and a sink scan compute no doc_id hash") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    def digests(plan: SparkPlan) = collect(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect { case d: graft.functions.DigestHex => d })
+    // a private copy of the input: no plan another spec cached (a cached
+    // transform would hide the hash in both directions) can match it
+    val src = tmpDir()
+    input.write.mode("overwrite").parquet(src)
+    val fresh = spark.read.parquet(src)
+    // positive control: the transform's doc_id is a DigestHex in the plan
+    assert(digests(TranscriptPipeline.transform(fresh).select("doc_id")
+      .queryExecution.executedPlan).nonEmpty)
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val root = tmpDir()
+    spark.listenerManager.register(listener)
+    try {
+      PipelineRunner.run(fresh, root, groups = 2)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the one write into the run's staging dir is the fan-out
+    val fanout = plans.asScala.filter(p => collect(p) {
+      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _)
+        if w.outputPath.toString.contains("/_staging/run=") => w
+    }.nonEmpty)
+    assert(fanout.size == 1, s"${fanout.size} fan-out plans")
+    plans.asScala.foreach(p => assert(digests(p).isEmpty, s"hash in a run plan:\n$p"))
+
+    val reg = new Registry(root, spark)
+    for (s <- Sinks.All; df <- reg.readSink(s)) {
+      val scan = df.select("sink", "conv_id", "text")
+      scan.collect()
+      assert(digests(scan.queryExecution.executedPlan).isEmpty, s"$s scan hashes")
+      val withId = df.select("doc_id")
+      withId.collect()
+      assert(digests(withId.queryExecution.executedPlan).nonEmpty, s"$s doc_id is derived")
+    }
+  }
+
+  test("streaming snapshot sinks store the batch runner's sink columns") {
+    import org.apache.spark.sql.streaming.Trigger
+    val src = tmpDir()
+    val streamed = tmpDir()
+    input.write.mode("overwrite").parquet(src)
+    val stream = graft.streaming.StreamingPipeline.fromDirectory(spark, src)
+    graft.streaming.StreamingPipeline.startSnapshotSinks(stream, streamed, tmpDir(),
+      Trigger.AvailableNow()).awaitTermination(120000)
+    // the batch run reads the same files under the stream's source schema
+    val batch = tmpDir()
+    PipelineRunner.run(spark.read.schema(stream.schema).parquet(src), batch, groups = 2)
+    def fields(root: String, s: String) = new Registry(root, spark).sinkTable(s).read()
+      .map(_.schema.fields.map(f => f.name -> f.dataType).toSeq)
+    for (s <- Sinks.All) assert(fields(streamed, s) == fields(batch, s), s)
+    assert(fields(batch, Sinks.Ls).exists(!_.map(_._1).contains("doc_id")))
   }
 }

@@ -9,8 +9,8 @@ import graft.functions.{SyslogKernel, SyslogParse}
 
 /** parse_syslog vs the reference's syslog parsers
   * (filebeat/input/syslog/rfc3164_parser.rl / rfc5424_parser.rl):
-  *  - the RFC3164 golden corpus is extracted from the reference's own test
-  *    table (rfc3164_test.go) at test time and replayed case by case
+  *  - an RFC 3164 case table written from RFC 3164 sections 4 and 5 (test
+  *    resource `graft/rfc3164_syslog.json`) replayed case by case
   *  - RFC5424 cases mirror rfc5424_test.go (RFC 5424 §6.5 doc examples,
   *    escape handling, NIL fields, parse-failure cases)
   *  - format auto-detection mirrors format_check.rl
@@ -55,107 +55,34 @@ class SyslogSpec extends SparkSpec {
       .toEpochSecond(java.time.ZoneOffset.ofTotalSeconds(offSec)) * 1000000L +
       nanos / 1000
 
-  // ---- the reference RFC3164 golden corpus ------------------------------
+  // ---- the RFC 3164 case table (test resource graft/rfc3164_syslog.json) --
 
-  private val goPath = "/root/reference/filebeat/input/syslog/rfc3164_test.go"
-
-  /** minimal Go-string unescape for the corpus literals. */
-  private def goUnescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n'  => sb += '\n'; i += 2
-          case 't'  => sb += '\t'; i += 2
-          case 'r'  => sb += '\r'; i += 2
-          case d if d >= '0' && d <= '7' =>
-            sb += Integer.parseInt(s.substring(i + 1, i + 4), 8).toChar; i += 4
-          case 'x' =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 4), 16).toChar; i += 4
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  private case class GoCase(title: String, log: String,
-                            fields: Map[String, String], body: String)
-
-  private def loadCorpus(): Seq[GoCase] = {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(goPath)), java.nio.charset.StandardCharsets.UTF_8)
-    val entry = ("""(?s)\{\s*(?:title:\s*"((?:\\.|[^"\\])*)",\s*)?""" +
-      """log:\s*\[\]byte\("((?:\\.|[^"\\])*)"\),\s*syslog: event\{([^}]*)\}""").r
-    entry.findAllMatchIn(src).map { m =>
-      val title = Option(m.group(1)).getOrElse("")
-      val log = goUnescape(m.group(2))
-      val body = m.group(3)
-      val fieldRe = """(\w+):\s*("(?:\\.|[^"\\])*"|[^,\n]+),""".r
-      val fields = fieldRe.findAllMatchIn(body).map { fm =>
-        fm.group(1) -> fm.group(2).trim
-      }.toMap
-      GoCase(title, log, fields, body)
-    }.toSeq
-  }
-
-  private def litInt(fields: Map[String, String], k: String, dflt: Int): Int =
-    fields.get(k).map(_.toInt).getOrElse(dflt)
-  private def litStr(fields: Map[String, String], k: String): String =
-    fields.get(k).map(v => goUnescape(v.stripPrefix("\"").stripSuffix("\"")))
-      .getOrElse("")
-  /** `loc` literal → offset seconds (None = absent): time.UTC or
-    * FixedZone("", a*3600+-b*60) arithmetic, read from the raw body. */
-  private val locUtc = """loc:\s*time\.UTC""".r
-  private val locFixed = """loc:\s*time\.FixedZone\("",\s*([-0-9*+ ]+)\)""".r
-  private def litLoc(body: String): Option[Int] =
-    if (locUtc.findFirstIn(body).isDefined) Some(0)
-    else locFixed.findFirstMatchIn(body).map { m =>
-      m.group(1).split("\\+").filter(_.nonEmpty).map { term =>
-        term.split("\\*").map(_.trim.toInt).product
-      }.sum
-    }
-
-  test("reference RFC3164 golden corpus replayed") {
-    val f = new java.io.File(goPath)
-    assume(f.exists(), s"reference corpus not present at $goPath")
-    val cases = loadCorpus()
-    assert(cases.size >= 25, s"extractor found only ${cases.size} cases")
-    cases.foreach { c =>
-      val r = parse(c.log, mode = "rfc3164", year = 2018)
-      val what = s"[${c.title}] ${c.log.take(60)}"
-      assert(str(r, I("message")) == orNull(litStr(c.fields, "message")), s"message $what")
-      assert(orEmpty(str(r, I("hostname"))) == litStr(c.fields, "hostname"), s"hostname $what")
-      assert(orEmpty(str(r, I("program"))) == litStr(c.fields, "program"), s"program $what")
-      assert(int(r, I("priority")).max(-1) == litInt(c.fields, "priority", 0), s"priority $what")
-      assert(int(r, I("pid")).max(-1) == litInt(c.fields, "pid", 0), s"pid $what")
-      // timestamp: composed from the literal's calendar fields (year when
-      // the line carries one, else the defaultYear we passed); loc from the
-      // literal, else UTC (our defaultTzSeconds). nanos truncate to micros.
-      val lm = litInt(c.fields, "month", 0)
+  test("RFC 3164 table replays (25+ cases)") {
+    val in = getClass.getResourceAsStream("/graft/rfc3164_syslog.json")
+    val cases =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in).get("cases")
+      finally in.close()
+    assert(cases.size() >= 25, s"only ${cases.size()} cases")
+    cases.forEach { c =>
+      val line = c.get("line").asText()
+      val r = parse(line, mode = "rfc3164", year = 2018)
+      val what = s"[${c.get("name").asText()}] ${line.take(60)}"
+      // null (or absent) in the table = null in the parsed struct
+      def text(k: String) = if (c.path(k).isTextual) c.get(k).asText() else null
+      def num(k: String) = if (c.path(k).isNumber) c.get(k).asInt() else Int.MinValue
+      for (k <- Seq("message", "hostname", "program"))
+        assert(str(r, I(k)) == text(k), s"$k $what")
+      for (k <- Seq("priority", "pid", "sequence"))
+        assert(int(r, I(k)) == num(k), s"$k $what")
+      val t = c.get("ts")
       val expTs: java.lang.Long =
-        if (lm <= 0) null
-        else {
-          // the Go test never asserts Year (its literals are decorative and
-          // once wrong — year 2016 against a 2018 line): take the year from
-          // the line's own rfc3339 date when present, else our defaultYear
-          val y = """(\d{4})-\d{2}-\d{2}[Tt ]\d{2}:""".r
-            .findFirstMatchIn(c.log).map(_.group(1).toInt).getOrElse(2018)
-          java.lang.Long.valueOf(micros(y, lm, litInt(c.fields, "day", 0),
-            litInt(c.fields, "hour", 0), litInt(c.fields, "minute", 0),
-            litInt(c.fields, "second", 0), litInt(c.fields, "nanosecond", 0),
-            litLoc(c.body).getOrElse(0)))
-        }
+        if (t.isNull) null
+        else java.lang.Long.valueOf(micros(t.get("year").asInt(), t.get("month").asInt(),
+          t.get("day").asInt(), t.get("hour").asInt(), t.get("minute").asInt(),
+          t.get("second").asInt(), t.get("nanosecond").asInt(), t.get("offset_seconds").asInt()))
       assert(ts(r) == expTs, s"ts $what")
     }
   }
-
-  private def orNull(s: String): String = if (s.isEmpty) null else s
-  private def orEmpty(s: String): String = if (s == null) "" else s
 
   test("RFC3164 sequence + severity/facility split (Cisco case)") {
     val r = parse("<190>589265: Feb 8 18:55:31.306: %SEC-11: list denied",
