@@ -21,11 +21,12 @@ import graft.functions.deterministic_id
   *                            updated by copy-on-write MERGE INTO on
   *                            partition_key, once per run
   *   <root>/commits/          the pipeline commit log — NO data files: one
-  *                            metadata-only snapshot per acked group (txn
-  *                            key `group-<g>`, run = the winner) whose
-  *                            summary is the group's lineage JSON: counts,
-  *                            per-sink write stats and the PER-SINK
-  *                            SNAPSHOT IDS that group produced
+  *                            metadata-only snapshot per ack (txn key
+  *                            `group-<g>` for a batch run's group,
+  *                            `batch-<id>-<fingerprint>` for a streaming
+  *                            micro-batch; run = the winner) whose summary
+  *                            is the lineage JSON: counts, per-sink write
+  *                            stats and the PER-SINK SNAPSHOT IDS produced
   * }}}
   *
   * Per run, the protocol is:
@@ -47,18 +48,21 @@ import graft.functions.deterministic_id
   *      runner's commit wins; the loser reports defeat and cleans its
   *      staging.
   *
+  * A streaming micro-batch runs steps 1, 3 and 4 (it keeps no offsets
+  * table: the stream's checkpoint is its cursor) under its batch txn key.
+  *
   * Crash between 3 and 4 (a PARTIAL sink commit) reconciles on resume: the
   * group is absent from the commit log so it re-runs, and each sink table's
   * txn key turns the re-append into a no-op returning the crashed run's
   * snapshot id — effectively-once without ever scanning data.
   *
   * Reads are snapshot-isolated per table, and [[readSink]] additionally
-  * resolves through the commit log (only snapshots whose group is in the
-  * log are visible), so a partially-committed group is invisible to
+  * resolves through the commit log (only snapshots whose txn key is acked
+  * in the log are visible), so a partially-committed group is invisible to
   * consumers until its ack lands — the cross-table read-committed view.
   *
   * Run bookkeeping is answered from the commit log's metadata alone:
-  * [[lineage]] returns every acked group's lineage in one metadata read,
+  * [[lineage]] returns every ack's lineage in one metadata read,
   * which is what the pipeline's metrics sum (O(groups), not O(data)).
   */
 final class Registry(root: String, spark: SparkSession,
@@ -72,10 +76,8 @@ final class Registry(root: String, spark: SparkSession,
   val offsetsTable: SnapshotTable = new SnapshotTable(s"$root/registry", spark, runId)
   val commitLog: SnapshotTable = new SnapshotTable(s"$root/commits", spark, runId)
 
-  private def txnKey(group: Int): String = s"group-$group"
-
   def isCommitted(group: Int): Boolean =
-    commitLog.state().txnKeys.contains(txnKey(group))
+    commitLog.state().txnKeys.contains(Registry.groupTxn(group))
 
   def committedGroups(): Seq[Int] =
     commitLog.state().txnKeys.keys
@@ -84,7 +86,7 @@ final class Registry(root: String, spark: SparkSession,
 
   /** The runId that won a group's commit-log append (the fence winner). */
   def markerRun(group: Int): Option[String] =
-    commitLog.snapshotForTxn(txnKey(group)).map(_.run)
+    commitLog.snapshotForTxn(Registry.groupTxn(group)).map(_.run)
 
   /** this runner's private staging dir: the run's single fan-out write
     * lands here, partitioned by group and sink. */
@@ -98,7 +100,12 @@ final class Registry(root: String, spark: SparkSession,
     * inference). */
   def commitSinkStaged(sink: String, group: Int, stagedDir: String,
                        schema: Option[StructType] = None): SnapshotTable.CommitResult =
-    sinkTable(sink).commitStagedDir(stagedDir, Some(txnKey(group)), schema)
+    commitSinkStaged(sink, Registry.groupTxn(group), stagedDir, schema)
+
+  /** step 3 under any txn key (a micro-batch's: `batch-<id>-<hex>`). */
+  def commitSinkStaged(sink: String, txn: String, stagedDir: String,
+                       schema: Option[StructType]): SnapshotTable.CommitResult =
+    sinkTable(sink).commitStagedDir(stagedDir, Some(txn), schema)
 
   /** step 2: MERGE offset rows (any mix of groups, each row carrying its
     * `group`) into the registry table — partition_key is the merge key, so
@@ -112,7 +119,7 @@ final class Registry(root: String, spark: SparkSession,
   /** one group's offsets under its txn key — a retry of the same group is
     * `alreadyCommitted`. */
   def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult =
-    offsetsTable.merge(offsets, Seq("partition_key"), Some(txnKey(group)))
+    offsetsTable.merge(offsets, Seq("partition_key"), Some(Registry.groupTxn(group)))
 
   /** step 4 — the ACK: a metadata-only commit-log snapshot under the
     * group's txn key whose summary is `lineageJson` (counts + per-sink
@@ -120,19 +127,24 @@ final class Registry(root: String, spark: SparkSession,
     * file and runs no Spark job. Returns true when THIS run owns the group
     * afterwards; false when a concurrent runner's commit won — the caller
     * lost and must not count the group. */
-  def commitGroup(group: Int, lineageJson: String): Boolean = {
-    val res = commitLog.commitSummary(txnKey(group), lineageJson)
-    !res.alreadyCommitted || markerRun(group).contains(runId)
+  def commitGroup(group: Int, lineageJson: String): Boolean =
+    ack(Registry.groupTxn(group), lineageJson)
+
+  /** step 4 under any txn key. */
+  def ack(txn: String, lineageJson: String): Boolean = {
+    val res = commitLog.commitSummary(txn, lineageJson)
+    !res.alreadyCommitted || commitLog.snapshotForTxn(txn).exists(_.run == runId)
   }
 
-  /** every acked group's lineage JSON (the summary of its commit-log
-    * snapshot), from ONE metadata read. Empty on a fresh root. A root whose
-    * acks were written before lineage summaries existed (one parquet row
-    * per ack) is refused with a named error rather than read a second way. */
-  def lineage(): Map[Int, String] =
+  /** every ack's lineage JSON (the summary of its commit-log snapshot),
+    * keyed by its txn key, from ONE metadata read. Empty on a fresh root. A
+    * root whose acks were written before lineage summaries existed (one
+    * parquet row per ack) is refused with a named error rather than read a
+    * second way. */
+  def lineage(): Map[String, String] =
     commitLog.state().snapshots.flatMap { s =>
-      s.txn.filter(_.startsWith("group-")).map { t =>
-        t.stripPrefix("group-").toInt -> s.summary.getOrElse(
+      s.txn.map { t =>
+        t -> s.summary.getOrElse(
           throw new IllegalStateException(
             s"checkpoint root $root predates lineage summaries: the commit-log " +
               s"snapshot ${s.id} acking $t carries no lineage summary; " +
@@ -191,6 +203,9 @@ final class Registry(root: String, spark: SparkSession,
 }
 
 object Registry {
+  /** a batch run group's txn key (its sink snapshots, offsets and ack). */
+  def groupTxn(group: Int): String = s"group-$group"
+
   /** The layout every writer of a sink table stores: routed rows without
     * `doc_id`, which is 64 incompressible hex characters per row and a
     * pure function of two stored columns ([[Registry.readSink]] derives it

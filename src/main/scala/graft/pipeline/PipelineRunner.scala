@@ -16,16 +16,12 @@ import graft.model.Sinks
   *    `groups` sets only the COMMIT granularity: every run reads the input a
   *    fixed number of times, however many groups it has, and each group then
   *    acks independently
-  *  - per run, two input passes: ONE transform pass fans out every pending
-  *    group to sink_es / sink_ls / dropped via a dynamic
+  *  - per run, two input passes: ONE transform pass ([[stage]]) fans out
+  *    every pending group to sink_es / sink_ls / dropped in one
   *    `partitionBy(group, sink)` parquet write with observe()-attached
-  *    per-(group, sink) counters (sortWithinPartitions(group, sink, conv_id,
-  *    turn_idx) so the north-rule per-turn ordering is physically
-  *    materialized — never a global sort); and ONE status-only pass whose
-  *    per-conversation offsets MERGE INTO the registry table once. The
-  *    fan-out writes [[graft.checkpoint.Registry.stored]] rows: no
-  *    `doc_id`, which [[graft.checkpoint.Registry.readSink]] derives on
-  *    read, so the write path computes no SHA-256
+  *    counters, never a global sort; and ONE status-only pass whose
+  *    per-conversation offsets MERGE INTO the registry table once. Sinks
+  *    store no `doc_id`: [[graft.checkpoint.Registry.readSink]] derives it
   *  - per group: each sink's staged slice commits as a SNAPSHOT into that
   *    sink's table, then the group's lineage (counts + per-sink write
   *    stats + snapshot ids) commits to the commit log as the summary of a
@@ -49,6 +45,11 @@ import graft.model.Sinks
   * Batches are cut from one harvest, not re-read per batch; `groups`
   * trades failure-domain granularity against per-group commit overhead
   * (reference flush-coalescing, registrar.go:160-190).
+  *
+  * [[run]] is [[stage]] → offsets merge → [[commit]] per pending group
+  * under txn key `group-<g>`; a streaming micro-batch
+  * ([[graft.streaming.StreamingPipeline.startSnapshotSinks]]) is stage →
+  * commit under its batch txn key, so both write the same tables and acks.
   */
 object PipelineRunner {
 
@@ -64,6 +65,78 @@ object PipelineRunner {
   private def bucketCol(groups: Int) =
     pmod(abs(crc32(coalesce(col("conv_id"), lit("")))), lit(groups.toLong)).cast("int")
 
+  /** [[stage]]'s result: observed per-group, per-sink row counts (`filtered`
+    * included, zeros left out) and the staged files' schema. */
+  final case class Staged(counts: Map[Int, Map[String, Long]], schema: StructType)
+
+  /** The fan-out: ONE job writes `routed` (transform output plus a `group`
+    * column) as [[graft.checkpoint.Registry.stored]] rows into this run's
+    * `reg.stagingRunDir`, partitioned by group and sink (outil selector
+    * fan-out, libbeat/outputs/outil/select.go:90-93). The counts of each
+    * (group in `groups`, sink) are observe() accumulators of the same job,
+    * and nothing is persisted (at 100 TB a persist is a full extra copy).
+    * `filtered` rows are counted, never written (monitoring.go:139). The
+    * sort leads with (group, sink), the dynamic-partition writer's required
+    * order, so no sort is added and files keep (conv_id, turn_idx) order. */
+  def stage(routed: DataFrame, reg: Registry, groups: Seq[Int]): Staged = {
+    val obs = org.apache.spark.sql.Observation()
+    val sinkNames = Sinks.All :+ TranscriptPipeline.Filtered
+    def counter(g: Int, s: String) = s"$g/$s"
+    val countCols = for (g <- groups; s <- sinkNames) yield
+      sum(when(col("group") === g && col("sink") === s, 1L).otherwise(0L))
+        .as(counter(g, s))
+    val fanout = Registry.stored(routed
+        .observe(obs, countCols.head, countCols.tail: _*)
+        .filter(col("sink") =!= TranscriptPipeline.Filtered))
+      .sortWithinPartitions("group", "sink", "conv_id", "turn_idx")
+    fanout.write.mode("overwrite").partitionBy("group", "sink")
+      .parquet(reg.stagingRunDir)
+    val observed = obs.get
+    Staged(
+      groups.map { g =>
+        g -> sinkNames.map(s => s -> observed(counter(g, s)).asInstanceOf[Long])
+          .filter(_._2 > 0).toMap
+      }.toMap,
+      // the staged files hold every column but the partition columns
+      StructType(fanout.schema.filterNot(f => f.name == "group" || f.name == "sink")))
+  }
+
+  /** Commit one staged group under `txn`: each sink's slice as a SNAPSHOT of
+    * its table, then the lineage as the ACK, then drop the group's staging.
+    * A crashed commit's sink snapshots reconcile to no-ops when `txn`
+    * commits again. None when a concurrent runner's ack won. */
+  def commit(reg: Registry, txn: String, group: Int, staged: Staged): Option[GroupResult] = {
+    val counts = staged.counts(group)
+    val staging = reg.stagingGroupDir(group)
+    val sinkSnaps = Sinks.All.flatMap { s =>
+      if (counts.getOrElse(s, 0L) > 0)
+        Some(s -> reg.commitSinkStaged(s, txn, s"$staging/sink=$s", Some(staged.schema)))
+      else None
+    }.toMap
+
+    // lineage, the ack's snapshot summary: counts + per-write output
+    // stats (bytes/files per sink — the reference's per-output-worker
+    // metrics, libbeat/outputs/metrics.go, read straight off the
+    // snapshot metadata) + the PER-SINK SNAPSHOT IDS this group
+    // produced, so any historical pipeline state can be
+    // reconstructed table-version by table-version
+    val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
+    val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val bytesJson = writeStats
+      .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
+      .mkString("{", ",", "}")
+    val snapsJson = sinkSnaps
+      .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
+      .mkString("{", ",", "}")
+    val won = reg.ack(txn,
+      s"""{"group":$group,"counts":$lineage,"writes":$bytesJson,"snapshots":$snapsJson}""")
+    // staged files were either moved into tables or discarded by the
+    // txn-key check; the scratch directory is garbage either way
+    reg.cleanupStaging(group)
+    if (won) Some(GroupResult(group, counts, writeStats.map { case (k, (b, _)) => k -> b }))
+    else None
+  }
+
   /** Run (or resume) the pipeline over `input`, writing under `root`.
     * Returns per-group sink counts for groups executed in THIS invocation. */
   def run(input: DataFrame, root: String, groups: Int = 4,
@@ -77,42 +150,11 @@ object PipelineRunner {
       else input.filter(bucketCol(groups).isin(pending: _*))
 
     try {
-      // pass 1 — ONE fan-out job over every pending group (no persist — at
-      // 100 TB a MEMORY_AND_DISK persist is a full extra copy of the input):
-      // dynamic write partitioned by group and sink (outil selector
-      // fan-out, libbeat/outputs/outil/select.go:90-93), with the
-      // per-(group, sink) counts attached to the SAME job via observe()
-      // accumulators, so counting costs no extra scan. `filtered` rows are
-      // counted but never written (monitoring.go:139). The group column is
-      // added AFTER transform (parse projects away extra columns), and the
-      // sortWithinPartitions leads with (group, sink) so the dynamic-partition
-      // writer's required task ordering is already satisfied (no extra sort
-      // inserted) and rows inside each file stay in the north-rule
-      // (conv_id, turn_idx) order. Files land in this run's private staging
-      // and become table-visible only at each sink's snapshot commit below.
-      val obs = org.apache.spark.sql.Observation()
-      val sinkNames = Sinks.All :+ TranscriptPipeline.Filtered
-      def counter(g: Int, s: String) = s"$g/$s"
-      val countCols = for (g <- pending; s <- sinkNames) yield
-        sum(when(col("group") === g && col("sink") === s, 1L).otherwise(0L))
-          .as(counter(g, s))
-      val routed = TranscriptPipeline.transform(pendingInput)
-        .withColumn("group", bucketCol(groups))
-        .observe(obs, countCols.head, countCols.tail: _*)
-        .filter(col("sink") =!= TranscriptPipeline.Filtered)
-      // the sink tables' stored layout: `doc_id` is pruned through the
-      // observe, so the write path computes no per-row hash at all
-      val fanout = Registry.stored(routed)
-        .sortWithinPartitions("group", "sink", "conv_id", "turn_idx")
-      fanout.write.mode("overwrite").partitionBy("group", "sink")
-        .parquet(reg.stagingRunDir)
-      // the staged files hold every column but the partition columns
-      val stagedSchema = StructType(fanout.schema.filterNot(f => f.name == "group" || f.name == "sink"))
-      val observed = obs.get
-      val counts = pending.map { g =>
-        g -> sinkNames.map(s => s -> observed(counter(g, s)).asInstanceOf[Long])
-          .filter(_._2 > 0).toMap
-      }.toMap
+      // pass 1 — ONE fan-out job over every pending group. The group column
+      // is added AFTER transform (parse projects away extra columns).
+      val staged = stage(
+        TranscriptPipeline.transform(pendingInput).withColumn("group", bucketCol(groups)),
+        reg, pending)
 
       // pass 2 — offsets rows (file.State analogue) for every pending group
       // via the status-only routing fast path — identical sink decision to
@@ -130,43 +172,12 @@ object PipelineRunner {
         .withColumn("committed_at", current_timestamp())
       reg.mergeOffsets(offsets)
 
-      val results = scala.collection.mutable.ArrayBuffer.empty[GroupResult]
-      for ((g, i) <- pending.zipWithIndex) {
-        // snapshot-commit each sink's staged slice (txn key = the group, so a
-        // crashed run's partial commits reconcile to no-ops on resume)
-        val staging = reg.stagingGroupDir(g)
-        val sinkSnaps = Sinks.All.flatMap { s =>
-          if (counts(g).getOrElse(s, 0L) > 0)
-            Some(s -> reg.commitSinkStaged(s, g, s"$staging/sink=$s", Some(stagedSchema)))
-          else None
-        }.toMap
-
-        // lineage, the ack's snapshot summary: counts + per-write output
-        // stats (bytes/files per sink — the reference's per-output-worker
-        // metrics, libbeat/outputs/metrics.go, read straight off the
-        // snapshot metadata) + the PER-SINK SNAPSHOT IDS this group
-        // produced, so any historical pipeline state can be
-        // reconstructed table-version by table-version
-        val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
-        val lineage = counts(g).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        val bytesJson = writeStats
-          .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
-          .mkString("{", ",", "}")
-        val snapsJson = sinkSnaps
-          .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
-          .mkString("{", ",", "}")
-        val won = reg.commitGroup(g,
-          s"""{"group":$g,"counts":$lineage,"writes":$bytesJson,"snapshots":$snapsJson}""")
-        if (won)
-          results += GroupResult(g, counts(g), writeStats.map { case (k, (b, _)) => k -> b })
-        // staged files were either moved into tables or discarded by the
-        // txn-key check; the scratch directory is garbage either way
-        reg.cleanupStaging(g)
-
+      pending.zipWithIndex.flatMap { case (g, i) =>
+        val result = commit(reg, Registry.groupTxn(g), g, staged)
         if (i >= failAfterGroup) // test hook: simulate a crash between commits
           throw new RuntimeException(s"injected failure after group $g")
+        result
       }
-      results.toSeq
     } finally reg.cleanupRunStaging()
   }
 

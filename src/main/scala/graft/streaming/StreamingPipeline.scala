@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.checkpoint.Registry
-import graft.model.{Sinks, TranscriptEvent}
-import graft.pipeline.TranscriptPipeline
+import graft.model.TranscriptEvent
+import graft.pipeline.{PipelineRunner, TranscriptPipeline}
 
 /** Structured Streaming surface of the same pipeline — the reference's
   * native shape (harvest → processors → publish is a standing stream,
@@ -17,10 +17,10 @@ import graft.pipeline.TranscriptPipeline
   *  - parse/enrich/route are stateless narrow ops + broadcast joins, so
   *    [[TranscriptPipeline.transform]] applies to a streaming DataFrame
   *    unchanged — one definition, two execution modes.
-  *  - [[start]] fans out per-sink writes inside foreachBatch with the
-  *    streaming checkpoint providing the registry/ACK role
-  *    (filebeat/registrar semantics: offsets only advance after the batch's
-  *    sink writes commit).
+  *  - [[startSnapshotSinks]] runs each micro-batch through the batch
+  *    runner's fan-out and commit protocol, with the streaming checkpoint as
+  *    the cursor (filebeat/registrar semantics: offsets only advance after
+  *    the batch's sink writes commit and ack).
   *  - [[windowedMetrics]] is the observer counter set as a watermarked
   *    windowed aggregation (libbeat/publisher/pipeline/monitoring.go:94-104).
   *  - [[convOffsets]] mirrors the per-file State high-water mark
@@ -31,45 +31,19 @@ object StreamingPipeline {
   /** per-conversation high-water mark state (≈ file.State.Offset). */
   final case class ConvOffset(conv_id: String, max_turn_idx: Int, turns: Long)
 
-  /** route a streaming transcript frame and fan out to per-sink parquet
-    * directories; exactly-once per sink via the foreachBatch idempotent
-    * overwrite-by-batch pattern + streaming checkpoint. */
-  def start(input: DataFrame, root: String, checkpoint: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    input.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val routed = TranscriptPipeline.transform(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          for (s <- Sinks.All) {
-            routed.filter(col("sink") === s)
-              .sortWithinPartitions("conv_id", "turn_idx")
-              .write.mode("overwrite").parquet(s"$root/$s/batch=$batchId")
-          }
-        } finally routed.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming fan-out into the SNAPSHOT TABLE format
-    * ([[graft.checkpoint.SnapshotTable]]): each micro-batch's per-sink slice
-    * commits as one snapshot whose txn key is the batch id PLUS an
-    * order-independent 64-bit fingerprint of the batch's content. A replayed
-    * batch — checkpoint recovery, or a fresh checkpoint re-reading the same
-    * input — carries the same (id, fingerprint) and reconciles to a no-op:
-    * exactly-once into the TABLE (the directory-overwrite pattern in
-    * [[start]] is merely idempotent per path). A batch that merely REUSES an
-    * id after checkpoint loss over grown input has a different fingerprint
-    * and appends — at-least-once for the changed data, never silent loss
-    * (a bare batch-id key would skip it; cf. Delta's txnAppId caveat).
-    * Concurrent readers get snapshot isolation throughout: a half-written
-    * batch is invisible until its CAS commit. Rows are stored in the batch
-    * runner's layout ([[graft.checkpoint.Registry.stored]]: no `doc_id`,
-    * which `deterministic_id(conv_id, turn_idx)` derives on read). */
+  /** Streaming fan-out into the sink tables through the batch runner's own
+    * protocol: each micro-batch is [[PipelineRunner.stage]] (one group) →
+    * [[PipelineRunner.commit]] under txn key `batch-<id>-<hex>`, the batch
+    * id PLUS an order-independent 64-bit fingerprint of its content observed
+    * in the same job: ONE Spark job per micro-batch, no persist, and the
+    * same ack as a batch group, so `Registry.readSink` and
+    * `PipelineRunner.observedMetrics` read a streaming root like a batch one.
+    * A replayed batch (checkpoint recovery, or a fresh checkpoint over the
+    * same input, also after a crash between sink commits and ack) carries
+    * the same key and reconciles to a no-op: exactly-once into the tables.
+    * A batch that REUSES an id over grown input after checkpoint loss has
+    * another fingerprint and appends — at-least-once, never silent loss (a
+    * bare batch-id key would skip it; cf. Delta's txnAppId caveat). */
   def startSnapshotSinks(input: DataFrame, root: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     input.writeStream
@@ -77,27 +51,18 @@ object StreamingPipeline {
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch runner's stored sink layout (no `doc_id`), dropped
-        // BEFORE the persist so the cached batch never pays for the hash
-        val routed = Registry.stored(TranscriptPipeline.transform(batch))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val reg = new Registry(root, batch.sparkSession)
+        // observed BEFORE stage drops `filtered` rows: the fingerprint
+        // covers every routed row, the txn key format of earlier roots
+        val sig = Observation()
+        val routed = TranscriptPipeline.transform(batch)
+          .observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))").as("sig"))
+          .withColumn("group", lit(0))
         try {
-          val sig = routed
-            .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))"))
-            .first() match {
-              case r if r.isNullAt(0) => 0L // empty batch
-              case r => r.getLong(0)
-            }
-          val txn = s"batch-$batchId-${java.lang.Long.toHexString(sig)}"
-          for (s <- Sinks.All) {
-            new graft.checkpoint.SnapshotTable(s"$root/sinks/$s", batch.sparkSession)
-              .append(
-                routed.filter(col("sink") === s)
-                  .sortWithinPartitions("conv_id", "turn_idx")
-                  .drop("sink"),
-                txn = Some(txn))
-          }
-        } finally routed.unpersist()
+          val staged = PipelineRunner.stage(routed, reg, Seq(0))
+          val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
+          PipelineRunner.commit(reg, s"batch-$batchId-${java.lang.Long.toHexString(fp)}", 0, staged)
+        } finally reg.cleanupRunStaging()
         ()
       }
       .start()

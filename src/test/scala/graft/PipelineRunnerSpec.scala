@@ -27,8 +27,8 @@ class PipelineRunnerSpec extends SparkSpec
   /** per-group `counts` of every acked group's lineage in the commit log */
   private def lineageCounts(root: String): Map[Int, Map[String, Long]] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    new Registry(root, spark).lineage().map { case (g, json) =>
-      g -> mapper.readTree(json).get("counts").properties().asScala
+    new Registry(root, spark).lineage().map { case (txn, json) =>
+      txn.stripPrefix("group-").toInt -> mapper.readTree(json).get("counts").properties().asScala
         .map(e => e.getKey -> e.getValue.asLong()).toMap
     }
   }
@@ -497,5 +497,111 @@ class PipelineRunnerSpec extends SparkSpec
       .map(_.schema.fields.map(f => f.name -> f.dataType).toSeq)
     for (s <- Sinks.All) assert(fields(streamed, s) == fields(batch, s), s)
     assert(fields(batch, Sinks.Ls).exists(!_.map(_._1).contains("doc_id")))
+
+    // the same read-committed rows per sink
+    val keys = Seq("conv_id", "turn_idx", "doc_id", "text").map(col)
+    def rows(root: String, s: String) =
+      new Registry(root, spark).readSink(s).map(_.select(keys: _*))
+    for (s <- Sinks.All) (rows(streamed, s), rows(batch, s)) match {
+      case (Some(a), Some(b)) =>
+        assert(a.count() == b.count(), s"$s rows")
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$s rows differ")
+      case (a, b) => assert(a.isEmpty && b.isEmpty, s"$s: only one root has rows")
+    }
+    // the same metrics, read from the acks' lineage
+    val events = Set("events.total", "events.published", "events.filtered", "events.dropped")
+    def metrics(root: String) =
+      PipelineRunner.observedMetrics(root, spark).filter { case (k, _) => events(k) }
+    assert(metrics(streamed) == metrics(batch))
+    assert(metrics(streamed)("events.total") == 1000)
+
+    // the txn key format is pinned: roots written before stay replayable
+    val sig = TranscriptPipeline.transform(input)
+      .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))")).first().getLong(0)
+    val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
+    val reg = new Registry(streamed, spark)
+    val written = Sinks.All.map(reg.sinkTable(_).state()).filter(_.snapshots.nonEmpty)
+    assert(written.nonEmpty)
+    written.foreach(st => assert(st.txnKeys.keySet == Set(txn), st.txnKeys))
+    assert(reg.lineage().keySet == Set(txn))
+  }
+
+  /** jobs started while `body` runs, counted by a listener on the session */
+  private def jobsOf(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a streaming micro-batch starts as many jobs as a direct stage call") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingPipeline
+    val src = tmpDir()
+    input.write.mode("overwrite").parquet(src)
+    val stream = StreamingPipeline.fromDirectory(spark, src)
+    val direct = jobsOf {
+      val reg = new Registry(tmpDir(), spark)
+      try PipelineRunner.stage(TranscriptPipeline.transform(
+        spark.read.schema(stream.schema).parquet(src)).withColumn("group", lit(0)), reg, Seq(0))
+      finally reg.cleanupRunStaging()
+    }
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val streamed = jobsOf {
+      q = StreamingPipeline.startSnapshotSinks(stream, tmpDir(), tmpDir(), Trigger.AvailableNow())
+      q.awaitTermination(120000)
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one micro-batch")
+    assert(direct > 0)
+    assert(streamed == direct, s"micro-batch: $streamed jobs, stage: $direct")
+  }
+
+  test("streaming replay after a crash between sink commits and ack reconciles") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingPipeline
+    val src = tmpDir()
+    input.write.mode("overwrite").parquet(src)
+    val stream = StreamingPipeline.fromDirectory(spark, src)
+    val routed = TranscriptPipeline.transform(spark.read.schema(stream.schema).parquet(src))
+    val sig = routed.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))"))
+      .first().getLong(0)
+    val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
+
+    // micro-batch 0 died after committing every sink, before its ack
+    val root = tmpDir()
+    val crashed = new Registry(root, spark)
+    val staged = PipelineRunner.stage(routed.withColumn("group", lit(0)), crashed, Seq(0))
+    val sinks = Sinks.All.filter(s => staged.counts(0).getOrElse(s, 0L) > 0)
+    assert(sinks.nonEmpty)
+    for (s <- sinks) assert(!crashed.commitSinkStaged(s, txn,
+      s"${crashed.stagingGroupDir(0)}/sink=$s", Some(staged.schema)).alreadyCommitted)
+    crashed.cleanupRunStaging()
+    assert(Sinks.All.forall(crashed.readSink(_).isEmpty), "unacked rows are invisible")
+    val versions = Sinks.All.map(crashed.sinkTable(_).state().version)
+
+    // a fresh checkpoint replays batch 0: no new rows or snapshots, the ack lands
+    StreamingPipeline.startSnapshotSinks(stream, root, tmpDir(), Trigger.AvailableNow())
+      .awaitTermination(120000)
+    val reg = new Registry(root, spark)
+    assert(Sinks.All.map(reg.sinkTable(_).state().version) == versions,
+      "the replay must add no sink snapshot")
+    for (s <- sinks)
+      assert(reg.sinkTable(s).snapshotForTxn(txn).exists(_.run == crashed.runId), s)
+    assert(reg.lineage().keySet == Set(txn))
+    assert(reg.commitLog.snapshotForTxn(txn).exists(_.run != crashed.runId))
+    val expected = routed.groupBy("sink").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (s <- Sinks.All)
+      assert(reg.readSink(s).map(_.count()).getOrElse(0L) == expected.getOrElse(s, 0L), s)
+    val m = PipelineRunner.observedMetrics(root, spark)
+    assert(m("events.total") == 1000 && m("events.dropped") == expected.getOrElse(Sinks.Dropped, 0L))
   }
 }

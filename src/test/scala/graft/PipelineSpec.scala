@@ -10,10 +10,18 @@ import graft.sources.Transcripts
   * count parity (Σ sink counts == total), routing totality, ordered text
   * equality — the north-rule assertions, driver-side oracle style
   * (mirrors filebeat/tests/system/test_publisher.py's count checks). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private lazy val input = Transcripts.fromEvents(spark, "/root/testdata/sf0.001").cache()
   private lazy val full = TranscriptPipeline.transform(input).cache()
+
+  // the session is JVM-wide: a cache left behind would stand in for the
+  // plan of any later spec's transform over the same input
+  override def afterAll(): Unit =
+    try {
+      full.unpersist(blocking = true)
+      input.unpersist(blocking = true)
+    } finally super.afterAll()
 
   test("transcripts derivation is deterministic and complete") {
     assert(input.count() == 1000)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.checkpoint.Registry
 import graft.model.Sinks
 import graft.pipeline.TranscriptPipeline
 import graft.sources.Transcripts
@@ -23,7 +24,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tmpDir("stream-ckpt")
     input.write.mode("overwrite").parquet(src)
 
-    val q = StreamingPipeline.start(
+    val q = StreamingPipeline.startSnapshotSinks(
       StreamingPipeline.fromDirectory(spark, src), out, ckpt,
       Trigger.AvailableNow())
     q.awaitTermination(120000)
@@ -31,8 +32,9 @@ class StreamingSpec extends SparkSpec {
     val batchCounts = TranscriptPipeline.transform(input)
       .groupBy("sink").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val reg = new Registry(out, spark)
     for (s <- Sinks.All) {
-      val streamed = spark.read.parquet(s"$out/$s/batch=*").count()
+      val streamed = reg.readSink(s).map(_.count()).getOrElse(0L)
       assert(streamed == batchCounts.getOrElse(s, 0L),
         s"sink $s: streamed=$streamed batch=${batchCounts.get(s)}")
     }
@@ -69,17 +71,22 @@ class StreamingSpec extends SparkSpec {
     val ckpt = tmpDir("stream-ckpt2")
     input.write.mode("overwrite").parquet(src)
 
-    StreamingPipeline.start(
+    StreamingPipeline.startSnapshotSinks(
       StreamingPipeline.fromDirectory(spark, src), out, ckpt,
       Trigger.AvailableNow()).awaitTermination(120000)
+    val reg = new Registry(out, spark)
+    def versions = (Sinks.All.map(reg.sinkTable(_).state().version),
+      reg.commitLog.state().version)
+    val before = versions
     // second run, same checkpoint: no new input → no new output
-    StreamingPipeline.start(
+    StreamingPipeline.startSnapshotSinks(
       StreamingPipeline.fromDirectory(spark, src), out, ckpt,
       Trigger.AvailableNow()).awaitTermination(120000)
 
-    val total = Sinks.All.map(s => spark.read.parquet(s"$out/$s/batch=*").count()).sum
+    val total = Sinks.All.map(s => reg.readSink(s).map(_.count()).getOrElse(0L)).sum
     val expected = TranscriptPipeline.routed(input).count()
     assert(total == expected, s"dupes after restart: $total vs $expected")
+    assert(versions == before, "the restart must commit no new snapshot")
   }
 
   test("snapshot-table streaming sink is exactly-once even across checkpoint loss") {
