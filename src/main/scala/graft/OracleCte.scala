@@ -3,7 +3,7 @@ package graft
 /** DuckDB-SQL twins of [[graft.sources.Transcripts.fromEvents]] and the
   * serverlog parse/route stages, used as WITH-prefixes for oracle queries.
   * Every expression here is the integer/string arithmetic mirror of the
-  * Column expressions in Transcripts.scala / ServerlogKernel — keep the two
+  * Column expressions in Transcripts.scala / ServerlogRowWriter — keep the two
   * in lockstep.
   */
 object OracleCte {
@@ -40,7 +40,7 @@ object OracleCte {
       |  FROM ev
       |)""".stripMargin
 
-  /** `parsed` CTE: the SQL mirror of ServerlogKernel.parse + routing sink. */
+  /** `parsed` CTE: the SQL mirror of ServerlogRowWriter.parse + routing sink. */
   val parsed: String = transcripts +
     """, items AS (
       |  SELECT *,

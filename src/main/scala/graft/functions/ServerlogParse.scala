@@ -3,35 +3,13 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row kernel for the serverlog parse stage. Static (forwarder) methods so
-  * whole-stage-codegen can call it directly from generated Java.
-  *
-  * Reproduces the semantics of the reference fork's `parse_serverlog`
-  * processor (libbeat/processors/parse_serverlog/parser.go:71-160), applied
-  * to the raw content line (the JSON envelope unwrap is a separate operator):
-  *
-  *  - `logtime` = first 23 chars (parser.go:98)
-  *  - positional `SplitN(content, " ", 12)`; < 11 items → pass-through
-  *    ("short", parser.go:100-103)
-  *  - service name: one comma removed, must match `^[a-z]+[a-z0-9-_.]+$`
-  *    else the event is dropped ("bad_service", parser.go:105-109)
-  *  - benchmark traffic: trimmed trace id matching `^00000000[1-9a-f]` stops
-  *    field extraction ("benchmark", parser.go:111-114)
-  *  - fields hostname/level(upper)/thread/class/method/line(int)/trace/span,
-  *    `[...]`-trimming via first+last char strip (parser.go:116-136,155-160)
-  *  - embedded JSON between first and last `##JIDU##` markers merged into an
-  *    `extra` map (parser.go:138-151); `message` = suffix from first marker
-  */
+/** Output schema, status constants and byte-level helpers of the serverlog
+  * parse stage; the grammar itself is [[ServerlogRowWriter]]. */
 object ServerlogKernel {
   import graft.model.ParseStatus._
-
-  private val fieldNames = Array("logtime", "service", "hostname", "level",
-    "thread", "class", "method", "line", "trace_id", "span_id", "message",
-    "extra", "script_error", "status")
 
   val schema: StructType = StructType(Seq(
     StructField("logtime", StringType),
@@ -51,26 +29,19 @@ object ServerlogKernel {
   ))
 
   // pre-encoded status constants — one allocation for the process, not per row
-  private val StShort = UTF8String.fromString(Short)
-  private val StBadService = UTF8String.fromString(BadService)
-  private val StBenchmark = UTF8String.fromString(Benchmark)
-  private val StOk = UTF8String.fromString(Ok)
+  private[functions] val StShort = UTF8String.fromString(Short)
+  private[functions] val StBadService = UTF8String.fromString(BadService)
+  private[functions] val StBenchmark = UTF8String.fromString(Benchmark)
+  private[functions] val StOk = UTF8String.fromString(Ok)
   /** `script_error` marker for an unparseable `[line]` item — the reference
     * keeps the event with a script_error field and skips field extraction
     * (parser.go:117-136); the dead-letter taxonomy must not lose the
     * "line unparseable" case. */
-  private val ErrLineParse = UTF8String.fromString("line_parse_error")
-
-  // raw-byte twins of the status constants for the UnsafeRow writer path
-  private[functions] val StShortBytes = Short.getBytes("UTF-8")
-  private[functions] val StBadServiceBytes = BadService.getBytes("UTF-8")
-  private[functions] val StBenchmarkBytes = Benchmark.getBytes("UTF-8")
-  private[functions] val StOkBytes = Ok.getBytes("UTF-8")
   private[functions] val ErrLineParseBytes = "line_parse_error".getBytes("UTF-8")
 
-  /** jackson fallback for non-flat extra JSON, shared by both row writers:
-    * object → (keys, values) with reference merge semantics
-    * (parser.go:138-151); null for non-objects / parse errors (json_error). */
+  /** jackson fallback for non-flat extra JSON: object → (keys, values) with
+    * reference merge semantics (parser.go:138-151); null for non-objects /
+    * parse errors (json_error). */
   private[functions] def jacksonExtra(b: Array[Byte], from: Int,
                                       until: Int): (Array[UTF8String], Array[UTF8String]) = {
     // overlapping markers (##JIDU##JIDU## — the 8-byte marker self-overlaps
@@ -123,395 +94,114 @@ object ServerlogKernel {
   // per-thread mapper (the ContainerKernel pattern): the jackson fallback is
   // off the hot path, but a SHARED factory's buffer pool still serializes
   // non-flat-envelope workloads at 32 threads — exactly the contention the
-  // byte-slicing rewrite of this kernel was built to avoid
+  // byte-slicing parse was built to avoid
   private val mappers =
     ThreadLocal.withInitial[com.fasterxml.jackson.databind.ObjectMapper](
       () => new com.fasterxml.jackson.databind.ObjectMapper())
   private def mapper = mappers.get()
-
-  /** Allocation-lean parse: ONE defensive byte copy of the row, then every
-    * output string is a zero-copy `UTF8String.fromBytes` slice of it. The
-    * original String-based kernel allocated ~1 KB of garbage per row
-    * (decode → 12 substrings → re-encode), which inverted thread-scaling at
-    * 32 cores — allocation rate, not CPU, was the bottleneck. Byte slicing
-    * is also the faithful port: Go strings are bytes, so SplitN/trim in
-    * parser.go:100-160 are byte operations. */
-  def parse(input: UTF8String): InternalRow = {
-    val n = input.numBytes
-    // defensive copy: the input may alias a reused scan buffer, and our
-    // output slices must stay valid after this call returns
-    val b = new Array[Byte](n)
-    org.apache.spark.unsafe.Platform.copyMemory(
-      input.getBaseObject, input.getBaseOffset, b,
-      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, n.toLong)
-    @inline def slice(from: Int, until: Int): UTF8String =
-      UTF8String.fromBytes(b, from, until - from)
-
-    val logtime = if (n >= 23) slice(0, 23) else slice(0, n)
-
-    // Go strings.SplitN(s, " ", 12): record the start/end of each item;
-    // the 12th item (if any) runs to end-of-line
-    val starts = new Array[Int](12)
-    val ends = new Array[Int](12)
-    var cnt = 0
-    var start = 0
-    var i = 0
-    while (i < n && cnt < 11) {
-      if (b(i) == ' ') {
-        starts(cnt) = start; ends(cnt) = i; cnt += 1; start = i + 1
-      }
-      i += 1
-    }
-    starts(cnt) = start; ends(cnt) = n; cnt += 1
-
-    def statusOnly(status: UTF8String): InternalRow = {
-      val r = new Array[Any](14)
-      r(0) = logtime
-      r(13) = status
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(r)
-    }
-
-    if (cnt < 11) return statusOnly(StShort)
-
-    // service: one comma removed (parser.go:105), usually absent → zero-copy
-    var svc: UTF8String = null
-    var svcBytes = b
-    var svcFrom = starts(2)
-    var svcUntil = ends(2)
-    var ci = -1
-    var j = svcFrom
-    while (ci < 0 && j < svcUntil) { if (b(j) == ',') ci = j; j += 1 }
-    if (ci >= 0) {
-      val sb = new Array[Byte](svcUntil - svcFrom - 1)
-      System.arraycopy(b, svcFrom, sb, 0, ci - svcFrom)
-      System.arraycopy(b, ci + 1, sb, ci - svcFrom, svcUntil - ci - 1)
-      svcBytes = sb; svcFrom = 0; svcUntil = sb.length
-    }
-    if (!validService(svcBytes, svcFrom, svcUntil)) return statusOnly(StBadService)
-    svc = UTF8String.fromBytes(svcBytes, svcFrom, svcUntil - svcFrom)
-
-    // trace: first+last byte strip (reference trim, parser.go:155-160)
-    val trFrom = if (ends(9) - starts(9) < 2) starts(9) else starts(9) + 1
-    val trUntil = if (ends(9) - starts(9) < 2) ends(9) else ends(9) - 1
-    if (ends(9) > starts(9) && isBenchmarkTrace(b, trFrom, trUntil)) {
-      val r = new Array[Any](14)
-      r(0) = logtime; r(1) = svc; r(13) = StBenchmark
-      return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(r)
-    }
-
-    @inline def trimmed(k: Int): UTF8String =
-      if (ends(k) - starts(k) < 2) slice(starts(k), ends(k))
-      else slice(starts(k) + 1, ends(k) - 1)
-
-    // line number parse from bytes ([%{line}] → long)
-    val lnFrom = if (ends(8) - starts(8) < 2) starts(8) else starts(8) + 1
-    val lnUntil = if (ends(8) - starts(8) < 2) ends(8) else ends(8) - 1
-    var lineOk = lnUntil > lnFrom && lnUntil - lnFrom <= 20
-    var neg = false
-    var k = lnFrom
-    if (lineOk && (b(k) == '-' || b(k) == '+')) { neg = b(k) == '-'; k += 1; lineOk = k < lnUntil }
-    // negative accumulation (JDK Long.parseLong shape): Long.MinValue parses,
-    // and overflow is an EXPLICIT parse failure → script_error, matching Go
-    // strconv's ErrRange (a 19-digit wrap must not yield status=ok garbage)
-    val lnLimit = if (neg) Long.MinValue else -Long.MaxValue
-    var lineNeg = 0L
-    while (lineOk && k < lnUntil) {
-      val c = b(k)
-      if (c < '0' || c > '9') lineOk = false
-      else {
-        val d = c - '0'
-        if (lineNeg < lnLimit / 10 || lineNeg * 10 < lnLimit + d) lineOk = false
-        else { lineNeg = lineNeg * 10 - d; k += 1 }
-      }
-    }
-    val lineNo = if (neg) lineNeg else -lineNeg
-
-    // ##JIDU## marker scan (byte indexOf)
-    var idx = -1
-    var idx2 = -1
-    i = 0
-    while (i <= n - 8) {
-      if (b(i) == '#' && b(i + 1) == '#' && b(i + 2) == 'J' && b(i + 3) == 'I' &&
-        b(i + 4) == 'D' && b(i + 5) == 'U' && b(i + 6) == '#' && b(i + 7) == '#') {
-        if (idx < 0) idx = i
-        idx2 = i
-      }
-      i += 1
-    }
-
-    val vals = new Array[Any](14)
-    vals(0) = logtime
-    vals(1) = svc
-    if (!lineOk) vals(12) = ErrLineParse
-    if (lineOk) {
-      vals(2) = slice(starts(3), ends(3))
-      vals(3) = asciiUpper(b, starts(4), ends(4))
-      vals(4) = trimmed(5)
-      vals(5) = slice(starts(6), ends(6))
-      vals(6) = slice(starts(7), ends(7))
-      vals(7) = lineNo
-      vals(8) = slice(trFrom, trUntil)
-      vals(9) = trimmed(10)
-      if (idx >= 0) vals(10) = slice(idx, n)
-    }
-    // embedded ##JIDU##{json}##JIDU## envelope → extra map (parser.go:138-151).
-    // Fast path: a hand-rolled scanner for flat escape-free string→string
-    // objects (the shape the reference emits). Anything else falls back to
-    // jackson — whose readTree throughput collapses under 32-thread
-    // contention (shared-factory buffer pool), so the hot path must avoid it.
-    if (idx >= 0 && idx != idx2) {
-      val flat = parseFlatStringObject(b, idx + 8, idx2)
-      if (flat != null) {
-        vals(11) = flat
-      } else {
-        // SAME helper as the UnsafeRow writer path — one copy of the merge
-        // semantics, so the PropertySpec parity pin cannot silently drift
-        val kv = jacksonExtra(b, idx + 8, idx2)
-        if (kv != null)
-          vals(11) = new ArrayBasedMapData(
-            new GenericArrayData(kv._1.toArray[Any]),
-            new GenericArrayData(kv._2.toArray[Any]))
-      }
-    }
-    vals(13) = StOk
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-
-  /** Scanner for `{"k": "v", ...}` — flat JSON objects whose keys and values
-    * are escape-free strings (the envelope shape the reference emits,
-    * parse_serverlog/parser.go:138-151). Returns the map data (zero-copy
-    * slices of `b`) or null when the input is anything fancier (escapes,
-    * non-string values, nesting, duplicate keys) → caller falls back to a
-    * full JSON parse with identical semantics. */
-  private def parseFlatStringObject(b: Array[Byte], from: Int, until: Int): ArrayBasedMapData = {
-    var i = from
-    @inline def ws(): Unit = {
-      while (i < until && (b(i) == ' ' || b(i) == '\t' || b(i) == '\n' || b(i) == '\r')) i += 1
-    }
-    ws()
-    if (i >= until || b(i) != '{') return null
-    i += 1
-    ws()
-    val ks = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val vs = scala.collection.mutable.ArrayBuffer.empty[Any]
-    if (i < until && b(i) == '}') {
-      i += 1; ws()
-      if (i != until) return null
-      return new ArrayBasedMapData(
-        new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
-    }
-    // parse one escape-free, non-multibyte-safe-agnostic string literal;
-    // returns the slice or null (escape / control / unterminated)
-    @inline def str(): UTF8String = {
-      if (i >= until || b(i) != '"') return null
-      i += 1
-      val s0 = i
-      while (i < until && b(i) != '"' && b(i) != '\\') i += 1
-      if (i >= until || b(i) != '"') return null
-      val out = UTF8String.fromBytes(b, s0, i - s0)
-      i += 1
-      out
-    }
-    var more = true
-    while (more) {
-      ws()
-      val k = str()
-      if (k == null) return null
-      var j = 0
-      while (j < ks.length) { if (ks(j) == k) return null; j += 1 } // dup key → fallback
-      ws()
-      if (i >= until || b(i) != ':') return null
-      i += 1
-      ws()
-      val v = str()
-      if (v == null) return null
-      ks += k
-      vs += v
-      ws()
-      if (i < until && b(i) == ',') { i += 1 }
-      else if (i < until && b(i) == '}') { i += 1; more = false }
-      else return null
-    }
-    ws()
-    if (i != until) return null
-    new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
-  }
-
-  /** Status-only evaluation: exactly [[parse]]'s short/bad_service/benchmark/ok
-    * decision with ZERO allocations (reads the UTF8String in place, returns a
-    * cached constant). The router needs only this + `tool`, so count/metrics
-    * plans skip the 13-field extraction entirely — at 10^12 rows the
-    * difference between "route every row" and "fully parse every row". */
-  def status(input: UTF8String): UTF8String = {
-    val base = input.getBaseObject
-    val off = input.getBaseOffset
-    val n = input.numBytes
-    @inline def at(i: Int): Byte = org.apache.spark.unsafe.Platform.getByte(base, off + i)
-
-    // SplitN boundary scan (same walk as parse): record item 2 (service) and
-    // item 9 (trace); `spaces` counts split points, capped at 11
-    var spaces = 0
-    var start = 0
-    var svcFrom = -1; var svcUntil = -1
-    var trFrom = -1; var trUntil = -1
-    var i = 0
-    while (i < n && spaces < 11) {
-      if (at(i) == ' ') {
-        if (spaces == 2) { svcFrom = start; svcUntil = i }
-        if (spaces == 9) { trFrom = start; trUntil = i }
-        spaces += 1; start = i + 1
-      }
-      i += 1
-    }
-    if (spaces < 10) return StShort // total items = spaces + 1 < 11
-
-    // service: strip ONE comma, then ^[a-z]+[a-z0-9-_.]+$ (parser.go:105-109)
-    var ci = -1
-    var j = svcFrom
-    while (ci < 0 && j < svcUntil) { if (at(j) == ',') ci = j; j += 1 }
-    val effLen = (svcUntil - svcFrom) - (if (ci >= 0) 1 else 0)
-    if (effLen < 2) return StBadService
-    val firstPos = if (ci == svcFrom) svcFrom + 1 else svcFrom
-    val c0 = at(firstPos)
-    if (c0 < 'a' || c0 > 'z') return StBadService
-    j = svcFrom
-    while (j < svcUntil) {
-      if (j != ci && j != firstPos) {
-        val c = at(j)
-        val ok = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
-          c == '-' || c == '_' || c == '.'
-        if (!ok) return StBadService
-      }
-      j += 1
-    }
-
-    // benchmark trace: raw item non-empty, first+last strip, ^00000000[1-9a-f]
-    if (trUntil > trFrom) {
-      val tf = if (trUntil - trFrom < 2) trFrom else trFrom + 1
-      val tu = if (trUntil - trFrom < 2) trUntil else trUntil - 1
-      if (tu - tf >= 9) {
-        var k = tf
-        var zeros = true
-        while (zeros && k < tf + 8) { if (at(k) != '0') zeros = false; k += 1 }
-        if (zeros) {
-          val c = at(tf + 8)
-          if ((c >= '1' && c <= '9') || (c >= 'a' && c <= 'f')) return StBenchmark
-        }
-      }
-    }
-    StOk
-  }
-
-  /** upper-case: byte-wise for pure-ASCII values (the fast path); Unicode
-    * fallback matches the original `toUpperCase(Locale.ROOT)` semantics. */
-  private def asciiUpper(b: Array[Byte], from: Int, until: Int): UTF8String = {
-    var ascii = true
-    var anyLower = false
-    var i = from
-    while (i < until) {
-      val c = b(i)
-      if (c < 0) ascii = false
-      else if (c >= 'a' && c <= 'z') anyLower = true
-      i += 1
-    }
-    if (!ascii)
-      return UTF8String.fromString(
-        UTF8String.fromBytes(b, from, until - from).toString
-          .toUpperCase(java.util.Locale.ROOT))
-    if (!anyLower) return UTF8String.fromBytes(b, from, until - from)
-    val out = new Array[Byte](until - from)
-    i = from
-    while (i < until) {
-      val c = b(i)
-      out(i - from) = if (c >= 'a' && c <= 'z') (c - 32).toByte else c
-      i += 1
-    }
-    UTF8String.fromBytes(out, 0, out.length)
-  }
 }
 
-/** Zero-allocation serverlog parser: identical semantics to
-  * [[ServerlogKernel.parse]] (parity pinned by PropertySpec on arbitrary
-  * input), but writes the result DIRECTLY into a reused `UnsafeRow` buffer —
-  * no defensive line copy, no `GenericInternalRow`, no per-field boxing, no
-  * `UTF8String` wrappers on the hot path. Round-1 profiling showed the
-  * ~400 B/row parse garbage throttling 8→32-thread scaling on this
-  * memory-bound host; every output byte now moves exactly once, input
-  * buffer → row buffer.
+/** The serverlog parse stage: the reference fork's `parse_serverlog`
+  * processor (libbeat/processors/parse_serverlog/parser.go:71-160), applied
+  * to the raw content line (the JSON envelope unwrap is a separate operator):
+  *
+  *  - `logtime` = first 23 bytes (parser.go:98)
+  *  - positional `SplitN(content, " ", 12)`; < 11 items → pass-through
+  *    ("short", parser.go:100-103)
+  *  - service name: one comma removed, must match `^[a-z]+[a-z0-9-_.]+$`
+  *    else the event is dropped ("bad_service", parser.go:105-109)
+  *  - benchmark traffic: trimmed trace id matching `^00000000[1-9a-f]` stops
+  *    field extraction ("benchmark", parser.go:111-114)
+  *  - fields hostname/level(upper)/thread/class/method/line(int)/trace/span,
+  *    `[...]`-trimming via first+last byte strip (parser.go:116-136,155-160)
+  *  - embedded JSON between first and last `##JIDU##` markers merged into an
+  *    `extra` map (parser.go:138-151); `message` = suffix from first marker
+  *
+  * Go strings are bytes, so every step is a byte operation. [[parse]] writes
+  * the result DIRECTLY into a reused `UnsafeRow` buffer — no line copy, no
+  * `GenericInternalRow`, no per-field boxing: every output byte moves once,
+  * input buffer → row buffer. [[status]] is only the first phase (split,
+  * service, trace) and allocates nothing per row; the router uses it.
   *
   * Buffer contract: the returned row aliases a writer owned by this
   * instance and is valid until the next `parse` call on the same thread —
   * the standard Spark projection-output contract (operators that buffer
-  * rows copy them). [[ServerlogParse]] holds one writer per thread via
-  * ThreadLocal, so concurrent tasks never share a buffer.
+  * rows copy them). [[ServerlogParse]] and [[ServerlogStatus]] hold one
+  * writer per thread via ThreadLocal, so concurrent tasks never share one.
   */
 final class ServerlogRowWriter {
   import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
   import org.apache.spark.unsafe.Platform
+  import ServerlogKernel._
 
   private val w = new UnsafeRowWriter(14, 512)
   private val keyWriter = new UnsafeArrayWriter(w, 8)
   private val valWriter = new UnsafeArrayWriter(w, 8)
   private var scratch = new Array[Byte](64)
-  // slice store for the flat-JSON extra map: input-relative (from, until)
+  // slice store for the flat-JSON extra map: (from, until) offsets into `b`
   private var pairFrom = new Array[Int](16)
   private var pairUntil = new Array[Int](16)
 
+  // the first phase's results: the line as `b(base until base + n)`, the
+  // SplitN items as input-relative `starts`/`ends`, and the comma-stripped
+  // service as `svcBytes(svcFrom until svcUntil)` (`b` or `scratch`)
+  private var b: Array[Byte] = _
+  private var base = 0
+  private var n = 0
   private val starts = new Array[Int](12)
   private val ends = new Array[Int](12)
+  private var svcBytes: Array[Byte] = _
+  private var svcFrom = 0
+  private var svcUntil = 0
 
-  private def ensureScratch(n: Int): Array[Byte] = {
-    if (scratch.length < n) scratch = new Array[Byte](Integer.highestOneBit(n) * 2)
+  private def ensureScratch(len: Int): Array[Byte] = {
+    if (scratch.length < len) scratch = new Array[Byte](Integer.highestOneBit(len) * 2)
     scratch
   }
 
-  /** requires input.getBaseObject to be a byte[] (the on-heap norm). */
-  def parse(input: UTF8String): org.apache.spark.sql.catalyst.expressions.UnsafeRow = {
-    import ServerlogKernel._
-    val b = input.getBaseObject.asInstanceOf[Array[Byte]]
-    val base = (input.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+  // item k with its first and last byte stripped (the reference's `[..]`
+  // trim, parser.go:155-160); an item shorter than 2 bytes is kept whole
+  private def trimFrom(k: Int): Int = if (ends(k) - starts(k) < 2) starts(k) else starts(k) + 1
+  private def trimUntil(k: Int): Int = if (ends(k) - starts(k) < 2) ends(k) else ends(k) - 1
+
+  /** The row's status — `parse(input)`'s field 13 — and the first phase of
+    * [[parse]]: points `b` at the line's bytes (off-heap input is copied
+    * once into a fresh array — not into `scratch`, which the comma and
+    * upper-case paths reuse mid-parse), walks the SplitN boundaries, and
+    * checks the service and the benchmark trace. Allocates nothing for
+    * on-heap input. */
+  def status(input: UTF8String): UTF8String = {
     val n = input.numBytes
-    w.reset()
-    w.zeroOutNullBytes()
-    @inline def at(i: Int): Byte = b(base + i)
-    @inline def writeSlice(ord: Int, from: Int, until: Int): Unit =
-      w.write(ord, b, base + from, until - from)
-    @inline def writeConst(ord: Int, v: Array[Byte]): Unit =
-      w.write(ord, v, 0, v.length)
+    val b = input.getBaseObject match {
+      case arr: Array[Byte] => arr
+      case _ =>
+        val copy = new Array[Byte](n)
+        Platform.copyMemory(input.getBaseObject, input.getBaseOffset, copy,
+          Platform.BYTE_ARRAY_OFFSET, n.toLong)
+        copy
+    }
+    val base =
+      if (b eq input.getBaseObject) (input.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
+    this.b = b; this.base = base; this.n = n
 
-    writeSlice(0, 0, math.min(23, n)) // logtime
-
-    // Go strings.SplitN(s, " ", 12)
+    // Go strings.SplitN(s, " ", 12): the 12th item runs to end-of-line
     var cnt = 0
     var start = 0
     var i = 0
     while (i < n && cnt < 11) {
-      if (at(i) == ' ') {
+      if (b(base + i) == ' ') {
         starts(cnt) = start; ends(cnt) = i; cnt += 1; start = i + 1
       }
       i += 1
     }
     starts(cnt) = start; ends(cnt) = n; cnt += 1
+    if (cnt < 11) return StShort
 
-    @inline def nullRange(a: Int, b0: Int): Unit = {
-      var k = a; while (k <= b0) { w.setNullAt(k); k += 1 }
-    }
-    def statusOnly(st: Array[Byte], svcFrom: Int, svcUntil: Int,
-                   svcBytes: Array[Byte]): org.apache.spark.sql.catalyst.expressions.UnsafeRow = {
-      if (svcBytes == null) w.setNullAt(1)
-      else w.write(1, svcBytes, svcFrom, svcUntil - svcFrom)
-      nullRange(2, 12)
-      writeConst(13, st)
-      w.getRow
-    }
-
-    if (cnt < 11) return statusOnly(StShortBytes, 0, 0, null)
-
-    // service: one comma removed (parser.go:105); comma path copies into the
-    // reusable scratch buffer, the common path writes straight from input
-    var svcBytes: Array[Byte] = b
-    var svcFrom = base + starts(2)
-    var svcUntil = base + ends(2)
+    // service: one comma removed (parser.go:105); the comma path copies into
+    // the reusable scratch buffer, the common path reads the input in place
+    svcBytes = b
+    svcFrom = base + starts(2)
+    svcUntil = base + ends(2)
     var ci = -1
     var j = svcFrom
     while (ci < 0 && j < svcUntil) { if (b(j) == ',') ci = j; j += 1 }
@@ -522,27 +212,47 @@ final class ServerlogRowWriter {
       System.arraycopy(b, ci + 1, sb, ci - svcFrom, svcUntil - ci - 1)
       svcBytes = sb; svcFrom = 0; svcUntil = len
     }
-    if (!ServerlogKernel.validService(svcBytes, svcFrom, svcUntil))
-      return statusOnly(StBadServiceBytes, 0, 0, null)
+    if (!validService(svcBytes, svcFrom, svcUntil)) return StBadService
 
-    // benchmark trace check on the first+last-stripped item 9
-    val trFrom = if (ends(9) - starts(9) < 2) starts(9) else starts(9) + 1
-    val trUntil = if (ends(9) - starts(9) < 2) ends(9) else ends(9) - 1
-    if (ends(9) > starts(9) &&
-      ServerlogKernel.isBenchmarkTrace(b, base + trFrom, base + trUntil))
-      return statusOnly(StBenchmarkBytes, svcFrom, svcUntil, svcBytes)
+    if (ends(9) > starts(9) && isBenchmarkTrace(b, base + trimFrom(9), base + trimUntil(9)))
+      StBenchmark
+    else StOk
+  }
 
-    w.write(1, svcBytes, svcFrom, svcUntil - svcFrom)
+  def parse(input: UTF8String): org.apache.spark.sql.catalyst.expressions.UnsafeRow = {
+    val st = status(input)
+    val b = this.b
+    val base = this.base
+    val n = this.n
+    w.reset()
+    w.zeroOutNullBytes()
+    @inline def at(i: Int): Byte = b(base + i)
+    @inline def writeSlice(ord: Int, from: Int, until: Int): Unit =
+      w.write(ord, b, base + from, until - from)
+    @inline def nullRange(a: Int, b0: Int): Unit = {
+      var k = a; while (k <= b0) { w.setNullAt(k); k += 1 }
+    }
+
+    writeSlice(0, 0, math.min(23, n)) // logtime
+    // service is kept on benchmark rows (set before the trace check)
+    if ((st eq StShort) || (st eq StBadService)) w.setNullAt(1)
+    else w.write(1, svcBytes, svcFrom, svcUntil - svcFrom)
+    if (!(st eq StOk)) {
+      nullRange(2, 12)
+      w.write(13, st)
+      return w.getRow
+    }
 
     // line number parse ([%{line}] → long)
-    val lnFrom = if (ends(8) - starts(8) < 2) starts(8) else starts(8) + 1
-    val lnUntil = if (ends(8) - starts(8) < 2) ends(8) else ends(8) - 1
+    val lnFrom = trimFrom(8)
+    val lnUntil = trimUntil(8)
     var lineOk = lnUntil > lnFrom && lnUntil - lnFrom <= 20
     var neg = false
     var k = lnFrom
     if (lineOk && (at(k) == '-' || at(k) == '+')) { neg = at(k) == '-'; k += 1; lineOk = k < lnUntil }
-    // overflow-checked negative accumulation — must stay in lockstep with
-    // ServerlogKernel.parse (PropertySpec pins writer↔kernel parity)
+    // negative accumulation (JDK Long.parseLong shape): Long.MinValue parses,
+    // and overflow is an EXPLICIT parse failure → script_error, matching Go
+    // strconv's ErrRange (a 19-digit wrap must not yield status=ok garbage)
     val lnLimit = if (neg) Long.MinValue else -Long.MaxValue
     var lineNeg = 0L
     while (lineOk && k < lnUntil) {
@@ -556,10 +266,10 @@ final class ServerlogRowWriter {
     }
     val lineNo = if (neg) lineNeg else -lineNeg
 
-    // ##JIDU## marker scan
+    // ##JIDU## marker scan: first and last occurrence
     var idx = -1
     var idx2 = -1
-    i = 0
+    var i = 0
     while (i <= n - 8) {
       if (at(i) == '#' && at(i + 1) == '#' && at(i + 2) == 'J' && at(i + 3) == 'I' &&
         at(i + 4) == 'D' && at(i + 5) == 'U' && at(i + 6) == '#' && at(i + 7) == '#') {
@@ -569,27 +279,27 @@ final class ServerlogRowWriter {
       i += 1
     }
 
-    @inline def trimmed(ord: Int, item: Int): Unit =
-      if (ends(item) - starts(item) < 2) writeSlice(ord, starts(item), ends(item))
-      else writeSlice(ord, starts(item) + 1, ends(item) - 1)
-
     if (lineOk) {
       writeSlice(2, starts(3), ends(3)) // hostname
       writeUpper(b, base + starts(4), base + ends(4)) // level, field 3
-      trimmed(4, 5) // thread
+      writeSlice(4, trimFrom(5), trimUntil(5)) // thread
       writeSlice(5, starts(6), ends(6)) // class
       writeSlice(6, starts(7), ends(7)) // method
       w.write(7, lineNo)
-      writeSlice(8, trFrom, trUntil) // trace_id
-      trimmed(9, 10) // span_id
+      writeSlice(8, trimFrom(9), trimUntil(9)) // trace_id
+      writeSlice(9, trimFrom(10), trimUntil(10)) // span_id
       if (idx >= 0) writeSlice(10, idx, n) else w.setNullAt(10) // message
       w.setNullAt(12) // script_error
     } else {
       nullRange(2, 10)
-      writeConst(12, ErrLineParseBytes)
+      w.write(12, ErrLineParseBytes, 0, ErrLineParseBytes.length)
     }
 
-    // extra map between the JIDU markers
+    // embedded ##JIDU##{json}##JIDU## envelope → extra map (parser.go:138-151).
+    // Fast path: a scanner for flat escape-free string→string objects (the
+    // shape the reference emits). Anything else falls back to jackson —
+    // whose readTree throughput collapses under 32-thread contention
+    // (shared-factory buffer pool), so the hot path must avoid it.
     var wroteExtra = false
     if (idx >= 0 && idx != idx2) {
       val nPairs = scanFlatObject(b, base + idx + 8, base + idx2)
@@ -597,8 +307,7 @@ final class ServerlogRowWriter {
         writeMapFromSlices(11, b, nPairs)
         wroteExtra = true
       } else {
-        // complex JSON → jackson fallback with identical semantics
-        val kv = ServerlogKernel.jacksonExtra(b, base + idx + 8, base + idx2)
+        val kv = jacksonExtra(b, base + idx + 8, base + idx2)
         if (kv != null) {
           writeMapFromStrings(11, kv._1, kv._2)
           wroteExtra = true
@@ -607,14 +316,13 @@ final class ServerlogRowWriter {
     }
     if (!wroteExtra) w.setNullAt(11)
 
-    writeConst(13, ServerlogKernel.StOkBytes)
+    w.write(13, StOk)
     w.getRow
   }
 
-  /** ASCII upper-case of a byte range into field `ord` = 3 (level); the
-    * Unicode fallback routes through the kernel's String path. */
+  /** upper-case of a byte range into field 3 (level): byte-wise for pure
+    * ASCII (the fast path), `toUpperCase(Locale.ROOT)` otherwise. */
   private def writeUpper(b: Array[Byte], from: Int, until: Int): Unit = {
-    import org.apache.spark.unsafe.Platform
     var ascii = true
     var anyLower = false
     var i = from
@@ -643,39 +351,39 @@ final class ServerlogRowWriter {
   }
 
   /** scan `{"k": "v", ...}` recording key/value slices into pairFrom/Until
-    * (keys at even indices, values at odd); returns pair count, or -1 when
-    * the object needs the full JSON fallback (escapes, nesting, dup keys) —
-    * same contract as [[ServerlogKernel.parseFlatStringObject]]. */
+    * (keys at even indices, values at odd); returns the pair count, or -1
+    * when the object needs the full JSON parse: escapes, raw control bytes
+    * (RFC 8259 §7 forbids U+0000–U+001F unescaped in a string), non-string
+    * values, nesting, duplicate keys. Whatever it accepts, jackson parses to
+    * the same pairs. */
   private def scanFlatObject(b: Array[Byte], from: Int, until: Int): Int = {
     var i = from
     @inline def ws(): Unit = {
       while (i < until && (b(i) == ' ' || b(i) == '\t' || b(i) == '\n' || b(i) == '\r')) i += 1
     }
+    // a plain string literal at i: its closing quote's index, or -1
+    @inline def strEnd(): Int = {
+      if (i >= until || b(i) != '"') return -1
+      var e = i + 1
+      while (e < until && b(e) != '"' && b(e) != '\\' && (b(e) < 0 || b(e) >= 0x20)) e += 1
+      if (e < until && b(e) == '"') e else -1
+    }
     ws()
     if (i >= until || b(i) != '{') return -1
     i += 1
     ws()
-    var n = 0
-    @inline def ensure(slots: Int): Unit =
-      if (pairFrom.length < slots) {
-        pairFrom = java.util.Arrays.copyOf(pairFrom, slots * 2)
-        pairUntil = java.util.Arrays.copyOf(pairUntil, slots * 2)
-      }
     if (i < until && b(i) == '}') {
       i += 1; ws()
       return if (i == until) 0 else -1
     }
+    var n = 0
     var more = true
     while (more) {
       ws()
-      // key
-      if (i >= until || b(i) != '"') return -1
-      i += 1
-      val k0 = i
-      while (i < until && b(i) != '"' && b(i) != '\\') i += 1
-      if (i >= until || b(i) != '"') return -1
-      val k1 = i
-      i += 1
+      val k1 = strEnd()
+      if (k1 < 0) return -1
+      val k0 = i + 1
+      i = k1 + 1
       // duplicate key check against previously recorded keys
       var d = 0
       while (d < n) {
@@ -692,14 +400,14 @@ final class ServerlogRowWriter {
       if (i >= until || b(i) != ':') return -1
       i += 1
       ws()
-      if (i >= until || b(i) != '"') return -1
-      i += 1
-      val v0 = i
-      while (i < until && b(i) != '"' && b(i) != '\\') i += 1
-      if (i >= until || b(i) != '"') return -1
-      val v1 = i
-      i += 1
-      ensure(2 * (n + 1))
+      val v1 = strEnd()
+      if (v1 < 0) return -1
+      val v0 = i + 1
+      i = v1 + 1
+      if (pairFrom.length < 2 * (n + 1)) {
+        pairFrom = java.util.Arrays.copyOf(pairFrom, 4 * (n + 1))
+        pairUntil = java.util.Arrays.copyOf(pairUntil, 4 * (n + 1))
+      }
       pairFrom(2 * n) = k0; pairUntil(2 * n) = k1
       pairFrom(2 * n + 1) = v0; pairUntil(2 * n + 1) = v1
       n += 1
@@ -716,7 +424,6 @@ final class ServerlogRowWriter {
   /** UnsafeRow map layout: [8B key-array numBytes][key array][value array]
     * (the same byte stream GenerateUnsafeProjection emits for MapType). */
   private def writeMapFromSlices(ord: Int, b: Array[Byte], nPairs: Int): Unit = {
-    import org.apache.spark.unsafe.Platform
     val previousCursor = w.cursor()
     w.grow(8)
     w.increaseCursor(8)
@@ -741,7 +448,6 @@ final class ServerlogRowWriter {
 
   private def writeMapFromStrings(ord: Int, keys: Array[UTF8String],
                                   vals: Array[UTF8String]): Unit = {
-    import org.apache.spark.unsafe.Platform
     val previousCursor = w.cursor()
     w.grow(8)
     w.increaseCursor(8)
@@ -757,28 +463,36 @@ final class ServerlogRowWriter {
   }
 }
 
-/** Catalyst expression: `serverlog_parse(text)` → struct (see
-  * [[ServerlogKernel.schema]]). Native expression with codegen (a single
-  * static call inside whole-stage codegen) — not a UDF, per the engine's
-  * north-star parse-stage requirement. */
 /** Catalyst expression: `serverlog_status(text)` → string — the router's
-  * allocation-free fast path (see [[ServerlogKernel.status]]); agrees with
-  * `serverlog_parse(text).status` by construction (pinned by spec). */
+  * allocation-free fast path: [[ServerlogRowWriter.status]], the same first
+  * phase that decides `serverlog_parse(text).status`, without the field
+  * extraction. */
 case class ServerlogStatus(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "serverlog_status"
 
-  override protected def nullSafeEval(input: Any): Any =
-    ServerlogKernel.status(input.asInstanceOf[UTF8String])
+  /** one writer per (expression instance, thread), as in [[ServerlogParse]] */
+  @transient private lazy val writers: ThreadLocal[ServerlogRowWriter] =
+    ThreadLocal.withInitial(() => new ServerlogRowWriter)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ServerlogKernel.status($c);")
+  def evalInput(input: UTF8String): UTF8String = writers.get().status(input)
+
+  override protected def nullSafeEval(input: Any): Any =
+    evalInput(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("serverlogStatus", this, classOf[ServerlogStatus].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): ServerlogStatus =
     copy(child = newChild)
 }
 
+/** Catalyst expression: `serverlog_parse(text)` → struct (see
+  * [[ServerlogKernel.schema]]). Native expression with codegen (a single
+  * call inside whole-stage codegen) — not a UDF, per the engine's
+  * north-star parse-stage requirement. */
 case class ServerlogParse(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ServerlogKernel.schema
   override def nullable: Boolean = true
@@ -791,9 +505,7 @@ case class ServerlogParse(child: Expression) extends UnaryExpression {
   @transient private lazy val writers: ThreadLocal[ServerlogRowWriter] =
     ThreadLocal.withInitial(() => new ServerlogRowWriter)
 
-  def evalInput(input: UTF8String): InternalRow =
-    if (input.getBaseObject.isInstanceOf[Array[Byte]]) writers.get().parse(input)
-    else ServerlogKernel.parse(input) // off-heap input: reference path
+  def evalInput(input: UTF8String): InternalRow = writers.get().parse(input)
 
   override protected def nullSafeEval(input: Any): Any =
     evalInput(input.asInstanceOf[UTF8String])

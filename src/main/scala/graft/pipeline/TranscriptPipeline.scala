@@ -62,8 +62,9 @@ object TranscriptPipeline {
     transform(df).filter(col("sink") =!= Filtered)
 
   /** sink column via the allocation-free status fast path — identical
-    * routing decision to [[transform]] (ServerlogStatus == parse().status by
-    * construction, pinned by PipelineSpec) without the 13-field extraction.
+    * routing decision to [[transform]] (serverlog_status runs the parse's own
+    * first phase, pinned by ServerlogStatusSpec) without the 13-field
+    * extraction.
     * Count/metrics plans route 10^12 rows; they should never pay for fields
     * nobody reads. */
   def sinkFast(df: DataFrame): DataFrame =

@@ -12,13 +12,18 @@ import graft.sources.Transcripts
 /** E2E checkpoint/resume gates, mirroring the reference's registrar system
   * tests (filebeat/tests/system/test_registrar.py: offset equality after
   * restart, no duplicate publication). */
-class PipelineRunnerSpec extends SparkSpec
+class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-runner").toString
 
   private lazy val input = Transcripts.fromEvents(spark, "/root/testdata/sf0.001").cache()
+
+  // the session is JVM-wide: a cached input left behind would stand in for
+  // later specs' own scans of the same files
+  override def afterAll(): Unit =
+    try input.unpersist(blocking = true) finally super.afterAll()
 
   /** the runner's conv bucket, restated independently of its code */
   private def bucket(groups: Int) =

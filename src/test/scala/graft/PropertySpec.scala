@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Arbitrary, Gen}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{ServerlogKernel, VectorTextKernel}
+import graft.functions.{ServerlogParse, ServerlogStatus, VectorTextKernel}
 
 /** Property tests (SURVEY §5): total functions on arbitrary input — a parse
   * engine at 10^12 rows WILL see every possible byte sequence; nothing here
@@ -26,21 +29,66 @@ class PropertySpec extends AnyFunSuite {
 
   private val anyString: Gen[String] = Arbitrary.arbitrary[String]
 
-  /** strings biased toward the serverlog shape — spaces, brackets, markers. */
+  /** strings biased toward the serverlog shape — spaces, brackets, markers,
+    * raw control characters inside the embedded JSON. */
   private val loggy: Gen[String] = for {
     n <- Gen.choose(0, 30)
     parts <- Gen.listOfN(n, Gen.oneOf(
       Gen.alphaNumStr.map(_.take(8)), Gen.const("[x1]"), Gen.const("[]"),
       Gen.const("svc-a,"), Gen.const("Svc-B"), Gen.const("[000000001a]"),
       Gen.const("##JIDU##"), Gen.const("""##JIDU##{"k": "v"}##JIDU##"""),
+      Gen.const("##JIDU##{\"k\": \"a\tb\"}##JIDU##"),
+      Gen.const("##JIDU##{\"k\nx\": \"v\"}##JIDU##"), Gen.const("\u0001"),
       Gen.const("{\"k\": 1}"), Gen.const("2024-01-01 00:00:00.000")))
   } yield parts.mkString(" ")
+
+  /** lines in the serverlog item layout with adversarial items: arbitrary
+    * strings and `loggy` rarely get past the short/bad_service exits, these
+    * mostly reach field extraction and the `extra` map. */
+  private val shaped: Gen[String] = for {
+    svc <- Gen.oneOf("svc-a", "svc-a,", ",svc.b", "svc_c,d", "Svc-B", "s,", "sé")
+    level <- Gen.oneOf("info", "WARN", "débug", "")
+    lineNo <- Gen.oneOf("[41]", "[-7]", "[+3]", "[x1]", "[]", "[+]", "[٣]",
+      "[9223372036854775808]", "[-9223372036854775808]", "[000000000000000000001]")
+    trace <- Gen.oneOf("[t1]", "[000000001a]", "[00000000]", "x", "")
+    rest <- Gen.oneOf(Gen.alphaNumStr.map(_.take(8)), Gen.const("evt=view  id=41"))
+    json <- Gen.oneOf("", """{"k": "v", "n": 1}""", "{\"k\": \"a\tb\"}",
+      "{\"k\nx\": \"v\"}", "{\"k\": \"\u0001\"}", """{"k": "a\tb"}""",
+      """{"a": "1", "a": "2"}""", "{}", """{"k": "v",}""", """{ "ü" : "é" }""",
+      "[1]", """{"o": {"p": 1}}""", "JIDU##")
+  } yield s"2024-01-01 00:00:00.000 $svc host-1 $level [t-1] C m $lineNo $trace [s1] " +
+    s"$rest ##JIDU##$json##JIDU##"
+
+  private val parseExpr = ServerlogParse(Literal("x"))
+  private val statusExpr = ServerlogStatus(Literal("x"))
+
+  /** a row as [[ServerlogReference.parse]] shapes it: owned copies of the
+    * string fields, `line` boxed, `extra` as its (key, value) pairs. */
+  private def fields(row: InternalRow): IndexedSeq[Any] = (0 until 14).map { i =>
+    if (row.isNullAt(i)) null
+    else if (i == 7) row.getLong(7)
+    else if (i == 11) {
+      val m = row.getMap(11)
+      (0 until m.numElements()).map(j =>
+        m.keyArray.getUTF8String(j).toString -> m.valueArray.getUTF8String(j).toString)
+    } else row.getUTF8String(i).clone()
+  }
+
+  /** `s`'s bytes as an off-heap UTF8String, freed after `f` */
+  private def offHeap[A](s: String)(f: UTF8String => A): A = {
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val addr = Platform.allocateMemory(math.max(1, b.length).toLong)
+    try {
+      Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET, null, addr, b.length.toLong)
+      f(UTF8String.fromAddress(null, addr, b.length))
+    } finally Platform.freeMemory(addr)
+  }
 
   test("serverlog parse is total (never throws) and status-consistent") {
     forAll(Gen.oneOf(anyString, loggy)) { s =>
       val u = UTF8String.fromString(s)
-      val row = ServerlogKernel.parse(u)      // must not throw
-      val fast = ServerlogKernel.status(u)    // must not throw
+      val row = parseExpr.evalInput(u)      // must not throw
+      val fast = statusExpr.evalInput(u)    // must not throw
       val slow = row.getUTF8String(13) // field 13 = status (12 = script_error)
       assert(fast == slow, s"status mismatch on ${s.take(80)}: $slow vs $fast")
     }
@@ -48,7 +96,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("parse row invariants: logtime prefix, ok-iff-fields") {
     forAll(loggy) { s =>
-      val row = ServerlogKernel.parse(UTF8String.fromString(s))
+      val row = parseExpr.evalInput(UTF8String.fromString(s))
       val status = row.getUTF8String(13).toString
       assert(Set("ok", "short", "bad_service", "benchmark").contains(status))
       if (s.nonEmpty) {
@@ -63,28 +111,36 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("UnsafeRow writer path agrees with the reference kernel everywhere") {
-    import graft.functions.ServerlogParse
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val expr = ServerlogParse(Literal("x"))
-    forAll(Gen.oneOf(anyString, loggy)) { s =>
+    forAll(Gen.oneOf(anyString, loggy, shaped)) { s =>
       val u = UTF8String.fromString(s)
-      val fast = expr.evalInput(u)
-      val slow = ServerlogKernel.parse(u)
-      def str(r: org.apache.spark.sql.catalyst.InternalRow, i: Int): String =
-        if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-      for (i <- Seq(0, 1, 2, 3, 4, 5, 6, 8, 9, 10, 12, 13))
-        assert(str(fast, i) == str(slow, i), s"field $i on '${s.take(60)}'")
-      assert(fast.isNullAt(7) == slow.isNullAt(7))
-      if (!slow.isNullAt(7)) assert(fast.getLong(7) == slow.getLong(7))
-      assert(fast.isNullAt(11) == slow.isNullAt(11), s"extra null on '${s.take(60)}'")
-      if (!slow.isNullAt(11)) {
-        val fm = fast.getMap(11); val sm = slow.getMap(11)
-        def pairs(m: org.apache.spark.sql.catalyst.util.MapData) =
-          (0 until m.numElements()).map(i =>
-            m.keyArray.getUTF8String(i).toString -> m.valueArray.getUTF8String(i).toString)
-        assert(pairs(fm) == pairs(sm), s"extra map on '${s.take(60)}'")
+      val want = ServerlogReference.parse(u.getBytes)
+      val got = fields(parseExpr.evalInput(u))
+      for (i <- 0 until 14)
+        assert(got(i) == want(i), s"field $i on '${s.take(60)}': ${got(i)} vs ${want(i)}")
+      assert(statusExpr.evalInput(u) == want(13), s"status on '${s.take(60)}'")
+    }
+  }
+
+  test("off-heap input parses and routes like on-heap input") {
+    val commaLower =
+      "2024-01-01 00:16:06.738 svc-a,b host-2 info [t-1] C m [41] [t1] [s1] ##JIDU##{\"k\": \"v\"}##JIDU##"
+    val samples = Seq.newBuilder[String]
+    forAll(Gen.oneOf(anyString, loggy, shaped))(samples += _)
+    for (s <- samples.result() :+ commaLower) {
+      val u = UTF8String.fromString(s)
+      val onHeap = fields(parseExpr.evalInput(u))
+      val onHeapStatus = statusExpr.evalInput(u)
+      offHeap(s) { o =>
+        assert(!o.getBaseObject.isInstanceOf[Array[Byte]])
+        val got = fields(parseExpr.evalInput(o))
+        for (i <- 0 until 14)
+          assert(got(i) == onHeap(i), s"field $i on '${s.take(60)}': ${got(i)} vs ${onHeap(i)}")
+        assert(statusExpr.evalInput(o) == onHeapStatus, s"status on '${s.take(60)}'")
       }
     }
+    val r = offHeap(commaLower)(o => fields(parseExpr.evalInput(o)))
+    assert(r(1) == UTF8String.fromString("svc-ab") && r(3) == UTF8String.fromString("INFO"))
+    assert(r(11) == Seq("k" -> "v") && r(13) == UTF8String.fromString("ok"))
   }
 
   test("simhash64 is deterministic and insensitive to token order only via content") {

@@ -81,6 +81,17 @@ class ServerlogParseSpec extends SparkSpec {
     assert(r.getAs[Map[String, String]]("extra") == null)
   }
 
+  test("raw control characters in the embedded JSON are a json_error, escaped ones parse") {
+    // RFC 8259 §7: U+0000–U+001F must be escaped inside a string
+    for (json <- Seq("{\"k\": \"a\tb\"}", "{\"k\nx\": \"v\"}")) {
+      val r = parseOne(okLine + s" ##JIDU##$json##JIDU##")
+      assert(r.getAs[String]("status") == "ok")
+      assert(r.getAs[Map[String, String]]("extra") == null, json)
+    }
+    val escaped = parseOne(okLine + " ##JIDU##{\"k\": \"a\\tb\"}##JIDU##")
+    assert(escaped.getAs[Map[String, String]]("extra") == Map("k" -> "a\tb"))
+  }
+
   test("non-numeric line number → fields withheld (script_error path)") {
     val r = parseOne(okLine.replace("[41]", "[x41]"))
     assert(r.getAs[String]("status") == "ok")
