@@ -111,12 +111,12 @@ object Bench {
     // several seconds of one-time session/classload/JIT cost
     try SparkEntry.queries("q_transcripts")(spark, sfDir).count()
     catch { case _: Throwable => }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(_._1 == "q_dedup_jaccard")
-      .map { case (name, fn) =>
+    val queries = SparkEntry.all.sortBy(_.name)
+      .filterNot(_.name == "q_dedup_jaccard")
+      .map { q =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try q.build(spark, sfDir).count() catch { case _: Throwable => -1L }
+        q.name -> (System.nanoTime() - t0) / 1e9
       }
     val total = queries.map(_._2).sum
     spark.stop()

@@ -529,11 +529,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       }
       val snap = SnapshotInfo(newSnapId(st), runId, txn, operation, moved, summary)
       val (refs, inline, written) = planFiles(st, moved, replace = false)
-      // recorded only while every listed file agrees; otherwise reads infer
       val schema =
         if (moved.isEmpty) st.schema
         else if (st.files.isEmpty) movedSchema
-        else st.schema.filter(movedSchema.contains)
+        else unionSchema(st.schema, movedSchema)
       if (casCommit(st, buildMeta(st, snap, refs, inline, schema)))
         return CommitResult(snap.id, alreadyCommitted = false,
           moved.map(_.size).sum, moved.size)
@@ -604,8 +603,9 @@ object SnapshotTable {
                                 summary: Option[String] = None)
 
   /** `schema`: the data files' Spark schema, recorded at commit so reads
-    * skip inference; None when some listed file's schema is unknown or
-    * differs. */
+    * skip inference — the union of the files' columns when their column
+    * sets differ; None when some listed file's schema is unknown or two
+    * files disagree on a column's type. */
   final case class TableState(version: Long, snapshotId: Option[String],
                               files: Seq[FileEntry],
                               txnKeys: Map[String, String],
@@ -635,6 +635,14 @@ object SnapshotTable {
     override def sizeInBytes: Long = files.map(_.getLen).sum
     override def partitionSchema: StructType = new StructType()
   }
+
+  /** the schema that reads every file of two file sets whose schemas are
+    * `a` and `b`: `a`'s fields, then those of `b` that `a` lacks (a file
+    * without a column reads it as null). None when either is unknown or a
+    * column both hold differs in type — reads then infer. */
+  private def unionSchema(a: Option[StructType], b: Option[StructType]): Option[StructType] =
+    for (x <- a; y <- b if y.forall(f => x.find(_.name == f.name).forall(_ == f)))
+      yield StructType(x.fields ++ y.fields.filterNot(f => x.fieldNames.contains(f.name)))
 
   /** the schema a parquet read infers for data written with schema `t`:
     * file reads make every field nullable, at every depth */

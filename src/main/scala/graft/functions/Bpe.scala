@@ -13,23 +13,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop (repeatedly merge the lowest-ranked adjacent symbol pair present,
   * left-to-right non-overlapping, until no table pair remains). Work is
   * O(len²) hash probes per DISTINCT word and independent of table size, so
-  * a 100k-merge production table costs the same per word as a 10-rule one —
-  * unlike the chained-`replace` fold in
-  * [[graft.textops.TextOps.bpeSegmentFold]], whose plan is O(merges) string
-  * passes per word and stops codegenning past O(100) rules (64 KB method /
-  * constant-pool limits).
+  * a 100k-merge production table costs the same per word as a 10-rule one,
+  * where a chained-`replace` fold (one string pass per rule, the shape the
+  * DuckDB oracle states) is O(merges) passes per word and stops
+  * codegenning past O(100) rules (64 KB method / constant-pool limits).
   *
   * PRECONDITION — rank-consistent table: any rule whose side is a merge
   * product must appear AFTER the rule producing it, and each symbol has one
-  * producing rule. A trained table meets the first because a symbol cannot
-  * be chosen before it exists, and the second by the argument in
-  * [[graft.textops.BpeTrainer]] (a symbol's derivation does not depend on
-  * its context). Under it the min-rank loop is exactly the fold's
-  * rank-order rewrite (a later merge can only create pairs INVOLVING its
-  * new symbol, whose rules all rank later, so no earlier rule's occurrence
-  * is ever created after its pass). Hand-written tables may break it.
-  * Equivalence is spec-pinned at 1k+ learned merges and on run-parity
-  * corpora (TextOpsSpec).
+  * producing rule ([[requireRankConsistent]] checks both; the
+  * `bpe_encode_words` wrapper calls it at plan time). A trained table meets
+  * the first because a symbol cannot be chosen before it exists, and the
+  * second by the argument in [[graft.textops.BpeTrainer]] (a symbol's
+  * derivation does not depend on its context). Under it the min-rank loop
+  * is exactly the rank-order rewrite of the fold (a later merge can only
+  * create pairs INVOLVING its new symbol, whose rules all rank later, so no
+  * earlier rule's occurrence is ever created after its pass). Equivalence
+  * with the fold is spec-pinned at 1k+ learned merges and on run-parity
+  * corpora (TextOpsSpec, which keeps the fold as its reference).
   *
   * Zipf makes word frequencies extremely skewed, so each task keeps a
   * bounded per-thread word→subwords cache (the standard tokenizer-apply
@@ -68,6 +68,23 @@ object BpeKernel {
       k += 1; i += cc
     }
     out
+  }
+
+  /** Throws an `IllegalArgumentException` naming the first rule that
+    * breaks rank consistency: two rules that produce the same symbol, or a
+    * rule with a side that only the same or a later rule produces. */
+  def requireRankConsistent(merges: Seq[(String, String)]): Unit = {
+    def fail(msg: String) =
+      throw new IllegalArgumentException(s"BPE merge table is not rank-consistent: $msg")
+    val producer = scala.collection.mutable.HashMap.empty[String, Int]
+    merges.iterator.zipWithIndex.foreach { case ((a, b), r) =>
+      producer.get(a + b).foreach(k => fail(s"rules $k and $r both produce '${a + b}'"))
+      producer(a + b) = r
+    }
+    merges.iterator.zipWithIndex.foreach { case ((a, b), r) =>
+      for (side <- Seq(a, b); k <- producer.get(side) if k >= r)
+        fail(s"rule $r ('$a', '$b') uses '$side', which rule $k produces")
+    }
   }
 
   /** pair key in the rank map: a NUL-fenced join would collide on symbols

@@ -60,10 +60,13 @@ package object functions {
 
   /** tokenizer-real BPE apply: array of words → per-word subword arrays
     * under a merge-rank table carried as ONE reference object (table-size-
-    * independent per-word cost; see [[BpeKernel]] for the rank-consistency
-    * precondition every trained table satisfies). */
-  def bpe_encode_words(words: Column, merges: Seq[(String, String)]): Column =
+    * independent per-word cost). A table that breaks the rank-consistency
+    * precondition every trained table satisfies is rejected here
+    * ([[BpeKernel.requireRankConsistent]]). */
+  def bpe_encode_words(words: Column, merges: Seq[(String, String)]): Column = {
+    BpeKernel.requireRankConsistent(merges)
     ExpressionUtils.column(BpeEncodeWords(ExpressionUtils.expression(words), merges))
+  }
 
   /** network condition leaf: IP-string column ∈ any of the named networks /
     * CIDRs (conditions/network.go). */
@@ -125,13 +128,18 @@ package object functions {
   /** fingerprint of selected columns (≈ processors/fingerprint: hash of
     * joined fields, hex-encoded — fingerprint/fingerprint.go:70-120).
     * `method` mirrors the reference's config values (fingerprint/hash.go).
-    * The joined layout here is value-only `a|b|c`; for byte-parity with the
-    * reference's `|key|value|…|` encoding use [[fingerprint_fields]].
-    * Null fields encode as a U+0000 sentinel — concat_ws would silently SKIP
-    * them (with their separators), colliding `(a, null, c)` with `(a, c)`. */
+    * The hashed string is value-only and length-prefixed: each field in
+    * order as `<UTF-8 byte length>:<value>`, a null field as `-`, with no
+    * separator, so `("a|b", "c")`, `("a", "b|c")`, `(null)` and a lone U+0000
+    * all hash differently. For byte-parity with the reference's
+    * `|key|value|…|` encoding use [[fingerprint_fields]].
+    * Format change: fingerprints made before this encoding hashed
+    * `a|b|c` with U+0000 for null, and do not match today's. */
   def fingerprint_cols(cols: Seq[Column], method: String = "sha256"): Column =
-    method_digest(concat_ws("|",
-      cols.map(c => coalesce(c.cast("string"), lit("\u0000"))): _*), method)
+    method_digest(concat(cols.map { c =>
+      val s = c.cast("string")
+      coalesce(concat(octet_length(s).cast("string"), lit(":"), s), lit("-"))
+    }: _*), method)
 
   /** exact reference fingerprint: named fields, sorted+deduped by name
     * (fingerprint.go:55-58 MakeStringSet.ToSlice), encoded `|k|v` per field
@@ -269,20 +277,6 @@ package object functions {
     * once at plan time (the deployment path for the real ~9k-rule list). */
   def registered_domain_from_file(domain: Column, rulesFile: String): Column =
     registered_domain(domain, PslKernel.loadRules(rulesFile))
-
-  /** membership-count of an array&lt;bigint&gt; of gram hashes against a fixed
-    * sorted set carried inside the expression → `(n_grams, hits)`; the
-    * join-free decontamination kernel. */
-  def ngram_set_hits(gramHashes: Column, sortedSet: Array[Long]): Column =
-    ExpressionUtils.column(
-      NgramSetHits(ExpressionUtils.expression(gramHashes), sortedSet))
-
-  /** might-contain count of an array&lt;bigint&gt; of gram hashes against a
-    * serialized `util.sketch.BloomFilter` → `(n_grams, bloom_hits)`; zero
-    * bloom hits proves zero true hits (no false negatives). */
-  def ngram_bloom_hits(gramHashes: Column, bfBytes: Array[Byte]): Column =
-    ExpressionUtils.column(
-      NgramBloomHits(ExpressionUtils.expression(gramHashes), bfBytes))
 
   /** TCP-stream frame split (inputsource/common/streaming/scan.go): RFC6587
     * octet-counting + non-transparent framing per frame (the syslog input's

@@ -76,8 +76,9 @@ object Actions {
     coalesce(formats.map(f => try_to_timestamp(c, lit(f))): _*)
 
   /** fingerprint (fingerprint/fingerprint.go:70-120): hash of joined fields,
-    * hex. Field order is the config order, join is "|"; `method` is the
-    * reference's md5|sha1|sha256|sha512|xxhash set (fingerprint/hash.go). */
+    * hex. Field order is the config order, each field length-prefixed
+    * ([[graft.functions.fingerprint_cols]]); `method` is the reference's
+    * md5|sha1|sha256|sha512|xxhash set (fingerprint/hash.go). */
   def fingerprint(cols: Seq[Column], method: String = "sha256"): Column =
     fingerprint_cols(cols, method)
 

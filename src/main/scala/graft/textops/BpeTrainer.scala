@@ -17,10 +17,10 @@ import graft.functions.BpeKernel
   *    O(k) chained replaces PER ITERATION (O(k²) total) of re-deriving
   *    segmentation from scratch each round.
   *
-  * Chosen-merge semantics are EXACTLY the fold's: applying rule k+1 to the
-  * fold-k segmentation is by definition the fold-(k+1) segmentation, so
-  * the incremental state never diverges from what
-  * [[TextOps.bpeSegmentFold]] would compute with the learned prefix — the
+  * Chosen-merge semantics are EXACTLY the rank-order rewrite's: applying
+  * rule k+1 to the rule-k segmentation is by definition the rule-(k+1)
+  * segmentation, so the incremental state never diverges from what
+  * [[TextOps.bpeSegment]] computes with the learned prefix — the
   * argmax each round therefore matches the former per-iteration Spark
   * aggregation row for row (count ties broken by pair codepoint order,
   * Spark's binary string sort).
@@ -34,7 +34,9 @@ import graft.functions.BpeKernel
   * After rule (x, y) no x sits before a y; a later merge builds only
   * symbols that did not exist at (x, y)'s rank, and x and y both did, so
   * the pair never comes back and its count stays zero (spec-pinned on
-  * run-parity corpora in TextOpsSpec). */
+  * run-parity corpora in TextOpsSpec). Both facts together are the rank
+  * consistency that [[graft.functions.BpeKernel.requireRankConsistent]]
+  * checks, so a learned table always passes it. */
 private[textops] object BpeTrainer {
 
   private final case class Entry(count: Long, a: String, b: String)

@@ -51,7 +51,10 @@ object CorpusOps {
     * not corpus size. No n-gram string ever leaves a task. The plan reads
     * the training corpus twice ((doc_id, text) pruned both times): once for
     * the probe, once for the verdict base — persist the gram projection
-    * first when that scan dominates the job. */
+    * first when that scan dominates the job.
+    *
+    * This is the one decontamination plan; [[graft.dedup.Dedup.curate]]'s
+    * decontamination stage calls it too. */
   def decontaminate(train: DataFrame, bench: DataFrame, n: Int = 8,
                     minHits: Int = 1): DataFrame = {
     val benchGrams = bench
@@ -68,102 +71,6 @@ object CorpusOps {
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("hits"), lit(0L)).as("hits"))
       .withColumn("contaminated", col("hits") >= minHits)
-  }
-
-  /** Join-free decontamination for the shape real pipelines actually have:
-    * the evaluation suite is SMALL AND FIXED (GPT-3 decontaminated against
-    * benchmark sets of 10^4–10^5 documents), so its distinct gram hashes are
-    * collected once (driver-side, size-guarded), sorted into a primitive
-    * long array, and shipped inside a codegen'd expression
-    * ([[graft.functions.NgramSetHits]]). The 10^12-doc train side then stays
-    * a single narrow map over the scan — no 25×-row gram explode, no
-    * broadcast join, no per-doc aggregation shuffle, and the text is
-    * tokenized ONCE (the join path scans it twice: hits + n_grams).
-    *
-    * Same output contract as [[decontaminate]]; equivalence is spec-pinned.
-    * Use [[decontaminate]] when the "benchmark" side is itself corpus-sized
-    * (the set no longer fits a task binary) — `maxGrams` guards the cliff
-    * explicitly rather than letting the driver OOM. */
-  def decontaminateInline(train: DataFrame, bench: DataFrame, n: Int = 8,
-                          minHits: Int = 1,
-                          maxGrams: Int = 64 << 20): DataFrame = {
-    val session = bench.sparkSession
-    import session.implicits._
-    val grams = bench.select(explode(ngramHashes(col("text"), n)).as("g"))
-      .distinct().as[Long].collect()
-    require(grams.length <= maxGrams,
-      s"benchmark gram set (${grams.length}) exceeds maxGrams=$maxGrams — " +
-        "use the join-based decontaminate for corpus-sized right sides")
-    java.util.Arrays.sort(grams)
-    train
-      .select(col("doc_id"),
-        graft.functions.ngram_set_hits(ngramHashes(col("text"), n), grams).as("_r"))
-      .select(col("doc_id"), col("_r.n_grams").as("n_grams"),
-        col("_r.hits").cast("long").as("hits"),
-        (col("_r.hits") >= minHits).as("contaminated"))
-  }
-
-  /** Bloom-prefiltered decontamination — the fixed-memory scale path for the
-    * third shape: a "benchmark" side too big for [[decontaminateInline]]'s
-    * exact in-task set AND too big to broadcast-join comfortably (e.g.
-    * decontaminating one corpus against another corpus's held-out split).
-    *
-    * Shape: (1) a Bloom filter over the benchmark gram stream — built with
-    * Spark's own distributed sketch aggregate, NO distinct shuffle (Bloom
-    * insertion is idempotent), `fpp` bounds its size at m ≈ -n·ln(fpp)/ln²2
-    * bits regardless of corpus size; (2) the train side probes it in one
-    * codegen'd narrow map ([[graft.functions.NgramBloomHits]]); (3) a Bloom
-    * filter has NO false negatives, so `bloom_hits = 0` (the overwhelming
-    * majority of a real corpus) is DEFINITIVELY clean with exact `hits = 0`;
-    * (4) only the bloom-positive slice — true contamination + an `fpp`
-    * fraction of false positives — re-verifies through the exact gram join,
-    * with no broadcast hint so AQE picks the join strategy from the actual
-    * slice sizes. The result is EXACT (same contract as [[decontaminate]],
-    * equivalence spec-pinned); the Bloom only decides who must be verified.
-    *
-    * `fpp` is PER GRAM and compounds per document — a doc with g grams is a
-    * false candidate with probability 1-(1-fpp)^g, so at g≈200 a 1% filter
-    * sends ~85% of the clean corpus through verification while 10⁻³ sends
-    * ~17% and 10⁻⁴ ~2%. The default 10⁻³ (~14.4 bits/gram — 1.8 GB for 10⁹
-    * benchmark grams) balances filter size against verification volume;
-    * push it DOWN as grams-per-document grows.
-    *
-    * Pass `expectedGrams` when the benchmark gram cardinality is known to
-    * skip the approx-count pass (one extra scan of the benchmark side). */
-  def decontaminateBloom(train: DataFrame, bench: DataFrame, n: Int = 8,
-                         minHits: Int = 1, fpp: Double = 0.001,
-                         expectedGrams: Long = -1L): DataFrame = {
-    val grams = bench.select(explode(ngramHashes(col("text"), n)).as("g"))
-    val est = math.max(64L,
-      if (expectedGrams > 0) expectedGrams
-      else grams.agg(approx_count_distinct(col("g"))).first().getLong(0))
-    val bf = grams.stat.bloomFilter("g", est, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val probed = train.select(col("doc_id"), col("text"),
-      graft.functions.ngram_bloom_hits(
-        ngramHashes(col("text"), n), bos.toByteArray).as("_b"))
-    // a null text gives a null probe — such docs must still appear in the
-    // output (hits=0, like [[decontaminate]]'s left join keeps them), not
-    // silently vanish because they match neither bloom_hits branch
-    val clean = probed.filter(col("_b").isNull || col("_b.bloom_hits") === 0)
-      .select(col("doc_id"), col("_b.n_grams").as("n_grams"),
-        lit(0L).as("hits"), lit(false).as("contaminated"))
-    val candidates = probed.filter(col("_b.bloom_hits") > 0)
-      .select(col("doc_id"), col("text"), col("_b.n_grams").as("n_grams"))
-    // exact verification of the slice: same join algebra as [[decontaminate]]
-    // but unhinted — the benchmark side here is corpus-sized by premise
-    val hits = candidates
-      .select(col("doc_id"), explode(ngramHashes(col("text"), n)).as("g"))
-      .join(grams.distinct(), Seq("g"))
-      .groupBy("doc_id").agg(count(lit(1)).as("hits"))
-    val verified = candidates
-      .select(col("doc_id"), col("n_grams"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("contaminated", col("hits") >= minHits)
-    clean.unionByName(verified)
   }
 
   /** PII patterns — deliberately in the regex subset where Java and RE2

@@ -160,64 +160,24 @@ object TextOps {
         scaled4(col("_r3.dup_frac")).as("dup3_e4"))
   }
 
-  /** rule-count threshold above which [[bpeSegment]] switches from the
-    * chained-replace fold plan to the [[graft.functions.BpeEncodeWords]]
-    * kernel: past O(100) chained replaces the fold stops codegenning
-    * (64 KB method / constant-pool limits) and its interpreted cost is
-    * O(merges) string passes per word. */
-  val BpeFoldLimit: Int = 64
-
   /** Greedy merge-rank BPE apply (Sennrich et al. 2016's encode step):
     * each merge rule (a, b) → ab is applied in rank order as a
     * left-to-right non-overlapping pair rewrite over every word's symbol
-    * sequence; returns per-word subword arrays. Pure narrow map — no
+    * sequence; returns per-word subword arrays. One plan at every table
+    * size: the [[graft.functions.BpeEncodeWords]] kernel (one
+    * reference-object merge-rank hash map, per-word min-rank adjacent-merge
+    * loop, per-task word cache), whose per-word cost is independent of
+    * table size (30k–100k-merge production tables). Pure narrow map — no
     * shuffle; at 100 TB this is linear scan CPU.
     *
-    * Plan shape by table size: up to [[BpeFoldLimit]] rules this is the
-    * ANSI-mirrorable chained-replace fold ([[bpeSegmentFold]] — the
-    * DuckDB-oracled path); above it, the tokenizer-real kernel
-    * ([[bpeSegmentKernel]]), whose per-word cost is independent of table
-    * size (30k–100k-merge production tables). The two agree exactly on
-    * rank-consistent tables — every TRAINED table is (see
-    * [[BpeTrainer]]); equivalence on learned tables is spec-pinned — so the
-    * switch is a plan choice, not a semantics choice, for any table
-    * [[trainBpe]] (or a real tokenizer) emits. Hand-written
-    * rank-INCONSISTENT tables larger than the threshold should call
-    * [[bpeSegmentFold]] directly. */
+    * The table must be rank-consistent: no rule may use a symbol that only
+    * a later rule produces, and no two rules may produce the same symbol.
+    * Under that condition the min-rank loop states exactly the rank-order
+    * rewrite (see [[graft.functions.BpeKernel]]). Every table [[trainBpe]]
+    * emits meets it (see [[BpeTrainer]]); a table that breaks it is
+    * rejected at plan time with an `IllegalArgumentException` naming the
+    * rule. */
   def bpeSegment(text: Column, merges: Seq[(String, String)]): Column =
-    if (merges.length > BpeFoldLimit) bpeSegmentKernel(text, merges)
-    else bpeSegmentFold(text, merges)
-
-  /** the chained-replace fold plan for [[bpeSegment]]: symbols ride in
-    * U+0001-fenced cells ("\\u0001sym\\u0001") so adjacent rewrites never
-    * share boundary characters — "a b a b" merges to "ab ab" in ONE pass,
-    * the textbook semantics — and any engine with left-to-right
-    * non-overlapping replace() states the identical rewrite (plain string
-    * replace, no regex). Input chars split by the regex `.` (a full code
-    * point in both Java and RE2). PRECONDITION: corpus tokens must not
-    * contain U+0001 themselves (C0 controls are mojibake in crawl text —
-    * run a cleanup pass upstream if the source can carry them); the fence
-    * would corrupt otherwise. The kernel path has no fence and no such
-    * precondition. */
-  def bpeSegmentFold(text: Column, merges: Seq[(String, String)]): Column = {
-    val F = "\u0001"
-    def cell(s: String) = F + s + F
-    transform(tokens(normalized(text)), w => {
-      val cells = array_join(
-        transform(regexp_extract_all(w, lit("."), lit(0)),
-          c => concat(lit(F), c, lit(F))), "")
-      val merged = merges.foldLeft(cells) { case (s, (a, b)) =>
-        replace(s, lit(cell(a) + cell(b)), lit(cell(a + b)))
-      }
-      split(trim(merged, F), F + F)
-    })
-  }
-
-  /** the kernel plan for [[bpeSegment]]: one reference-object merge-rank
-    * hash map, per-word min-rank adjacent-merge loop, per-task word cache
-    * — table-size-independent apply cost (see [[graft.functions.BpeKernel]]
-    * for the rank-consistency precondition). */
-  def bpeSegmentKernel(text: Column, merges: Seq[(String, String)]): Column =
     graft.functions.bpe_encode_words(tokens(normalized(text)), merges)
 
   /** BPE merge-table training (Sennrich et al. 2016's learn step) over a

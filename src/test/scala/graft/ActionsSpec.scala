@@ -336,6 +336,23 @@ class ActionsSpec extends SparkSpec {
     }
   }
 
+  test("fingerprint: a U+0000 value is not null, and a '|' inside a value moves no boundary") {
+    val nul = Seq(("\u0000", null: String)).toDF("zero", "none")
+      .select(Actions.fingerprint(Seq(col("zero"))), Actions.fingerprint(Seq(col("none"))))
+      .collect()(0)
+    assert(nul.getString(0) != nul.getString(1))
+    val bar = Seq(("a|b", "c", "a", "b|c")).toDF("x1", "y1", "x2", "y2")
+      .select(Actions.fingerprint(Seq(col("x1"), col("y1"))),
+        Actions.fingerprint(Seq(col("x2"), col("y2"))))
+      .collect()(0)
+    assert(bar.getString(0) != bar.getString(1))
+    // the hashed string, stated: byte-length-prefixed fields, `-` for null
+    val fp = Seq(("é|", null: String)).toDF("a", "b")
+      .select(Actions.fingerprint(Seq(col("a"), col("b"), lit(7)), "md5"),
+        md5(lit("3:é|-1:7"))).collect()(0)
+    assert(fp.getString(0) == fp.getString(1))
+  }
+
   test("XXH64 kernel: branch parity with Spark's XXH64 at seed 42, spec vector at seed 0") {
     import graft.functions.Xxh64Kernel
     // every input length 0..130 (empty, <4, <8, <32, ≥32 stripes + all tail

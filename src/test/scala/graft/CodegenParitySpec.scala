@@ -142,30 +142,6 @@ class CodegenParitySpec extends SparkSpec {
     }
   }
 
-  test("round-4 kernel: ngram_set_hits") {
-    lazy val d = Seq("a b c d e", "c d e f g", "x", "", "a  b\tc d").toDF("t")
-    val set = Seq("a b c", "c d e").toDF("g")
-      .select(xxhash64(col("g"))).as[Long].collect() :+ 42L
-    java.util.Arrays.sort(set)
-    check("ngram_set_hits") {
-      d.select(ngram_set_hits(
-        graft.textops.CorpusOps.ngramHashes(col("t"), 3), set).as("r"))
-    }
-  }
-
-  test("round-4 kernel: ngram_bloom_hits") {
-    lazy val d = Seq("a b c d e", "c d e f g", "x", "", "a  b\tc d").toDF("t")
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(16, 0.01)
-    Seq("a b c", "c d e").foreach(g =>
-      bf.putLong(Seq(g).toDF("g").select(xxhash64(col("g"))).as[Long].head()))
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    check("ngram_bloom_hits") {
-      d.select(ngram_bloom_hits(
-        graft.textops.CorpusOps.ngramHashes(col("t"), 3), bos.toByteArray).as("r"))
-    }
-  }
-
   test("round-4 parser: decode_wineventlog") {
     lazy val events = Seq(
       "<Event><System><Provider Name='P' Guid='{g}'/><EventID>7</EventID>" +

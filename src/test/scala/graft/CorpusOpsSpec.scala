@@ -53,95 +53,6 @@ class CorpusOpsSpec extends SparkSpec {
       s"benchmark side must broadcast, not shuffle:\n$plan")
   }
 
-  test("decontaminateInline equals the join path on every row") {
-    val train = docs(
-      1L -> "the quick brown fox jumps over lazy dogs",
-      2L -> "totally clean document here four five",
-      3L -> "ab cd",
-      4L -> "quick brown fox quick brown fox",
-      5L -> "the quick brown cat naps")
-    val bench = docs(100L -> "a quick brown fox ran", 101L -> "lazy dogs bark")
-    for (minHits <- Seq(1, 2)) {
-      val joined = CorpusOps.decontaminate(train, bench, n = 3, minHits)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      val inline = CorpusOps.decontaminateInline(train, bench, n = 3, minHits)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      assert(inline == joined, s"minHits=$minHits")
-    }
-  }
-
-  test("decontaminateInline plans a pure narrow map (no join, no shuffle)") {
-    val d = docs(1L -> "a b c d e", 2L -> "c d e f g")
-    val plan = CorpusOps.decontaminateInline(d, d.filter(col("doc_id") === 1), n = 3)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join") && !plan.contains("Exchange"),
-      s"the train side must stay a narrow map:\n$plan")
-  }
-
-  test("decontaminateInline refuses a corpus-sized benchmark side") {
-    val d = docs(1L -> "a b c d e f g h i j")
-    intercept[IllegalArgumentException] {
-      CorpusOps.decontaminateInline(d, d, n = 3, maxGrams = 2)
-    }
-  }
-
-  test("decontaminateBloom equals the join path — even at fpp=0.5") {
-    val train = docs(
-      1L -> "the quick brown fox jumps over lazy dogs",
-      2L -> "totally clean document here four five",
-      3L -> "ab cd",
-      4L -> "quick brown fox quick brown fox",
-      5L -> "the quick brown cat naps",
-      6L -> "unrelated words in an unrelated order entirely")
-    val bench = docs(100L -> "a quick brown fox ran", 101L -> "lazy dogs bark")
-    // fpp=0.5 forces real false positives through the verification join;
-    // the result must still be exact because verification is exact
-    for ((minHits, fpp) <- Seq((1, 0.5), (2, 0.03))) {
-      val joined = CorpusOps.decontaminate(train, bench, n = 3, minHits)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      val bloomed = CorpusOps.decontaminateBloom(train, bench, n = 3, minHits, fpp)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getBoolean(3))).toSet
-      assert(bloomed == joined, s"minHits=$minHits fpp=$fpp")
-    }
-  }
-
-  test("decontaminateBloom: zero bloom hits is definitively clean (no FNs)") {
-    // every truly-contaminated doc MUST reach the verification join: a Bloom
-    // filter can only over-approximate, so hits>0 docs can never be in the
-    // bloom_hits=0 slice (which reports hits=0 without verification)
-    val train = docs((1L to 40L).map(i =>
-      i -> (if (i % 4 == 0) s"shared gram alpha beta gamma $i" else s"doc $i words only here")): _*)
-    val bench = docs(999L -> "shared gram alpha beta gamma zero")
-    val out = CorpusOps.decontaminateBloom(train, bench, n = 3, fpp = 0.4)
-    val expectContam = (1L to 40L).filter(_ % 4 == 0).toSet
-    val got = out.filter(col("contaminated")).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(got == expectContam)
-    // and their hit counts are exact, not bloom counts
-    assert(out.filter(col("doc_id") === 4L).select("hits").first().getLong(0) == 3L)
-  }
-
-  test("decontaminateBloom plans: train probe is narrow; no broadcast of bench grams") {
-    // repartition defeats LocalRelation constant-folding so the executed
-    // plan shows the real distributed shape; distinct texts keep most docs
-    // clean so BOTH union branches survive optimization
-    val train = docs((1L to 20L).map(i =>
-      i -> s"alpha$i beta$i gamma$i delta$i epsilon$i"): _*).repartition(2)
-    val bench = docs(99L -> "alpha7 beta7 gamma7 delta7 epsilon7")
-    val plan = CorpusOps.decontaminateBloom(train, bench, n = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ngram_bloom_hits"), s"bloom probe missing:\n$plan")
-    assert(plan.contains("Union"), s"clean ∪ verified shape missing:\n$plan")
-    // the bloom probe itself must appear OUTSIDE any join subtree: the first
-    // probe occurrence in the clean branch precedes the first Join operator
-    assert(plan.indexOf("ngram_bloom_hits") < plan.indexOf("Join"),
-      s"clean branch must not join:\n$plan")
-  }
-
   test("decontaminate minHits raises the contamination bar") {
     val train = docs(1L -> "a b c d e")          // grams: abc bcd cde
     val bench = docs(9L -> "a b c d")            // grams: abc bcd

@@ -417,26 +417,45 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     }
   }
 
-  test("a root mixing the old (doc_id stored) and new layouts reads the same") {
+  /** a root whose group 0 was committed the old way — its staged slices
+    * still hold doc_id, its sink commits carry `recordSchema`'s schema (the
+    * slices' own with `true`, none with `false`) and its ack the lineage of
+    * exactly those rows — resumed by one run that writes groups 1-3 in the
+    * new layout; returns the root and the sinks group 0 wrote */
+  private def resumedOverOldLayout(recordSchema: Boolean): (String, Seq[String]) = {
     val root = tmpDir()
-    // group 0 committed the old way: its staged slices still hold doc_id,
-    // and its ack carries the lineage of exactly those rows
     val old = new Registry(root, spark)
     val g0 = TranscriptPipeline.transform(input.filter(bucket(4) === 0))
     val staging = old.stagingGroupDir(0)
     g0.filter(col("sink") =!= TranscriptPipeline.Filtered)
       .write.mode("overwrite").partitionBy("sink").parquet(staging)
+    val schema =
+      if (recordSchema) Some(org.apache.spark.sql.types.StructType(g0.schema.filterNot(_.name == "sink")))
+      else None
     val counts = g0.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    for (s <- Sinks.All if counts.getOrElse(s, 0L) > 0)
-      old.commitSinkStaged(s, 0, s"$staging/sink=$s")
+    val written = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0)
+    written.foreach(s => old.commitSinkStaged(s, 0, s"$staging/sink=$s", schema))
     val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     assert(old.commitGroup(0, s"""{"group":0,"counts":$lineage,"writes":{},"snapshots":{}}"""))
     old.cleanupRunStaging()
 
-    // resume: groups 1-3 are written in the new layout
     assert(PipelineRunner.run(input, root, groups = 4).map(_.group) == Seq(1, 2, 3))
     val layouts = tableFiles(root, Sinks.Ls).map(f => footerColumns(f).contains("doc_id")).toSet
     assert(layouts == Set(true, false), s"sink_ls must mix both layouts: $layouts")
+    (root, written)
+  }
+
+  test("a root mixing the old (doc_id stored) and new layouts reads the same") {
+    assertSinksMatchTransform(resumedOverOldLayout(recordSchema = false)._1)
+  }
+
+  test("resuming over an old-layout slice keeps a recorded sink schema") {
+    val (root, written) = resumedOverOldLayout(recordSchema = true)
+    // the new commits record the union of the two layouts, not "unknown"
+    for (s <- written) {
+      val schema = new Registry(root, spark).sinkTable(s).state().schema
+      assert(schema.exists(_.fieldNames.contains("doc_id")), s"$s schema: $schema")
+    }
     assertSinksMatchTransform(root)
   }
 

@@ -85,7 +85,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("serverlog parse is total (never throws) and status-consistent") {
-    forAll(Gen.oneOf(anyString, loggy)) { s =>
+    forAll(Gen.oneOf(anyString, loggy, shaped)) { s =>
       val u = UTF8String.fromString(s)
       val row = parseExpr.evalInput(u)      // must not throw
       val fast = statusExpr.evalInput(u)    // must not throw
@@ -95,7 +95,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("parse row invariants: logtime prefix, ok-iff-fields") {
-    forAll(loggy) { s =>
+    forAll(Gen.oneOf(loggy, shaped)) { s =>
       val row = parseExpr.evalInput(UTF8String.fromString(s))
       val status = row.getUTF8String(13).toString
       assert(Set("ok", "short", "bad_service", "benchmark").contains(status))

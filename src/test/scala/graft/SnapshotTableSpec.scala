@@ -317,11 +317,19 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.state().schema.isEmpty)
     val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(rows == Map(1 -> "b", 2 -> "c"))
-    // files that disagree on the schema record none: reads infer
+    // files that differ only in which columns they hold record the union
+    // (a file without a column reads it as null) ...
     val u = tmpTable()
     u.append(Seq((1, "a")).toDF("id", "v"), None)
     u.append(Seq((2, "b", 3L)).toDF("id", "v", "w"), None)
-    assert(u.state().schema.isEmpty && u.read().get.count() == 2)
+    assert(u.state().schema.map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")))
+    val both = u.read().get.collect().map(r => (r.getInt(0), r.getString(1), r.get(2))).toSet
+    assert(both == Set((1, "a", null), (2, "b", 3L)))
+    // ... while files that disagree on a column's type record none: reads infer
+    val w = tmpTable()
+    w.append(Seq((1, "a")).toDF("id", "v"), None)
+    w.append(Seq((2L, "b")).toDF("id", "v"), None)
+    assert(w.state().schema.isEmpty && w.read().get.count() == 2)
   }
 
   test("time travel window is bounded by expireSnapshots retention") {

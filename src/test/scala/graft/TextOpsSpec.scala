@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.textops.TextOps
@@ -74,17 +75,43 @@ class TextOpsSpec extends SparkSpec {
     assert(out(4) == Seq("in"))
   }
 
-  test("bpeSegmentKernel states the fold's rewrite on the demonstrative table") {
-    import spark.implicits._
-    val merges = Seq("t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n")
-    val out = Seq((1L, "the then bathe thth in")).toDF("doc_id", "text")
-      .select(graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("s"))
-      .head().getSeq[scala.collection.Seq[String]](0).map(_.toList)
-    assert(out(0) == Seq("the"))
-    assert(out(1) == Seq("the", "n"))
-    assert(out(2) == Seq("b", "a", "the"))
-    assert(out(3) == Seq("th", "th"))
-    assert(out(4) == Seq("in"))
+  test("bpeSegment rejects a rank-inconsistent table by name, at plan time") {
+    def reject(merges: Seq[(String, String)]): String =
+      intercept[IllegalArgumentException](TextOps.bpeSegment(col("text"), merges)).getMessage
+    // "th" is used by rule 0 but only rule 1 produces it
+    val later = reject(Seq("th" -> "e", "t" -> "h"))
+    assert(later.contains("not rank-consistent") &&
+      later.contains("rule 0 ('th', 'e') uses 'th', which rule 1 produces"), later)
+    // two splits of one symbol
+    val twice = reject(Seq("a" -> "b", "ab" -> "c", "b" -> "c", "a" -> "bc"))
+    assert(twice.contains("rules 1 and 3 both produce 'abc'"), twice)
+    // a repeated rule produces its symbol twice
+    assert(reject(Seq("a" -> "b", "a" -> "b")).contains("rules 0 and 1 both produce 'ab'"))
+    // a side nothing produces is fine: the rule never fires
+    TextOps.bpeSegment(col("text"), Seq("xy" -> "z", "a" -> "b"))
+  }
+
+  /** the rank-order rewrite stated as a chained-replace fold: one plain
+    * `replace` per rule over U+0001-fenced cells ("\\u0001sym\\u0001"), so
+    * adjacent rewrites never share boundary characters — "a b a b" merges
+    * to "ab ab" in ONE pass — and any engine with left-to-right
+    * non-overlapping replace() states the identical rewrite (the
+    * q_bpe_segment oracle is this fold in DuckDB). Input chars split by the
+    * regex `.` (a full code point in both Java and RE2); tokens must not
+    * contain U+0001. This is the reference [[TextOps.bpeSegment]]'s kernel
+    * is checked against. */
+  private def bpeSegmentFold(text: Column, merges: Seq[(String, String)]): Column = {
+    val F = "\u0001"
+    def cell(s: String) = F + s + F
+    transform(TextOps.tokens(TextOps.normalized(text)), w => {
+      val cells = array_join(
+        transform(regexp_extract_all(w, lit("."), lit(0)),
+          c => concat(lit(F), c, lit(F))), "")
+      val merged = merges.foldLeft(cells) { case (s, (a, b)) =>
+        replace(s, lit(cell(a) + cell(b)), lit(cell(a + b)))
+      }
+      split(trim(merged, F), F + F)
+    })
   }
 
   /** deterministic synthetic vocabulary for the tokenizer-scale tests:
@@ -114,17 +141,12 @@ class TextOpsSpec extends SparkSpec {
     // that caps the fold in production, still evaluable here as the oracle
     val probe = d.limit(12)
     val fold = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegmentFold(col("text"), merges).as("s"))
+      .select(col("doc_id"), bpeSegmentFold(col("text"), merges).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
     val kern = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("s"))
+      .select(col("doc_id"), TextOps.bpeSegment(col("text"), merges).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
     assert(kern == fold, "kernel must equal the fold on a rank-consistent table")
-    // and the public bpeSegment switched to the kernel plan at this size
-    val auto = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegment(col("text"), merges).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
-    assert(auto == fold)
   }
 
   test("trainBpe learns 8k+ merges in bounded time; kernel roundtrips them") {
@@ -149,7 +171,7 @@ class TextOpsSpec extends SparkSpec {
     // must have collapsed below their codepoint length (the table bites)
     val rows = d.select(
       split(lower(trim(col("text"))), "\\s+").as("ws"),
-      graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("ss"))
+      TextOps.bpeSegment(col("text"), merges).as("ss"))
       .collect()
     var words = 0L; var collapsed = 0L
     rows.foreach { r =>
@@ -200,9 +222,9 @@ class TextOpsSpec extends SparkSpec {
       val products = merges.groupBy { case (a, b) => a + b }
       assert(products.forall(_._2.size == 1),
         s"seed $seed: one symbol from two splits: ${products.filter(_._2.size > 1)}")
-      val fold = d.select(TextOps.bpeSegmentFold(col("text"), merges))
+      val fold = d.select(bpeSegmentFold(col("text"), merges))
         .as[Seq[Seq[String]]].collect().toSeq
-      val kern = d.select(TextOps.bpeSegmentKernel(col("text"), merges))
+      val kern = d.select(TextOps.bpeSegment(col("text"), merges))
         .as[Seq[Seq[String]]].collect().toSeq
       assert(kern == fold, s"seed $seed")
     }

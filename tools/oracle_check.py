@@ -1,3 +1,11 @@
+"""Compare graft.Verify's output with its DuckDB oracles.
+
+usage: python3 tools/oracle_check.py [sfdir] [outdir]
+
+Walks every name in <outdir>/oracle_sql.json (one per query), so a query
+whose Verify run failed and wrote no output prints MISSING instead of
+vanishing. Exits 1 unless every line is values=OK.
+"""
 import duckdb, json, glob, os, sys
 d = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -12,12 +20,12 @@ def canon(rel):
     vals = df.astype(str).values.tolist()
     vals.sort()
     return sorted(df.columns), vals
-for name in sorted(os.listdir(out)):
-    if not os.path.isdir(f"{out}/{name}"): continue
-    spark = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')")
-    if name not in oracle:
-        print(f"{name}: rows={len(spark.df())} (no oracle — rows-only)")
+ok = 0
+for name in sorted(oracle):
+    if not glob.glob(f"{out}/{name}/*.parquet"):
+        print(f"{name}: MISSING (no output)")
         continue
+    spark = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')")
     ora = con.sql(oracle[name])
     sc, sv = canon(spark); oc, ov = canon(ora)
     if sc != oc:
@@ -28,4 +36,7 @@ for name in sorted(os.listdir(out)):
         bad = [(a, b) for a, b in zip(sv, ov) if a != b][:3]
         print(f"{name}: VALUE MISMATCH rows={len(sv)} first_diffs={bad}")
     else:
+        ok += 1
         print(f"{name}: values=OK rows={len(sv)}")
+print(f"{ok}/{len(oracle)} values=OK")
+sys.exit(0 if ok == len(oracle) else 1)
