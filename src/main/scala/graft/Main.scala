@@ -10,7 +10,8 @@ import graft.sources.Transcripts
   *   sfDir        directory with events.parquet (transcripts derived), or
   *   synth:N      synthesize N transcript turns (scale benchmarking)
   *   outRoot      checkpoint+sink root directory
-  *   groups       batch-group count (default 4)
+  *   groups       batch-group count (default 4); a root's count is fixed
+  *                by its first run, and a rerun with another is refused
   *   failAfterGroup  inject a crash after this many groups commit (testing)
   */
 object Main {

@@ -204,13 +204,13 @@ object SparkEntry {
           | FROM parsed WHERE sink <> 'filtered'""".stripMargin),
 
     // --- snapshot-table end-to-end: run the CHECKPOINTED pipeline (one
-    //     staged fan-out for every group → one offsets MERGE → per group:
-    //     sink snapshot commits, then the commit-log ack) to a scratch root,
-    //     then read the per-sink counts BACK through the read-committed view
-    //     — the whole table-format protocol inside the oracle gate, not just
-    //     the declarative plan ---
+    //     staged fan-out and one staged offsets write for every group → per
+    //     group: offsets and sink snapshot commits, then the commit-log ack)
+    //     to a scratch root, then read the per-sink counts BACK through the
+    //     read-committed view — the whole table-format protocol inside the
+    //     oracle gate, not just the declarative plan ---
     Query("q_snapshot_sinks", (s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-q-snap").toString
+      val root = ScratchDir("graft-q-snap")
       graft.pipeline.PipelineRunner.run(t(s, dir), root, groups = 2)
       val reg = new graft.checkpoint.Registry(root, s)
       graft.model.Sinks.All.flatMap(k => reg.readSink(k))
@@ -227,7 +227,7 @@ object SparkEntry {
     //     as of EACH version — history must not move under the second
     //     commit, and per-version contents are predicted closed-form ---
     Query("q_snapshot_timetravel", (s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-q-tt").toString
+      val root = ScratchDir("graft-q-tt")
       val tbl = new graft.checkpoint.SnapshotTable(root, s)
       val base = t(s, dir)
       tbl.append(base.filter(pmod(col("turn_idx"), lit(3)) === 0), Some("batch-a"))

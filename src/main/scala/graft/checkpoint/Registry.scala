@@ -17,9 +17,9 @@ import graft.functions.deterministic_id
   *                            rows in [[Registry.stored]] layout: no
   *                            `doc_id` (a pure function of conv_id and
   *                            turn_idx — [[readSink]] derives it)
-  *   <root>/registry/         offsets table — per-partition high-water marks,
-  *                            updated by copy-on-write MERGE INTO on
-  *                            partition_key, once per run
+  *   <root>/registry/         offsets table (append-only) — per-conversation
+  *                            high-water marks, one snapshot per group under
+  *                            the group's txn key `group-<g>`
   *   <root>/commits/          the pipeline commit log — NO data files: one
   *                            metadata-only snapshot per ack (txn key
   *                            `group-<g>` for a batch run's group,
@@ -32,12 +32,15 @@ import graft.functions.deterministic_id
   * Per run, the protocol is:
   *   1. stage every pending group's fan-out in ONE write under
   *      [[stagingRunDir]] (`group=<g>/sink=<s>` — each group's slice is
-  *      [[stagingGroupDir]]);
-  *   2. MERGE the offsets of all pending groups into the registry table
-  *      ONCE, without a txn key — a group's offsets stay invisible until its
-  *      ack (see [[registry]]), and a resume re-merges identical rows;
+  *      [[stagingGroupDir]]), and every pending group's offsets in ONE
+  *      more ([[stageOffsets]]);
   * then per group:
-  *   3. append the group's rows to each sink table with txn key
+  *   2. append the group's offsets slice to the registry table with txn
+  *      key `group-<g>` ([[commitOffsets]]). A conversation lives in
+  *      exactly one group and a root's group count is fixed, so the slice
+  *      never shares a key with committed rows: a plain append, never a
+  *      MERGE;
+  *   3. append the group's rows to each sink table with the same txn key
   *      `group-<g>` — idempotent: a retry or a racing runner gets
   *      `alreadyCommitted` with the original snapshot id, never a duplicate;
   *   4. commit the group's lineage to the commit log as a METADATA-ONLY
@@ -48,6 +51,10 @@ import graft.functions.deterministic_id
   *      runner's commit wins; the loser reports defeat and cleans its
   *      staging.
   *
+  * Every table is append-only and every write is a staged append under a
+  * txn key, so a retry or a racing runner of any step gets
+  * `alreadyCommitted`.
+  *
   * A streaming micro-batch runs steps 1, 3 and 4 (it keeps no offsets
   * table: the stream's checkpoint is its cursor) under its batch txn key.
   *
@@ -56,16 +63,17 @@ import graft.functions.deterministic_id
   * txn key turns the re-append into a no-op returning the crashed run's
   * snapshot id — effectively-once without ever scanning data.
   *
-  * Reads are snapshot-isolated per table, and [[readSink]] additionally
-  * resolves through the commit log (only snapshots whose txn key is acked
-  * in the log are visible), so a partially-committed group is invisible to
-  * consumers until its ack lands — the cross-table read-committed view.
+  * Reads are snapshot-isolated per table, and [[readSink]] and [[registry]]
+  * additionally resolve through the commit log (only snapshots whose txn
+  * key is acked in the log are visible), so a partially-committed group is
+  * invisible to consumers until its ack lands — the cross-table
+  * read-committed view.
   *
   * Run bookkeeping is answered from the commit log's metadata alone:
   * [[lineage]] returns every ack's lineage in one metadata read,
   * which is what the pipeline's metrics sum (O(groups), not O(data)).
   */
-final class Registry(root: String, spark: SparkSession,
+final class Registry(val root: String, spark: SparkSession,
                      val runId: String = Registry.newRunId()) {
 
   private val fs: FileSystem =
@@ -107,19 +115,36 @@ final class Registry(root: String, spark: SparkSession,
                        schema: Option[StructType]): SnapshotTable.CommitResult =
     sinkTable(sink).commitStagedDir(stagedDir, Some(txn), schema)
 
-  /** step 2: MERGE offset rows (any mix of groups, each row carrying its
-    * `group`) into the registry table — partition_key is the merge key, so
-    * a re-run of a conversation's data advances its high-water mark
-    * instead of duplicating the row. No txn key: rows of unacked groups
-    * are invisible through [[registry]], and a resume re-merges the same
-    * rows. */
-  def mergeOffsets(offsets: DataFrame): SnapshotTable.CommitResult =
-    offsetsTable.merge(offsets, Seq("partition_key"), None)
+  /** step 1 (offsets): write the offsets rows of every pending group in
+    * ONE job under [[stagingRunDir]]`/offsets`, sliced by a copy of their
+    * `group` column (the rows keep `group`, a registry column). */
+  def stageOffsets(offsets: DataFrame): Unit =
+    offsets.withColumn("slice", col("group")).write.mode("overwrite")
+      .partitionBy("slice").parquet(s"$stagingRunDir/offsets")
 
-  /** one group's offsets under its txn key — a retry of the same group is
-    * `alreadyCommitted`. */
+  /** step 2: commit one group's staged offsets slice into the registry
+    * table under the group's txn key (`schema`: the staged rows' schema).
+    * A resume or a racing runner gets `alreadyCommitted`. */
+  def commitOffsets(group: Int, schema: StructType): SnapshotTable.CommitResult =
+    offsetsTable.commitStagedDir(s"$stagingRunDir/offsets/slice=$group",
+      Some(Registry.groupTxn(group)), Some(schema))
+
+  /** one group's offsets appended under its txn key — a retry of the same
+    * group is `alreadyCommitted`. The registry is append-only; the name
+    * stays from when this was a MERGE because callers outside this
+    * library (the production-path benchmark's per-group replay) call it. */
   def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult =
-    offsetsTable.merge(offsets, Seq("partition_key"), Some(Registry.groupTxn(group)))
+    offsetsTable.append(offsets, Some(Registry.groupTxn(group)))
+
+  /** refuse a root whose offsets were written by copy-on-write MERGE (before
+    * the registry was append-only): its merged rows carry no txn key, so a
+    * resume would append group slices on top of them. */
+  def requireAppendOnlyOffsets(): Unit =
+    offsetsTable.state().snapshots.find(_.operation == "merge").foreach { s =>
+      throw new IllegalStateException(
+        s"checkpoint root $root predates append-only offsets: registry snapshot " +
+          s"${s.id} is a copy-on-write merge; re-run the pipeline into a fresh root")
+    }
 
   /** step 4 — the ACK: a metadata-only commit-log snapshot under the
     * group's txn key whose summary is `lineageJson` (counts + per-sink
@@ -176,17 +201,22 @@ final class Registry(root: String, spark: SparkSession,
       catch { case _: java.io.IOException => () }
     }
 
+  /** `table`'s snapshots whose txn key is acked in the commit log — the
+    * one read-committed view of every table under the root */
+  private def readCommitted(table: SnapshotTable): Option[DataFrame] = {
+    val acked = commitLog.state().txnKeys.keySet
+    table.readCommittedTxns(acked.contains)
+  }
+
   /** All committed registry rows (the queryable "registrar state"): the
-    * offsets table's current snapshot, gated on the commit log — offsets
-    * MERGE in step 2, the ack lands in step 4, and a crash in between must
-    * not surface a group's offsets before its sinks are acked (the
-    * registrar invariant: offsets persist only after the output ACKs,
-    * filebeat/beater/acker.go:37-68). */
+    * offsets snapshots of acked groups — offsets commit in step 2, the ack
+    * lands in step 4, and a crash in between must not surface a group's
+    * offsets before its sinks are acked (the registrar invariant: offsets
+    * persist only after the output ACKs, filebeat/beater/acker.go:37-68). */
   def registry(): DataFrame = {
-    val df = offsetsTable.read()
-    require(df.isDefined, "no committed groups")
-    val committed = committedGroups()
-    df.get.filter(org.apache.spark.sql.functions.col("group").isin(committed: _*))
+    requireAppendOnlyOffsets()
+    readCommitted(offsetsTable).getOrElse(
+      throw new IllegalArgumentException("no committed groups"))
   }
 
   /** Read-committed view of one sink table: snapshot-isolated AND resolved
@@ -194,16 +224,15 @@ final class Registry(root: String, spark: SparkSession,
     * derived here, not read (the table stores no copy of it); on files of
     * older roots that still hold one, the derived value replaces the
     * stored, equal, value. A query that never selects it computes no hash. */
-  def readSink(sink: String): Option[DataFrame] = {
-    val committed = commitLog.state().txnKeys.keySet
-    sinkTable(sink).readCommittedTxns(committed.contains)
+  def readSink(sink: String): Option[DataFrame] =
+    readCommitted(sinkTable(sink))
       .map(_.withColumn("doc_id", deterministic_id(col("conv_id"), col("turn_idx")))
         .withColumn("sink", lit(sink)))
-  }
 }
 
 object Registry {
-  /** a batch run group's txn key (its sink snapshots, offsets and ack). */
+  /** a batch run group's txn key (its offsets and sink snapshots, and its
+    * ack). */
   def groupTxn(group: Int): String = s"group-$group"
 
   /** The layout every writer of a sink table stores: routed rows without

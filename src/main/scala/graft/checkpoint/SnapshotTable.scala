@@ -1,14 +1,15 @@
 package graft.checkpoint
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A minimal, from-scratch SNAPSHOT TABLE FORMAT — the Iceberg metadata
@@ -58,11 +59,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * same role as the reference's registrar ACK gate
   * (filebeat/beater/acker.go:37-68).
   *
-  * Operations: `append` (adds files), `merge` (copy-on-write MERGE INTO —
-  * latest rows win by key columns; the snapshot's file list REPLACES the
-  * previous one), and `commitSummary` (a METADATA-ONLY commit: no files,
-  * just a txn key and a summary). Every version's metadata is retained, so
-  * any historical snapshot remains readable (time travel).
+  * Operations: `append` (adds files — a DataFrame staged through a temp
+  * dir, or a caller-staged dir via [[commitStagedDir]]) and `commitSummary`
+  * (a METADATA-ONLY commit: no files, just a txn key and a summary). Every
+  * table is APPEND-ONLY: nothing is ever rewritten, so the newest version
+  * lists every file ever committed, and every version's metadata is
+  * retained, so any historical snapshot remains readable (time travel).
   *
   * Snapshot summaries: a snapshot may carry an optional `summary` string,
   * stored in the version doc next to its txn key (the role of Iceberg's
@@ -102,14 +104,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   // ------------------------------------------------------------- metadata
 
   /** current committed state; version 0 = the empty table. */
-  def state(): TableState = {
-    if (!fs.exists(metaDir)) return TableState.Empty
-    val versions = fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-    if (versions.isEmpty) return TableState.Empty
-    parseState(readBytes(fs, versionPath(versions.max)))
-  }
+  def state(): TableState =
+    liveVersions().lastOption.fold(TableState.Empty)(v => parseState(readBytes(fs, versionPath(v))))
 
   /** parse a version doc and RESOLVE its manifests (if any) into the full
     * file list — readers always see `files` complete either way. */
@@ -139,18 +135,16 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   /** plan the next version's file-list layout: inline below
-    * `inlineFileLimit`, manifest files above it. Appends (`replace=false`)
-    * carry the previous version's manifests untouched and spill only
-    * (previous inline files +) `added` into ONE new manifest; merges
-    * (`replace=true`) start fresh. Coalesces to a single manifest past
-    * `manifestCoalesceAt`. Returns (manifest refs, inline files, manifest
-    * paths WRITTEN by this call — the caller deletes them if its CAS
-    * loses, so racing writers leave no debris). */
-  private def planFiles(prev: TableState, added: Seq[FileEntry],
-                        replace: Boolean): (Seq[ManifestRef], Seq[FileEntry], Seq[String]) = {
-    val carried = if (replace) Seq.empty[ManifestRef] else prev.manifestRefs
-    val pending =
-      (if (replace || prev.manifestRefs.nonEmpty) Seq.empty else prev.files) ++ added
+    * `inlineFileLimit`, manifest files above it. The previous version's
+    * manifests are carried untouched and only (previous inline files +)
+    * `added` spill into ONE new manifest. Coalesces to a single manifest
+    * past `manifestCoalesceAt`. Returns (manifest refs, inline files,
+    * manifest paths WRITTEN by this call — the caller deletes them if its
+    * CAS loses, so racing writers leave no debris). */
+  private def planFiles(prev: TableState,
+                        added: Seq[FileEntry]): (Seq[ManifestRef], Seq[FileEntry], Seq[String]) = {
+    val carried = prev.manifestRefs
+    val pending = (if (carried.nonEmpty) Seq.empty else prev.files) ++ added
     if (carried.isEmpty && pending.size <= inlineFileLimit)
       return (Seq.empty, pending, Seq.empty)
     var written = List.empty[String]
@@ -170,10 +164,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     fs.mkdirs(metaDir)
     val name = s"m-$runId-${java.util.UUID.randomUUID().toString.take(8)}.json"
     val doc = Mapper.createObjectNode()
-    val arr = doc.putArray("entries")
-    entries.foreach { f =>
-      val o = arr.addObject(); o.put("path", f.path); o.put("size", f.size)
-    }
+    putEntries(doc.putArray("entries"), entries)
     val out = fs.create(new Path(metaDir, name), false)
     try out.write(Mapper.writeValueAsBytes(doc)) finally out.close()
     ManifestRef(s"metadata/$name", entries.size, entries.map(_.size).sum)
@@ -199,10 +190,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         o.put("path", m.path); o.put("count", m.count); o.put("bytes", m.bytes)
       }
     }
-    val fArr = doc.putArray("files")
-    files.foreach { f =>
-      val o = fArr.addObject(); o.put("path", f.path); o.put("size", f.size)
-    }
+    putEntries(doc.putArray("files"), files)
     val tk = doc.putObject("txn_keys")
     (prev.txnKeys ++ snap.txn.map(_ -> snap.id)).foreach { case (k, v) => tk.put(k, v) }
     val sArr = doc.putArray("snapshots")
@@ -211,10 +199,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       o.put("id", s.id); o.put("run", s.run); o.put("operation", s.operation)
       s.txn.foreach(o.put("txn", _))
       s.summary.foreach(o.put("summary", _))
-      val a = o.putArray("added")
-      s.added.foreach { f =>
-        val fo = a.addObject(); fo.put("path", f.path); fo.put("size", f.size)
-      }
+      putEntries(o.putArray("added"), s.added)
     }
     doc
   }
@@ -285,8 +270,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   }
 
   /** time-travel read: the table exactly as of `version`. None when the
-    * version is expired/unknown or held no files. Every commit (append,
-    * merge, staged fan-out) is one version, so this is also
+    * version is expired/unknown or held no files. Every commit is one
+    * version, so this is also
     * read-as-of-snapshot — resolve ids via [[readSnapshot]]. */
   def readVersion(version: Long): Option[DataFrame] =
     stateAt(version).filter(_.files.nonEmpty)
@@ -311,11 +296,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * without it the table records none and reads infer. */
   def commitStagedDir(stagedDir: String, txn: Option[String],
                       schema: Option[StructType] = None): CommitResult = {
-    state() match {
-      case st if txn.exists(st.txnKeys.contains) =>
-        return alreadyCommittedResult(st, txn.get)
-      case _ =>
-    }
+    val st = state()
+    txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
     val staged = listParquet(fs, new Path(stagedDir))
     commitMoved(moveIn(staged), txn, schema.map(asNullable))
   }
@@ -327,118 +309,54 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   def commitSummary(txn: String, summary: String): CommitResult =
     commitMoved(Seq.empty, Some(txn), None, "metadata", Some(summary))
 
-  /** append a DataFrame as one snapshot (stages through a temp dir). */
+  /** a fresh private staging dir under the table root, for a caller to
+    * write parquet into and hand to [[commitStagedDir]]. A dir left by a
+    * writer that died is reclaimed by [[expireSnapshots]] once aged. */
+  def stagingDir(): String =
+    new Path(root, s"_tmp-append-$runId-${java.util.UUID.randomUUID()}").toString
+
+  /** append a DataFrame as one snapshot: write it to a [[stagingDir]],
+    * then [[commitStagedDir]]. A txn key already committed skips the
+    * write. */
   def append(df: DataFrame, txn: Option[String]): CommitResult = {
-    state() match { // cheap pre-check: skip the Spark write when a retry
-      case st if txn.exists(st.txnKeys.contains) => // already committed
-        return alreadyCommittedResult(st, txn.get)
-      case _ =>
-    }
-    val tmp = new Path(root, s"_tmp-append-$runId-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val res = commitMoved(moveIn(listParquet(fs, tmp)), txn, Some(asNullable(df.schema)))
-    fs.delete(tmp, true)
-    res
-  }
-
-  /** MERGE INTO (copy-on-write): rows of `df` replace current rows with the
-    * same `keys` values; everything else survives. The committed snapshot's
-    * file list REPLACES the table contents.
-    *
-    * `df` is evaluated exactly ONCE: it is staged and moved under data/
-    * first (invisible until the CAS lists it), and the survivors are the
-    * current rows anti-joined against the STAGED keys, cast to the incoming
-    * schema so every file of the snapshot agrees. The snapshot adds
-    * incoming + survivors. A CAS retry reuses the staged incoming files and
-    * recomputes only the survivors against the fresh state, so concurrent
-    * mergers serialize correctly without re-running `df`'s plan. */
-  def merge(df: DataFrame, keys: Seq[String], txn: Option[String]): CommitResult = {
-    val pre = state() // cheap pre-check: a retry of a committed txn stages nothing
-    txn.filter(pre.txnKeys.contains).foreach(t => return alreadyCommittedResult(pre, t))
-    val incoming = stageIn(df)
-    val inSchema = asNullable(df.schema)
-    def discard(files: Seq[FileEntry]): Unit =
-      files.foreach(f => fs.delete(new Path(root, f.path), false))
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val st = state()
-      txn.filter(st.txnKeys.contains).foreach { t =>
-        discard(incoming)
-        return alreadyCommittedResult(st, t)
-      }
-      val survivors = if (st.files.isEmpty) Seq.empty else {
-        val cur = load(st.files, st.schema)
-        val rows = if (incoming.isEmpty) cur else {
-          val in = load(incoming, Some(inSchema))
-          cur.join(in.select(keys.map(col): _*).distinct(), keys, "left_anti")
-            .select(in.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-        }
-        stageIn(rows)
-      }
-      val added = incoming ++ survivors
-      val snap = SnapshotInfo(newSnapId(st), runId, txn, "merge", added)
-      val (refs, inline, written) = planFiles(st, added, replace = true)
-      val schema = if (incoming.isEmpty) st.schema else Some(inSchema)
-      if (casCommit(st, buildMeta(st, snap, refs, inline, schema)))
-        return CommitResult(snap.id, alreadyCommitted = false,
-          added.map(_.size).sum, added.size)
-      discard(survivors) // lost: retry against the new state
-      written.foreach(p => fs.delete(new Path(root, p), false))
-      attempt += 1
-    }
-    discard(incoming)
-    throw new java.io.IOException(
-      s"merge into $root failed after $MaxCommitAttempts CAS attempts — " +
-        "the metadata pointer is not advancing (filesystem fault?)")
-  }
-
-  /** write `df` through a private temp dir and move its files under data/
-    * (referenced by no version until a commit lists them). */
-  private def stageIn(df: DataFrame): Seq[FileEntry] = {
-    val tmp = new Path(root, s"_tmp-merge-$runId-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    try moveIn(listParquet(fs, tmp)) finally fs.delete(tmp, true)
+    val st = state()
+    txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
+    val tmp = stagingDir()
+    try {
+      df.write.mode("overwrite").parquet(tmp)
+      commitStagedDir(tmp, txn, Some(df.schema))
+    } finally fs.delete(new Path(tmp), true)
   }
 
   /** Maintenance: expire old table versions — the Iceberg expire_snapshots
     * analogue. Keeps the newest `keepVersions` metadata docs and deletes
-    * (a) older metadata files and (b) every data file referenced ONLY by
-    * expired versions (a merge's copy-on-write rewrite strands its
-    * predecessors' files — this is what reclaims them). Returns the number
-    * of data files deleted. Run as a maintenance job, never concurrently
-    * with readers that may still be resolving an expired version; writers
-    * are unaffected (they CAS against the newest version only, and a
-    * staging dir survives while anything under it is younger than
-    * `orphanGraceMs`). Note
-    * [[readCommittedTxns]] is an append-only-table view: on such tables
-    * every snapshot's added files are still in the current file list, so
-    * expiry never deletes files that view can reach. */
+    * older metadata files and the manifests only they reference. Data
+    * files are never expired with a version: the table is append-only, so
+    * the newest version lists every committed file. Unreferenced data
+    * files (crash debris, or files stranded by the copy-on-write merges of
+    * roots written before tables were append-only) go through the orphan
+    * pass once older than `orphanGraceMs`. Returns the number of data
+    * files deleted. Run as a maintenance job, never concurrently with
+    * readers that may still be resolving an expired version; writers are
+    * unaffected (they CAS against the newest version only, and a staging
+    * dir survives while anything under it is younger than
+    * `orphanGraceMs`). */
   def expireSnapshots(keepVersions: Int = 1,
                       orphanGraceMs: Long = 3600000L): Int = {
     require(keepVersions >= 1, "must keep at least the current version")
     if (!fs.exists(metaDir)) return 0
-    val versions = fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
+    val versions = liveVersions()
     val (drop, keep) = versions.splitAt(math.max(0, versions.length - keepVersions))
     val keptStates = keep.map(v => parseState(readBytes(fs, versionPath(v))))
     val retained: Set[String] = keptStates.flatMap(_.files.map(_.path)).toSet
     val retainedManifests: Set[String] =
       keptStates.flatMap(_.manifestRefs.map(_.path)).toSet
     var deleted = 0
-    // resolve dropped versions BEFORE deleting anything — versions may
-    // share manifest files
-    val dropStates = drop.map(v => v -> parseState(readBytes(fs, versionPath(v))))
-    dropStates.foreach { case (v, st) =>
-      st.files.foreach { f =>
-        if (!retained.contains(f.path) &&
-            fs.delete(new Path(root, f.path), false)) deleted += 1
-      }
-      fs.delete(versionPath(v), false)
-    }
-    dropStates.flatMap(_._2.manifestRefs.map(_.path)).distinct
-      .filterNot(retainedManifests)
+    // read the dropped versions' manifest refs BEFORE deleting anything —
+    // versions may share manifest files
+    val dropManifests = drop.flatMap(v => parseMeta(readBytes(fs, versionPath(v))).manifestRefs)
+    drop.foreach(v => fs.delete(versionPath(v), false))
+    dropManifests.map(_.path).distinct.filterNot(retainedManifests)
       .foreach(p => fs.delete(new Path(root, p), false))
     // ORPHANS: data files referenced by NO retained version — crash debris
     // from a writer that died between moving files in and its CAS commit.
@@ -462,13 +380,13 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         fs.delete(f.getPath, false)
     }
     // TEMP DEBRIS: a writer that died between creating its candidate
-    // metadata (.tmp-*) and publishAtomic, or mid-append/merge before its
-    // staging directory (_tmp-append-*/_tmp-merge-*) was consumed. Never
+    // metadata (.tmp-*) and publishAtomic, or mid-append before its staging
+    // directory (_tmp-*) was consumed. Never
     // referenced by any version, so only the age grace gates deletion —
     // without this pass a crashed writer's staged parquet (potentially the
     // size of a whole commit) accumulates forever. A staging DIRECTORY is
     // aged by the newest entry under it, not by its own mtime: a live
-    // append/merge keeps writing fresh files into a dir created long ago.
+    // append keeps writing fresh files into a dir created long ago.
     fs.listStatus(metaDir).foreach { f =>
       if (f.getPath.getName.startsWith(".tmp-") && f.getModificationTime < cutoff)
         fs.delete(f.getPath, false)
@@ -528,7 +446,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         return alreadyCommittedResult(st, t)
       }
       val snap = SnapshotInfo(newSnapId(st), runId, txn, operation, moved, summary)
-      val (refs, inline, written) = planFiles(st, moved, replace = false)
+      val (refs, inline, written) = planFiles(st, moved)
       val schema =
         if (moved.isEmpty) st.schema
         else if (st.files.isEmpty) movedSchema
@@ -661,63 +579,31 @@ object SnapshotTable {
     try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
   }
 
+  private def putEntries(arr: ArrayNode, entries: Seq[FileEntry]): Unit =
+    entries.foreach { f => val o = arr.addObject(); o.put("path", f.path); o.put("size", f.size) }
+
+  private def fileEntries(n: JsonNode): Seq[FileEntry] =
+    n.elements().asScala.map(f => FileEntry(f.get("path").asText(), f.get("size").asLong())).toSeq
+
   private def parseMeta(bytes: Array[Byte]): TableState = {
     val doc = Mapper.readTree(bytes)
-    def fileEntries(n: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] = {
-      val it = n.elements()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-      while (it.hasNext) {
-        val f = it.next()
-        buf += FileEntry(f.get("path").asText(), f.get("size").asLong())
-      }
-      buf.toSeq
-    }
-    val txn = {
-      val it = doc.get("txn_keys").properties().iterator()
-      val m = scala.collection.mutable.Map.empty[String, String]
-      while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue.asText() }
-      m.toMap
-    }
-    val snaps = {
-      val it = doc.get("snapshots").elements()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[SnapshotInfo]
-      while (it.hasNext) {
-        val s = it.next()
-        buf += SnapshotInfo(
-          s.get("id").asText(), s.get("run").asText(),
-          Option(s.get("txn")).map(_.asText()),
-          s.get("operation").asText(),
-          fileEntries(s.get("added")),
-          Option(s.get("summary")).map(_.asText()))
-      }
-      buf.toSeq
-    }
-    val manifests = Option(doc.get("manifests")).map { n =>
-      val it = n.elements()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[ManifestRef]
-      while (it.hasNext) {
-        val m = it.next()
-        buf += ManifestRef(m.get("path").asText(), m.get("count").asInt(),
-          m.get("bytes").asLong())
-      }
-      buf.toSeq
-    }.getOrElse(Seq.empty)
+    val snaps = doc.get("snapshots").elements().asScala.map(s => SnapshotInfo(
+      s.get("id").asText(), s.get("run").asText(), Option(s.get("txn")).map(_.asText()),
+      s.get("operation").asText(), fileEntries(s.get("added")),
+      Option(s.get("summary")).map(_.asText()))).toSeq
+    val manifests = Option(doc.get("manifests")).toSeq.flatMap(_.elements().asScala.map(m =>
+      ManifestRef(m.get("path").asText(), m.get("count").asInt(), m.get("bytes").asLong())))
     TableState(doc.get("version").asLong(),
       Option(doc.get("snapshot_id")).map(_.asText()),
-      fileEntries(doc.get("files")), txn, snaps, manifests,
+      fileEntries(doc.get("files")),
+      doc.get("txn_keys").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap,
+      snaps, manifests,
       Option(doc.get("schema")).map(n => DataType.fromJson(n.asText()).asInstanceOf[StructType]))
   }
 
   /** parse a manifest file: {"entries":[{path,size}…]}. */
-  private def parseManifest(bytes: Array[Byte]): Seq[FileEntry] = {
-    val it = Mapper.readTree(bytes).get("entries").elements()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    while (it.hasNext) {
-      val f = it.next()
-      buf += FileEntry(f.get("path").asText(), f.get("size").asLong())
-    }
-    buf.toSeq
-  }
+  private def parseManifest(bytes: Array[Byte]): Seq[FileEntry] =
+    fileEntries(Mapper.readTree(bytes).get("entries"))
 
   private def listParquet(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {
     if (!fs.exists(dir)) return Seq.empty

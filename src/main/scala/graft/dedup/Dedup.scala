@@ -244,14 +244,11 @@ object Dedup {
     // so the per-round write is cheap. Production sets a durable checkpoint
     // dir; default to the local tmp dir so the operator works out of the box.
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      // per-JVM scratch dir + exit hook: reliable-checkpoint files are not
-      // reference-tracked by default, so a shared fixed path would grow
+      // per-JVM scratch dir, deleted at exit: reliable-checkpoint files are
+      // not reference-tracked by default, so a shared fixed path would grow
       // /tmp across sessions without bound (a user-supplied dir is owned by
       // the user and never touched)
-      val dir = java.nio.file.Files.createTempDirectory("graft-checkpoints-")
-      spark.sparkContext.setCheckpointDir(dir.toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile): Unit))
+      spark.sparkContext.setCheckpointDir(graft.ScratchDir("graft-checkpoints-"))
     }
     // trailing per-round cleanup: round k-1's checkpoint files are dead the
     // moment round k's convergence check completes — without this, an

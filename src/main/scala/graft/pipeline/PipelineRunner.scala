@@ -15,21 +15,24 @@ import graft.model.Sinks
   *    queue batches, libbeat/publisher/queue/memqueue/broker.go:114-184).
   *    `groups` sets only the COMMIT granularity: every run reads the input a
   *    fixed number of times, however many groups it has, and each group then
-  *    acks independently
+  *    acks independently. A root's group count is fixed by its first run
+  *    (each ack records it): another count would re-bucket conversations
+  *    that acked groups already committed
   *  - per run, two input passes: ONE transform pass ([[stage]]) fans out
   *    every pending group to sink_es / sink_ls / dropped in one
   *    `partitionBy(group, sink)` parquet write with observe()-attached
   *    counters, never a global sort; and ONE status-only pass whose
-  *    per-conversation offsets MERGE INTO the registry table once. Sinks
-  *    store no `doc_id`: [[graft.checkpoint.Registry.readSink]] derives it
-  *  - per group: each sink's staged slice commits as a SNAPSHOT into that
-  *    sink's table, then the group's lineage (counts + per-sink write
-  *    stats + snapshot ids) commits to the commit log as the summary of a
-  *    metadata-only snapshot — the ACK, which writes no data file and runs
-  *    no Spark job (see
+  *    per-conversation offsets are staged per group. Sinks store no
+  *    `doc_id`: [[graft.checkpoint.Registry.readSink]] derives it
+  *  - per group: its offsets slice commits as a SNAPSHOT of the registry
+  *    table and each sink's staged slice as a SNAPSHOT of that sink's
+  *    table, all under txn key `group-<g>`; then the group's lineage
+  *    (counts + per-sink write stats + snapshot ids) commits to the commit
+  *    log as the summary of a metadata-only snapshot — the ACK, which
+  *    writes no data file and runs no Spark job (see
   *    [[graft.checkpoint.Registry]] for the protocol and
   *    [[graft.checkpoint.SnapshotTable]] for the table format)
-  *  - a kill during the fan-out or the offsets merge loses that run's
+  *  - a kill during the fan-out or the offsets pass loses that run's
   *    unacked work; a kill between group acks loses nothing acked. Resume =
   *    rerun the same command; acked groups are skipped and only the pending
   *    buckets are read (filebeat registrar semantics: offsets visible only
@@ -46,8 +49,8 @@ import graft.model.Sinks
   * trades failure-domain granularity against per-group commit overhead
   * (reference flush-coalescing, registrar.go:160-190).
   *
-  * [[run]] is [[stage]] → offsets merge → [[commit]] per pending group
-  * under txn key `group-<g>`; a streaming micro-batch
+  * [[run]] is [[stage]] → offsets staging → (offsets commit, [[commit]])
+  * per pending group under txn key `group-<g>`; a streaming micro-batch
   * ([[graft.streaming.StreamingPipeline.startSnapshotSinks]]) is stage →
   * commit under its batch txn key, so both write the same tables and acks.
   */
@@ -104,8 +107,10 @@ object PipelineRunner {
   /** Commit one staged group under `txn`: each sink's slice as a SNAPSHOT of
     * its table, then the lineage as the ACK, then drop the group's staging.
     * A crashed commit's sink snapshots reconcile to no-ops when `txn`
-    * commits again. None when a concurrent runner's ack won. */
-  def commit(reg: Registry, txn: String, group: Int, staged: Staged): Option[GroupResult] = {
+    * commits again. None when a concurrent runner's ack won. `groups`: a
+    * batch run's group count, recorded in the lineage. */
+  def commit(reg: Registry, txn: String, group: Int, staged: Staged,
+             groups: Option[Int] = None): Option[GroupResult] = {
     val counts = staged.counts(group)
     val staging = reg.stagingGroupDir(group)
     val sinkSnaps = Sinks.All.flatMap { s =>
@@ -128,8 +133,9 @@ object PipelineRunner {
     val snapsJson = sinkSnaps
       .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
       .mkString("{", ",", "}")
-    val won = reg.ack(txn,
-      s"""{"group":$group,"counts":$lineage,"writes":$bytesJson,"snapshots":$snapsJson}""")
+    val groupsJson = groups.fold("")(n => s""","groups":$n""")
+    val won = reg.ack(txn, s"""{"group":$group$groupsJson,"counts":$lineage,""" +
+      s""""writes":$bytesJson,"snapshots":$snapsJson}""")
     // staged files were either moved into tables or discarded by the
     // txn-key check; the scratch directory is garbage either way
     reg.cleanupStaging(group)
@@ -143,6 +149,8 @@ object PipelineRunner {
           failAfterGroup: Int = Int.MaxValue): Seq[GroupResult] = {
     val spark = input.sparkSession
     val reg = new Registry(root, spark)
+    reg.requireAppendOnlyOffsets()
+    requireGroups(reg, groups)
     val pending = (0 until groups).filterNot(reg.isCommitted)
     if (pending.isEmpty) return Seq.empty
     val pendingInput =
@@ -159,8 +167,9 @@ object PipelineRunner {
       // pass 2 — offsets rows (file.State analogue) for every pending group
       // via the status-only routing fast path — identical sink decision to
       // the full transform (pinned by PipelineSpec) without the 13-field
-      // extraction — merged into the registry ONCE. Invisible until each
-      // group's ack: Registry.registry() reads through the commit log.
+      // extraction — staged in ONE write, then committed per group.
+      // Invisible until each group's ack: Registry.registry() reads
+      // through the commit log.
       val offsets = TranscriptPipeline.sinkFast(pendingInput)
         .groupBy(col("conv_id").as("partition_key"), bucketCol(groups).as("group"))
         .agg(max("turn_idx").as("max_turn_idx"),
@@ -170,16 +179,31 @@ object PipelineRunner {
         .select("partition_key", "max_turn_idx", "row_count", "filtered",
           "dropped", "group")
         .withColumn("committed_at", current_timestamp())
-      reg.mergeOffsets(offsets)
+      reg.stageOffsets(offsets)
 
       pending.zipWithIndex.flatMap { case (g, i) =>
-        val result = commit(reg, Registry.groupTxn(g), g, staged)
+        reg.commitOffsets(g, offsets.schema)
+        val result = commit(reg, Registry.groupTxn(g), g, staged, Some(groups))
         if (i >= failAfterGroup) // test hook: simulate a crash between commits
           throw new RuntimeException(s"injected failure after group $g")
         result
       }
     } finally reg.cleanupRunStaging()
   }
+
+  /** refuse a run whose `groups` differs from the count an acked batch
+    * group recorded: conversations would move between buckets, and the
+    * acked groups' conversations be ingested again. Acks that record no
+    * count (written before counts were recorded) are not checked. */
+  private def requireGroups(reg: Registry, groups: Int): Unit =
+    for (s <- reg.commitLog.state().snapshots if s.txn.exists(_.startsWith("group-"));
+         json <- s.summary; n <- Option(Mapper.readTree(json).get("groups"))
+         if n.asInt != groups)
+      throw new IllegalArgumentException(
+        s"checkpoint root ${reg.root} was run with groups = ${n.asInt}, this run asks " +
+          s"for groups = $groups: a root's group count is fixed by its first run")
+
+  private val Mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Pipeline-level metric counters over all committed groups, mirroring the
     * reference observer names (libbeat/publisher/pipeline/monitoring.go:94-104).
@@ -192,11 +216,10 @@ object PipelineRunner {
     * zeros; a root whose acks predate lineage summaries is refused by
     * [[graft.checkpoint.Registry.lineage]]. */
   def observedMetrics(root: String, spark: SparkSession): Map[String, Long] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val counts = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     var writeBytes = 0L
     new Registry(root, spark).lineage().values.foreach { json =>
-      val doc = mapper.readTree(json)
+      val doc = Mapper.readTree(json)
       doc.get("counts").properties().forEach(e => counts(e.getKey) += e.getValue.asLong())
       doc.get("writes").properties().forEach(e => writeBytes += e.getValue.get("bytes").asLong())
     }

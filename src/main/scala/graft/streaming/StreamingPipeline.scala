@@ -247,10 +247,11 @@ object StreamingPipeline {
     *   2. exact dedup on the normalized-content fingerprint
     *      ([[dedupStream]]) — watermark-bounded state, 32-hex shuffle keys;
     *   3. snapshot-table commits with the batch-id + content-fingerprint
-    *      txn key of [[startSnapshotSinks]] — a replayed micro-batch
-    *      (checkpoint recovery OR total checkpoint loss over the same
-    *      input) reconciles to a no-op: exactly-once into the curated
-    *      table.
+    *      txn key of [[startSnapshotSinks]], the fingerprint observed on
+    *      the staged write (one job per micro-batch, no persist) — a
+    *      replayed micro-batch (checkpoint recovery OR total checkpoint
+    *      loss over the same input) reconciles to a no-op: exactly-once
+    *      into the curated table.
     *
     * The near-dup/CC stage stays batch-only BY DESIGN: connected components
     * is iterative global convergence, which has no bounded-state streaming
@@ -265,19 +266,23 @@ object StreamingPipeline {
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val table = new graft.checkpoint.SnapshotTable(s"$root/curated", batch.sparkSession)
         val rows = batch.drop("fp")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the fingerprint is observed on the staged write itself: ONE job
+        // per micro-batch, no persist
+        val sig = Observation()
+        val staging = table.stagingDir()
         try {
-          val sig = rows
-            .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text))"))
-            .first() match {
-              case r if r.isNullAt(0) => 0L
-              case r => r.getLong(0)
-            }
-          new graft.checkpoint.SnapshotTable(s"$root/curated", batch.sparkSession)
-            .append(rows.sortWithinPartitions("conv_id", "turn_idx"),
-              txn = Some(s"batch-$batchId-${java.lang.Long.toHexString(sig)}"))
-        } finally rows.unpersist()
+          rows.observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text))").as("sig"))
+            .sortWithinPartitions("conv_id", "turn_idx")
+            .write.mode("overwrite").parquet(staging)
+          val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
+          table.commitStagedDir(staging,
+            Some(s"batch-$batchId-${java.lang.Long.toHexString(fp)}"), Some(rows.schema))
+        } finally {
+          val dir = new org.apache.hadoop.fs.Path(staging)
+          dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration).delete(dir, true)
+        }
         ()
       }
       .start()

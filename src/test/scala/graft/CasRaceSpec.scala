@@ -15,7 +15,7 @@ class CasRaceSpec extends AnyFunSuite {
 
   test("three JVMs racing commits: every version claimed exactly once, " +
     "losers retry onto later versions, no commit silently replaced") {
-    val root = Files.createTempDirectory("graft-casrace").toString
+    val root = ScratchDir("graft-casrace")
     val go = Paths.get(root, "go")
     val perChild = 6
     val children = Seq("A", "B", "C")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,7 @@ import graft.sources.Transcripts
 class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-runner").toString
+  private def tmpDir(): String = scratchDir("graft-runner")
 
   private lazy val input = Transcripts.fromEvents(spark, "/root/testdata/sf0.001").cache()
 
@@ -194,6 +192,82 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
           s"unreferenced files in $s: ${onDisk.diff(st.files.map(_.path).toSet)}")
       }
     }
+  }
+
+  test("two racing runners leave exactly one registry row per conversation") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = tmpDir()
+    val runs = Seq.fill(2)(Future(PipelineRunner.run(input, root, groups = 4)))
+    runs.foreach(Await.result(_, 5.minutes))
+    val offsets = new Registry(root, spark).registry()
+    val perKey = offsets.groupBy("partition_key").count()
+    assert(perKey.filter(col("count") =!= 1).isEmpty, "a partition_key repeats")
+    assert(perKey.count() == input.select("conv_id").distinct().count())
+  }
+
+  test("a resume appends registry files for pending groups only, keeping every earlier one") {
+    val root = tmpDir()
+    intercept[RuntimeException] {
+      PipelineRunner.run(input, root, groups = 4, failAfterGroup = 0)
+    }
+    val table = new Registry(root, spark).offsetsTable
+    val before = table.state()
+    assert(before.txnKeys.keySet == Set("group-0") && before.files.nonEmpty)
+    PipelineRunner.run(input, root, groups = 4)
+    val after = table.state()
+    val added = after.snapshots.drop(before.snapshots.size)
+    assert(added.forall(_.operation == "append"))
+    assert(added.flatMap(_.txn) == Seq("group-1", "group-2", "group-3"))
+    // nothing rewritten: the earlier files are all still listed
+    assert(after.files.toSet == before.files.toSet ++ added.flatMap(_.added))
+    // each group's snapshot holds that group's rows only
+    for (snap <- added if snap.added.nonEmpty) {
+      val rows = spark.read.parquet(snap.added.map(f => s"${table.root}/${f.path}"): _*)
+      assert(rows.select("group").distinct().collect().map(_.getInt(0)).toSeq ==
+        Seq(snap.txn.get.stripPrefix("group-").toInt), snap.txn)
+    }
+  }
+
+  test("a root whose registry holds a copy-on-write merge is refused by name") {
+    import spark.implicits._
+    val root = tmpDir()
+    // the registry as roots written before it was append-only hold it: one
+    // untagged snapshot whose operation is `merge` (the .crc sidecar goes
+    // too, or the checksum would not match)
+    val reg = new Registry(root, spark)
+    reg.offsetsTable.append(Seq(("c1", 1)).toDF("partition_key", "max_turn_idx"), None)
+    val doc = new java.io.File(s"${reg.offsetsTable.root}/metadata/v000001.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(doc)
+    node.get("snapshots").get(0).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("operation", "merge")
+    mapper.writeValue(doc, node)
+    new java.io.File(s"${reg.offsetsTable.root}/metadata/.v000001.json.crc").delete()
+    val errors = Seq(
+      intercept[IllegalStateException](PipelineRunner.run(input, root, groups = 4)),
+      intercept[IllegalStateException](reg.registry()))
+    errors.foreach(e => assert(e.getMessage.contains(s"root $root predates append-only offsets"),
+      e.getMessage))
+    // refused before any write
+    assert(Sinks.All.forall(reg.sinkTable(_).state().version == 0))
+    assert(reg.committedGroups().isEmpty)
+  }
+
+  test("rerunning a root with another groups count is refused, sinks unchanged") {
+    val root = tmpDir()
+    PipelineRunner.run(input, root, groups = 4)
+    val reg = new Registry(root, spark)
+    def rows() = Sinks.All.map(s => s -> reg.readSink(s).map(_.count()).getOrElse(0L))
+    val before = rows()
+    val e = intercept[IllegalArgumentException](PipelineRunner.run(input, root, groups = 8))
+    assert(e.getMessage.contains("groups = 4") && e.getMessage.contains("groups = 8"),
+      e.getMessage)
+    assert(rows() == before)
+    assert(reg.committedGroups() == Seq(0, 1, 2, 3))
+    // the first run's count resumes as a no-op
+    assert(PipelineRunner.run(input, root, groups = 4).isEmpty)
   }
 
   test("commit marker is the atomicity point: uncommitted output is invisible") {
@@ -487,10 +561,11 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       PipelineRunner.run(fresh, root, groups = 2)
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    // the one write into the run's staging dir is the fan-out
+    // the one write into the run's staging dir itself is the fan-out (the
+    // offsets write goes to a subdir of it)
     val fanout = plans.asScala.filter(p => collect(p) {
       case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _)
-        if w.outputPath.toString.contains("/_staging/run=") => w
+        if w.outputPath.toString.matches(".*/_staging/run=[^/]+") => w
     }.nonEmpty)
     assert(fanout.size == 1, s"${fanout.size} fan-out plans")
     plans.asScala.foreach(p => assert(digests(p).isEmpty, s"hash in a run plan:\n$p"))

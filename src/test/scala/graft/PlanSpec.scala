@@ -32,7 +32,7 @@ class PlanSpec extends SparkSpec {
 
   test("the full transform is one whole-stage-codegen span over the scan — no shuffle, no UDF") {
     // transform over a materialized transcript table (no derivation window)
-    val tdir = java.nio.file.Files.createTempDirectory("plan-transcripts").toString
+    val tdir = scratchDir("plan-transcripts")
     graft.sources.Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(tdir)
     val input = spark.read.parquet(tdir)
@@ -51,7 +51,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("round-3 parse kernels are shuffle-free single-pass maps") {
-    val tdir = java.nio.file.Files.createTempDirectory("plan-transcripts3").toString
+    val tdir = scratchDir("plan-transcripts3")
     graft.sources.Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(tdir)
     val input = spark.read.parquet(tdir)
@@ -96,7 +96,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("route-only metrics plan prunes parse down to the status fast path") {
-    val tdir = java.nio.file.Files.createTempDirectory("plan-transcripts2").toString
+    val tdir = scratchDir("plan-transcripts2")
     graft.sources.Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(tdir)
     val input = spark.read.parquet(tdir)

@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.checkpoint.SnapshotTable
 
 /** Format-level gates for the from-scratch snapshot table format: CAS
-  * commits, txn-key idempotence, copy-on-write MERGE, snapshot-isolated
+  * commits, txn-key idempotence, append-only snapshots, snapshot-isolated
   * reads. (The pipeline-level protocol over it is gated in
   * PipelineRunnerSpec.) */
 class SnapshotTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpTable(): SnapshotTable =
-    new SnapshotTable(Files.createTempDirectory("graft-snaptbl").toString, spark)
+    new SnapshotTable(scratchDir("graft-snaptbl"), spark)
 
   test("append advances one version per commit; reads are snapshot-isolated") {
     val t = tmpTable()
@@ -36,20 +36,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(retry.snapshotId == first.snapshotId)
     assert(t.read().get.count() == 1)
     assert(t.state().version == 1, "the rejected retry must not add a version")
-  }
-
-  test("MERGE INTO: latest rows win by key, others survive, files replaced") {
-    val t = tmpTable()
-    t.append(Seq(("c1", 5L), ("c2", 7L)).toDF("partition_key", "hwm"), None)
-    t.merge(Seq(("c2", 9L), ("c3", 1L)).toDF("partition_key", "hwm"),
-      keys = Seq("partition_key"), txn = None)
-    val rows = t.read().get.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rows == Map("c1" -> 5L, "c2" -> 9L, "c3" -> 1L))
-    // copy-on-write: current state lists only the merge's own files
-    val st = t.state()
-    assert(st.snapshots.last.operation == "merge")
-    assert(st.files.toSet == st.snapshots.last.added.toSet)
   }
 
   test("concurrent appenders all land; versions strictly serialize") {
@@ -82,57 +68,17 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().get.count() == 1)
   }
 
-  test("expireSnapshots reclaims files stranded by copy-on-write merges") {
-    val t = tmpTable()
-    t.append(Seq(("c1", 1L)).toDF("k", "v"), None)
-    t.append(Seq(("c2", 2L)).toDF("k", "v"), None)
-    t.merge(Seq(("c1", 9L)).toDF("k", "v"), keys = Seq("k"), txn = None)
-    assert(t.state().version == 3)
-    val deleted = t.expireSnapshots(keepVersions = 1)
-    assert(deleted > 0, "the merge stranded the append files — expiry must reclaim them")
-    // only the current version's metadata and files remain
-    val metaDir = new java.io.File(s"${t.root}/metadata")
-    assert(metaDir.listFiles().count(_.getName.matches("v\\d+\\.json")) == 1)
-    val dataDir = new java.io.File(s"${t.root}/data")
-    // ignore Hadoop LocalFileSystem .crc sidecars (hidden files)
-    assert(dataDir.listFiles().filterNot(_.getName.startsWith("."))
-      .map(f => s"data/${f.getName}").toSet ==
-      t.state().files.map(_.path).toSet)
-    // the table still reads the merged truth
-    val rows = t.read().get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rows == Map("c1" -> 9L, "c2" -> 2L))
-    // nothing more to expire
-    assert(t.expireSnapshots(keepVersions = 1) == 0)
-  }
-
   test("a reader's resolved snapshot is immune to commits that land after it") {
     val t = tmpTable()
     t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
     val view = t.read().get // resolves version 1's file list NOW
-    t.merge(Seq((1, "a2")).toDF("id", "v"), keys = Seq("id"), txn = None)
-    // the merge rewrote the table, but the in-flight reader still sees its
-    // snapshot (the old files remain on disk until expiry)
+    t.append(Seq((3, "c")).toDF("id", "v"), None)
+    // the append advanced the table, but the in-flight reader still sees
+    // its snapshot
     assert(view.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
       Set((1, "a"), (2, "b")))
     assert(t.read().get.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
-      Set((1, "a2"), (2, "b")))
-  }
-
-  test("concurrent merge and append serialize without losing either commit") {
-    val t = tmpTable()
-    t.append(Seq(("k1", 1L)).toDF("k", "v"), None)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fm = Future(t.merge(Seq(("k1", 100L)).toDF("k", "v"), Seq("k"), None))
-    val fa = Future(t.append(Seq(("k2", 2L)).toDF("k", "v"), None))
-    Await.result(fm, 2.minutes); Await.result(fa, 2.minutes)
-    assert(t.state().version == 3)
-    val rows = t.read().get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // both effects present regardless of commit order: merge-first → append
-    // adds k2 after the rewrite; append-first → the merge CAS-retries
-    // against the appended state and carries k2 through its rewrite
-    assert(rows == Map("k1" -> 100L, "k2" -> 2L))
+      Set((1, "a"), (2, "b"), (3, "c")))
   }
 
   test("historical snapshots stay readable (metadata retained per version)") {
@@ -148,15 +94,14 @@ class SnapshotTableSpec extends SparkSpec {
     val t = tmpTable()
     val r1 = t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
     t.append(Seq((3, "c")).toDF("id", "v"), None)
-    // a COW merge rewrites the live file set; history must not move
-    t.merge(Seq((2, "B2")).toDF("id", "v"), keys = Seq("id"), None)
+    // a later commit grows the live file set; history must not move
+    t.append(Seq((4, "d")).toDF("id", "v"), None)
     assert(t.liveVersions() == Seq(1L, 2L, 3L))
     assert(t.readVersion(1).get.count() == 2)
     assert(t.readVersion(2).get.count() == 3)
-    assert(t.readVersion(2).get.where(col("id") === 2).select("v")
-      .first().getString(0) == "b", "v2 predates the merge")
-    assert(t.readVersion(3).get.where(col("id") === 2).select("v")
-      .first().getString(0) == "B2")
+    assert(t.readVersion(2).get.where(col("id") === 4).isEmpty, "v2 predates the third append")
+    assert(t.readVersion(3).get.where(col("id") === 4).select("v")
+      .first().getString(0) == "d")
     assert(t.readSnapshot(r1.snapshotId).get.count() == 2)
     assert(t.readVersion(0).isEmpty && t.readVersion(9).isEmpty &&
       t.readSnapshot("no-such").isEmpty)
@@ -164,7 +109,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("manifest splitting: file list spills past the inline limit, appends " +
     "reuse prior manifests, coalesce bounds fan-out, expiry reclaims") {
-    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark,
       inlineFileLimit = 2, manifestCoalesceAt = 3)
     def one(i: Int) = Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
@@ -199,9 +144,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().get.count() == 6)
   }
 
-  test("manifest mode: COW merge replaces manifests; racing writers leave " +
-    "no manifest debris") {
-    val root = Files.createTempDirectory("graft-snaptbl").toString
+  test("manifest mode: racing writers leave no manifest debris") {
+    val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark,
       inlineFileLimit = 1, manifestCoalesceAt = 8)
     import scala.concurrent.{Await, Future}
@@ -211,13 +155,8 @@ class SnapshotTableSpec extends SparkSpec {
       Future(t.append(Seq((i, i.toLong)).toDF("k", "v").coalesce(1), None))
     }
     racers.foreach(Await.result(_, 2.minutes))
-    t.merge(Seq((1, 100L)).toDF("k", "v").coalesce(1), keys = Seq("k"), None)
     val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(rows == Map(1 -> 100L, 2 -> 2L, 3 -> 3L, 4 -> 4L))
-    // merge started a FRESH manifest line (no carried refs from the appends)
-    val st = t.state()
-    assert(st.snapshots.last.operation == "merge")
-    assert(st.manifestRefs.size == 1 || st.manifestRefs.isEmpty)
+    assert(rows == Map(1 -> 1L, 2 -> 2L, 3 -> 3L, 4 -> 4L))
     // every manifest on disk is referenced by SOME live version — CAS
     // losers deleted theirs
     val live = t.liveVersions()
@@ -228,7 +167,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("expireSnapshots reclaims crashed writers' temp debris") {
-    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark)
     t.append(Seq((1, "a")).toDF("id", "v"), None)
     // plant the three crash shapes: a candidate-metadata temp (died before
@@ -256,7 +195,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("expireSnapshots keeps an aged staging dir while a fresh file is inside") {
-    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark)
     t.append(Seq((1, "a")).toDF("id", "v"), None)
     // a LIVE long merge: its staging dir (and the task dirs under it) were
@@ -278,29 +217,10 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().get.count() == 1)
   }
 
-  test("merge evaluates its input once, into a non-empty table") {
-    val t = tmpTable()
-    t.append(Seq(("c1", 1L), ("c2", 2L)).toDF("k", "v"), None)
-    // every row the input plan produces passes through the tap; a merge
-    // that re-ran the plan (union side + distinct-keys side) would count
-    // each row twice
-    val produced = spark.sparkContext.longAccumulator("merge-input-rows")
-    val tap = udf { (k: String) => produced.add(1); k }.asNondeterministic()
-    val df = spark.range(2, 5)
-      .select(tap(concat(lit("c"), col("id").cast("string"))).as("k"),
-        (col("id") * 10).as("v"))
-    t.merge(df, keys = Seq("k"), txn = None)
-    assert(produced.value == 3L, s"input rows produced: ${produced.value}")
-    val rows = t.read().get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rows == Map("c1" -> 1L, "c2" -> 20L, "c3" -> 30L, "c4" -> 40L))
-    val st = t.state()
-    assert(st.files.toSet == st.snapshots.last.added.toSet)
-  }
-
   test("versions record the data schema; a doc without one still reads") {
     val t = tmpTable()
     t.append(Seq((1, "a")).toDF("id", "v"), None)
-    t.merge(Seq((1, "b"), (2, "c")).toDF("id", "v"), keys = Seq("id"), txn = None)
+    t.append(Seq((2, "c")).toDF("id", "v"), None)
     val st = t.state()
     val inferred = spark.read.parquet(st.files.map(f => s"${t.root}/${f.path}"): _*).schema
     assert(st.schema.contains(inferred))
@@ -316,7 +236,7 @@ class SnapshotTableSpec extends SparkSpec {
     new java.io.File(s"${t.root}/metadata/.v000002.json.crc").delete()
     assert(t.state().schema.isEmpty)
     val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(rows == Map(1 -> "b", 2 -> "c"))
+    assert(rows == Map(1 -> "a", 2 -> "c"))
     // files that differ only in which columns they hold record the union
     // (a file without a column reads it as null) ...
     val u = tmpTable()
@@ -395,7 +315,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("a stray unreferenced parquet file under data/ is never read") {
     val t = tmpTable()
     t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
-    val tmp = Files.createTempDirectory("graft-stray").toString
+    val tmp = scratchDir("graft-stray")
     Seq((9, "stray")).toDF("id", "v").write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.copy(part.toPath, java.nio.file.Paths.get(s"${t.root}/data/f-stray-0.parquet"))
@@ -409,7 +329,7 @@ class SnapshotTableSpec extends SparkSpec {
     val t = tmpTable()
     t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
     t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
-    t.merge(Seq((2, "B2"), (4, "d")).toDF("id", "v"), keys = Seq("id"), txn = Some("m1"))
+    t.append(Seq((4, "d")).toDF("id", "v"), Some("b4"))
     t.append(Seq((5, "e")).toDF("id", "v"), Some("b3"))
     def listed(files: Seq[SnapshotTable.FileEntry]) =
       spark.read.parquet(files.map(f => s"${t.root}/${f.path}"): _*)
@@ -423,7 +343,7 @@ class SnapshotTableSpec extends SparkSpec {
       assert(rows(df) == rows(listed(st.files)), s"v$v")
     }
     assert(rows(t.readVersion(2).get) == Seq((1, "a"), (2, "b"), (3, "c")))
-    assert(rows(t.read().get) == Seq((1, "a"), (2, "B2"), (3, "c"), (4, "d"), (5, "e")))
+    assert(rows(t.read().get) == Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")))
     // the read-committed view: the append snapshots whose txn is admitted
     val st = t.state()
     for (admit <- Seq(Set("b1"), Set("b1", "b3"), Set.empty[String])) {

@@ -10,4 +10,8 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** a fresh directory under `java.io.tmpdir`, deleted when the test JVM
+    * exits */
+  def scratchDir(prefix: String): String = ScratchDir(prefix)
 }

@@ -141,9 +141,24 @@ class StreamingSpec extends SparkSpec {
     val base = input.limit(300).unionByName(prose)
     base.unionByName(base).write.mode("overwrite").parquet(src)
 
-    StreamingPipeline.startCuratedIngest(
-      StreamingPipeline.fromDirectory(spark, src), out, tmpDir("curate-ckpt-a"),
-      trigger = Trigger.AvailableNow()).awaitTermination(120000)
+    // a micro-batch persists nothing: no job of the stream computes a
+    // cached RDD, and none is left behind
+    val cachedStages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.storageLevel.isValid)) cachedStages.incrementAndGet()
+    }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      StreamingPipeline.startCuratedIngest(
+        StreamingPipeline.fromDirectory(spark, src), out, tmpDir("curate-ckpt-a"),
+        trigger = Trigger.AvailableNow()).awaitTermination(120000)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(cachedStages.get == 0, "a micro-batch job computed a persisted RDD")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
 
     val table = new graft.checkpoint.SnapshotTable(s"$out/curated", spark)
     val curated = table.read().get
