@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.deterministic_id
+import graft.io.LocalFs
 
 /** Checkpoint registry — the Spark-native rebuild of Filebeat's registrar
   * (filebeat/registrar/registrar.go:139-214) and the filestream cursor store
@@ -72,12 +73,22 @@ import graft.functions.deterministic_id
   * Run bookkeeping is answered from the commit log's metadata alone:
   * [[lineage]] returns every ack's lineage in one metadata read,
   * which is what the pipeline's metrics sum (O(groups), not O(data)).
+  *
+  * On a `file:` root, the registry's staging cleanup, its tables and the
+  * Spark writes that stage into the root ([[stageOffsets]] and the
+  * pipeline's fan-out, with [[graft.io.LocalFs.writeOptions]]) all go
+  * through [[graft.io.LocalFs]], so no file or directory under the root
+  * costs a forked `chmod`: like the registrar's one file write per flush
+  * (registrar.go:160-190), a commit is file I/O only. The filesystem is
+  * built over the session's Hadoop conf without copying it, so opening a
+  * `Registry` stays cheap ([[graft.pipeline.PipelineRunner.observedMetrics]]
+  * opens one per call).
   */
 final class Registry(val root: String, spark: SparkSession,
                      val runId: String = Registry.newRunId()) {
 
   private val fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFs.get(new Path(root), spark.sparkContext.hadoopConfiguration)
 
   def sinkTable(sink: String): SnapshotTable =
     new SnapshotTable(s"$root/sinks/$sink", spark, runId)
@@ -119,7 +130,7 @@ final class Registry(val root: String, spark: SparkSession,
     * ONE job under [[stagingRunDir]]`/offsets`, sliced by a copy of their
     * `group` column (the rows keep `group`, a registry column). */
   def stageOffsets(offsets: DataFrame): Unit =
-    offsets.withColumn("slice", col("group")).write.mode("overwrite")
+    offsets.withColumn("slice", col("group")).write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("slice").parquet(s"$stagingRunDir/offsets")
 
   /** step 2: commit one group's staged offsets slice into the registry

@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
+import graft.io.LocalFs
+
 /** A minimal, from-scratch SNAPSHOT TABLE FORMAT — the Iceberg metadata
   * pattern (immutable data files + a versioned metadata pointer advanced by
   * an atomic compare-and-swap) implemented over any HDFS-compatible
@@ -87,7 +89,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * reclaims manifests referenced only by expired versions plus aged
   * orphans. The embedded snapshot history and txn-key map still grow with
   * commit count (they must — [[readCommittedTxns]] and idempotence read
-  * them); at sink commit-log rates that is KBs/day.
+  * them): about 0.3 KB per commit, so the version doc of a table with 3000
+  * commits is about 900 KB, rewritten by every commit.
+  *
+  * Local roots: on a `file:` root every metadata write, file move and
+  * listing goes through [[graft.io.LocalFs]], and so do the Spark writes
+  * that stage files for a commit ([[graft.io.LocalFs.writeOptions]]).
+  * Without Hadoop's native library the stock local filesystem forks a
+  * `chmod` for every file and directory it creates, and an `ls -ld` for
+  * every file `listFiles` returns: a few forks per commit, each costing more
+  * than the commit's own file I/O. The files and modes on disk are the same.
   */
 final class SnapshotTable(val root: String, spark: SparkSession,
                           val runId: String = Registry.newRunId(),
@@ -97,7 +108,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   import SnapshotTable._
 
   private val fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFs.get(new Path(root), spark.sparkContext.hadoopConfiguration)
   private val metaDir = new Path(root, "metadata")
   private val dataDir = new Path(root, "data")
 
@@ -291,7 +302,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * append snapshot. Files become visible atomically at the CAS. The
     * txn pre-check runs BEFORE the move, so a resumed group's re-commit
     * never churns files through data/ (and cannot strand them if the
-    * process dies before the already-committed branch cleans up).
+    * process dies before the already-committed branch cleans up); the
+    * first CAS attempt commits against the state that pre-check read — a
+    * writer that committed since then owns v(N+1), so the publish fails
+    * and the retry re-reads.
     * `schema` is the staged files' Spark schema, when the caller knows it;
     * without it the table records none and reads infer. */
   def commitStagedDir(stagedDir: String, txn: Option[String],
@@ -299,7 +313,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     val st = state()
     txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
     val staged = listParquet(fs, new Path(stagedDir))
-    commitMoved(moveIn(staged), txn, schema.map(asNullable))
+    commitMoved(st, moveIn(staged), txn, schema.map(asNullable))
   }
 
   /** metadata-only commit: one snapshot that adds no files and carries only
@@ -307,7 +321,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * idempotence as [[append]]: a key already committed returns
     * `alreadyCommitted` with the original snapshot id. No Spark job runs. */
   def commitSummary(txn: String, summary: String): CommitResult =
-    commitMoved(Seq.empty, Some(txn), None, "metadata", Some(summary))
+    commitMoved(state(), Seq.empty, Some(txn), None, "metadata", Some(summary))
 
   /** a fresh private staging dir under the table root, for a caller to
     * write parquet into and hand to [[commitStagedDir]]. A dir left by a
@@ -323,7 +337,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
     val tmp = stagingDir()
     try {
-      df.write.mode("overwrite").parquet(tmp)
+      df.write.options(LocalFs.writeOptions).mode("overwrite").parquet(tmp)
       commitStagedDir(tmp, txn, Some(df.schema))
     } finally fs.delete(new Path(tmp), true)
   }
@@ -430,15 +444,17 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     }
   }
 
-  /** append pre-moved files with txn idempotence via the CAS loop. */
-  private def commitMoved(moved: Seq[FileEntry], txn: Option[String],
+  /** append pre-moved files with txn idempotence via the CAS loop; the
+    * first attempt commits against `current`, each retry re-reads. */
+  private def commitMoved(current: TableState, moved: Seq[FileEntry], txn: Option[String],
                           movedSchema: Option[StructType],
                           operation: String = "append",
                           summary: Option[String] = None): CommitResult = {
+    var st = current
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
-      val st = state()
+      if (attempt > 1) st = state()
       txn.filter(st.txnKeys.contains).foreach { t =>
         // another writer (or a previous run of this job) already committed
         // this transaction: our files are redundant — remove and defer
@@ -605,16 +621,19 @@ object SnapshotTable {
   private def parseManifest(bytes: Array[Byte]): Seq[FileEntry] =
     fileEntries(Mapper.readTree(bytes).get("entries"))
 
+  /** the `.parquet` files at any depth under `dir`, as `listFiles(dir,
+    * true)` finds them, but walked with `listStatus`: `listFiles` builds a
+    * `LocatedFileStatus` per file, which loads the file's owner and mode —
+    * a forked `ls -ld` per file on the local filesystem without Hadoop's
+    * native library. */
   private def listParquet(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
+    def walk(d: Path): Seq[(Path, Long)] = fs.listStatus(d).toSeq.flatMap { f =>
       val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet"))
-        buf += ((f.getPath, f.getLen))
+      if (f.isDirectory) walk(f.getPath)
+      else if (!n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet"))
+        Seq((f.getPath, f.getLen))
+      else Seq.empty
     }
-    buf.toSeq
+    if (fs.exists(dir)) walk(dir) else Seq.empty
   }
 }

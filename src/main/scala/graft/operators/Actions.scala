@@ -29,10 +29,6 @@ object Actions {
   def chain(df: DataFrame, processors: Seq[DataFrame => DataFrame]): DataFrame =
     processors.foldLeft(df)((d, p) => p(d))
 
-  /** add_fields (actions/add_fields.go:74-86): constant columns. */
-  def addFields(df: DataFrame, fields: Map[String, Column]): DataFrame =
-    fields.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
-
   /** add_tags (actions/add_tags.go:75-82): append + dedup, order-stable via
     * sort (common.AddTagsWithKey dedups; we sort for engine-independence).
     * A null tag set initializes to the added tags — the reference CREATES
@@ -84,12 +80,6 @@ object Actions {
 
   /** decode_base64_field (actions/decode_base64_field.go:76-130). */
   def decodeBase64(c: Column): Column = unbase64(c).cast("string")
-
-  /** decode_json_fields (actions/decode_json_fields.go:103-180) for a flat
-    * string→string object — the shape of the ##JIDU## envelopes. */
-  def decodeJsonMap(c: Column): Column =
-    from_json(c, org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
 
   /** urldecode (urldecode/urldecode.go:75-110). */
   def urlDecode(c: Column): Column = url_decode(c)
@@ -307,12 +297,6 @@ object Actions {
   def kafkaPartition(key: Column, numPartitions: Int): Column =
     pmod(fnv1a32(key).cast("long").bitwiseAND(lit(4294967295L)), lit(numPartitions.toLong))
       .cast("int")
-
-  /** kafka `random` partitioner (partition.go:118-135): stateless jitter;
-    * deterministic analogue uses a row-hash so replays route identically —
-    * randomness in a distributed batch engine must be replay-stable. */
-  def kafkaPartitionRandom(rowCols: Seq[Column], numPartitions: Int): Column =
-    pmod(hash(rowCols: _*), lit(numPartitions)).cast("int")
 
   /** kafka `round_robin` partitioner (partition.go:137-156): successive
     * events rotate through partitions. Batch analogue: the per-group event

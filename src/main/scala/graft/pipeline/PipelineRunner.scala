@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.checkpoint.Registry
+import graft.checkpoint.{Registry, SnapshotTable}
+import graft.io.LocalFs
 import graft.model.Sinks
 
 /** Checkpointed, resumable execution of the transcript pipeline — the
@@ -92,7 +93,7 @@ object PipelineRunner {
         .observe(obs, countCols.head, countCols.tail: _*)
         .filter(col("sink") =!= TranscriptPipeline.Filtered))
       .sortWithinPartitions("group", "sink", "conv_id", "turn_idx")
-    fanout.write.mode("overwrite").partitionBy("group", "sink")
+    fanout.write.options(LocalFs.writeOptions).mode("overwrite").partitionBy("group", "sink")
       .parquet(reg.stagingRunDir)
     val observed = obs.get
     Staged(
@@ -150,8 +151,9 @@ object PipelineRunner {
     val spark = input.sparkSession
     val reg = new Registry(root, spark)
     reg.requireAppendOnlyOffsets()
-    requireGroups(reg, groups)
-    val pending = (0 until groups).filterNot(reg.isCommitted)
+    val log = reg.commitLog.state()
+    requireGroups(reg.root, log, groups)
+    val pending = (0 until groups).filterNot(g => log.txnKeys.contains(Registry.groupTxn(g)))
     if (pending.isEmpty) return Seq.empty
     val pendingInput =
       if (pending.size == groups) input
@@ -195,12 +197,12 @@ object PipelineRunner {
     * group recorded: conversations would move between buckets, and the
     * acked groups' conversations be ingested again. Acks that record no
     * count (written before counts were recorded) are not checked. */
-  private def requireGroups(reg: Registry, groups: Int): Unit =
-    for (s <- reg.commitLog.state().snapshots if s.txn.exists(_.startsWith("group-"));
+  private def requireGroups(root: String, log: SnapshotTable.TableState, groups: Int): Unit =
+    for (s <- log.snapshots if s.txn.exists(_.startsWith("group-"));
          json <- s.summary; n <- Option(Mapper.readTree(json).get("groups"))
          if n.asInt != groups)
       throw new IllegalArgumentException(
-        s"checkpoint root ${reg.root} was run with groups = ${n.asInt}, this run asks " +
+        s"checkpoint root $root was run with groups = ${n.asInt}, this run asks " +
           s"for groups = $groups: a root's group count is fixed by its first run")
 
   private val Mapper = new com.fasterxml.jackson.databind.ObjectMapper()

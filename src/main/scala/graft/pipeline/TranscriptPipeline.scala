@@ -78,11 +78,4 @@ object TranscriptPipeline {
     sinkFast(df)
       .groupBy("sink").agg(count(lit(1)).as("events"))
   }
-
-  /** per-conversation-bucket × sink counts (the north-rule parity grouping:
-    * per conv_id partition). `buckets` bounds output cardinality at scale. */
-  def bucketMetrics(df: DataFrame, buckets: Int = 32): DataFrame =
-    sinkFast(df)
-      .withColumn("bucket", pmod(hash(col("conv_id")), lit(buckets)))
-      .groupBy("bucket", "sink").agg(count(lit(1)).as("events"))
 }

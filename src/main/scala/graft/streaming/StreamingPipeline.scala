@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.checkpoint.Registry
+import graft.io.LocalFs
 import graft.model.TranscriptEvent
 import graft.pipeline.{PipelineRunner, TranscriptPipeline}
 
@@ -275,7 +276,7 @@ object StreamingPipeline {
         try {
           rows.observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text))").as("sig"))
             .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite").parquet(staging)
+            .write.options(LocalFs.writeOptions).mode("overwrite").parquet(staging)
           val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
           table.commitStagedDir(staging,
             Some(s"batch-$batchId-${java.lang.Long.toHexString(fp)}"), Some(rows.schema))

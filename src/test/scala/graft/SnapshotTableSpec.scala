@@ -355,4 +355,49 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rows(t.readCommittedTxns(Set("b1", "b3")).get) ==
       Seq((1, "a"), (2, "b"), (5, "e")))
   }
+
+  test("a staged commit takes exactly the .parquet files listFiles finds, at any depth") {
+    val t = tmpTable()
+    val staged = scratchDir("graft-staged")
+    // nested k=v partition dirs, each file with its .crc, and _SUCCESS
+    Seq((1, "a", "x", 1), (2, "b", "x", 2), (3, "c", "y", 1), (4, "d", "y", 1)).toDF("id", "v", "k", "j")
+      .write.partitionBy("k", "j").mode("overwrite").parquet(staged)
+    // debris: what a failed task attempt leaves, and names the filter skips
+    val debris = Seq("_temporary/0/_temporary/attempt_0/part-00000.parquet.tmp",
+      "_temporary/0/.part-00000.parquet.tmp.crc", "k=x/_common_metadata.parquet",
+      "k=y/j=1/.hidden.parquet")
+    debris.foreach { rel =>
+      val f = java.nio.file.Paths.get(s"$staged/$rel")
+      Files.createDirectories(f.getParent)
+      Files.write(f, Array[Byte](1))
+    }
+    val fs = new org.apache.hadoop.fs.Path(staged).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listed(): Seq[(String, Long)] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(staged), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toUri.getPath.stripPrefix(staged + "/"), f.getLen)).toSeq
+    }
+    def onDisk(): Set[String] = {
+      val root = java.nio.file.Paths.get(staged)
+      val files = Set.newBuilder[String]
+      Files.walk(root).forEach(p => if (Files.isRegularFile(p)) files += root.relativize(p).toString)
+      files.result()
+    }
+    def parquet(files: Seq[(String, Long)]) = files.filter { case (p, _) =>
+      val n = p.split('/').last
+      !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
+    }
+    val before = listed()
+    val expected = parquet(before)
+    assert(expected.size >= 3 && expected.forall(_._1.matches("k=[xy]/j=[12]/part-.*")), expected)
+    assert(before.exists(_._1 == "_SUCCESS") && onDisk().exists(_.endsWith(".parquet.crc")))
+    val r = t.commitStagedDir(staged, Some("s1"))
+    assert(r.addedFiles == expected.size && r.addedBytes == expected.map(_._2).sum)
+    assert(t.state().files.map(_.size).sorted == expected.map(_._2).sorted)
+    // the data files moved, with their .crc; everything else stayed
+    val after = onDisk()
+    assert(parquet(listed()).isEmpty && !after.exists(_.endsWith(".parquet.crc")), after)
+    assert(debris.forall(after.contains) && after.contains("_SUCCESS"), after)
+    assert(t.read().get.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+  }
 }

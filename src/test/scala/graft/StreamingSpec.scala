@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,8 +11,7 @@ import graft.streaming.StreamingPipeline
 
 class StreamingSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmpDir(prefix: String): String = scratchDir(prefix)
 
   lazy val input = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
 
