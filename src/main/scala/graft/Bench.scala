@@ -97,8 +97,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val cores = LocalSession.cpus
     val benchRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "64000000").toLong
 
     // --- part 1: per-query timings over the sf dir ---

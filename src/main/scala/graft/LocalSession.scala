@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * Spark defaults and stay on. A session that already exists is returned
   * with only the runtime SQL settings applied (`getOrCreate`). */
 object LocalSession {
+  /** worker threads for a main: `SPARK_GRAFT_CPUS`, else the host's cores */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   def apply(app: String, cpus: Int, logLevel: String = "WARN",
             master: Option[String] = None): SparkSession = {
     val s = SparkSession.builder()

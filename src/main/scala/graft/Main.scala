@@ -17,8 +17,7 @@ import graft.sources.Transcripts
 object Main {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Main <sfDir|synth:N> <outRoot> [groups] [failAfterGroup]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = LocalSession("graft-pipeline", cpus,
+    val spark = LocalSession("graft-pipeline", LocalSession.cpus,
       master = sys.env.get("SPARK_GRAFT_MASTER"))
 
     val input =

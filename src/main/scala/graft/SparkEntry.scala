@@ -205,10 +205,10 @@ object SparkEntry {
 
     // --- snapshot-table end-to-end: run the CHECKPOINTED pipeline (one
     //     staged fan-out and one staged offsets write for every group → per
-    //     group: offsets and sink snapshot commits, then the commit-log ack)
-    //     to a scratch root, then read the per-sink counts BACK through the
-    //     read-committed view — the whole table-format protocol inside the
-    //     oracle gate, not just the declarative plan ---
+    //     group: its sink and offsets slices moved in, then ONE commit of
+    //     the root log) to a scratch root, then read the per-sink counts
+    //     BACK through that log — the whole table-format protocol inside
+    //     the oracle gate, not just the declarative plan ---
     Query("q_snapshot_sinks", (s, dir) => {
       val root = ScratchDir("graft-q-snap")
       graft.pipeline.PipelineRunner.run(t(s, dir), root, groups = 2)

@@ -6,8 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = LocalSession("graft-verify", cpus)
+    val spark = LocalSession("graft-verify", LocalSession.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.all.foreach { q =>
       try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")

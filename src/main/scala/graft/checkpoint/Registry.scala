@@ -10,79 +10,56 @@ import graft.io.LocalFs
 
 /** Checkpoint registry — the Spark-native rebuild of Filebeat's registrar
   * (filebeat/registrar/registrar.go:139-214) and the filestream cursor store
-  * (filebeat/input/filestream/internal/input-logfile/store.go:37-300), now
-  * layered on the real snapshot table format ([[SnapshotTable]]):
+  * (filebeat/input/filestream/internal/input-logfile/store.go:37-300) on the
+  * snapshot table format ([[SnapshotTable]]). A checkpoint root is ONE
+  * snapshot log whose tables are the sinks and the offsets:
   *
   * {{{
-  *   <root>/sinks/<sink>/     one snapshot table per sink (append-only),
-  *                            rows in [[Registry.stored]] layout: no
-  *                            `doc_id` (a pure function of conv_id and
-  *                            turn_idx — [[readSink]] derives it)
-  *   <root>/registry/         offsets table (append-only) — per-conversation
-  *                            high-water marks, one snapshot per group under
-  *                            the group's txn key `group-<g>`
-  *   <root>/commits/          the pipeline commit log — NO data files: one
-  *                            metadata-only snapshot per ack (txn key
-  *                            `group-<g>` for a batch run's group,
-  *                            `batch-<id>-<fingerprint>` for a streaming
-  *                            micro-batch; run = the winner) whose summary
-  *                            is the lineage JSON: counts, per-sink write
-  *                            stats and the PER-SINK SNAPSHOT IDS produced
+  *   <root>/metadata/v<N>.json   the root log ([[commitLog]]): one snapshot per
+  *                               acked group (txn key `group-<g>`) or streaming
+  *                               micro-batch (`batch-<id>-<fingerprint>`)
+  *                               listing its files in every table, with its
+  *                               lineage JSON (counts, per-sink write stats)
+  *                               as the summary
+  *   <root>/sinks/<sink>/data/   a table per sink, in [[Registry.stored]]
+  *                               layout (no `doc_id`: [[readSink]] derives it)
+  *   <root>/registry/data/       the offsets: per-conversation high-water marks
   * }}}
   *
   * Per run, the protocol is:
   *   1. stage every pending group's fan-out in ONE write under
-  *      [[stagingRunDir]] (`group=<g>/sink=<s>` — each group's slice is
-  *      [[stagingGroupDir]]), and every pending group's offsets in ONE
-  *      more ([[stageOffsets]]);
+  *      [[stagingRunDir]] (each group's slice is [[stagingGroupDir]]), and
+  *      every pending group's offsets in ONE more ([[stageOffsets]]);
   * then per group:
-  *   2. append the group's offsets slice to the registry table with txn
-  *      key `group-<g>` ([[commitOffsets]]). A conversation lives in
-  *      exactly one group and a root's group count is fixed, so the slice
-  *      never shares a key with committed rows: a plain append, never a
-  *      MERGE;
-  *   3. append the group's rows to each sink table with the same txn key
-  *      `group-<g>` — idempotent: a retry or a racing runner gets
-  *      `alreadyCommitted` with the original snapshot id, never a duplicate;
-  *   4. commit the group's lineage to the commit log as a METADATA-ONLY
-  *      snapshot (same txn key, lineage as the snapshot summary) — THE ack
-  *      point (reference registrar persists offsets only after the output
-  *      ACKs, filebeat/beater/acker.go:37-68), and, like the registrar's,
-  *      a small state write: no data file, no Spark job. Exactly one
-  *      runner's commit wins; the loser reports defeat and cleans its
-  *      staging.
+  *   2. move its sink and offsets slices into their tables' data dirs
+  *      ([[moveIn]]; [[commitSinkStaged]] and [[mergeOffsets]] are this step
+  *      for one sink and for offsets given as a DataFrame). Moved files are
+  *      collected under the group's txn key and listed nowhere yet;
+  *   3. THE ACK ([[ack]], [[commitGroup]]): ONE CAS commit of the root log
+  *      lists every collected file and carries the lineage, so the group
+  *      lands in full or not at all (the reference registrar persists
+  *      offsets only after the output ACKs, filebeat/beater/acker.go:37-68,
+  *      once per flush, registrar.go:160-190). No Spark job runs. One
+  *      runner wins a txn key; a loser's moved files are deleted.
   *
-  * Every table is append-only and every write is a staged append under a
-  * txn key, so a retry or a racing runner of any step gets
-  * `alreadyCommitted`.
+  * A streaming micro-batch runs the same steps without offsets (its
+  * checkpoint is its cursor) under its batch txn key. A crash before step 3
+  * leaves moved files no snapshot lists: invisible, re-run on resume, and
+  * reclaimed by [[SnapshotTable.expireSnapshots]] on [[commitLog]] (which
+  * sweeps nothing while the log has no version).
   *
-  * A streaming micro-batch runs steps 1, 3 and 4 (it keeps no offsets
-  * table: the stream's checkpoint is its cursor) under its batch txn key.
+  * [[readSink]], [[registry]] and [[lineage]] read the newest version of
+  * the root log — one listing and one doc read, no manifest — so the
+  * pipeline's metrics are O(groups), not O(data). A root of the per-table
+  * layout that came before the one root log (each sink, the offsets and
+  * the acks with a `metadata/` log of their own: `sinks/<sink>/metadata/`,
+  * `registry/metadata/`, `commits/metadata/`) is refused by name, by every
+  * read and before any write moves a file in.
   *
-  * Crash between 3 and 4 (a PARTIAL sink commit) reconciles on resume: the
-  * group is absent from the commit log so it re-runs, and each sink table's
-  * txn key turns the re-append into a no-op returning the crashed run's
-  * snapshot id — effectively-once without ever scanning data.
-  *
-  * Reads are snapshot-isolated per table, and [[readSink]] and [[registry]]
-  * additionally resolve through the commit log (only snapshots whose txn
-  * key is acked in the log are visible), so a partially-committed group is
-  * invisible to consumers until its ack lands — the cross-table
-  * read-committed view.
-  *
-  * Run bookkeeping is answered from the commit log's metadata alone:
-  * [[lineage]] returns every ack's lineage in one metadata read,
-  * which is what the pipeline's metrics sum (O(groups), not O(data)).
-  *
-  * On a `file:` root, the registry's staging cleanup, its tables and the
-  * Spark writes that stage into the root ([[stageOffsets]] and the
-  * pipeline's fan-out, with [[graft.io.LocalFs.writeOptions]]) all go
-  * through [[graft.io.LocalFs]], so no file or directory under the root
-  * costs a forked `chmod`: like the registrar's one file write per flush
-  * (registrar.go:160-190), a commit is file I/O only. The filesystem is
-  * built over the session's Hadoop conf without copying it, so opening a
-  * `Registry` stays cheap ([[graft.pipeline.PipelineRunner.observedMetrics]]
-  * opens one per call).
+  * On a `file:` root, the staging cleanup, the log and the Spark writes
+  * that stage into the root all go through [[graft.io.LocalFs]], so a
+  * commit is file I/O only. Opening a `Registry` copies no Hadoop conf
+  * ([[graft.pipeline.PipelineRunner.observedMetrics]] opens one per call).
   */
 final class Registry(val root: String, spark: SparkSession,
                      val runId: String = Registry.newRunId()) {
@@ -90,22 +67,38 @@ final class Registry(val root: String, spark: SparkSession,
   private val fs: FileSystem =
     LocalFs.get(new Path(root), spark.sparkContext.hadoopConfiguration)
 
-  def sinkTable(sink: String): SnapshotTable =
-    new SnapshotTable(s"$root/sinks/$sink", spark, runId)
-  val offsetsTable: SnapshotTable = new SnapshotTable(s"$root/registry", spark, runId)
-  val commitLog: SnapshotTable = new SnapshotTable(s"$root/commits", spark, runId)
+  /** the root's one metadata log. It writes no manifests: its snapshot
+    * history lists every file already, and a manifest would only add two
+    * files (it and its `.crc`) to the listing every read of the log pays. */
+  val commitLog: SnapshotTable =
+    new SnapshotTable(root, spark, runId, inlineFileLimit = Int.MaxValue)
 
-  def isCommitted(group: Int): Boolean =
-    commitLog.state().txnKeys.contains(Registry.groupTxn(group))
+  /** by txn key, files moved in and not yet acked: the ack's snapshot id, the slices */
+  private val moved = scala.collection.mutable.Map.empty[String, (String, Vector[SnapshotTable.Slice])]
 
-  def committedGroups(): Seq[Int] =
-    commitLog.state().txnKeys.keys
-      .filter(_.startsWith("group-")).map(_.stripPrefix("group-").toInt)
-      .toSeq.sorted
+  /** set by [[log]]: a root's layout does not change under a live writer,
+    * so a write ([[moveIn]], [[ack]]) calls [[log]] first only until set. */
+  @volatile private var layoutChecked = false
 
-  /** The runId that won a group's commit-log append (the fence winner). */
-  def markerRun(group: Int): Option[String] =
-    commitLog.snapshotForTxn(Registry.groupTxn(group)).map(_.run)
+  /** the root log's newest version as written (one listing, one doc read).
+    * An empty log may sit in a root of the per-table layout; that root is
+    * refused by name. */
+  def log(): SnapshotTable.TableState = {
+    val st = commitLog.latest()
+    if (st.version == 0)
+      Option(fs.globStatus(new Path(root, s"{commits,${Registry.OffsetsTable},sinks/*}/metadata")))
+        .flatMap(_.headOption).foreach { f =>
+          throw new IllegalStateException(
+            s"checkpoint root $root predates the one root log: ${f.getPath} is a per-table " +
+              "metadata log; re-run the pipeline into a fresh root")
+        }
+    layoutChecked = true
+    st
+  }
+
+  /** whether `group` is acked (the production-path benchmark's replay asks
+    * before it runs a group). */
+  def isCommitted(group: Int): Boolean = log().txnKeys.contains(Registry.groupTxn(group))
 
   /** this runner's private staging dir: the run's single fan-out write
     * lands here, partitioned by group and sink. */
@@ -114,83 +107,68 @@ final class Registry(val root: String, spark: SparkSession,
   /** one group's slice of the run's staged fan-out. */
   def stagingGroupDir(group: Int): String = s"$stagingRunDir/group=$group"
 
-  /** step 3: commit one sink's staged slice of the group into its table
-    * (`schema`: the staged files' schema, recorded so reads skip
-    * inference). */
+  /** one group's slice of the run's staged offsets. */
+  def stagedOffsets(group: Int): String = s"$stagingRunDir/offsets/slice=$group"
+
+  /** step 2: move `stagedDir`'s files into `table` (`schema`: theirs,
+    * recorded so reads skip inference) and collect them under `txn`, for
+    * the [[ack]] of `txn` to publish. The result carries the snapshot id
+    * that ack commits as. */
+  def moveIn(txn: String, table: String, stagedDir: String,
+             schema: Option[StructType]): SnapshotTable.CommitResult = {
+    if (!layoutChecked) log()
+    val files = commitLog.moveIn(stagedDir, table)
+    val (id, slices) = moved.getOrElse(txn, (commitLog.newSnapshotId(), Vector.empty))
+    moved(txn) = (id, slices :+ SnapshotTable.Slice(table, files, schema))
+    SnapshotTable.CommitResult(id, alreadyCommitted = false, files.map(_.size).sum, files.size)
+  }
+
+  /** step 2 for one sink's staged slice of a batch group. */
   def commitSinkStaged(sink: String, group: Int, stagedDir: String,
                        schema: Option[StructType] = None): SnapshotTable.CommitResult =
-    commitSinkStaged(sink, Registry.groupTxn(group), stagedDir, schema)
-
-  /** step 3 under any txn key (a micro-batch's: `batch-<id>-<hex>`). */
-  def commitSinkStaged(sink: String, txn: String, stagedDir: String,
-                       schema: Option[StructType]): SnapshotTable.CommitResult =
-    sinkTable(sink).commitStagedDir(stagedDir, Some(txn), schema)
+    moveIn(Registry.groupTxn(group), Registry.sinkTable(sink), stagedDir, schema)
 
   /** step 1 (offsets): write the offsets rows of every pending group in
     * ONE job under [[stagingRunDir]]`/offsets`, sliced by a copy of their
-    * `group` column (the rows keep `group`, a registry column). */
+    * `group` column (the rows keep `group`, a registry column) — each
+    * group's slice is [[stagedOffsets]]. */
   def stageOffsets(offsets: DataFrame): Unit =
     offsets.withColumn("slice", col("group")).write.options(LocalFs.writeOptions).mode("overwrite")
       .partitionBy("slice").parquet(s"$stagingRunDir/offsets")
 
-  /** step 2: commit one group's staged offsets slice into the registry
-    * table under the group's txn key (`schema`: the staged rows' schema).
-    * A resume or a racing runner gets `alreadyCommitted`. */
-  def commitOffsets(group: Int, schema: StructType): SnapshotTable.CommitResult =
-    offsetsTable.commitStagedDir(s"$stagingRunDir/offsets/slice=$group",
-      Some(Registry.groupTxn(group)), Some(schema))
+  /** steps 1 and 2 for one group's offsets, given as a DataFrame (the
+    * production-path benchmark's per-group replay). The registry is
+    * append-only; the name stays from when this was a MERGE. */
+  def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult = {
+    offsets.write.options(LocalFs.writeOptions).mode("overwrite").parquet(stagedOffsets(group))
+    moveIn(Registry.groupTxn(group), Registry.OffsetsTable, stagedOffsets(group), Some(offsets.schema))
+  }
 
-  /** one group's offsets appended under its txn key — a retry of the same
-    * group is `alreadyCommitted`. The registry is append-only; the name
-    * stays from when this was a MERGE because callers outside this
-    * library (the production-path benchmark's per-group replay) call it. */
-  def mergeOffsets(group: Int, offsets: DataFrame): SnapshotTable.CommitResult =
-    offsetsTable.append(offsets, Some(Registry.groupTxn(group)))
-
-  /** refuse a root whose offsets were written by copy-on-write MERGE (before
-    * the registry was append-only): its merged rows carry no txn key, so a
-    * resume would append group slices on top of them. */
-  def requireAppendOnlyOffsets(): Unit =
-    offsetsTable.state().snapshots.find(_.operation == "merge").foreach { s =>
-      throw new IllegalStateException(
-        s"checkpoint root $root predates append-only offsets: registry snapshot " +
-          s"${s.id} is a copy-on-write merge; re-run the pipeline into a fresh root")
-    }
-
-  /** step 4 — the ACK: a metadata-only commit-log snapshot under the
-    * group's txn key whose summary is `lineageJson` (counts + per-sink
-    * write stats + snapshot ids, under this runner's fence). Writes no data
-    * file and runs no Spark job. Returns true when THIS run owns the group
-    * afterwards; false when a concurrent runner's commit won — the caller
-    * lost and must not count the group. */
+  /** step 3 for a batch group: [[ack]] under `group-<g>`. */
   def commitGroup(group: Int, lineageJson: String): Boolean =
     ack(Registry.groupTxn(group), lineageJson)
 
-  /** step 4 under any txn key. */
+  /** step 3 — the ACK: ONE commit of the root log listing every file
+    * moved in under `txn` and carrying `lineageJson` (counts + per-sink
+    * write stats) as its summary. Returns true when THIS run owns `txn`
+    * afterwards; false when a concurrent runner's commit won — its moved
+    * files are deleted, and the caller lost and must not count the group. */
   def ack(txn: String, lineageJson: String): Boolean = {
-    val res = commitLog.commitSummary(txn, lineageJson)
+    if (!layoutChecked) log()
+    val (id, slices) = moved.remove(txn).getOrElse((commitLog.newSnapshotId(), Vector.empty))
+    val res = commitLog.commit(txn, lineageJson, slices, id)
     !res.alreadyCommitted || commitLog.snapshotForTxn(txn).exists(_.run == runId)
   }
 
-  /** every ack's lineage JSON (the summary of its commit-log snapshot),
-    * keyed by its txn key, from ONE metadata read. Empty on a fresh root. A
-    * root whose acks were written before lineage summaries existed (one
-    * parquet row per ack) is refused with a named error rather than read a
-    * second way. */
+  /** every ack's lineage JSON (the summary of its snapshot), keyed by its
+    * txn key, from ONE metadata read. Empty on a fresh root. */
   def lineage(): Map[String, String] =
-    commitLog.state().snapshots.flatMap { s =>
-      s.txn.map { t =>
-        t -> s.summary.getOrElse(
-          throw new IllegalStateException(
-            s"checkpoint root $root predates lineage summaries: the commit-log " +
-              s"snapshot ${s.id} acking $t carries no lineage summary; " +
-              "re-run the pipeline into a fresh root"))
-      }
-    }.toMap
+    (for (s <- log().snapshots; t <- s.txn; j <- s.summary) yield t -> j).toMap
 
   /** drop this runner's staged files for a group (post-commit or defeat). */
   def cleanupStaging(group: Int): Unit = {
     fs.delete(new Path(stagingGroupDir(group)), true)
+    fs.delete(new Path(stagedOffsets(group)), true)
     dropEmptyScopes()
   }
 
@@ -207,44 +185,38 @@ final class Registry(val root: String, spark: SparkSession,
     * creating its own staging underneath (check-then-act); losing that race
     * just means the shared dir survives — never fail the finishing runner. */
   private def dropEmptyScopes(): Unit =
-    Seq(new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
+    Seq(new Path(s"$stagingRunDir/offsets"), new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
       try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
       catch { case _: java.io.IOException => () }
     }
 
-  /** `table`'s snapshots whose txn key is acked in the commit log — the
-    * one read-committed view of every table under the root */
-  private def readCommitted(table: SnapshotTable): Option[DataFrame] = {
-    val acked = commitLog.state().txnKeys.keySet
-    table.readCommittedTxns(acked.contains)
-  }
-
   /** All committed registry rows (the queryable "registrar state"): the
-    * offsets snapshots of acked groups — offsets commit in step 2, the ack
-    * lands in step 4, and a crash in between must not surface a group's
-    * offsets before its sinks are acked (the registrar invariant: offsets
-    * persist only after the output ACKs, filebeat/beater/acker.go:37-68). */
-  def registry(): DataFrame = {
-    requireAppendOnlyOffsets()
-    readCommitted(offsetsTable).getOrElse(
+    * offsets of every acked group, which land in the same commit as the
+    * group's sink rows. */
+  def registry(): DataFrame =
+    commitLog.readTable(Registry.OffsetsTable, log()).getOrElse(
       throw new IllegalArgumentException("no committed groups"))
-  }
 
-  /** Read-committed view of one sink table: snapshot-isolated AND resolved
-    * through the commit log, so only acked groups are visible. `doc_id` is
-    * derived here, not read (the table stores no copy of it); on files of
-    * older roots that still hold one, the derived value replaces the
-    * stored, equal, value. A query that never selects it computes no hash. */
+  /** One sink's rows in the newest version of the root log: every acked
+    * group's, no other. `doc_id` is derived here, not read (the table
+    * stores no copy of it); on files of older roots that still hold one,
+    * the derived value replaces the stored, equal, value. A query that
+    * never selects it computes no hash. */
   def readSink(sink: String): Option[DataFrame] =
-    readCommitted(sinkTable(sink))
+    commitLog.readTable(Registry.sinkTable(sink), log())
       .map(_.withColumn("doc_id", deterministic_id(col("conv_id"), col("turn_idx")))
         .withColumn("sink", lit(sink)))
 }
 
 object Registry {
-  /** a batch run group's txn key (its offsets and sink snapshots, and its
-    * ack). */
+  /** a batch run group's txn key (its snapshot in the root log). */
   def groupTxn(group: Int): String = s"group-$group"
+
+  /** the offsets table, a dir under the root */
+  val OffsetsTable = "registry"
+
+  /** a sink's table, a dir under the root */
+  def sinkTable(sink: String): String = s"sinks/$sink"
 
   /** The layout every writer of a sink table stores: routed rows without
     * `doc_id`, which is 64 incompressible hex characters per row and a

@@ -25,35 +25,25 @@ import graft.model.Sinks
   *    counters, never a global sort; and ONE status-only pass whose
   *    per-conversation offsets are staged per group. Sinks store no
   *    `doc_id`: [[graft.checkpoint.Registry.readSink]] derives it
-  *  - per group: its offsets slice commits as a SNAPSHOT of the registry
-  *    table and each sink's staged slice as a SNAPSHOT of that sink's
-  *    table, all under txn key `group-<g>`; then the group's lineage
-  *    (counts + per-sink write stats + snapshot ids) commits to the commit
-  *    log as the summary of a metadata-only snapshot — the ACK, which
-  *    writes no data file and runs no Spark job (see
-  *    [[graft.checkpoint.Registry]] for the protocol and
-  *    [[graft.checkpoint.SnapshotTable]] for the table format)
-  *  - a kill during the fan-out or the offsets pass loses that run's
-  *    unacked work; a kill between group acks loses nothing acked. Resume =
-  *    rerun the same command; acked groups are skipped and only the pending
-  *    buckets are read (filebeat registrar semantics: offsets visible only
-  *    after ACK, filebeat/beater/acker.go:37-68); a crash between a sink's
-  *    snapshot commit and the group ack reconciles through the per-table txn
-  *    keys — the re-append is a no-op returning the crashed run's snapshot
-  *    id → effectively-once end-to-end, even across PARTIAL sink commits
-  *  - CONCURRENT runners on the same root are safe: staged files carry
-  *    run-unique names and every commit is an optimistic CAS with txn-key
-  *    idempotence; the commit-log append decides the winner per group and
-  *    the loser cleans its staging (PipelineRunnerSpec races two runners)
+  *  - per group: its sink and offsets slices move into their tables, then
+  *    ONE commit of the root log lists them all under txn key `group-<g>`
+  *    with the group's lineage (counts + per-sink write stats) as summary —
+  *    the ACK, no Spark job ([[graft.checkpoint.Registry]] has the protocol)
+  *  - a kill loses no acked group, and a kill inside a group's commit leaves
+  *    only files no snapshot lists. Resume = rerun the same command; acked
+  *    groups are skipped and only the pending buckets are read (filebeat
+  *    registrar semantics: offsets visible only after ACK,
+  *    filebeat/beater/acker.go:37-68) → exactly-once end-to-end
+  *  - CONCURRENT runners on one root are safe: staged files carry run-unique
+  *    names and the root log's CAS commit with txn-key idempotence decides
+  *    each group's winner; the loser deletes its moved files
+  *    (PipelineRunnerSpec races two runners)
   *
-  * Batches are cut from one harvest, not re-read per batch; `groups`
-  * trades failure-domain granularity against per-group commit overhead
-  * (reference flush-coalescing, registrar.go:160-190).
-  *
-  * [[run]] is [[stage]] → offsets staging → (offsets commit, [[commit]])
-  * per pending group under txn key `group-<g>`; a streaming micro-batch
-  * ([[graft.streaming.StreamingPipeline.startSnapshotSinks]]) is stage →
-  * commit under its batch txn key, so both write the same tables and acks.
+  * `groups` trades failure-domain granularity against per-group commit
+  * overhead (reference flush-coalescing, registrar.go:160-190). A streaming
+  * micro-batch ([[graft.streaming.StreamingPipeline.startSnapshotSinks]]) is
+  * [[stage]] → [[commit]] under its batch txn key, into the same tables:
+  * one commit per group or micro-batch.
   */
 object PipelineRunner {
 
@@ -105,42 +95,35 @@ object PipelineRunner {
       StructType(fanout.schema.filterNot(f => f.name == "group" || f.name == "sink")))
   }
 
-  /** Commit one staged group under `txn`: each sink's slice as a SNAPSHOT of
-    * its table, then the lineage as the ACK, then drop the group's staging.
-    * A crashed commit's sink snapshots reconcile to no-ops when `txn`
-    * commits again. None when a concurrent runner's ack won. `groups`: a
-    * batch run's group count, recorded in the lineage. */
+  /** Commit one staged group under `txn`: move each sink's slice (and,
+    * given the offsets' schema, the group's [[graft.checkpoint.Registry.stagedOffsets]]
+    * slice) into its table, then ack them all in ONE commit with the
+    * lineage, then drop the group's staging. None when a concurrent
+    * runner's ack won. `groups`: a batch run's group count, recorded in the
+    * lineage. */
   def commit(reg: Registry, txn: String, group: Int, staged: Staged,
-             groups: Option[Int] = None): Option[GroupResult] = {
+             groups: Option[Int] = None, offsets: Option[StructType] = None): Option[GroupResult] = {
     val counts = staged.counts(group)
     val staging = reg.stagingGroupDir(group)
-    val sinkSnaps = Sinks.All.flatMap { s =>
-      if (counts.getOrElse(s, 0L) > 0)
-        Some(s -> reg.commitSinkStaged(s, txn, s"$staging/sink=$s", Some(staged.schema)))
-      else None
+    val writes = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0).map { s =>
+      val r = reg.moveIn(txn, Registry.sinkTable(s), s"$staging/sink=$s", Some(staged.schema))
+      s -> ((r.addedBytes, r.addedFiles))
     }.toMap
+    offsets.foreach(schema =>
+      reg.moveIn(txn, Registry.OffsetsTable, reg.stagedOffsets(group), Some(schema)))
 
-    // lineage, the ack's snapshot summary: counts + per-write output
-    // stats (bytes/files per sink — the reference's per-output-worker
-    // metrics, libbeat/outputs/metrics.go, read straight off the
-    // snapshot metadata) + the PER-SINK SNAPSHOT IDS this group
-    // produced, so any historical pipeline state can be
-    // reconstructed table-version by table-version
-    val writeStats = sinkSnaps.map { case (s, r) => s -> ((r.addedBytes, r.addedFiles.toLong)) }
+    // lineage, the ack's snapshot summary: counts + per-write output stats
+    // of the sink files (bytes/files per sink — the reference's
+    // per-output-worker metrics, libbeat/outputs/metrics.go, read straight
+    // off the snapshot metadata; the offsets slice is not output)
     val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val bytesJson = writeStats
+    val bytesJson = writes
       .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
       .mkString("{", ",", "}")
-    val snapsJson = sinkSnaps
-      .map { case (s, r) => s""""$s":"${r.snapshotId}"""" }
-      .mkString("{", ",", "}")
     val groupsJson = groups.fold("")(n => s""","groups":$n""")
-    val won = reg.ack(txn, s"""{"group":$group$groupsJson,"counts":$lineage,""" +
-      s""""writes":$bytesJson,"snapshots":$snapsJson}""")
-    // staged files were either moved into tables or discarded by the
-    // txn-key check; the scratch directory is garbage either way
-    reg.cleanupStaging(group)
-    if (won) Some(GroupResult(group, counts, writeStats.map { case (k, (b, _)) => k -> b }))
+    val won = reg.ack(txn, s"""{"group":$group$groupsJson,"counts":$lineage,"writes":$bytesJson}""")
+    reg.cleanupStaging(group) // what is left of the staging is garbage
+    if (won) Some(GroupResult(group, counts, writes.map { case (k, (b, _)) => k -> b }))
     else None
   }
 
@@ -150,8 +133,7 @@ object PipelineRunner {
           failAfterGroup: Int = Int.MaxValue): Seq[GroupResult] = {
     val spark = input.sparkSession
     val reg = new Registry(root, spark)
-    reg.requireAppendOnlyOffsets()
-    val log = reg.commitLog.state()
+    val log = reg.log()
     requireGroups(reg.root, log, groups)
     val pending = (0 until groups).filterNot(g => log.txnKeys.contains(Registry.groupTxn(g)))
     if (pending.isEmpty) return Seq.empty
@@ -169,9 +151,8 @@ object PipelineRunner {
       // pass 2 — offsets rows (file.State analogue) for every pending group
       // via the status-only routing fast path — identical sink decision to
       // the full transform (pinned by PipelineSpec) without the 13-field
-      // extraction — staged in ONE write, then committed per group.
-      // Invisible until each group's ack: Registry.registry() reads
-      // through the commit log.
+      // extraction — staged in ONE write; each group's slice rides that
+      // group's commit.
       val offsets = TranscriptPipeline.sinkFast(pendingInput)
         .groupBy(col("conv_id").as("partition_key"), bucketCol(groups).as("group"))
         .agg(max("turn_idx").as("max_turn_idx"),
@@ -184,9 +165,8 @@ object PipelineRunner {
       reg.stageOffsets(offsets)
 
       pending.zipWithIndex.flatMap { case (g, i) =>
-        reg.commitOffsets(g, offsets.schema)
-        val result = commit(reg, Registry.groupTxn(g), g, staged, Some(groups))
-        if (i >= failAfterGroup) // test hook: simulate a crash between commits
+        val result = commit(reg, Registry.groupTxn(g), g, staged, Some(groups), Some(offsets.schema))
+        if (i >= failAfterGroup) // test hook: simulate a crash between group commits
           throw new RuntimeException(s"injected failure after group $g")
         result
       }
@@ -212,11 +192,11 @@ object PipelineRunner {
     *
     * Read from the commit log's metadata alone — O(groups), not O(data):
     * each acked group's lineage holds the exact per-sink counts its fan-out
-    * job observed and the bytes its sink snapshots added, so the metrics
+    * job observed and the bytes its sink files hold, so the metrics
     * are their sums (total = every routed row, filtered included). Runs no
     * Spark job. A fresh root (or one read before the first ack) reports
-    * zeros; a root whose acks predate lineage summaries is refused by
-    * [[graft.checkpoint.Registry.lineage]]. */
+    * zeros; a root of the per-table layout is refused by
+    * [[graft.checkpoint.Registry.log]]. */
   def observedMetrics(root: String, spark: SparkSession): Map[String, Long] = {
     val counts = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     var writeBytes = 0L

@@ -21,7 +21,7 @@ import graft.pipeline.{PipelineRunner, TranscriptPipeline}
   *  - [[startSnapshotSinks]] runs each micro-batch through the batch
   *    runner's fan-out and commit protocol, with the streaming checkpoint as
   *    the cursor (filebeat/registrar semantics: offsets only advance after
-  *    the batch's sink writes commit and ack).
+  *    the batch's one commit, its sink files and ack together).
   *  - [[windowedMetrics]] is the observer counter set as a watermarked
   *    windowed aggregation (libbeat/publisher/pipeline/monitoring.go:94-104).
   *  - [[convOffsets]] mirrors the per-file State high-water mark
@@ -36,12 +36,13 @@ object StreamingPipeline {
     * protocol: each micro-batch is [[PipelineRunner.stage]] (one group) →
     * [[PipelineRunner.commit]] under txn key `batch-<id>-<hex>`, the batch
     * id PLUS an order-independent 64-bit fingerprint of its content observed
-    * in the same job: ONE Spark job per micro-batch, no persist, and the
-    * same ack as a batch group, so `Registry.readSink` and
-    * `PipelineRunner.observedMetrics` read a streaming root like a batch one.
-    * A replayed batch (checkpoint recovery, or a fresh checkpoint over the
-    * same input, also after a crash between sink commits and ack) carries
-    * the same key and reconciles to a no-op: exactly-once into the tables.
+    * in the same job: ONE Spark job and ONE commit of the root log per
+    * micro-batch, no persist, and the same ack as a batch group, so
+    * `Registry.readSink` and `PipelineRunner.observedMetrics` read a
+    * streaming root like a batch one. A replayed batch (checkpoint recovery,
+    * or a fresh checkpoint over the same input, also after a crash before
+    * its commit landed) carries the same key: its commit loses to the one
+    * that landed, or lands the first time — exactly-once into the tables.
     * A batch that REUSES an id over grown input after checkpoint loss has
     * another fingerprint and appends — at-least-once, never silent loss (a
     * bare batch-id key would skip it; cf. Delta's txnAppId caveat). */

@@ -36,9 +36,16 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     }
   }
 
+  /** the groups of a `groups`-group root whose ack is in its log */
+  private def acked(reg: Registry, groups: Int = 4): Seq[Int] = (0 until groups).filter(reg.isCommitted)
+
+  /** the files the newest version of the root log lists in `table` */
+  private def listed(reg: Registry, table: String): Seq[String] =
+    reg.commitLog.state().files.map(_.path).filter(_.startsWith(s"$table/data/"))
+
   /** `observedMetrics`, read from lineage metadata alone, equals the data
-    * itself: read-committed sink rows, the registry's offsets aggregate,
-    * and the file sizes of the acked groups' sink snapshots. */
+    * itself: sink rows, the registry's offsets aggregate, and the sizes of
+    * the sink files the root log lists. */
   private def assertMetricsMatchData(root: String): Unit = {
     val m = PipelineRunner.observedMetrics(root, spark)
     val reg = new Registry(root, spark)
@@ -48,10 +55,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val r = reg.registry().agg(sum("row_count"), sum("filtered")).collect()(0)
     assert(m("events.total") == r.getLong(0), s"$m")
     assert(m("events.filtered") == r.getLong(1), s"$m")
-    val acked = reg.committedGroups().map(g => s"group-$g").toSet
-    val snapshotBytes = Sinks.All.map(s => reg.sinkTable(s).state().snapshots
-      .filter(_.txn.exists(acked)).flatMap(_.added).map(_.size).sum).sum
-    assert(m("output.write_bytes") == snapshotBytes, s"$m")
+    val sinkBytes = reg.commitLog.state().files.filter(_.path.startsWith("sinks/")).map(_.size).sum
+    assert(m("output.write_bytes") == sinkBytes, s"$m")
   }
 
   test("full run: sink fan-out + atomic commits + observer metrics parity") {
@@ -102,7 +107,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       PipelineRunner.run(input, rootCrash, groups = 4, failAfterGroup = 0)
     }
     val reg = new Registry(rootCrash, spark)
-    val committedBefore = reg.committedGroups()
+    val committedBefore = acked(reg)
     assert(committedBefore.nonEmpty && committedBefore.size < 4)
     // the failed run still dropped its staging (unacked groups included)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -160,7 +165,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     // (a runner that saw the marker early skips; one that raced loses the
     // rename and abandons) — no group double-counted, none lost
     val reg = new Registry(root, spark)
-    assert(reg.committedGroups() == Seq(0, 1, 2, 3))
+    assert(acked(reg) == Seq(0, 1, 2, 3))
     val wonGroups = (ra ++ rb).map(_.group)
     assert(wonGroups.distinct.size == wonGroups.size)
     assert(wonGroups.toSet.subsetOf((0 until 4).toSet))
@@ -175,22 +180,27 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assertMetricsMatchData(root)
 
     // losers left no residue: staging is gone, and every physical file in
-    // each sink table's data/ dir is referenced by the table's current
-    // snapshot (a CAS loser deletes the files it moved in)
+    // each table's data/ dir is listed by the root log (a CAS loser deletes
+    // the files it moved in)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_staging")))
-    for (s <- Sinks.All) {
-      val tbl = reg.sinkTable(s)
-      val st = tbl.state()
-      val dataDir = new org.apache.hadoop.fs.Path(s"${tbl.root}/data")
-      if (fs.exists(dataDir)) {
-        val onDisk = fs.listStatus(dataDir).map(_.getPath.getName)
+    assertEveryFileListed(reg)
+  }
+
+  /** every physical file in each table's data/ dir is listed by the root
+    * log's newest version, and each table holds some */
+  private def assertEveryFileListed(reg: Registry): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(reg.root), spark.sparkContext.hadoopConfiguration)
+    for (t <- Registry.OffsetsTable +: Sinks.All.map(Registry.sinkTable)) {
+      val dataDir = new org.apache.hadoop.fs.Path(s"${reg.root}/$t/data")
+      val onDisk = if (!fs.exists(dataDir)) Set.empty[String] else
+        fs.listStatus(dataDir).map(_.getPath.getName)
           .filterNot(_.startsWith(".")) // LocalFileSystem .crc sidecars
-          .map(n => s"data/$n").toSet
-        assert(onDisk == st.files.map(_.path).toSet,
-          s"unreferenced files in $s: ${onDisk.diff(st.files.map(_.path).toSet)}")
-      }
+          .map(n => s"$t/data/$n").toSet
+      assert(onDisk == listed(reg, t).toSet,
+        s"unreferenced files in $t: ${onDisk.diff(listed(reg, t).toSet)}")
     }
   }
 
@@ -212,47 +222,57 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     intercept[RuntimeException] {
       PipelineRunner.run(input, root, groups = 4, failAfterGroup = 0)
     }
-    val table = new Registry(root, spark).offsetsTable
-    val before = table.state()
-    assert(before.txnKeys.keySet == Set("group-0") && before.files.nonEmpty)
+    val reg = new Registry(root, spark)
+    val before = reg.commitLog.state()
+    assert(before.txnKeys.keySet == Set("group-0") && listed(reg, Registry.OffsetsTable).nonEmpty)
     PipelineRunner.run(input, root, groups = 4)
-    val after = table.state()
+    val after = reg.commitLog.state()
     val added = after.snapshots.drop(before.snapshots.size)
     assert(added.forall(_.operation == "append"))
     assert(added.flatMap(_.txn) == Seq("group-1", "group-2", "group-3"))
     // nothing rewritten: the earlier files are all still listed
     assert(after.files.toSet == before.files.toSet ++ added.flatMap(_.added))
-    // each group's snapshot holds that group's rows only
-    for (snap <- added if snap.added.nonEmpty) {
-      val rows = spark.read.parquet(snap.added.map(f => s"${table.root}/${f.path}"): _*)
+    // each group's snapshot holds that group's offsets rows only
+    for (snap <- added) {
+      val offsets = snap.added.filter(_.path.startsWith(s"${Registry.OffsetsTable}/data/"))
+      assert(offsets.nonEmpty, snap.txn)
+      val rows = spark.read.parquet(offsets.map(f => s"$root/${f.path}"): _*)
       assert(rows.select("group").distinct().collect().map(_.getInt(0)).toSeq ==
         Seq(snap.txn.get.stripPrefix("group-").toInt), snap.txn)
     }
   }
 
-  test("a root whose registry holds a copy-on-write merge is refused by name") {
+  test("a root in the per-table layout is refused by name: run, readSink, registry, metrics") {
     import spark.implicits._
-    val root = tmpDir()
-    // the registry as roots written before it was append-only hold it: one
-    // untagged snapshot whose operation is `merge` (the .crc sidecar goes
-    // too, or the checksum would not match)
-    val reg = new Registry(root, spark)
-    reg.offsetsTable.append(Seq(("c1", 1)).toDF("partition_key", "max_turn_idx"), None)
-    val doc = new java.io.File(s"${reg.offsetsTable.root}/metadata/v000001.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(doc)
-    node.get("snapshots").get(0).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .put("operation", "merge")
-    mapper.writeValue(doc, node)
-    new java.io.File(s"${reg.offsetsTable.root}/metadata/.v000001.json.crc").delete()
-    val errors = Seq(
-      intercept[IllegalStateException](PipelineRunner.run(input, root, groups = 4)),
-      intercept[IllegalStateException](reg.registry()))
-    errors.foreach(e => assert(e.getMessage.contains(s"root $root predates append-only offsets"),
-      e.getMessage))
-    // refused before any write
-    assert(Sinks.All.forall(reg.sinkTable(_).state().version == 0))
-    assert(reg.committedGroups().isEmpty)
+    // the layout before the one root log: each sink, the offsets and the
+    // acks kept a `metadata/` log of their own. Roots written up to their
+    // first ack hold only table logs; later ones an ack log too.
+    val sinksOnly = tmpDir()
+    new graft.checkpoint.SnapshotTable(s"$sinksOnly/sinks/${Sinks.Es}", spark)
+      .append(Seq(("c1", 1)).toDF("conv_id", "turn_idx"), Some("group-0"))
+    val acked = tmpDir()
+    new graft.checkpoint.SnapshotTable(s"$acked/registry", spark)
+      .append(Seq(("c1", 1)).toDF("partition_key", "max_turn_idx"), Some("group-0"))
+    new graft.checkpoint.SnapshotTable(s"$acked/commits", spark)
+      .commit("group-0", """{"group":0,"counts":{},"writes":{}}""")
+    for (root <- Seq(sinksOnly, acked)) {
+      val reg = new Registry(root, spark)
+      val errors = Seq(
+        intercept[IllegalStateException](PipelineRunner.run(input, root, groups = 4)),
+        intercept[IllegalStateException](reg.readSink(Sinks.Es)),
+        intercept[IllegalStateException](reg.registry()),
+        intercept[IllegalStateException](PipelineRunner.observedMetrics(root, spark)))
+      errors.foreach(e => assert(e.getMessage.contains(s"root $root predates the one root log"),
+        e.getMessage))
+      // refused before any write
+      assert(reg.commitLog.liveVersions().isEmpty && !new java.io.File(s"$root/_staging").exists())
+      // the root log has no version, so its expiry vouches for no file and
+      // deletes none of the old tables'
+      def parquet() = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+        .count(_.toString.endsWith(".parquet"))
+      val files = parquet()
+      assert(files > 0 && reg.commitLog.expireSnapshots(orphanGraceMs = 0) == 0 && parquet() == files)
+    }
   }
 
   test("rerunning a root with another groups count is refused, sinks unchanged") {
@@ -265,7 +285,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assert(e.getMessage.contains("groups = 4") && e.getMessage.contains("groups = 8"),
       e.getMessage)
     assert(rows() == before)
-    assert(reg.committedGroups() == Seq(0, 1, 2, 3))
+    assert(acked(reg) == Seq(0, 1, 2, 3))
     // the first run's count resumes as a no-op
     assert(PipelineRunner.run(input, root, groups = 4).isEmpty)
   }
@@ -280,48 +300,71 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val visible = reg.readSink(Sinks.Ls).get
       .withColumn("g", pmod(abs(crc32(col("conv_id"))), lit(4L)).cast("int"))
     assert(visible.select("g").distinct().collect().map(_.getInt(0)).toSet
-      .subsetOf(reg.committedGroups().toSet))
+      .subsetOf(acked(reg).toSet))
   }
 
-  test("resume after a PARTIAL sink commit reconciles through txn keys") {
+  test("a group killed after its file moves, before its commit: invisible, resumed " +
+    "exactly-once, its files reclaimed") {
     val root = tmpDir()
-    // simulate a run that died between its sink_es snapshot commit and the
-    // group ack: stage group 0's fan-out, commit ONLY the es slice, crash.
+    // a runner that died inside group 0's commit: every slice moved into its
+    // table through the group's steps, then no commitGroup
     val crashed = new Registry(root, spark)
-    val g0 = input
-      .withColumn("_grp", pmod(abs(crc32(col("conv_id"))), lit(4L)).cast("int"))
-      .filter(col("_grp") === 0).drop("_grp")
+    val g0 = input.filter(bucket(4) === 0)
     val staging = crashed.stagingGroupDir(0)
     Registry.stored(TranscriptPipeline.transform(g0))
       .filter(col("sink") =!= TranscriptPipeline.Filtered)
       .write.mode("overwrite").partitionBy("sink").parquet(staging)
-    val partial = crashed.commitSinkStaged(Sinks.Es, 0, s"$staging/sink=${Sinks.Es}")
-    assert(!partial.alreadyCommitted)
+    val moved = Sinks.All.map(s => crashed.commitSinkStaged(s, 0, s"$staging/sink=$s")) :+
+      crashed.mergeOffsets(0, g0.groupBy(col("conv_id").as("partition_key"))
+        .agg(max("turn_idx").as("max_turn_idx"), count(lit(1)).as("row_count"))
+        .withColumn("group", lit(0)))
+    crashed.cleanupRunStaging()
+    val movedFiles = moved.map(_.addedFiles).sum
+    assert(moved.forall(!_.alreadyCommitted) && moved.map(_.snapshotId).distinct.size == 1)
+    assert(Seq(Registry.sinkTable(Sinks.Es), Registry.sinkTable(Sinks.Ls), Registry.OffsetsTable)
+      .forall(t => new java.io.File(s"$root/$t/data").list().exists(_.endsWith(".parquet"))),
+      "the slices moved in")
 
-    // BEFORE resume: the es append is durable in its table, but the
-    // read-committed view hides it (group 0 has no ack in the commit log)
-    assert(new Registry(root, spark).readSink(Sinks.Es).isEmpty)
+    // BEFORE resume: nothing is visible, and the log holds no version
+    val before = new Registry(root, spark)
+    assert(Sinks.All.forall(before.readSink(_).isEmpty))
+    intercept[IllegalArgumentException](before.registry())
+    assert(PipelineRunner.observedMetrics(root, spark).values.forall(_ == 0L))
+    assert(before.commitLog.liveVersions().isEmpty && !before.isCommitted(0))
 
-    // resume: a fresh runner processes all four groups; its group-0 es
-    // append must reconcile to the crashed run's snapshot, not duplicate it
-    val resumed = PipelineRunner.run(input, root, groups = 4)
-    assert(resumed.map(_.group) == Seq(0, 1, 2, 3))
-
-    val reg = new Registry(root, spark)
-    // the es table's group-0 snapshot belongs to the CRASHED run (reused);
-    // the commit-log ack belongs to the resuming runner
-    assert(reg.sinkTable(Sinks.Es).snapshotForTxn("group-0")
-      .exists(_.run == crashed.runId))
-    assert(reg.markerRun(0).exists(_ != crashed.runId))
-
-    // end state identical to a clean uninterrupted run: no dupes, no loss
+    // resume: every group runs once, as on a clean root
+    assert(PipelineRunner.run(input, root, groups = 4).map(_.group) == Seq(0, 1, 2, 3))
     val rootClean = tmpDir()
     PipelineRunner.run(input, rootClean, groups = 4)
     assert(PipelineRunner.observedMetrics(root, spark) ==
       PipelineRunner.observedMetrics(rootClean, spark))
+    val reg = new Registry(root, spark)
     val es = reg.readSink(Sinks.Es).get
     assert(es.select("doc_id").distinct().count() == es.count())
     assertMetricsMatchData(root)
+
+    // the crashed runner's files are orphans in every table's data dir; the
+    // root log's expiry reclaims exactly them
+    assert(reg.commitLog.expireSnapshots(orphanGraceMs = 0) == movedFiles)
+    assertEveryFileListed(reg)
+    assert(PipelineRunner.observedMetrics(root, spark) ==
+      PipelineRunner.observedMetrics(rootClean, spark))
+    assertMetricsMatchData(root)
+  }
+
+  test("one commit per group: a groups = 4 run adds 4 versions to the root log, " +
+    "and no table keeps a log of its own") {
+    val root = tmpDir()
+    PipelineRunner.run(input, root, groups = 4)
+    val reg = new Registry(root, spark)
+    assert(reg.commitLog.liveVersions() == Seq(1L, 2L, 3L, 4L))
+    assert(reg.commitLog.state().snapshots.map(_.txn.get) == (0 until 4).map(Registry.groupTxn))
+    val logs = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(p => java.nio.file.Files.isDirectory(p) && p.getFileName.toString == "metadata").toSeq
+    assert(logs == Seq(java.nio.file.Paths.get(root, "metadata")), logs)
+    // a resume with nothing pending commits nothing
+    assert(PipelineRunner.run(input, root, groups = 4).isEmpty)
+    assert(reg.commitLog.liveVersions() == Seq(1L, 2L, 3L, 4L))
   }
 
   test("a groups = 4 run reads its input exactly twice") {
@@ -342,7 +385,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val busy = one.select(bucket(4)).first().getInt(0)
     val results = PipelineRunner.run(one, root, groups = 4)
     assert(results.map(_.group) == Seq(0, 1, 2, 3))
-    assert(new Registry(root, spark).committedGroups() == Seq(0, 1, 2, 3))
+    assert(acked(new Registry(root, spark)) == Seq(0, 1, 2, 3))
     val lineage = lineageCounts(root)
     for (g <- 0 until 4 if g != busy) {
       assert(lineage(g).values.forall(_ == 0L), s"group $g: ${lineage(g)}")
@@ -380,8 +423,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     intercept[RuntimeException] {
       PipelineRunner.run(input, crashed, groups = 4, failAfterGroup = 0)
     }
-    val acked = new Registry(crashed, spark).committedGroups()
-    assert(acked == Seq(0))
+    assert(acked(new Registry(crashed, spark)) == Seq(0))
     val resumed = PipelineRunner.run(input, crashed, groups = 4)
     assert(resumed.map(_.group) == Seq(1, 2, 3))
     resumed.foreach(r => assert(r.counts == expectedCounts(r.group), s"group ${r.group}"))
@@ -417,22 +459,6 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a commit log whose acks predate lineage summaries is refused by name") {
-    import spark.implicits._
-    val root = tmpDir()
-    // an ack as roots written before lineage summaries hold it: one parquet
-    // row appended under the group's txn key
-    val reg = new Registry(root, spark)
-    reg.commitLog.append(Seq((0, reg.runId, """{"group":0}""")).toDF("group", "run", "lineage"),
-      Some("group-0"))
-    assert(reg.committedGroups() == Seq(0))
-    val errors = Seq(
-      intercept[IllegalStateException](reg.lineage()),
-      intercept[IllegalStateException](PipelineRunner.observedMetrics(root, spark)))
-    errors.foreach(e => assert(e.getMessage.contains(s"root $root predates lineage summaries"),
-      e.getMessage))
-  }
-
   // --- sink layout: `doc_id` is derived on read, never stored ------------
 
   /** readSink's rows equal transform's rows of the same sink, as multisets,
@@ -461,10 +487,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     finally reader.close()
   }
 
-  private def tableFiles(root: String, s: String): Seq[String] = {
-    val tbl = new Registry(root, spark).sinkTable(s)
-    tbl.state().files.map(f => s"${tbl.root}/${f.path}")
-  }
+  private def tableFiles(root: String, s: String): Seq[String] =
+    listed(new Registry(root, spark), Registry.sinkTable(s)).map(p => s"$root/$p")
 
   test("readSink derives doc_id equal to transform's, clean and resumed") {
     val clean = tmpDir()
@@ -527,7 +551,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val (root, written) = resumedOverOldLayout(recordSchema = true)
     // the new commits record the union of the two layouts, not "unknown"
     for (s <- written) {
-      val schema = new Registry(root, spark).sinkTable(s).state().schema
+      val schema = new Registry(root, spark).commitLog.latest().schemaOf(Registry.sinkTable(s))
       assert(schema.exists(_.fieldNames.contains("doc_id")), s"$s schema: $schema")
     }
     assertSinksMatchTransform(root)
@@ -592,8 +616,9 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     // the batch run reads the same files under the stream's source schema
     val batch = tmpDir()
     PipelineRunner.run(spark.read.schema(stream.schema).parquet(src), batch, groups = 2)
-    def fields(root: String, s: String) = new Registry(root, spark).sinkTable(s).read()
-      .map(_.schema.fields.map(f => f.name -> f.dataType).toSeq)
+    def fields(root: String, s: String) =
+      new Registry(root, spark).commitLog.readTable(Registry.sinkTable(s))
+        .map(_.schema.fields.map(f => f.name -> f.dataType).toSeq)
     for (s <- Sinks.All) assert(fields(streamed, s) == fields(batch, s), s)
     assert(fields(batch, Sinks.Ls).exists(!_.map(_._1).contains("doc_id")))
 
@@ -619,9 +644,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))")).first().getLong(0)
     val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
     val reg = new Registry(streamed, spark)
-    val written = Sinks.All.map(reg.sinkTable(_).state()).filter(_.snapshots.nonEmpty)
-    assert(written.nonEmpty)
-    written.foreach(st => assert(st.txnKeys.keySet == Set(txn), st.txnKeys))
+    assert(reg.commitLog.latest().txnKeys.keySet == Set(txn))
     assert(reg.lineage().keySet == Set(txn))
   }
 
@@ -663,7 +686,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assert(streamed == direct, s"micro-batch: $streamed jobs, stage: $direct")
   }
 
-  test("streaming replay after a crash between sink commits and ack reconciles") {
+  test("a micro-batch is one commit; its replay after a crash before that commit " +
+    "is exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StreamingPipeline
     val src = tmpDir()
@@ -674,26 +698,22 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       .first().getLong(0)
     val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
 
-    // micro-batch 0 died after committing every sink, before its ack
+    // micro-batch 0 died after moving its sink slices in, before its commit
     val root = tmpDir()
     val crashed = new Registry(root, spark)
     val staged = PipelineRunner.stage(routed.withColumn("group", lit(0)), crashed, Seq(0))
     val sinks = Sinks.All.filter(s => staged.counts(0).getOrElse(s, 0L) > 0)
     assert(sinks.nonEmpty)
-    for (s <- sinks) assert(!crashed.commitSinkStaged(s, txn,
-      s"${crashed.stagingGroupDir(0)}/sink=$s", Some(staged.schema)).alreadyCommitted)
+    for (s <- sinks) crashed.moveIn(txn, Registry.sinkTable(s),
+      s"${crashed.stagingGroupDir(0)}/sink=$s", Some(staged.schema))
     crashed.cleanupRunStaging()
-    assert(Sinks.All.forall(crashed.readSink(_).isEmpty), "unacked rows are invisible")
-    val versions = Sinks.All.map(crashed.sinkTable(_).state().version)
+    assert(Sinks.All.forall(crashed.readSink(_).isEmpty), "moved rows are invisible")
 
-    // a fresh checkpoint replays batch 0: no new rows or snapshots, the ack lands
+    // a fresh checkpoint replays batch 0: ONE commit, the batch's rows once
     StreamingPipeline.startSnapshotSinks(stream, root, tmpDir(), Trigger.AvailableNow())
       .awaitTermination(120000)
     val reg = new Registry(root, spark)
-    assert(Sinks.All.map(reg.sinkTable(_).state().version) == versions,
-      "the replay must add no sink snapshot")
-    for (s <- sinks)
-      assert(reg.sinkTable(s).snapshotForTxn(txn).exists(_.run == crashed.runId), s)
+    assert(reg.commitLog.liveVersions() == Seq(1L))
     assert(reg.lineage().keySet == Set(txn))
     assert(reg.commitLog.snapshotForTxn(txn).exists(_.run != crashed.runId))
     val expected = routed.groupBy("sink").count().collect()
@@ -702,5 +722,10 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       assert(reg.readSink(s).map(_.count()).getOrElse(0L) == expected.getOrElse(s, 0L), s)
     val m = PipelineRunner.observedMetrics(root, spark)
     assert(m("events.total") == 1000 && m("events.dropped") == expected.getOrElse(Sinks.Dropped, 0L))
+    // the crashed batch's files are the only orphans
+    assert(reg.commitLog.expireSnapshots(orphanGraceMs = 0) > 0)
+    assertEveryFileListed(reg)
+    for (s <- Sinks.All)
+      assert(reg.readSink(s).map(_.count()).getOrElse(0L) == expected.getOrElse(s, 0L), s)
   }
 }

@@ -231,7 +231,7 @@ class SnapshotTableSpec extends SparkSpec {
     val doc = new java.io.File(s"${t.root}/metadata/v000002.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("schema")
+    node.remove("schemas")
     mapper.writeValue(doc, node)
     new java.io.File(s"${t.root}/metadata/.v000002.json.crc").delete()
     assert(t.state().schema.isEmpty)
@@ -273,9 +273,9 @@ class SnapshotTableSpec extends SparkSpec {
     val t = tmpTable()
     t.append(Seq((1, "a")).toDF("id", "v"), Some("data-1"))
     val files = t.state().files
-    val c = t.commitSummary("ack-1", """{"n":1}""")
+    val c = t.commit("ack-1", """{"n":1}""")
     assert(!c.alreadyCommitted && c.addedFiles == 0 && c.addedBytes == 0)
-    val retry = t.commitSummary("ack-1", """{"n":2}""")
+    val retry = t.commit("ack-1", """{"n":2}""")
     assert(retry.alreadyCommitted && retry.snapshotId == c.snapshotId)
     val st = t.state()
     assert(st.version == 2, "the rejected retry must not add a version")
@@ -287,7 +287,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().get.count() == 1)
     // a table of metadata commits alone holds no files and reads as empty
     val log = tmpTable()
-    log.commitSummary("group-0", "{}")
+    log.commit("group-0", "{}")
     assert(log.read().isEmpty && log.state().txnKeys.keySet == Set("group-0"))
   }
 
@@ -301,7 +301,7 @@ class SnapshotTableSpec extends SparkSpec {
     new java.io.File(s"${t.root}/data/.$name.crc").delete()
     // planning touches no file, so the reads resolve; running them fails
     // on the missing file, by name — never a silently shorter result
-    val reads = Seq(t.read(), t.readVersion(2), t.readCommittedTxns(_ => true)).map(_.get)
+    val reads = Seq(t.read(), t.readVersion(2), t.readTable("")).map(_.get)
     reads.foreach { df =>
       assert(df.inputFiles.exists(_.endsWith(name)))
       val e = intercept[Exception](df.collect())
@@ -309,7 +309,7 @@ class SnapshotTableSpec extends SparkSpec {
     }
     // a version that does not list the file still reads in full
     assert(t.readVersion(1).get.count() == 2)
-    assert(t.readCommittedTxns(_ == "b1").get.count() == 2)
+    assert(t.readTable("", t.stateAt(1).get).get.count() == 2)
   }
 
   test("a stray unreferenced parquet file under data/ is never read") {
@@ -319,7 +319,7 @@ class SnapshotTableSpec extends SparkSpec {
     Seq((9, "stray")).toDF("id", "v").write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.copy(part.toPath, java.nio.file.Paths.get(s"${t.root}/data/f-stray-0.parquet"))
-    for (df <- Seq(t.read(), t.readVersion(1), t.readCommittedTxns(_ => true)).map(_.get)) {
+    for (df <- Seq(t.read(), t.readVersion(1), t.readTable("")).map(_.get)) {
       assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
       assert(!df.inputFiles.exists(_.contains("f-stray")))
     }
@@ -344,16 +344,57 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(rows(t.readVersion(2).get) == Seq((1, "a"), (2, "b"), (3, "c")))
     assert(rows(t.read().get) == Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")))
-    // the read-committed view: the append snapshots whose txn is admitted
-    val st = t.state()
-    for (admit <- Seq(Set("b1"), Set("b1", "b3"), Set.empty[String])) {
-      val files = st.snapshots.filter(s => s.operation == "append" && s.txn.forall(admit))
-        .flatMap(_.added)
-      assert(t.readCommittedTxns(admit).map(rows) ==
-        (if (files.isEmpty) None else Some(rows(listed(files)))), s"$admit")
+    // a read of an earlier state takes that state's files
+    assert(rows(t.readTable("", t.stateAt(3).get).get) == rows(listed(t.stateAt(3).get.files)))
+  }
+
+  test("a version doc of another format is refused by name") {
+    val t = tmpTable()
+    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    val doc = new java.io.File(s"${t.root}/metadata/v000001.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.put("format", "graft-snapshot-v1")
+    mapper.writeValue(doc, node)
+    new java.io.File(s"${t.root}/metadata/.v000001.json.crc").delete()
+    val e = intercept[IllegalStateException](t.read())
+    assert(e.getMessage.contains("v000001.json is a graft-snapshot-v1 version doc") &&
+      e.getMessage.contains("reads graft-snapshot-v2 only"), e.getMessage)
+  }
+
+  test("one commit lists slices of several tables; each reads its own files and schema") {
+    val root = scratchDir("graft-snaplog")
+    val log = new SnapshotTable(root, spark, inlineFileLimit = 2)
+    def staged(df: org.apache.spark.sql.DataFrame): String = {
+      val dir = scratchDir("graft-snaplog-staged")
+      df.write.mode("overwrite").parquet(dir)
+      dir
     }
-    assert(rows(t.readCommittedTxns(Set("b1", "b3")).get) ==
-      Seq((1, "a"), (2, "b"), (5, "e")))
+    val a = Seq((1, "a"), (2, "b")).toDF("id", "v").repartition(2)
+    val b = Seq(("k", 7L)).toDF("key", "n")
+    val slices = Seq(
+      SnapshotTable.Slice("a", log.moveIn(staged(a), "a"), Some(a.schema)),
+      SnapshotTable.Slice("b/c", log.moveIn(staged(b), "b/c"), Some(b.schema)))
+    assert(slices.forall(_.files.nonEmpty) && slices(1).files.forall(_.path.startsWith("b/c/data/")))
+    // moved but not committed: invisible
+    assert(log.readTable("a").isEmpty && log.latest().version == 0)
+    val c = log.commit("t-1", "{}", slices)
+    assert(!c.alreadyCommitted && c.addedFiles == slices.map(_.files.size).sum)
+    assert(log.liveVersions() == Seq(1L) && new java.io.File(s"$root/metadata/v000001.json").exists())
+    val st = log.latest()
+    assert(st.schemaDdl.keySet == Set("a", "b/c") && st.schema.isEmpty)
+    assert(log.readTable("a").get.collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
+      Set(1 -> "a", 2 -> "b"))
+    assert(log.readTable("b/c").get.columns.toSeq == Seq("key", "n"))
+    assert(log.readTable("b/c").get.count() == 1 && log.read().isEmpty)
+    // a retry of the key loses and deletes the files it moved in
+    val again = log.moveIn(staged(b), "b/c")
+    assert(log.commit("t-1", "{}", Seq(SnapshotTable.Slice("b/c", again, None))).alreadyCommitted)
+    assert(again.forall(f => !new java.io.File(s"$root/${f.path}").exists()))
+    // files moved and never committed are orphans of their table's data dir
+    val stray = log.moveIn(staged(b), "b/c")
+    assert(log.expireSnapshots(orphanGraceMs = 0) == stray.size)
+    assert(log.readTable("b/c").get.count() == 1 && log.readTable("a").get.count() == 2)
   }
 
   test("a staged commit takes exactly the .parquet files listFiles finds, at any depth") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -72,9 +74,9 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fromDirectory(spark, src), out, ckpt,
       Trigger.AvailableNow()).awaitTermination(120000)
     val reg = new Registry(out, spark)
-    def versions = (Sinks.All.map(reg.sinkTable(_).state().version),
-      reg.commitLog.state().version)
+    def versions = reg.commitLog.liveVersions()
     val before = versions
+    assert(before == Seq(1L), "one micro-batch, one commit")
     // second run, same checkpoint: no new input → no new output
     StreamingPipeline.startSnapshotSinks(
       StreamingPipeline.fromDirectory(spark, src), out, ckpt,
@@ -95,9 +97,8 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fromDirectory(spark, src), out, tmpDir("stream-ckpt3a"),
       Trigger.AvailableNow()).awaitTermination(120000)
 
-    def tableCount(s: String): Long =
-      new graft.checkpoint.SnapshotTable(s"$out/sinks/$s", spark)
-        .read().map(_.count()).getOrElse(0L)
+    val reg = new Registry(out, spark)
+    def tableCount(s: String): Long = reg.readSink(s).map(_.count()).getOrElse(0L)
     val batchCounts = TranscriptPipeline.transform(input)
       .groupBy("sink").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -107,16 +108,38 @@ class StreamingSpec extends SparkSpec {
     // replay the SAME input with a FRESH checkpoint (total checkpoint loss —
     // the directory-overwrite sink would re-write, this one must no-op via
     // the batch txn keys) → no duplicates, no version churn
-    val versionsBefore = Sinks.All.map(s =>
-      new graft.checkpoint.SnapshotTable(s"$out/sinks/$s", spark).state().version)
+    val versionsBefore = reg.commitLog.liveVersions()
     StreamingPipeline.startSnapshotSinks(
       StreamingPipeline.fromDirectory(spark, src), out, tmpDir("stream-ckpt3b"),
       Trigger.AvailableNow()).awaitTermination(120000)
     for (s <- Sinks.All)
       assert(tableCount(s) == batchCounts.getOrElse(s, 0L), s"dupes in $s after replay")
-    val versionsAfter = Sinks.All.map(s =>
-      new graft.checkpoint.SnapshotTable(s"$out/sinks/$s", spark).state().version)
+    val versionsAfter = reg.commitLog.liveVersions()
     assert(versionsAfter == versionsBefore, "replayed batches must not commit new snapshots")
+  }
+
+  test("a streaming query on a root in the per-table layout is refused by name, before any move") {
+    import spark.implicits._
+    val src = tmpDir("stream-src4")
+    val out = tmpDir("stream-out4")
+    input.limit(200).write.mode("overwrite").parquet(src)
+    // a root of the layout before the one root log: a sink with its own log
+    new graft.checkpoint.SnapshotTable(s"$out/sinks/${Sinks.Es}", spark)
+      .append(Seq(("c1", 1)).toDF("conv_id", "turn_idx"), Some("group-0"))
+    def parquet() = java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
+      .asScala.count(_.toString.endsWith(".parquet"))
+    val before = parquet()
+    val q = StreamingPipeline.startSnapshotSinks(
+      StreamingPipeline.fromDirectory(spark, src), out, tmpDir("stream-ckpt4"),
+      Trigger.AvailableNow())
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(120000))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains(s"root $out predates the one root log")), e)
+    // no file moved in, no version of the root log, no staging left
+    val reg = new Registry(out, spark)
+    assert(reg.commitLog.liveVersions().isEmpty && parquet() == before)
+    assert(!new java.io.File(s"$out/_staging").exists())
   }
 
   test("streaming curated ingest: quality-gated, deduped, exactly-once " +
