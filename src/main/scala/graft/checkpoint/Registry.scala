@@ -24,12 +24,18 @@ import graft.io.LocalFs
   *   <root>/sinks/<sink>/data/   a table per sink, in [[Registry.stored]]
   *                               layout (no `doc_id`: [[readSink]] derives it)
   *   <root>/registry/data/       the offsets: per-conversation high-water marks
+  *   <root>/_staging/run=<id>/   a live run's staged fan-out (`group=<g>/sink=<s>`)
+  *   <root>/_staging/offsets=<id>/
+  *                               and its staged offsets (`slice=<g>`), written
+  *                               at the same time into a disjoint dir
   * }}}
   *
   * Per run, the protocol is:
   *   1. stage every pending group's fan-out in ONE write under
-  *      [[stagingRunDir]] (each group's slice is [[stagingGroupDir]]), and
-  *      every pending group's offsets in ONE more ([[stageOffsets]]);
+  *      [[stagingRunDir]] (each group's slice is [[stagingGroupDir]]) and,
+  *      at the same time, every pending group's offsets in ONE more under
+  *      the sibling [[stagingOffsetsDir]] ([[stageOffsets]]; each group's
+  *      slice is [[stagedOffsets]]);
   * then per group:
   *   2. move its sink and offsets slices into their tables' data dirs
   *      ([[moveIn]]; [[commitSinkStaged]] and [[mergeOffsets]] are this step
@@ -107,8 +113,13 @@ final class Registry(val root: String, spark: SparkSession,
   /** one group's slice of the run's staged fan-out. */
   def stagingGroupDir(group: Int): String = s"$stagingRunDir/group=$group"
 
+  /** this runner's offsets staging: a sibling of [[stagingRunDir]], not
+    * inside it, since the fan-out write (which runs at the same time) clears
+    * its whole output dir first. */
+  def stagingOffsetsDir: String = s"$root/_staging/offsets=$runId"
+
   /** one group's slice of the run's staged offsets. */
-  def stagedOffsets(group: Int): String = s"$stagingRunDir/offsets/slice=$group"
+  def stagedOffsets(group: Int): String = s"$stagingOffsetsDir/slice=$group"
 
   /** step 2: move `stagedDir`'s files into `table` (`schema`: theirs,
     * recorded so reads skip inference) and collect them under `txn`, for
@@ -129,12 +140,12 @@ final class Registry(val root: String, spark: SparkSession,
     moveIn(Registry.groupTxn(group), Registry.sinkTable(sink), stagedDir, schema)
 
   /** step 1 (offsets): write the offsets rows of every pending group in
-    * ONE job under [[stagingRunDir]]`/offsets`, sliced by a copy of their
+    * ONE job under [[stagingOffsetsDir]], sliced by a copy of their
     * `group` column (the rows keep `group`, a registry column) — each
     * group's slice is [[stagedOffsets]]. */
   def stageOffsets(offsets: DataFrame): Unit =
     offsets.withColumn("slice", col("group")).write.options(LocalFs.writeOptions).mode("overwrite")
-      .partitionBy("slice").parquet(s"$stagingRunDir/offsets")
+      .partitionBy("slice").parquet(stagingOffsetsDir)
 
   /** steps 1 and 2 for one group's offsets, given as a DataFrame (the
     * production-path benchmark's per-group replay). The registry is
@@ -177,6 +188,7 @@ final class Registry(val root: String, spark: SparkSession,
     * after every group is cleaned, and a failed run leaves unacked groups). */
   def cleanupRunStaging(): Unit = {
     fs.delete(new Path(stagingRunDir), true)
+    fs.delete(new Path(stagingOffsetsDir), true)
     dropEmptyScopes()
   }
 
@@ -185,7 +197,7 @@ final class Registry(val root: String, spark: SparkSession,
     * creating its own staging underneath (check-then-act); losing that race
     * just means the shared dir survives — never fail the finishing runner. */
   private def dropEmptyScopes(): Unit =
-    Seq(new Path(s"$stagingRunDir/offsets"), new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
+    Seq(new Path(stagingOffsetsDir), new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
       try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
       catch { case _: java.io.IOException => () }
     }

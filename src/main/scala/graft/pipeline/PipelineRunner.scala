@@ -19,12 +19,15 @@ import graft.model.Sinks
   *    acks independently. A root's group count is fixed by its first run
   *    (each ack records it): another count would re-bucket conversations
   *    that acked groups already committed
-  *  - per run, two input passes: ONE transform pass ([[stage]]) fans out
-  *    every pending group to sink_es / sink_ls / dropped in one
-  *    `partitionBy(group, sink)` parquet write with observe()-attached
-  *    counters, never a global sort; and ONE status-only pass whose
-  *    per-conversation offsets are staged per group. Sinks store no
-  *    `doc_id`: [[graft.checkpoint.Registry.readSink]] derives it
+  *  - per run, two input passes that run at the same time: ONE transform
+  *    pass ([[stage]]) fans out every pending group to sink_es / sink_ls /
+  *    dropped in one `partitionBy(group, sink)` parquet write with
+  *    observe()-attached counters, never a global sort; and, on a thread
+  *    of its own, ONE status-only pass whose per-conversation offsets are
+  *    staged per group. Neither reads the other's output and they stage
+  *    into disjoint dirs, so the two cost the longer of their walls, not
+  *    the sum. Sinks store no `doc_id`:
+  *    [[graft.checkpoint.Registry.readSink]] derives it
   *  - per group: its sink and offsets slices move into their tables, then
   *    ONE commit of the root log lists them all under txn key `group-<g>`
   *    with the group's lineage (counts + per-sink write stats) as summary —
@@ -142,17 +145,14 @@ object PipelineRunner {
       else input.filter(bucketCol(groups).isin(pending: _*))
 
     try {
-      // pass 1 — ONE fan-out job over every pending group. The group column
-      // is added AFTER transform (parse projects away extra columns).
-      val staged = stage(
-        TranscriptPipeline.transform(pendingInput).withColumn("group", bucketCol(groups)),
-        reg, pending)
-
-      // pass 2 — offsets rows (file.State analogue) for every pending group
+      // the offsets pass — rows (file.State analogue) for every pending group
       // via the status-only routing fast path — identical sink decision to
       // the full transform (pinned by PipelineSpec) without the 13-field
       // extraction — staged in ONE write; each group's slice rides that
-      // group's commit.
+      // group's commit. The stamp is a udf's constant, not
+      // current_timestamp(): that folds to a literal which codegen inlines,
+      // so every run's plan would miss the codegen cache and compile anew.
+      val now = java.time.Instant.now()
       val offsets = TranscriptPipeline.sinkFast(pendingInput)
         .groupBy(col("conv_id").as("partition_key"), bucketCol(groups).as("group"))
         .agg(max("turn_idx").as("max_turn_idx"),
@@ -161,8 +161,15 @@ object PipelineRunner {
           sum(when(col("sink") === Sinks.Dropped, 1L).otherwise(0L)).as("dropped"))
         .select("partition_key", "max_turn_idx", "row_count", "filtered",
           "dropped", "group")
-        .withColumn("committed_at", current_timestamp())
-      reg.stageOffsets(offsets)
+        .withColumn("committed_at", udf(() => now).asNondeterministic()())
+
+      // the fan-out pass — ONE job over every pending group, run beside the
+      // offsets pass: neither reads the other's output. The group column is
+      // added AFTER transform (parse projects away extra columns).
+      val staged = alongside(reg.stageOffsets(offsets)) {
+        stage(TranscriptPipeline.transform(pendingInput).withColumn("group", bucketCol(groups)),
+          reg, pending)
+      }
 
       pending.zipWithIndex.flatMap { case (g, i) =>
         val result = commit(reg, Registry.groupTxn(g), g, staged, Some(groups), Some(offsets.schema))
@@ -171,6 +178,24 @@ object PipelineRunner {
         result
       }
     } finally reg.cleanupRunStaging()
+  }
+
+  /** Runs `side` on a thread of its own while `main` runs on the caller's,
+    * and returns `main`'s result once both have ended. A fresh thread
+    * inherits the caller's Spark local properties (job group, scheduler
+    * pool), so a cancel of the caller's job group reaches both; a shared
+    * pool's thread would not. If either throws, the first error is
+    * rethrown once both have ended, with the other's suppressed in it. */
+  private def alongside[A](side: => Unit)(main: => A): A = {
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def failed(e: Throwable): Unit = if (!first.compareAndSet(null, e)) first.get.addSuppressed(e)
+    val thread = new Thread(() => try side catch { case e: Throwable => failed(e) },
+      "graft-offsets-pass")
+    thread.start()
+    val result = try Some(main) catch { case e: Throwable => failed(e); None }
+    thread.join()
+    Option(first.get).foreach(e => throw e)
+    result.get
   }
 
   /** refuse a run whose `groups` differs from the count an acked batch

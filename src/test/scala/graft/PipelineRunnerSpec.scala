@@ -377,6 +377,73 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assert(reads.value == 2 * input.count(), s"input rows read: ${reads.value}")
   }
 
+  test("a failing run rethrows once every job it started has ended, and leaves no staging") {
+    // the fan-out fails at its first row: only it reads `role`. The offsets
+    // pass reads `text` too, slowly, so it is still running then
+    val root = tmpDir()
+    val slow = udf { (s: String) => Thread.sleep(1); s }.asNondeterministic()
+    val boom = udf { (_: String) => throw new IllegalStateException("tap failed"); "" }
+      .asNondeterministic()
+    val tapped = input.withColumn("text", slow(col("text"))).withColumn("role", boom(col("role")))
+    val started, ended = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    input.count() // the cached input is built before the listener counts jobs
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[Exception](PipelineRunner.run(tapped, root, groups = 4))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("tap failed"))), e)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.size >= 2, s"jobs started: ${started.asScala}")
+    assert(ended.asScala.toSet == started.asScala.toSet,
+      s"jobs started ${started.asScala} ended ${ended.asScala}")
+    assert(!new java.io.File(s"$root/_staging").exists())
+    assert(new Registry(root, spark).commitLog.liveVersions().isEmpty)
+  }
+
+  test("both input passes carry the caller's job group") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("(none)"))
+    }
+    input.count()
+    // two runs under two groups: a pass on a pooled thread would keep the
+    // group of the run that created the thread
+    for (group <- Seq("graft-runner-a", "graft-runner-b")) {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      seen.clear()
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "a run under the caller's job group")
+      try {
+        PipelineRunner.run(input, tmpDir(), groups = 4)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(seen.size >= 2, s"jobs: ${seen.asScala}")
+      assert(seen.asScala.forall(_ == group), s"job groups: ${seen.asScala}")
+    }
+  }
+
+  test("a second run over the same input compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    PipelineRunner.run(input, tmpDir(), groups = 4)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    PipelineRunner.run(input, tmpDir(), groups = 4)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second run's plans missed the codegen cache")
+  }
+
   test("empty buckets: fewer conversations than groups still ack every group") {
     val root = tmpDir()
     val conv = input.select("conv_id").where(col("conv_id").isNotNull).first().getString(0)
@@ -586,12 +653,17 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     // the one write into the run's staging dir itself is the fan-out (the
-    // offsets write goes to a subdir of it)
-    val fanout = plans.asScala.filter(p => collect(p) {
-      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _)
-        if w.outputPath.toString.matches(".*/_staging/run=[^/]+") => w
-    }.nonEmpty)
+    // offsets write goes to a sibling of it)
+    val writes = plans.asScala.toSeq.flatMap(p => collect(p) {
+      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => w.outputPath.toString
+    })
+    val fanout = writes.filter(_.matches(".*/_staging/run=[^/]+"))
     assert(fanout.size == 1, s"${fanout.size} fan-out plans")
+    // the two staging writes run at once, and each clears its output dir
+    // first: neither may hold the other
+    assert(writes.size == 2, writes)
+    for (a <- writes; b <- writes if a != b)
+      assert(!s"$b/".startsWith(s"$a/"), s"$b is inside $a")
     plans.asScala.foreach(p => assert(digests(p).isEmpty, s"hash in a run plan:\n$p"))
 
     val reg = new Registry(root, spark)
