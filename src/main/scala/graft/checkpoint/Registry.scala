@@ -24,9 +24,8 @@ import graft.io.LocalFs
   *   <root>/sinks/<sink>/data/   a table per sink, in [[Registry.stored]]
   *                               layout (no `doc_id`: [[readSink]] derives it)
   *   <root>/registry/data/       the offsets: per-conversation high-water marks
-  *   <root>/_staging/run=<id>/   a live run's staged fan-out (`group=<g>/sink=<s>`)
-  *   <root>/_staging/offsets=<id>/
-  *                               and its staged offsets (`slice=<g>`), written
+  *   <root>/_tmp-run-<id>/       a live run's staged fan-out (`group=<g>/sink=<s>`)
+  *   <root>/_tmp-offsets-<id>/   and its staged offsets (`slice=<g>`), written
   *                               at the same time into a disjoint dir
   * }}}
   *
@@ -52,10 +51,12 @@ import graft.io.LocalFs
   * checkpoint is its cursor) under its batch txn key. A crash before step 3
   * leaves moved files no snapshot lists: invisible, re-run on resume, and
   * reclaimed by [[SnapshotTable.expireSnapshots]] on [[commitLog]] (which
-  * sweeps nothing while the log has no version).
+  * sweeps nothing while the log has no version). A run killed before its
+  * own cleanup leaves its staging dirs, whose `_tmp-` names the same
+  * expiry sweeps once they have aged.
   *
   * [[readSink]], [[registry]] and [[lineage]] read the newest version of
-  * the root log — one listing and one doc read, no manifest — so the
+  * the root log — one listing and one doc read — so the
   * pipeline's metrics are O(groups), not O(data). A root of the per-table
   * layout that came before the one root log (each sink, the offsets and
   * the acks with a `metadata/` log of their own: `sinks/<sink>/metadata/`,
@@ -73,11 +74,8 @@ final class Registry(val root: String, spark: SparkSession,
   private val fs: FileSystem =
     LocalFs.get(new Path(root), spark.sparkContext.hadoopConfiguration)
 
-  /** the root's one metadata log. It writes no manifests: its snapshot
-    * history lists every file already, and a manifest would only add two
-    * files (it and its `.crc`) to the listing every read of the log pays. */
-  val commitLog: SnapshotTable =
-    new SnapshotTable(root, spark, runId, inlineFileLimit = Int.MaxValue)
+  /** the root's one metadata log */
+  val commitLog: SnapshotTable = new SnapshotTable(root, spark, runId)
 
   /** by txn key, files moved in and not yet acked: the ack's snapshot id, the slices */
   private val moved = scala.collection.mutable.Map.empty[String, (String, Vector[SnapshotTable.Slice])]
@@ -90,7 +88,7 @@ final class Registry(val root: String, spark: SparkSession,
     * An empty log may sit in a root of the per-table layout; that root is
     * refused by name. */
   def log(): SnapshotTable.TableState = {
-    val st = commitLog.latest()
+    val st = commitLog.state()
     if (st.version == 0)
       Option(fs.globStatus(new Path(root, s"{commits,${Registry.OffsetsTable},sinks/*}/metadata")))
         .flatMap(_.headOption).foreach { f =>
@@ -107,8 +105,10 @@ final class Registry(val root: String, spark: SparkSession,
   def isCommitted(group: Int): Boolean = log().txnKeys.contains(Registry.groupTxn(group))
 
   /** this runner's private staging dir: the run's single fan-out write
-    * lands here, partitioned by group and sink. */
-  def stagingRunDir: String = s"$root/_staging/run=$runId"
+    * lands here, partitioned by group and sink. Its `_tmp-` name lets
+    * [[SnapshotTable.expireSnapshots]] reclaim it once aged when the run
+    * was killed before its cleanup. */
+  def stagingRunDir: String = s"$root/_tmp-run-$runId"
 
   /** one group's slice of the run's staged fan-out. */
   def stagingGroupDir(group: Int): String = s"$stagingRunDir/group=$group"
@@ -116,7 +116,7 @@ final class Registry(val root: String, spark: SparkSession,
   /** this runner's offsets staging: a sibling of [[stagingRunDir]], not
     * inside it, since the fan-out write (which runs at the same time) clears
     * its whole output dir first. */
-  def stagingOffsetsDir: String = s"$root/_staging/offsets=$runId"
+  def stagingOffsetsDir: String = s"$root/_tmp-offsets-$runId"
 
   /** one group's slice of the run's staged offsets. */
   def stagedOffsets(group: Int): String = s"$stagingOffsetsDir/slice=$group"
@@ -192,12 +192,11 @@ final class Registry(val root: String, spark: SparkSession,
     dropEmptyScopes()
   }
 
-  /** drop the now-empty scope dirs so a finished runner leaves no residue.
-    * The empty-check + non-recursive delete races a CONCURRENT runner
-    * creating its own staging underneath (check-then-act); losing that race
-    * just means the shared dir survives — never fail the finishing runner. */
+  /** drop this runner's staging dirs once emptied, so a runner that cleans
+    * every group ([[cleanupStaging]]) leaves no residue. A failure to drop
+    * one leaves it to expiry — never fail the finishing runner. */
   private def dropEmptyScopes(): Unit =
-    Seq(new Path(stagingOffsetsDir), new Path(stagingRunDir), new Path(s"$root/_staging")).foreach { d =>
+    Seq(new Path(stagingOffsetsDir), new Path(stagingRunDir)).foreach { d =>
       try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
       catch { case _: java.io.IOException => () }
     }

@@ -75,35 +75,24 @@ import graft.io.LocalFs
   * each group's lineage for metrics read with no Spark job; no files makes
   * it METADATA-ONLY). Every table is APPEND-ONLY, so the newest version
   * lists every file ever committed; every version's metadata is retained,
-  * so any historical snapshot remains readable (time travel). Reads take
-  * the files from the snapshot history the version doc embeds, so they
-  * resolve no manifest.
+  * so any historical snapshot remains readable (time travel).
   *
-  * Manifest splitting (the Iceberg manifest-file shape): up to
-  * `inlineFileLimit` files the version doc's snapshot history is the file
-  * list; above it the list rides MANIFEST files (`metadata/m-*.json`) and
-  * the version doc holds (path, count, bytes) pointers to them. An append REUSES
-  * the previous version's manifests untouched and writes ONE new manifest
-  * for just its added files, so per-commit metadata cost is O(added), not
-  * O(table) — the property that keeps a high-commit-rate 100 TB sink table
-  * from rewriting a million-entry file list on every micro-batch. The
-  * manifest list is coalesced back to one file when it exceeds
-  * `manifestCoalesceAt` (Iceberg's merge-manifests), bounding read fan-out;
-  * a CAS loser deletes the manifests it wrote, and [[expireSnapshots]]
-  * reclaims manifests referenced only by expired versions plus aged
-  * orphans. The embedded snapshot history and txn-key map still grow with
-  * commit count (they must — [[readTable]] and idempotence read them):
-  * about 0.3 KB per commit, so the version doc of a table with 3000
-  * commits is about 900 KB, rewritten by every commit.
+  * One file list: a version's files are the files its snapshot history
+  * added — each snapshot in the doc lists its own `added` entries, and
+  * [[readTable]] and idempotence read nothing else. The history and the
+  * txn-key map therefore grow with commit count, and every commit rewrites
+  * the whole doc. Measured on a pipeline root (groups = 4 over sf0.01 at
+  * local[4]): each ack adds 725 bytes — about 0.37 KB of ids, txn key and
+  * lineage summary plus about 90 bytes per listed file, 4 files here — so
+  * the fourth version doc is 4.4 KB; an ack that lists 49 files adds about
+  * 5 KB.
   *
   * Local roots: on a `file:` root every metadata write, file move and
   * listing goes through [[graft.io.LocalFs]], so none forks a `chmod` or
   * `ls -ld` (the stock local filesystem's, without Hadoop's native library).
   */
 final class SnapshotTable(val root: String, spark: SparkSession,
-                          val runId: String = Registry.newRunId(),
-                          val inlineFileLimit: Int = SnapshotTable.DefaultInlineFileLimit,
-                          val manifestCoalesceAt: Int = SnapshotTable.DefaultManifestCoalesceAt) {
+                          val runId: String = Registry.newRunId()) {
 
   import SnapshotTable._
 
@@ -113,19 +102,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   // ------------------------------------------------------------- metadata
 
-  /** current committed state, its file list complete (manifests
-    * resolved); version 0 = the empty table. */
-  def state(): TableState = resolved(latest())
-
-  /** the newest version doc as written: one listing and one read. Its
-    * snapshot history, txn keys and schemas are complete; `files` is empty
-    * when the file list rides manifests, which this does not read. */
-  def latest(): TableState =
+  /** current committed state — the newest version doc: one listing and
+    * one read. Version 0 = the empty table. */
+  def state(): TableState =
     liveVersions().lastOption.fold(TableState.Empty)(v => parseMeta(fs, versionPath(v)))
-
-  private def resolved(st: TableState): TableState =
-    if (st.manifestRefs.isEmpty) st
-    else st.copy(files = st.manifestRefs.flatMap(m => readManifest(m.path)))
 
   private def versionPath(v: Long): Path = new Path(metaDir, f"v$v%06d.json")
 
@@ -140,48 +120,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     publishAtomic(fs, tmp, versionPath(prev.version + 1))
   }
 
-  /** plan the next version's file-list layout: none below
-    * `inlineFileLimit` (the snapshot history lists the files), manifest
-    * files above it. The previous version's manifests are carried untouched
-    * and only (previous history files +) `added` spill into ONE new
-    * manifest. Coalesces to a single manifest past `manifestCoalesceAt`.
-    * Returns (manifest refs, manifest paths WRITTEN by this call — the
-    * caller deletes them if its CAS loses, so racing writers leave no
-    * debris). */
-  private def planFiles(prev: TableState,
-                        added: Seq[FileEntry]): (Seq[ManifestRef], Seq[String]) = {
-    val carried = prev.manifestRefs
-    val pending = (if (carried.nonEmpty) Seq.empty else prev.files) ++ added
-    if (carried.isEmpty && pending.size <= inlineFileLimit)
-      return (Seq.empty, Seq.empty)
-    var written = List.empty[String]
-    var refs = carried
-    if (pending.nonEmpty) {
-      val r = writeManifest(pending); written ::= r.path; refs = refs :+ r
-    }
-    if (refs.size > manifestCoalesceAt) {
-      val one = writeManifest(refs.flatMap(m => readManifest(m.path)))
-      written ::= one.path
-      refs = Seq(one)
-    }
-    (refs, written)
-  }
-
-  private def writeManifest(entries: Seq[FileEntry]): ManifestRef = {
-    fs.mkdirs(metaDir)
-    val name = s"m-$runId-${java.util.UUID.randomUUID().toString.take(8)}.json"
-    val doc = Mapper.createObjectNode()
-    putEntries(doc.putArray("entries"), entries)
-    val out = fs.create(new Path(metaDir, name), false)
-    try out.write(Mapper.writeValueAsBytes(doc)) finally out.close()
-    ManifestRef(s"$LogDir/$name", entries.size, entries.map(_.size).sum)
-  }
-
-  private def readManifest(relPath: String): Seq[FileEntry] =
-    parseManifest(readBytes(fs, new Path(root, relPath)))
-
   private def buildMeta(prev: TableState, snap: SnapshotInfo,
-                        manifests: Seq[ManifestRef],
                         schemas: Map[String, String]): ObjectNode = {
     val doc = Mapper.createObjectNode()
     doc.put("format", Format)
@@ -190,13 +129,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     prev.snapshotId.foreach(doc.put("parent_snapshot_id", _))
     val sc = doc.putObject("schemas")
     schemas.foreach { case (table, ddl) => sc.put(table, ddl) }
-    if (manifests.nonEmpty) {
-      val mArr = doc.putArray("manifests")
-      manifests.foreach { m =>
-        val o = mArr.addObject()
-        o.put("path", m.path); o.put("count", m.count); o.put("bytes", m.bytes)
-      }
-    }
     val tk = doc.putObject("txn_keys")
     (prev.txnKeys ++ snap.txn.map(_ -> snap.id)).foreach { case (k, v) => tk.put(k, v) }
     val sArr = doc.putArray("snapshots")
@@ -239,15 +171,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** snapshot-isolated read of one of the log's tables in `st` (default:
     * the newest version): the files its snapshots added, with the table's
-    * recorded schema. The history lists every file, so no manifest is
-    * read. None when the table holds no file. */
-  def readTable(table: String, st: TableState = latest()): Option[DataFrame] = {
-    val files = st.snapshots.flatMap(_.added).filter(_.path.startsWith(dataPrefix(table)))
+    * recorded schema. None when the table holds no file. */
+  def readTable(table: String, st: TableState = state()): Option[DataFrame] = {
+    val files = st.files.filter(_.path.startsWith(dataPrefix(table)))
     if (files.isEmpty) None else Some(load(files, st.schemaOf(table)))
   }
 
   def snapshotForTxn(txn: String): Option[SnapshotInfo] =
-    latest().snapshots.find(_.txn.contains(txn))
+    state().snapshots.find(_.txn.contains(txn))
 
   // --------------------------------------------------------- time travel
 
@@ -270,22 +201,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   /** committed state AT `version`; None once expired (or never committed). */
   def stateAt(version: Long): Option[TableState] = {
     val p = versionPath(version)
-    if (version < 1 || !fs.exists(p)) None else Some(resolved(parseMeta(fs, p)))
+    if (version < 1 || !fs.exists(p)) None else Some(parseMeta(fs, p))
   }
 
   /** time-travel read: the table exactly as of `version`. None when the
     * version is expired/unknown or held no files. Every commit is one
-    * version, so this is also
-    * read-as-of-snapshot — resolve ids via [[readSnapshot]]. */
+    * version. */
   def readVersion(version: Long): Option[DataFrame] =
     stateAt(version).flatMap(readTable("", _))
-
-  /** read the table as of the commit that produced `snapshotId` (the id
-    * recorded in sink lineage rows and [[CommitResult]]s). */
-  def readSnapshot(snapshotId: String): Option[DataFrame] =
-    liveVersions().reverse
-      .find(v => stateAt(v).exists(_.snapshotId.contains(snapshotId)))
-      .flatMap(readVersion)
 
   // ------------------------------------------------------------- writing
 
@@ -299,7 +222,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * and reads infer. */
   def commitStagedDir(stagedDir: String, txn: Option[String],
                       schema: Option[StructType] = None,
-                      st: TableState = latest()): CommitResult = {
+                      st: TableState = state()): CommitResult = {
     txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
     commitMoved(st, Seq(Slice("", moveIn(stagedDir), schema)), txn, None, newSnapshotId())
   }
@@ -313,7 +236,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * Spark job runs. */
   def commit(txn: String, summary: String, slices: Seq[Slice] = Seq.empty,
              id: String = newSnapshotId()): CommitResult =
-    commitMoved(latest(), slices, Some(txn), Some(summary), id)
+    commitMoved(state(), slices, Some(txn), Some(summary), id)
 
   /** a fresh snapshot id of this writer, for a caller that names a
     * [[commit]] before making it. */
@@ -329,7 +252,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * then commit it against the state read before the write. A txn key
     * already committed skips the write. */
   def append(df: DataFrame, txn: Option[String]): CommitResult = {
-    val st = latest()
+    val st = state()
     txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
     val tmp = stagingDir()
     try {
@@ -358,14 +281,14 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   /** Maintenance: expire old table versions — the Iceberg expire_snapshots
     * analogue. Keeps the newest `keepVersions` metadata docs and deletes
-    * older metadata files and the manifests only they reference. Data
-    * files are never expired with a version: the table is append-only, so
-    * the newest version lists every committed file. Data files no kept
-    * version lists, in any table's data dir (moved in by a writer that
-    * never committed them), go through the orphan pass once older than
-    * `orphanGraceMs`; a log with no version deletes nothing. Returns the
-    * number of data files deleted. Run as a maintenance job, never concurrently with
-    * readers that may still be resolving an expired version; writers are
+    * older ones. Data files are never expired with a version: the table
+    * is append-only, so the newest version lists every committed file.
+    * Data files no kept version lists, in any table's data dir (moved in
+    * by a writer that never committed them), go through the orphan pass
+    * once older than `orphanGraceMs`; a log with no version deletes
+    * nothing. Returns the number of data files deleted. Run as a
+    * maintenance job, never concurrently with readers that may still be
+    * resolving an expired version; writers are
     * unaffected (they CAS against the newest version only, and a staging
     * dir survives while anything under it is younger than
     * `orphanGraceMs`). */
@@ -376,17 +299,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     // no version vouches for any file (another layout's tables may sit here)
     if (versions.isEmpty) return 0
     val (drop, keep) = versions.splitAt(math.max(0, versions.length - keepVersions))
-    val keptStates = keep.map(v => resolved(parseMeta(fs, versionPath(v))))
-    val retained: Set[String] = keptStates.flatMap(_.files.map(_.path)).toSet
-    val retainedManifests: Set[String] =
-      keptStates.flatMap(_.manifestRefs.map(_.path)).toSet
+    val retained: Set[String] =
+      keep.flatMap(v => parseMeta(fs, versionPath(v)).files.map(_.path)).toSet
     var deleted = 0
-    // read the dropped versions' manifest refs BEFORE deleting anything —
-    // versions may share manifest files
-    val dropManifests = drop.flatMap(v => parseMeta(fs, versionPath(v)).manifestRefs)
     drop.foreach(v => fs.delete(versionPath(v), false))
-    dropManifests.map(_.path).distinct.filterNot(retainedManifests)
-      .foreach(p => fs.delete(new Path(root, p), false))
     // ORPHANS: data files referenced by NO retained version — crash debris
     // from a writer that died between moving files in and its CAS commit.
     // The age grace protects a LIVE concurrent writer's just-moved,
@@ -402,19 +318,18 @@ final class SnapshotTable(val root: String, spark: SparkSession,
             fs.delete(f.getPath, false)) deleted += 1
       }
     }
-    // orphan MANIFESTS (a writer that died between writeManifest and its
-    // CAS) and TEMP DEBRIS: a writer that died between creating its
-    // candidate metadata (.tmp-*) and publishAtomic, or mid-append before
-    // its staging directory (_tmp-*) was consumed. Never referenced by any
-    // version, so only the age grace gates deletion — without this pass a
-    // crashed writer's staged parquet (potentially the size of a whole
-    // commit) accumulates forever. A staging DIRECTORY is aged by the
-    // newest entry under it, not by its own mtime: a live append keeps
-    // writing fresh files into a dir created long ago.
+    // TEMP DEBRIS: a writer that died between creating its candidate
+    // metadata (.tmp-*) and publishAtomic, or mid-write before its staging
+    // directory (_tmp-*) was consumed; and the manifest files (m-*) that
+    // older writers kept beside the docs, which nothing reads now. Never
+    // referenced by any version, so only the age grace gates deletion —
+    // without this pass a crashed writer's staged parquet (potentially a
+    // whole run's fan-out) accumulates forever. A staging DIRECTORY is aged
+    // by the newest entry under it, not by its own mtime: a live write
+    // keeps adding fresh files into a dir created long ago.
     fs.listStatus(metaDir).foreach { f =>
       val n = f.getPath.getName
-      if (f.getModificationTime < cutoff &&
-          (n.startsWith(".tmp-") || n.startsWith("m-") && !retainedManifests.contains(s"$LogDir/$n")))
+      if (f.getModificationTime < cutoff && (n.startsWith(".tmp-") || n.startsWith("m-")))
         fs.delete(f.getPath, false)
     }
     fs.listStatus(new Path(root)).foreach { f =>
@@ -459,7 +374,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   private def nextSchemas(st: TableState, slices: Seq[Slice]): Map[String, String] = {
     val written = slices.filter(_.files.nonEmpty)
     val fresh = written.map(_.table).toSet.filterNot(t =>
-      st.snapshots.exists(_.added.exists(_.path.startsWith(dataPrefix(t)))))
+      st.files.exists(_.path.startsWith(dataPrefix(t))))
     written.foldLeft((st.schemaDdl, fresh)) { case ((m, first), s) =>
       val t = s.schema.map(asNullable)
       val next = if (first(s.table)) t else unionSchema(m.get(s.table).map(parseSchema), t)
@@ -477,7 +392,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
-      if (attempt > 1) st = latest()
+      if (attempt > 1) st = state()
       txn.filter(st.txnKeys.contains).foreach { t =>
         // another writer (or a previous run of this job) already committed
         // this transaction: our files are redundant — remove and defer
@@ -485,11 +400,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         return alreadyCommittedResult(st, t)
       }
       val snap = SnapshotInfo(id, runId, txn, operation, moved, summary)
-      val (refs, written) = planFiles(st, moved)
-      if (casCommit(st, buildMeta(st, snap, refs, nextSchemas(st, slices))))
+      if (casCommit(st, buildMeta(st, snap, nextSchemas(st, slices))))
         return CommitResult(snap.id, alreadyCommitted = false,
           moved.map(_.size).sum, moved.size)
-      written.foreach(p => fs.delete(new Path(root, p), false))
     }
     throw new java.io.IOException(
       s"append into $root failed after $MaxCommitAttempts CAS attempts — " +
@@ -504,16 +417,6 @@ object SnapshotTable {
     * fault (rename/link returning false without progress), not contention —
     * fail loudly instead of spinning rewrite jobs forever. */
   private val MaxCommitAttempts = 50
-
-  /** inline-file-list ceiling: past this many files the version doc points
-    * at manifest files instead (64 entries ≈ 8 KB inline — registry-scale
-    * docs stay single-read; sink tables split). */
-  val DefaultInlineFileLimit = 64
-
-  /** manifest-count ceiling: one append = one manifest, so unbounded
-    * appends would mean unbounded reader fan-out; past this the commit
-    * coalesces all manifests into one (Iceberg's merge-manifests). */
-  val DefaultManifestCoalesceAt = 32
 
   /** the commit point's atomic claim primitive, publish-once semantics
     * ACROSS PROCESSES: exactly one caller of all concurrent callers (same
@@ -544,11 +447,6 @@ object SnapshotTable {
 
   final case class FileEntry(path: String, size: Long)
 
-  /** pointer to a manifest file holding `count` [[FileEntry]] rows
-    * totalling `bytes` (counts let planners size reads without opening
-    * the manifest). */
-  final case class ManifestRef(path: String, count: Int, bytes: Long)
-
   /** `summary`: free-form text the committer attached to the snapshot (the
     * role of Iceberg's snapshot summary), stored in the version doc. */
   final case class SnapshotInfo(id: String, run: String, txn: Option[String],
@@ -562,18 +460,18 @@ object SnapshotTable {
     * on a column's type. DDL, not JSON: escaped schema JSON was most of a
     * root log doc's bytes and parse time. Parsed only when asked for. */
   final case class TableState(version: Long, snapshotId: Option[String],
-                              files: Seq[FileEntry],
                               txnKeys: Map[String, String],
                               snapshots: Seq[SnapshotInfo],
-                              manifestRefs: Seq[ManifestRef] = Seq.empty,
                               schemaDdl: Map[String, String] = Map.empty) {
+    /** every file the version lists: what its snapshots added */
+    def files: Seq[FileEntry] = snapshots.flatMap(_.added)
     def schemaOf(table: String): Option[StructType] = schemaDdl.get(table).map(parseSchema)
     def schema: Option[StructType] = schemaOf("")
   }
 
   private def parseSchema(ddl: String): StructType = StructType.fromDDL(ddl)
   object TableState {
-    val Empty: TableState = TableState(0L, None, Seq.empty, Map.empty, Seq.empty)
+    val Empty: TableState = TableState(0L, None, Map.empty, Seq.empty)
   }
 
   /** files moved into `table` ([[SnapshotTable.moveIn]]) for one
@@ -642,7 +540,9 @@ object SnapshotTable {
   private def fileEntries(n: JsonNode): Seq[FileEntry] =
     n.elements().asScala.map(f => FileEntry(f.get("path").asText(), f.get("size").asLong())).toSeq
 
-  /** read the version doc at `path`; a doc of another format is refused by name */
+  /** read the version doc at `path`; a doc of another format is refused by
+    * name. A `manifests` key (older writers split long file lists into
+    * manifest files) is ignored: the snapshot history lists every file. */
   private def parseMeta(fs: FileSystem, path: Path): TableState = {
     val doc = Mapper.readTree(readBytes(fs, path))
     val format = Option(doc.get("format")).map(_.asText()).getOrElse("none")
@@ -652,20 +552,13 @@ object SnapshotTable {
       s.get("id").asText(), s.get("run").asText(), Option(s.get("txn")).map(_.asText()),
       s.get("operation").asText(), fileEntries(s.get("added")),
       Option(s.get("summary")).map(_.asText()))).toSeq
-    val manifests = Option(doc.get("manifests")).toSeq.flatMap(_.elements().asScala.map(m =>
-      ManifestRef(m.get("path").asText(), m.get("count").asInt(), m.get("bytes").asLong())))
     TableState(doc.get("version").asLong(),
       Option(doc.get("snapshot_id")).map(_.asText()),
-      if (manifests.isEmpty) snaps.flatMap(_.added) else Seq.empty,
       doc.get("txn_keys").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap,
-      snaps, manifests,
+      snaps,
       Option(doc.get("schemas")).toSeq.flatMap(_.properties().asScala)
         .map(e => e.getKey -> e.getValue.asText()).toMap)
   }
-
-  /** parse a manifest file: {"entries":[{path,size}…]}. */
-  private def parseManifest(bytes: Array[Byte]): Seq[FileEntry] =
-    fileEntries(Mapper.readTree(bytes).get("entries"))
 
   /** the `.parquet` files at any depth under `dir`, as `listFiles(dir,
     * true)` finds them, but walked with `listStatus`: `listFiles` builds a

@@ -39,6 +39,10 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
   /** the groups of a `groups`-group root whose ack is in its log */
   private def acked(reg: Registry, groups: Int = 4): Seq[Int] = (0 until groups).filter(reg.isCommitted)
 
+  /** the staging dirs (`_tmp-run-*`, `_tmp-offsets-*`) left under `root` */
+  private def stagingLeft(root: String): Seq[String] =
+    Option(new java.io.File(root).list()).toSeq.flatten.filter(_.startsWith("_tmp-"))
+
   /** the files the newest version of the root log lists in `table` */
   private def listed(reg: Registry, table: String): Seq[String] =
     reg.commitLog.state().files.map(_.path).filter(_.startsWith(s"$table/data/"))
@@ -110,9 +114,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val committedBefore = acked(reg)
     assert(committedBefore.nonEmpty && committedBefore.size < 4)
     // the failed run still dropped its staging (unacked groups included)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(rootCrash), spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$rootCrash/_staging")))
+    assert(stagingLeft(rootCrash).isEmpty, stagingLeft(rootCrash))
 
     // resume: same command; previously committed groups must be skipped
     val resumed = PipelineRunner.run(input, rootCrash, groups = 4)
@@ -182,9 +184,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     // losers left no residue: staging is gone, and every physical file in
     // each table's data/ dir is listed by the root log (a CAS loser deletes
     // the files it moved in)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_staging")))
+    assert(stagingLeft(root).isEmpty, stagingLeft(root))
     assertEveryFileListed(reg)
   }
 
@@ -265,7 +265,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       errors.foreach(e => assert(e.getMessage.contains(s"root $root predates the one root log"),
         e.getMessage))
       // refused before any write
-      assert(reg.commitLog.liveVersions().isEmpty && !new java.io.File(s"$root/_staging").exists())
+      assert(reg.commitLog.liveVersions().isEmpty && stagingLeft(root).isEmpty)
       // the root log has no version, so its expiry vouches for no file and
       // deletes none of the old tables'
       def parquet() = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
@@ -404,7 +404,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assert(started.size >= 2, s"jobs started: ${started.asScala}")
     assert(ended.asScala.toSet == started.asScala.toSet,
       s"jobs started ${started.asScala} ended ${ended.asScala}")
-    assert(!new java.io.File(s"$root/_staging").exists())
+    assert(stagingLeft(root).isEmpty, stagingLeft(root))
     assert(new Registry(root, spark).commitLog.liveVersions().isEmpty)
   }
 
@@ -618,7 +618,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val (root, written) = resumedOverOldLayout(recordSchema = true)
     // the new commits record the union of the two layouts, not "unknown"
     for (s <- written) {
-      val schema = new Registry(root, spark).commitLog.latest().schemaOf(Registry.sinkTable(s))
+      val schema = new Registry(root, spark).commitLog.state().schemaOf(Registry.sinkTable(s))
       assert(schema.exists(_.fieldNames.contains("doc_id")), s"$s schema: $schema")
     }
     assertSinksMatchTransform(root)
@@ -657,7 +657,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val writes = plans.asScala.toSeq.flatMap(p => collect(p) {
       case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => w.outputPath.toString
     })
-    val fanout = writes.filter(_.matches(".*/_staging/run=[^/]+"))
+    val fanout = writes.filter(_.matches(".*/_tmp-run-[^/]+"))
     assert(fanout.size == 1, s"${fanout.size} fan-out plans")
     // the two staging writes run at once, and each clears its output dir
     // first: neither may hold the other
@@ -716,7 +716,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))")).first().getLong(0)
     val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
     val reg = new Registry(streamed, spark)
-    assert(reg.commitLog.latest().txnKeys.keySet == Set(txn))
+    assert(reg.commitLog.state().txnKeys.keySet == Set(txn))
     assert(reg.lineage().keySet == Set(txn))
   }
 

@@ -90,9 +90,9 @@ class SnapshotTableSpec extends SparkSpec {
     assert(metaDir.listFiles().count(_.getName.matches("v\\d+\\.json")) == 2)
   }
 
-  test("time travel: readVersion/readSnapshot see the table as of a commit") {
+  test("time travel: readVersion sees the table as of a commit") {
     val t = tmpTable()
-    val r1 = t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
+    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
     t.append(Seq((3, "c")).toDF("id", "v"), None)
     // a later commit grows the live file set; history must not move
     t.append(Seq((4, "d")).toDF("id", "v"), None)
@@ -102,95 +102,46 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.readVersion(2).get.where(col("id") === 4).isEmpty, "v2 predates the third append")
     assert(t.readVersion(3).get.where(col("id") === 4).select("v")
       .first().getString(0) == "d")
-    assert(t.readSnapshot(r1.snapshotId).get.count() == 2)
-    assert(t.readVersion(0).isEmpty && t.readVersion(9).isEmpty &&
-      t.readSnapshot("no-such").isEmpty)
-  }
-
-  test("manifest splitting: file list spills past the inline limit, appends " +
-    "reuse prior manifests, coalesce bounds fan-out, expiry reclaims") {
-    val root = scratchDir("graft-snaptbl")
-    val t = new SnapshotTable(root, spark,
-      inlineFileLimit = 2, manifestCoalesceAt = 3)
-    def one(i: Int) = Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
-    (1 to 6).foreach(i => t.append(one(i), txn = Some(s"b-$i")))
-    // v1–v2 inline; v3 crosses the 2-file limit → one manifest of all 3
-    assert(t.stateAt(2).get.manifestRefs.isEmpty)
-    val v3 = t.stateAt(3).get
-    assert(v3.manifestRefs.size == 1 && v3.manifestRefs.head.count == 3)
-    // v4–v5 append ONE manifest each, reusing v3's untouched (O(added) commits)
-    val v4 = t.stateAt(4).get
-    assert(v4.manifestRefs.size == 2 &&
-      v4.manifestRefs.head == v3.manifestRefs.head)
-    assert(t.stateAt(5).get.manifestRefs.size == 3)
-    // v6 would be 4 manifests > coalesceAt=3 → merged back to one
-    val v6 = t.stateAt(6).get
-    assert(v6.manifestRefs.size == 1 && v6.manifestRefs.head.count == 6)
-    // resolution is complete at every layout era, and reads agree
-    assert(v6.files.size == 6 && t.read().get.count() == 6)
-    assert(t.readVersion(2).get.count() == 2)
-    assert(t.readVersion(4).get.count() == 4)
-    // a reader with DEFAULT thresholds resolves the split layout identically
-    val reader = new SnapshotTable(root, spark)
-    assert(reader.read().get.count() == 6)
-    assert(reader.state().files.toSet == v6.files.toSet)
-    // txn idempotence still holds across the layout switch
-    assert(t.append(one(3), txn = Some("b-3")).alreadyCommitted)
-    // expiry drops old versions' manifests; disk holds exactly the live refs
-    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 0)
-    val onDisk = new java.io.File(s"$root/metadata").listFiles()
-      .map(_.getName).filter(_.startsWith("m-")).map(n => s"metadata/$n").toSet
-    assert(onDisk == t.state().manifestRefs.map(_.path).toSet)
-    assert(t.read().get.count() == 6)
-  }
-
-  test("manifest mode: racing writers leave no manifest debris") {
-    val root = scratchDir("graft-snaptbl")
-    val t = new SnapshotTable(root, spark,
-      inlineFileLimit = 1, manifestCoalesceAt = 8)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val racers = (1 to 4).map { i =>
-      Future(t.append(Seq((i, i.toLong)).toDF("k", "v").coalesce(1), None))
-    }
-    racers.foreach(Await.result(_, 2.minutes))
-    val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(rows == Map(1 -> 1L, 2 -> 2L, 3 -> 3L, 4 -> 4L))
-    // every manifest on disk is referenced by SOME live version — CAS
-    // losers deleted theirs
-    val live = t.liveVersions()
-      .flatMap(v => t.stateAt(v).get.manifestRefs.map(_.path)).toSet
-    val onDisk = new java.io.File(s"$root/metadata").listFiles()
-      .map(_.getName).filter(_.startsWith("m-")).map(n => s"metadata/$n").toSet
-    assert(onDisk == live)
+    assert(t.readVersion(0).isEmpty && t.readVersion(9).isEmpty)
   }
 
   test("expireSnapshots reclaims crashed writers' temp debris") {
     val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark)
     t.append(Seq((1, "a")).toDF("id", "v"), None)
-    // plant the three crash shapes: a candidate-metadata temp (died before
-    // publishAtomic) and append/merge staging dirs (died before cleanup)
-    val staleMeta = new java.io.File(s"$root/metadata/.tmp-dead-writer-x")
-    java.nio.file.Files.write(staleMeta.toPath, "{}".getBytes)
-    val staleAppend = new java.io.File(s"$root/_tmp-append-dead-writer-y")
-    val staleMerge = new java.io.File(s"$root/_tmp-merge-dead-writer-z")
-    staleAppend.mkdirs(); staleMerge.mkdirs()
-    // a dead writer's staged file is as old as its dir (staging dirs are
-    // aged by their newest entry)
-    val stalePart = new java.io.File(staleAppend, "part-0.parquet")
-    java.nio.file.Files.write(stalePart.toPath, Array[Byte](1, 2, 3))
+    // plant the crash shapes: a candidate-metadata temp (died before
+    // publishAtomic), append/merge staging dirs (died before cleanup), a
+    // killed pipeline run's staged fan-out and offsets, and a manifest file
+    // an older writer kept beside the docs (nothing reads it now)
+    def file(path: String): java.io.File = {
+      val f = new java.io.File(path)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, Array[Byte](1, 2, 3))
+      f
+    }
+    def dir(path: String, files: String*): java.io.File = {
+      val d = new java.io.File(path)
+      d.mkdirs()
+      files.foreach(f => file(s"$path/$f"))
+      d
+    }
+    val stale = Seq(file(s"$root/metadata/.tmp-dead-writer-x"),
+      file(s"$root/metadata/m-dead-writer-0.json"),
+      dir(s"$root/_tmp-append-dead-writer-y", "part-0.parquet"),
+      dir(s"$root/_tmp-merge-dead-writer-z"),
+      dir(s"$root/_tmp-run-rdead", "group=0/sink=es/part-0.parquet"),
+      dir(s"$root/_tmp-offsets-rdead", "slice=0/part-0.parquet"))
+    // a dead writer's staged files are as old as their dirs (staging dirs
+    // are aged by their newest entry)
     val old = System.currentTimeMillis() - 7200000L
-    Seq(staleMeta, stalePart, staleAppend, staleMerge).foreach(_.setLastModified(old))
+    stale.foreach(f => Files.walk(f.toPath).forEach(p => p.toFile.setLastModified(old)))
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
-    assert(!staleMeta.exists() && !staleAppend.exists() && !staleMerge.exists(),
-      "aged temp debris must be reclaimed")
-    // a LIVE writer's fresh temp survives the grace window
-    val fresh = new java.io.File(s"$root/_tmp-append-live-writer")
-    fresh.mkdirs()
+    for (f <- stale) assert(!f.exists(), s"aged temp debris must be reclaimed: $f")
+    // a LIVE writer's fresh temps survive the grace window
+    val fresh = Seq(dir(s"$root/_tmp-append-live-writer"), dir(s"$root/_tmp-run-rlive"),
+      dir(s"$root/_tmp-offsets-rlive"), file(s"$root/metadata/m-live-writer-0.json"))
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
-    assert(fresh.exists(), "fresh temp state is protected by the grace window")
+    for (f <- fresh) assert(f.exists(), s"fresh temp state is protected by the grace window: $f")
     assert(t.read().get.count() == 1)
   }
 
@@ -226,12 +177,16 @@ class SnapshotTableSpec extends SparkSpec {
     assert(st.schema.contains(inferred))
     assert(t.stateAt(1).get.schema.contains(inferred))
     assert(t.read().get.schema == inferred)
-    // a version written before schemas were recorded: reads fall back to
-    // inference (the .crc sidecar goes too, or the checksum would not match)
+    // a version written before schemas were recorded, by a writer that
+    // also pointed at manifest files: reads fall back to inference and take
+    // the files from the snapshot history, never the manifests (the .crc
+    // sidecar goes too, or the checksum would not match)
     val doc = new java.io.File(s"${t.root}/metadata/v000002.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     node.remove("schemas")
+    val m = node.putArray("manifests").addObject()
+    m.put("path", "metadata/m-older-writer-0.json"); m.put("count", 2); m.put("bytes", 1L)
     mapper.writeValue(doc, node)
     new java.io.File(s"${t.root}/metadata/.v000002.json.crc").delete()
     assert(t.state().schema.isEmpty)
@@ -364,7 +319,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("one commit lists slices of several tables; each reads its own files and schema") {
     val root = scratchDir("graft-snaplog")
-    val log = new SnapshotTable(root, spark, inlineFileLimit = 2)
+    val log = new SnapshotTable(root, spark)
     def staged(df: org.apache.spark.sql.DataFrame): String = {
       val dir = scratchDir("graft-snaplog-staged")
       df.write.mode("overwrite").parquet(dir)
@@ -377,11 +332,11 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.Slice("b/c", log.moveIn(staged(b), "b/c"), Some(b.schema)))
     assert(slices.forall(_.files.nonEmpty) && slices(1).files.forall(_.path.startsWith("b/c/data/")))
     // moved but not committed: invisible
-    assert(log.readTable("a").isEmpty && log.latest().version == 0)
+    assert(log.readTable("a").isEmpty && log.state().version == 0)
     val c = log.commit("t-1", "{}", slices)
     assert(!c.alreadyCommitted && c.addedFiles == slices.map(_.files.size).sum)
     assert(log.liveVersions() == Seq(1L) && new java.io.File(s"$root/metadata/v000001.json").exists())
-    val st = log.latest()
+    val st = log.state()
     assert(st.schemaDdl.keySet == Set("a", "b/c") && st.schema.isEmpty)
     assert(log.readTable("a").get.collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
       Set(1 -> "a", 2 -> "b"))

@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
     // no file moved in, no version of the root log, no staging left
     val reg = new Registry(out, spark)
     assert(reg.commitLog.liveVersions().isEmpty && parquet() == before)
-    assert(!new java.io.File(s"$out/_staging").exists())
+    assert(!new java.io.File(out).list().exists(_.startsWith("_tmp-")))
   }
 
   test("streaming curated ingest: quality-gated, deduped, exactly-once " +
