@@ -1,5 +1,6 @@
 package graft
 
+import graft.checkpoint.Registry
 import graft.pipeline.PipelineRunner
 import graft.sources.Transcripts
 
@@ -13,6 +14,8 @@ import graft.sources.Transcripts
   *   groups       batch-group count (default 4); a root's count is fixed
   *                by its first run, and a rerun with another is refused
   *   failAfterGroup  inject a crash after this many groups commit (testing)
+  * After the metrics read, crash debris aged past an hour (a killed run's
+  * staging, unlisted files) is reclaimed from the root; every version stays.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -33,6 +36,8 @@ object Main {
     val m = PipelineRunner.observedMetrics(args(1), spark)
     println(s"[graft] groups run now: ${ran.map(_.group).mkString(",")} in ${f"$secs%.1f"}s")
     m.toSeq.sortBy(_._1).foreach { case (k, v) => println(s"[graft] $k = $v") }
+    val orphans = new Registry(args(1), spark).commitLog.expireSnapshots(keepVersions = Int.MaxValue)
+    println(s"[graft] orphan data files reclaimed = $orphans")
     spark.stop()
   }
 }

@@ -19,8 +19,10 @@ import graft.io.LocalFs
   *                               acked group (txn key `group-<g>`) or streaming
   *                               micro-batch (`batch-<id>-<fingerprint>`)
   *                               listing its files in every table, with its
-  *                               lineage JSON (counts, per-sink write stats)
-  *                               as the summary
+  *                               lineage JSON as the summary: the per-sink
+  *                               counts, and a batch run's group count
+  *                               (`{"groups":N,"counts":{…}}`); write stats
+  *                               are the sizes of the files it lists
   *   <root>/sinks/<sink>/data/   a table per sink, in [[Registry.stored]]
   *                               layout (no `doc_id`: [[readSink]] derives it)
   *   <root>/registry/data/       the offsets: per-conversation high-water marks
@@ -51,11 +53,12 @@ import graft.io.LocalFs
   * checkpoint is its cursor) under its batch txn key. A crash before step 3
   * leaves moved files no snapshot lists: invisible, re-run on resume, and
   * reclaimed by [[SnapshotTable.expireSnapshots]] on [[commitLog]] (which
-  * sweeps nothing while the log has no version). A run killed before its
-  * own cleanup leaves its staging dirs, whose `_tmp-` names the same
-  * expiry sweeps once they have aged.
+  * deletes no data file while the log has no version). A run killed
+  * before its own cleanup leaves its staging dirs, whose `_tmp-` names the
+  * same expiry sweeps once aged, first run or not. [[graft.Main]] runs
+  * that expiry after each run, so a root it drives is reclaimed.
   *
-  * [[readSink]], [[registry]] and [[lineage]] read the newest version of
+  * [[readSink]], [[registry]] and [[log]] read the newest version of
   * the root log — one listing and one doc read — so the
   * pipeline's metrics are O(groups), not O(data). A root of the per-table
   * layout that came before the one root log (each sink, the offsets and
@@ -90,7 +93,7 @@ final class Registry(val root: String, spark: SparkSession,
   def log(): SnapshotTable.TableState = {
     val st = commitLog.state()
     if (st.version == 0)
-      Option(fs.globStatus(new Path(root, s"{commits,${Registry.OffsetsTable},sinks/*}/metadata")))
+      Option(fs.globStatus(new Path(root, s"{commits,${Registry.OffsetsTable},${Registry.SinksDir}/*}/metadata")))
         .flatMap(_.headOption).foreach { f =>
           throw new IllegalStateException(
             s"checkpoint root $root predates the one root log: ${f.getPath} is a per-table " +
@@ -131,7 +134,7 @@ final class Registry(val root: String, spark: SparkSession,
     val files = commitLog.moveIn(stagedDir, table)
     val (id, slices) = moved.getOrElse(txn, (commitLog.newSnapshotId(), Vector.empty))
     moved(txn) = (id, slices :+ SnapshotTable.Slice(table, files, schema))
-    SnapshotTable.CommitResult(id, alreadyCommitted = false, files.map(_.size).sum, files.size)
+    SnapshotTable.CommitResult(id, alreadyCommitted = false, files.map(_.size).sum, files.size, owned = true)
   }
 
   /** step 2 for one sink's staged slice of a batch group. */
@@ -160,21 +163,15 @@ final class Registry(val root: String, spark: SparkSession,
     ack(Registry.groupTxn(group), lineageJson)
 
   /** step 3 — the ACK: ONE commit of the root log listing every file
-    * moved in under `txn` and carrying `lineageJson` (counts + per-sink
-    * write stats) as its summary. Returns true when THIS run owns `txn`
-    * afterwards; false when a concurrent runner's commit won — its moved
-    * files are deleted, and the caller lost and must not count the group. */
+    * moved in under `txn` and carrying `lineageJson` (the counts) as its
+    * summary. Returns true when THIS run owns `txn` afterwards; false when
+    * a concurrent runner's commit won — its moved files are deleted, and
+    * the caller lost and must not count the group. */
   def ack(txn: String, lineageJson: String): Boolean = {
     if (!layoutChecked) log()
     val (id, slices) = moved.remove(txn).getOrElse((commitLog.newSnapshotId(), Vector.empty))
-    val res = commitLog.commit(txn, lineageJson, slices, id)
-    !res.alreadyCommitted || commitLog.snapshotForTxn(txn).exists(_.run == runId)
+    commitLog.commit(txn, Some(lineageJson), slices, id).owned
   }
-
-  /** every ack's lineage JSON (the summary of its snapshot), keyed by its
-    * txn key, from ONE metadata read. Empty on a fresh root. */
-  def lineage(): Map[String, String] =
-    (for (s <- log().snapshots; t <- s.txn; j <- s.summary) yield t -> j).toMap
 
   /** drop this runner's staged files for a group (post-commit or defeat). */
   def cleanupStaging(group: Int): Unit = {
@@ -226,8 +223,11 @@ object Registry {
   /** the offsets table, a dir under the root */
   val OffsetsTable = "registry"
 
+  /** the dir under the root that holds the sinks' tables */
+  val SinksDir = "sinks"
+
   /** a sink's table, a dir under the root */
-  def sinkTable(sink: String): String = s"sinks/$sink"
+  def sinkTable(sink: String): String = s"$SinksDir/$sink"
 
   /** The layout every writer of a sink table stores: routed rows without
     * `doc_id`, which is 64 incompressible hex characters per row and a

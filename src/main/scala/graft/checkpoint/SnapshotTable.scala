@@ -61,31 +61,35 @@ import graft.io.LocalFs
   * a stray file under data/ is never read, and a listed file deleted out
   * of band fails the read by name instead of shrinking it.
   *
-  * Transactional idempotence: a commit may carry a `txn` key. The metadata
-  * records every committed txn key; a commit whose key is already present
-  * is rejected as `alreadyCommitted` (with the original snapshot id), which
-  * is what makes job retries and multi-writer races effectively-once — the
-  * same role as the reference's registrar ACK gate
-  * (filebeat/beater/acker.go:37-68).
+  * Transactional idempotence: a commit may carry a `txn` key, recorded on
+  * its snapshot; a commit whose key some snapshot already holds is
+  * rejected as `alreadyCommitted` (with the original snapshot id, and
+  * whether this writer's run made it), which is what makes job retries
+  * and multi-writer races effectively-once — the same role as the
+  * reference's registrar ACK gate (filebeat/beater/acker.go:37-68).
   *
-  * Operations: `append` (a DataFrame staged through a temp dir, or a
-  * caller-staged dir via [[commitStagedDir]]) and [[commit]] (files moved
-  * in with [[moveIn]], of any of the log's tables, plus a txn key and a
-  * `summary` string — Iceberg's snapshot summary, where the root log keeps
-  * each group's lineage for metrics read with no Spark job; no files makes
-  * it METADATA-ONLY). Every table is APPEND-ONLY, so the newest version
-  * lists every file ever committed; every version's metadata is retained,
-  * so any historical snapshot remains readable (time travel).
+  * Operations: [[append]] (a DataFrame staged through a temp dir) and
+  * [[commit]] (files moved in with [[moveIn]], of any of the log's tables,
+  * plus a txn key and an optional `summary` string — Iceberg's snapshot
+  * summary, where the root log keeps each group's counts for metrics read
+  * with no Spark job; no files makes it METADATA-ONLY). Every table is
+  * APPEND-ONLY, so the newest version lists every file ever committed;
+  * every version's metadata is retained, so any historical snapshot
+  * remains readable (time travel).
   *
-  * One file list: a version's files are the files its snapshot history
-  * added — each snapshot in the doc lists its own `added` entries, and
-  * [[readTable]] and idempotence read nothing else. The history and the
-  * txn-key map therefore grow with commit count, and every commit rewrites
-  * the whole doc. Measured on a pipeline root (groups = 4 over sf0.01 at
-  * local[4]): each ack adds 725 bytes — about 0.37 KB of ids, txn key and
-  * lineage summary plus about 90 bytes per listed file, 4 files here — so
-  * the fourth version doc is 4.4 KB; an ack that lists 49 files adds about
-  * 5 KB.
+  * The version doc (`graft-snapshot-v3`) records each fact once: it is
+  * `{format, schemas, snapshots}`, each snapshot `{id, run, txn?, summary?,
+  * added}`. As a Delta Lake commit records only its own actions, the rest
+  * is derived on read: the version from the doc's name, the txn keys from
+  * the snapshots, a snapshot's operation from whether it added files, a
+  * version's files from what its snapshots added ([[readTable]] and
+  * idempotence read nothing else). `graft-snapshot-v2` docs, which also
+  * stored those derived keys, still read. The history grows with commit
+  * count, and every commit rewrites the whole doc. Measured on a pipeline
+  * root (groups = 4 over sf0.01 at local[4]):
+  * each ack adds 512 bytes — about 0.19 KB of ids, txn key and counts
+  * plus about 80 bytes per listed file, 4 files here — so the fourth
+  * version doc is 3.4 KB (v2 docs: 725 bytes per ack, 4.4 KB).
   *
   * Local roots: on a `file:` root every metadata write, file move and
   * listing goes through [[graft.io.LocalFs]], so none forks a `chmod` or
@@ -105,9 +109,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   /** current committed state — the newest version doc: one listing and
     * one read. Version 0 = the empty table. */
   def state(): TableState =
-    liveVersions().lastOption.fold(TableState.Empty)(v => parseMeta(fs, versionPath(v)))
+    liveVersions().lastOption.fold(TableState.Empty)(readMeta)
 
   private def versionPath(v: Long): Path = new Path(metaDir, f"v$v%06d.json")
+
+  private def readMeta(v: Long): TableState = parseMeta(fs, versionPath(v), v)
 
   /** CAS: write candidate metadata for version prev+1; true iff this writer
     * won the publish race ([[SnapshotTable.publishAtomic]]). */
@@ -124,17 +130,12 @@ final class SnapshotTable(val root: String, spark: SparkSession,
                         schemas: Map[String, String]): ObjectNode = {
     val doc = Mapper.createObjectNode()
     doc.put("format", Format)
-    doc.put("version", prev.version + 1)
-    doc.put("snapshot_id", snap.id)
-    prev.snapshotId.foreach(doc.put("parent_snapshot_id", _))
     val sc = doc.putObject("schemas")
     schemas.foreach { case (table, ddl) => sc.put(table, ddl) }
-    val tk = doc.putObject("txn_keys")
-    (prev.txnKeys ++ snap.txn.map(_ -> snap.id)).foreach { case (k, v) => tk.put(k, v) }
     val sArr = doc.putArray("snapshots")
     (prev.snapshots :+ snap).foreach { s =>
       val o = sArr.addObject()
-      o.put("id", s.id); o.put("run", s.run); o.put("operation", s.operation)
+      o.put("id", s.id); o.put("run", s.run)
       s.txn.foreach(o.put("txn", _))
       s.summary.foreach(o.put("summary", _))
       putEntries(o.putArray("added"), s.added)
@@ -177,9 +178,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     if (files.isEmpty) None else Some(load(files, st.schemaOf(table)))
   }
 
-  def snapshotForTxn(txn: String): Option[SnapshotInfo] =
-    state().snapshots.find(_.txn.contains(txn))
-
   // --------------------------------------------------------- time travel
 
   /** all metadata versions still on disk, ascending (1 = first commit).
@@ -199,10 +197,8 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     else Seq.empty
 
   /** committed state AT `version`; None once expired (or never committed). */
-  def stateAt(version: Long): Option[TableState] = {
-    val p = versionPath(version)
-    if (version < 1 || !fs.exists(p)) None else Some(parseMeta(fs, p))
-  }
+  def stateAt(version: Long): Option[TableState] =
+    if (version < 1 || !fs.exists(versionPath(version))) None else Some(readMeta(version))
 
   /** time-travel read: the table exactly as of `version`. None when the
     * version is expired/unknown or held no files. Every commit is one
@@ -212,21 +208,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   // ------------------------------------------------------------- writing
 
-  /** move externally staged parquet files into the table and commit them
-    * as one append snapshot, against `st` (default: the newest version; a
-    * caller may pass a state it read earlier). The txn pre-check runs
-    * BEFORE the move, so a retried commit never churns files through data/;
-    * a writer that committed since `st` owns v(N+1), so the first publish
-    * fails and the retry re-reads. `schema` is the staged files' Spark
-    * schema, when the caller knows it; without it the table records none
-    * and reads infer. */
-  def commitStagedDir(stagedDir: String, txn: Option[String],
-                      schema: Option[StructType] = None,
-                      st: TableState = state()): CommitResult = {
-    txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
-    commitMoved(st, Seq(Slice("", moveIn(stagedDir), schema)), txn, None, newSnapshotId())
-  }
-
   /** Commit `slices` — files already moved into their tables with
     * [[moveIn]] — and `summary` as ONE snapshot with id `id` under `txn`:
     * every slice becomes visible at the same CAS, or none does. A txn key
@@ -234,30 +215,32 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * snapshot id and deletes the slices' files (a racing loser's copies).
     * No slices makes it a METADATA-ONLY commit (operation `metadata`). No
     * Spark job runs. */
-  def commit(txn: String, summary: String, slices: Seq[Slice] = Seq.empty,
+  def commit(txn: String, summary: Option[String], slices: Seq[Slice] = Seq.empty,
              id: String = newSnapshotId()): CommitResult =
-    commitMoved(state(), slices, Some(txn), Some(summary), id)
+    commitMoved(state(), slices, Some(txn), summary, id)
 
   /** a fresh snapshot id of this writer, for a caller that names a
     * [[commit]] before making it. */
   def newSnapshotId(): String = s"s-$runId-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** a fresh private staging dir under the table root, for a caller to
-    * write parquet into and hand to [[commitStagedDir]]. A dir left by a
-    * writer that died is reclaimed by [[expireSnapshots]] once aged. */
+    * write parquet into and [[moveIn]]. A dir left by a writer that died
+    * is reclaimed by [[expireSnapshots]] once aged. */
   def stagingDir(): String =
     new Path(root, s"_tmp-append-$runId-${java.util.UUID.randomUUID()}").toString
 
   /** append a DataFrame as one snapshot: write it to a [[stagingDir]],
-    * then commit it against the state read before the write. A txn key
-    * already committed skips the write. */
+    * [[moveIn]] its files, then commit them against the state read before
+    * the write (a writer that committed since owns v(N+1), so the first
+    * publish fails and the retry re-reads). A txn key already committed
+    * skips the write. */
   def append(df: DataFrame, txn: Option[String]): CommitResult = {
     val st = state()
-    txn.filter(st.txnKeys.contains).foreach(t => return alreadyCommittedResult(st, t))
+    txn.flatMap(st.snapshotOf).foreach(s => return committed(s))
     val tmp = stagingDir()
     try {
       df.write.options(LocalFs.writeOptions).mode("overwrite").parquet(tmp)
-      commitStagedDir(tmp, txn, Some(df.schema), st)
+      commitMoved(st, Seq(Slice("", moveIn(tmp), Some(df.schema))), txn, None, newSnapshotId())
     } finally fs.delete(new Path(tmp), true)
   }
 
@@ -283,10 +266,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * analogue. Keeps the newest `keepVersions` metadata docs and deletes
     * older ones. Data files are never expired with a version: the table
     * is append-only, so the newest version lists every committed file.
-    * Data files no kept version lists, in any table's data dir (moved in
-    * by a writer that never committed them), go through the orphan pass
-    * once older than `orphanGraceMs`; a log with no version deletes
-    * nothing. Returns the number of data files deleted. Run as a
+    * Temp debris (a dead writer's candidate docs and `_tmp-` staging dirs)
+    * and data files the newest version does not list, in any table's data
+    * dir (moved in by a writer that never committed them), are deleted
+    * once older than `orphanGraceMs`; a log with no version deletes temp
+    * debris only. Returns the number of data files deleted. Run as a
     * maintenance job, never concurrently with readers that may still be
     * resolving an expired version; writers are
     * unaffected (they CAS against the newest version only, and a staging
@@ -295,12 +279,24 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   def expireSnapshots(keepVersions: Int = 1,
                       orphanGraceMs: Long = 3600000L): Int = {
     require(keepVersions >= 1, "must keep at least the current version")
+    val cutoff = System.currentTimeMillis() - orphanGraceMs
+    // TEMP DEBRIS, with or without a version: a writer that died between
+    // creating its candidate metadata (.tmp-*) and publishAtomic, or before
+    // its staging dir (_tmp-*) was consumed; and the manifest files (m-*)
+    // older writers kept beside the docs, which nothing reads now. No
+    // version references them, so only the age grace gates deletion. A
+    // staging DIRECTORY is aged by the newest entry under it, not by its
+    // own mtime: a live write keeps adding fresh files into an old dir.
+    for (f <- entries(metaDir, n => n.startsWith(".tmp-") || n.startsWith("m-"))
+         if f.getModificationTime < cutoff) fs.delete(f.getPath, false)
+    for (f <- entries(new Path(root), _.startsWith("_tmp-")) if newestMtime(f) < cutoff)
+      fs.delete(f.getPath, true)
     val versions = liveVersions()
     // no version vouches for any file (another layout's tables may sit here)
     if (versions.isEmpty) return 0
     val (drop, keep) = versions.splitAt(math.max(0, versions.length - keepVersions))
-    val retained: Set[String] =
-      keep.flatMap(v => parseMeta(fs, versionPath(v)).files.map(_.path)).toSet
+    // append-only: the newest version lists every file an older one does
+    val retained: Set[String] = readMeta(keep.last).files.map(_.path).toSet
     var deleted = 0
     drop.foreach(v => fs.delete(versionPath(v), false))
     // ORPHANS: data files referenced by NO retained version — crash debris
@@ -309,7 +305,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     // not-yet-committed files (Iceberg's remove_orphan_files guards the
     // same way); pass 0 only when no writers are running.
     // Every table's data dir is swept, whether or not a version lists it.
-    val cutoff = System.currentTimeMillis() - orphanGraceMs
     dataDirs().foreach { case (dir, rel) =>
       fs.listStatus(dir).foreach { f =>
         val n = f.getPath.getName
@@ -318,26 +313,16 @@ final class SnapshotTable(val root: String, spark: SparkSession,
             fs.delete(f.getPath, false)) deleted += 1
       }
     }
-    // TEMP DEBRIS: a writer that died between creating its candidate
-    // metadata (.tmp-*) and publishAtomic, or mid-write before its staging
-    // directory (_tmp-*) was consumed; and the manifest files (m-*) that
-    // older writers kept beside the docs, which nothing reads now. Never
-    // referenced by any version, so only the age grace gates deletion —
-    // without this pass a crashed writer's staged parquet (potentially a
-    // whole run's fan-out) accumulates forever. A staging DIRECTORY is aged
-    // by the newest entry under it, not by its own mtime: a live write
-    // keeps adding fresh files into a dir created long ago.
-    fs.listStatus(metaDir).foreach { f =>
-      val n = f.getPath.getName
-      if (f.getModificationTime < cutoff && (n.startsWith(".tmp-") || n.startsWith("m-")))
-        fs.delete(f.getPath, false)
-    }
-    fs.listStatus(new Path(root)).foreach { f =>
-      if (f.getPath.getName.startsWith("_tmp-") && newestMtime(f) < cutoff)
-        fs.delete(f.getPath, true)
-    }
     deleted
   }
+
+  /** the entries of `dir` whose names pass `keep` (none when `dir` is
+    * absent), less any a live writer consumed before its status is read */
+  private def entries(dir: Path, keep: String => Boolean): Seq[FileStatus] =
+    names(dir).filter(keep).flatMap { n =>
+      try Some(fs.getFileStatus(new Path(dir, n)))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
 
   /** every table's data dir — `data/` of tables up to two levels under the
     * root (`sinks/<sink>/data/`) — with its path relative to the root. The
@@ -362,11 +347,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
 
   // ------------------------------------------------------------- internals
 
-  private def alreadyCommittedResult(st: TableState, txn: String): CommitResult = {
-    val snap = st.snapshots.find(_.txn.contains(txn)).get
+  /** the result of a commit whose txn key `snap` already holds */
+  private def committed(snap: SnapshotInfo): CommitResult =
     CommitResult(snap.id, alreadyCommitted = true,
-      snap.added.map(_.size).sum, snap.added.size)
-  }
+      snap.added.map(_.size).sum, snap.added.size, owned = snap.run == runId)
 
   /** the recorded schemas once `slices` land: a table's first files record
     * their schema, later files the union with it ([[unionSchema]]). A table
@@ -387,22 +371,21 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   private def commitMoved(current: TableState, slices: Seq[Slice], txn: Option[String],
                           summary: Option[String], id: String): CommitResult = {
     val moved = slices.flatMap(_.files)
-    val operation = if (moved.isEmpty) "metadata" else "append"
     var st = current
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
       if (attempt > 1) st = state()
-      txn.filter(st.txnKeys.contains).foreach { t =>
+      txn.flatMap(st.snapshotOf).foreach { s =>
         // another writer (or a previous run of this job) already committed
         // this transaction: our files are redundant — remove and defer
         moved.foreach(f => fs.delete(new Path(root, f.path), false))
-        return alreadyCommittedResult(st, t)
+        return committed(s)
       }
-      val snap = SnapshotInfo(id, runId, txn, operation, moved, summary)
+      val snap = SnapshotInfo(id, runId, txn, moved, summary)
       if (casCommit(st, buildMeta(st, snap, nextSchemas(st, slices))))
         return CommitResult(snap.id, alreadyCommitted = false,
-          moved.map(_.size).sum, moved.size)
+          moved.map(_.size).sum, moved.size, owned = true)
     }
     throw new java.io.IOException(
       s"append into $root failed after $MaxCommitAttempts CAS attempts — " +
@@ -450,8 +433,10 @@ object SnapshotTable {
   /** `summary`: free-form text the committer attached to the snapshot (the
     * role of Iceberg's snapshot summary), stored in the version doc. */
   final case class SnapshotInfo(id: String, run: String, txn: Option[String],
-                                operation: String, added: Seq[FileEntry],
-                                summary: Option[String] = None)
+                                added: Seq[FileEntry], summary: Option[String] = None) {
+    /** `metadata` for a snapshot that added no file, else `append` */
+    def operation: String = if (added.isEmpty) "metadata" else "append"
+  }
 
   /** `schemaDdl`: each table's data files' Spark schema as DDL, by table
     * (`""` for the log's own), recorded at commit so reads skip inference —
@@ -459,19 +444,21 @@ object SnapshotTable {
     * entry when some listed file's schema is unknown or two files disagree
     * on a column's type. DDL, not JSON: escaped schema JSON was most of a
     * root log doc's bytes and parse time. Parsed only when asked for. */
-  final case class TableState(version: Long, snapshotId: Option[String],
-                              txnKeys: Map[String, String],
-                              snapshots: Seq[SnapshotInfo],
+  final case class TableState(version: Long, snapshots: Seq[SnapshotInfo],
                               schemaDdl: Map[String, String] = Map.empty) {
     /** every file the version lists: what its snapshots added */
     def files: Seq[FileEntry] = snapshots.flatMap(_.added)
+    /** every committed txn key: what its snapshots carry */
+    lazy val txnKeys: Set[String] = snapshots.flatMap(_.txn).toSet
+    /** the snapshot that committed `txn` */
+    def snapshotOf(txn: String): Option[SnapshotInfo] = snapshots.find(_.txn.contains(txn))
     def schemaOf(table: String): Option[StructType] = schemaDdl.get(table).map(parseSchema)
     def schema: Option[StructType] = schemaOf("")
   }
 
   private def parseSchema(ddl: String): StructType = StructType.fromDDL(ddl)
   object TableState {
-    val Empty: TableState = TableState(0L, None, Map.empty, Seq.empty)
+    val Empty: TableState = TableState(0L, Seq.empty)
   }
 
   /** files moved into `table` ([[SnapshotTable.moveIn]]) for one
@@ -482,13 +469,19 @@ object SnapshotTable {
   private def dataPrefix(table: String): String =
     if (table.isEmpty) "data/" else s"$table/data/"
 
+  /** `owned`: the snapshot holding the commit's txn key is this writer's
+    * run's — false only when `alreadyCommitted` by another run. */
   final case class CommitResult(snapshotId: String, alreadyCommitted: Boolean,
-                                addedBytes: Long, addedFiles: Int)
+                                addedBytes: Long, addedFiles: Int, owned: Boolean)
 
   private val Mapper = new ObjectMapper()
 
-  /** the version-doc format this code writes, and the only one it reads */
-  private val Format = "graft-snapshot-v2"
+  /** the version-doc format this code writes */
+  private val Format = "graft-snapshot-v3"
+
+  /** the formats this code reads: its own, and v2, whose keys that v3
+    * derives (`version`, `txn_keys`, snapshot ids, operations) are ignored */
+  private val Readable = Seq("graft-snapshot-v2", Format)
 
   /** the log's dir under the table root */
   private val LogDir = "metadata"
@@ -540,22 +533,20 @@ object SnapshotTable {
   private def fileEntries(n: JsonNode): Seq[FileEntry] =
     n.elements().asScala.map(f => FileEntry(f.get("path").asText(), f.get("size").asLong())).toSeq
 
-  /** read the version doc at `path`; a doc of another format is refused by
-    * name. A `manifests` key (older writers split long file lists into
-    * manifest files) is ignored: the snapshot history lists every file. */
-  private def parseMeta(fs: FileSystem, path: Path): TableState = {
+  /** read the version doc at `path`, version `version`; a doc of a format
+    * not [[Readable]] is refused by name. Unknown keys are ignored: v2's
+    * derived keys, and the `manifests` that older writers pointed at (the
+    * snapshot history lists every file). */
+  private def parseMeta(fs: FileSystem, path: Path, version: Long): TableState = {
     val doc = Mapper.readTree(readBytes(fs, path))
     val format = Option(doc.get("format")).map(_.asText()).getOrElse("none")
-    if (format != Format)
-      throw new IllegalStateException(s"$path is a $format version doc; this reader reads $Format only")
+    if (!Readable.contains(format))
+      throw new IllegalStateException(
+        s"$path is a $format version doc; this reader reads ${Readable.mkString(" and ")}")
     val snaps = doc.get("snapshots").elements().asScala.map(s => SnapshotInfo(
       s.get("id").asText(), s.get("run").asText(), Option(s.get("txn")).map(_.asText()),
-      s.get("operation").asText(), fileEntries(s.get("added")),
-      Option(s.get("summary")).map(_.asText()))).toSeq
-    TableState(doc.get("version").asLong(),
-      Option(doc.get("snapshot_id")).map(_.asText()),
-      doc.get("txn_keys").properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap,
-      snaps,
+      fileEntries(s.get("added")), Option(s.get("summary")).map(_.asText()))).toSeq
+    TableState(version, snaps,
       Option(doc.get("schemas")).toSeq.flatMap(_.properties().asScala)
         .map(e => e.getKey -> e.getValue.asText()).toMap)
   }

@@ -30,8 +30,8 @@ import graft.model.Sinks
   *    [[graft.checkpoint.Registry.readSink]] derives it
   *  - per group: its sink and offsets slices move into their tables, then
   *    ONE commit of the root log lists them all under txn key `group-<g>`
-  *    with the group's lineage (counts + per-sink write stats) as summary —
-  *    the ACK, no Spark job ([[graft.checkpoint.Registry]] has the protocol)
+  *    with the group's lineage (its counts) as summary — the ACK, no Spark
+  *    job ([[graft.checkpoint.Registry]] has the protocol)
   *  - a kill loses no acked group, and a kill inside a group's commit leaves
   *    only files no snapshot lists. Resume = rerun the same command; acked
   *    groups are skipped and only the pending buckets are read (filebeat
@@ -108,26 +108,21 @@ object PipelineRunner {
              groups: Option[Int] = None, offsets: Option[StructType] = None): Option[GroupResult] = {
     val counts = staged.counts(group)
     val staging = reg.stagingGroupDir(group)
-    val writes = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0).map { s =>
-      val r = reg.moveIn(txn, Registry.sinkTable(s), s"$staging/sink=$s", Some(staged.schema))
-      s -> ((r.addedBytes, r.addedFiles))
+    val writeBytes = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0).map { s =>
+      s -> reg.moveIn(txn, Registry.sinkTable(s), s"$staging/sink=$s", Some(staged.schema)).addedBytes
     }.toMap
     offsets.foreach(schema =>
       reg.moveIn(txn, Registry.OffsetsTable, reg.stagedOffsets(group), Some(schema)))
 
-    // lineage, the ack's snapshot summary: counts + per-write output stats
-    // of the sink files (bytes/files per sink — the reference's
-    // per-output-worker metrics, libbeat/outputs/metrics.go, read straight
-    // off the snapshot metadata; the offsets slice is not output)
+    // lineage, the ack's snapshot summary: the counts, and a batch run's
+    // group count. The write stats (the reference's per-output-worker
+    // metrics, libbeat/outputs/metrics.go) are not repeated here: the
+    // snapshot's sink file entries carry their sizes.
     val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val bytesJson = writes
-      .map { case (k, (b, f)) => s""""$k":{"bytes":$b,"files":$f}""" }
-      .mkString("{", ",", "}")
-    val groupsJson = groups.fold("")(n => s""","groups":$n""")
-    val won = reg.ack(txn, s"""{"group":$group$groupsJson,"counts":$lineage,"writes":$bytesJson}""")
+    val groupsJson = groups.fold("")(n => s""""groups":$n,""")
+    val won = reg.ack(txn, s"""{$groupsJson"counts":$lineage}""")
     reg.cleanupStaging(group) // what is left of the staging is garbage
-    if (won) Some(GroupResult(group, counts, writes.map { case (k, (b, _)) => k -> b }))
-    else None
+    if (won) Some(GroupResult(group, counts, writeBytes)) else None
   }
 
   /** Run (or resume) the pipeline over `input`, writing under `root`.
@@ -215,27 +210,24 @@ object PipelineRunner {
   /** Pipeline-level metric counters over all committed groups, mirroring the
     * reference observer names (libbeat/publisher/pipeline/monitoring.go:94-104).
     *
-    * Read from the commit log's metadata alone — O(groups), not O(data):
-    * each acked group's lineage holds the exact per-sink counts its fan-out
-    * job observed and the bytes its sink files hold, so the metrics
-    * are their sums (total = every routed row, filtered included). Runs no
-    * Spark job. A fresh root (or one read before the first ack) reports
-    * zeros; a root of the per-table layout is refused by
-    * [[graft.checkpoint.Registry.log]]. */
+    * Read from ONE read of the root log's metadata — O(groups), not O(data):
+    * each ack's lineage holds the exact per-sink counts its fan-out job
+    * observed, and the files the log lists under `sinks/` hold the bytes
+    * written, so the metrics are their sums (total = every routed row,
+    * filtered included). Runs no Spark job. A fresh root (or one read
+    * before the first ack) reports zeros; a root of the per-table layout is
+    * refused by [[graft.checkpoint.Registry.log]]. */
   def observedMetrics(root: String, spark: SparkSession): Map[String, Long] = {
+    val log = new Registry(root, spark).log()
     val counts = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    var writeBytes = 0L
-    new Registry(root, spark).lineage().values.foreach { json =>
-      val doc = Mapper.readTree(json)
-      doc.get("counts").properties().forEach(e => counts(e.getKey) += e.getValue.asLong())
-      doc.get("writes").properties().forEach(e => writeBytes += e.getValue.get("bytes").asLong())
-    }
+    for (s <- log.snapshots; json <- s.summary)
+      Mapper.readTree(json).get("counts").properties().forEach(e => counts(e.getKey) += e.getValue.asLong())
     Map(
       "events.total" -> counts.values.sum,
       "events.published" -> (counts(Sinks.Es) + counts(Sinks.Ls)),
       "events.filtered" -> counts(TranscriptPipeline.Filtered),
       "events.dropped" -> counts(Sinks.Dropped),
-      "output.write_bytes" -> writeBytes
+      "output.write_bytes" -> log.files.filter(_.path.startsWith(s"${Registry.SinksDir}/")).map(_.size).sum
     )
   }
 }

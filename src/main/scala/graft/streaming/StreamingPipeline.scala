@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.checkpoint.Registry
+import graft.checkpoint.{Registry, SnapshotTable}
 import graft.io.LocalFs
 import graft.model.TranscriptEvent
 import graft.pipeline.{PipelineRunner, TranscriptPipeline}
@@ -268,7 +268,7 @@ object StreamingPipeline {
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val table = new graft.checkpoint.SnapshotTable(s"$root/curated", batch.sparkSession)
+        val table = new SnapshotTable(s"$root/curated", batch.sparkSession)
         val rows = batch.drop("fp")
         // the fingerprint is observed on the staged write itself: ONE job
         // per micro-batch, no persist
@@ -279,8 +279,8 @@ object StreamingPipeline {
             .sortWithinPartitions("conv_id", "turn_idx")
             .write.options(LocalFs.writeOptions).mode("overwrite").parquet(staging)
           val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
-          table.commitStagedDir(staging,
-            Some(s"batch-$batchId-${java.lang.Long.toHexString(fp)}"), Some(rows.schema))
+          table.commit(s"batch-$batchId-${java.lang.Long.toHexString(fp)}", None,
+            Seq(SnapshotTable.Slice("", table.moveIn(staging), Some(rows.schema))))
         } finally {
           val dir = new org.apache.hadoop.fs.Path(staging)
           dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration).delete(dir, true)

@@ -30,11 +30,14 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
   /** per-group `counts` of every acked group's lineage in the commit log */
   private def lineageCounts(root: String): Map[Int, Map[String, Long]] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    new Registry(root, spark).lineage().map { case (txn, json) =>
-      txn.stripPrefix("group-").toInt -> mapper.readTree(json).get("counts").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
+    (for (s <- new Registry(root, spark).log().snapshots; txn <- s.txn; json <- s.summary)
+      yield txn.stripPrefix("group-").toInt -> mapper.readTree(json).get("counts").properties()
+        .asScala.map(e => e.getKey -> e.getValue.asLong()).toMap).toMap
   }
+
+  /** the txn keys of the root log's snapshots that carry a lineage */
+  private def lineageTxns(reg: Registry): Set[String] =
+    reg.log().snapshots.filter(_.summary.isDefined).flatMap(_.txn).toSet
 
   /** the groups of a `groups`-group root whose ack is in its log */
   private def acked(reg: Registry, groups: Int = 4): Seq[Int] = (0 until groups).filter(reg.isCommitted)
@@ -48,8 +51,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     reg.commitLog.state().files.map(_.path).filter(_.startsWith(s"$table/data/"))
 
   /** `observedMetrics`, read from lineage metadata alone, equals the data
-    * itself: sink rows, the registry's offsets aggregate, and the sizes of
-    * the sink files the root log lists. */
+    * itself: sink rows, the registry's offsets aggregate, and the on-disk
+    * sizes of the sink files the root log lists. */
   private def assertMetricsMatchData(root: String): Unit = {
     val m = PipelineRunner.observedMetrics(root, spark)
     val reg = new Registry(root, spark)
@@ -59,7 +62,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val r = reg.registry().agg(sum("row_count"), sum("filtered")).collect()(0)
     assert(m("events.total") == r.getLong(0), s"$m")
     assert(m("events.filtered") == r.getLong(1), s"$m")
-    val sinkBytes = reg.commitLog.state().files.filter(_.path.startsWith("sinks/")).map(_.size).sum
+    val sinkBytes = reg.commitLog.state().files.filter(_.path.startsWith("sinks/"))
+      .map(f => new java.io.File(s"$root/${f.path}").length).sum
     assert(m("output.write_bytes") == sinkBytes, s"$m")
   }
 
@@ -224,7 +228,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     }
     val reg = new Registry(root, spark)
     val before = reg.commitLog.state()
-    assert(before.txnKeys.keySet == Set("group-0") && listed(reg, Registry.OffsetsTable).nonEmpty)
+    assert(before.txnKeys == Set("group-0") && listed(reg, Registry.OffsetsTable).nonEmpty)
     PipelineRunner.run(input, root, groups = 4)
     val after = reg.commitLog.state()
     val added = after.snapshots.drop(before.snapshots.size)
@@ -254,7 +258,7 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     new graft.checkpoint.SnapshotTable(s"$acked/registry", spark)
       .append(Seq(("c1", 1)).toDF("partition_key", "max_turn_idx"), Some("group-0"))
     new graft.checkpoint.SnapshotTable(s"$acked/commits", spark)
-      .commit("group-0", """{"group":0,"counts":{},"writes":{}}""")
+      .commit("group-0", Some("""{"group":0,"counts":{},"writes":{}}"""))
     for (root <- Seq(sinksOnly, acked)) {
       val reg = new Registry(root, spark)
       val errors = Seq(
@@ -716,8 +720,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))")).first().getLong(0)
     val txn = s"batch-0-${java.lang.Long.toHexString(sig)}"
     val reg = new Registry(streamed, spark)
-    assert(reg.commitLog.state().txnKeys.keySet == Set(txn))
-    assert(reg.lineage().keySet == Set(txn))
+    assert(reg.commitLog.state().txnKeys == Set(txn))
+    assert(lineageTxns(reg) == Set(txn))
   }
 
   /** jobs started while `body` runs, counted by a listener on the session */
@@ -786,8 +790,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       .awaitTermination(120000)
     val reg = new Registry(root, spark)
     assert(reg.commitLog.liveVersions() == Seq(1L))
-    assert(reg.lineage().keySet == Set(txn))
-    assert(reg.commitLog.snapshotForTxn(txn).exists(_.run != crashed.runId))
+    assert(lineageTxns(reg) == Set(txn))
+    assert(reg.log().snapshotOf(txn).exists(_.run != crashed.runId))
     val expected = routed.groupBy("sink").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     for (s <- Sinks.All)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.SnapshotTable
@@ -143,6 +144,18 @@ class SnapshotTableSpec extends SparkSpec {
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     for (f <- fresh) assert(f.exists(), s"fresh temp state is protected by the grace window: $f")
     assert(t.read().get.count() == 1)
+    // a root whose first run was killed before its first commit: no
+    // version, no metadata/ dir, only the run's staging — swept the same
+    val unborn = scratchDir("graft-snaptbl")
+    val killed = Seq(dir(s"$unborn/_tmp-run-rkilled", "group=0/sink=es/part-0.parquet"),
+      dir(s"$unborn/_tmp-offsets-rkilled", "slice=0/part-0.parquet"))
+    killed.foreach(f => Files.walk(f.toPath).forEach(p => p.toFile.setLastModified(old)))
+    val live = Seq(dir(s"$unborn/_tmp-run-rlive", "group=0/sink=es/part-0.parquet"))
+    val u = new SnapshotTable(unborn, spark)
+    assert(u.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L) == 0)
+    for (f <- killed) assert(!f.exists(), s"a killed first run's aged staging must be reclaimed: $f")
+    for (f <- live) assert(f.exists(), s"a live first run's staging is protected: $f")
+    assert(u.liveVersions().isEmpty && !new java.io.File(s"$unborn/metadata").exists())
   }
 
   test("expireSnapshots keeps an aged staging dir while a fresh file is inside") {
@@ -170,28 +183,70 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("versions record the data schema; a doc without one still reads") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
-    t.append(Seq((2, "c")).toDF("id", "v"), None)
+    t.append(Seq((1, "a")).toDF("id", "v"), Some("b1"))
+    t.append(Seq((2, "c")).toDF("id", "v"), Some("b2"))
     val st = t.state()
     val inferred = spark.read.parquet(st.files.map(f => s"${t.root}/${f.path}"): _*).schema
     assert(st.schema.contains(inferred))
     assert(t.stateAt(1).get.schema.contains(inferred))
     assert(t.read().get.schema == inferred)
-    // a version written before schemas were recorded, by a writer that
-    // also pointed at manifest files: reads fall back to inference and take
-    // the files from the snapshot history, never the manifests (the .crc
-    // sidecar goes too, or the checksum would not match)
-    val doc = new java.io.File(s"${t.root}/metadata/v000002.json")
+    // an ack: a sink slice and a lineage summary in one commit
+    val sinkRows = Seq(("c1", 1)).toDF("conv_id", "turn_idx")
+    val staged = scratchDir("graft-snaptbl-staged")
+    sinkRows.write.mode("overwrite").parquet(staged)
+    val sink = t.moveIn(staged, "sinks/sink_es")
+    t.commit("group-0", Some("""{"groups":1,"counts":{"sink_es":1,"filtered":1}}"""),
+      Seq(SnapshotTable.Slice("sinks/sink_es", sink, Some(sinkRows.schema))))
+    val metrics = graft.pipeline.PipelineRunner.observedMetrics(t.root, spark)
+    assert(metrics("events.total") == 2 && metrics("output.write_bytes") == sink.map(_.size).sum)
+    // a fresh doc records each fact once: no key that a read derives
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("schemas")
-    val m = node.putArray("manifests").addObject()
+    def docFile(v: Int) = new java.io.File(f"${t.root}/metadata/v$v%06d.json")
+    def node(v: Int) = mapper.readTree(docFile(v)).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    def keys(n: com.fasterxml.jackson.databind.JsonNode) = n.fieldNames().asScala.toSet
+    def snapshotKeys(v: Int) = node(v).get("snapshots").elements().asScala.map(keys).toSeq
+    assert(keys(node(3)) == Set("format", "schemas", "snapshots"))
+    assert(snapshotKeys(3) == Seq(Set("id", "run", "txn", "added"), Set("id", "run", "txn", "added"),
+      Set("id", "run", "txn", "summary", "added")))
+    // the same version as the previous format wrote it — the derived keys
+    // (version, snapshot ids, txn-key map, operations) and a lineage that
+    // repeated the sink's write stats — before schemas were recorded, by a
+    // writer that also pointed at manifest files: reads fall back to
+    // inference and take the files from the snapshot history, never the
+    // manifests (the .crc sidecar goes too, or the checksum would not match)
+    val v2 = node(3)
+    val snaps = v2.get("snapshots").elements().asScala.toSeq
+      .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+    v2.put("format", "graft-snapshot-v2").put("version", 3)
+    v2.put("snapshot_id", snaps(2).get("id").asText())
+    v2.put("parent_snapshot_id", snaps(1).get("id").asText())
+    val txnKeys = v2.putObject("txn_keys")
+    snaps.foreach { o =>
+      txnKeys.put(o.get("txn").asText(), o.get("id").asText())
+      o.put("operation", "append")
+    }
+    snaps(2).put("summary", s"""{"group":0,"groups":1,"counts":{"sink_es":1,"filtered":1},""" +
+      s""""writes":{"sink_es":{"bytes":${sink.map(_.size).sum},"files":${sink.size}}}}""")
+    v2.remove("schemas")
+    val m = v2.putArray("manifests").addObject()
     m.put("path", "metadata/m-older-writer-0.json"); m.put("count", 2); m.put("bytes", 1L)
-    mapper.writeValue(doc, node)
-    new java.io.File(s"${t.root}/metadata/.v000002.json.crc").delete()
-    assert(t.state().schema.isEmpty)
+    mapper.writeValue(docFile(3), v2)
+    new java.io.File(s"${t.root}/metadata/.v000003.json.crc").delete()
+    val old = t.state()
+    assert(old.version == 3 && old.schema.isEmpty)
+    assert(old.txnKeys == Set("b1", "b2", "group-0") && old.snapshots.forall(_.operation == "append"))
     val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(rows == Map(1 -> "a", 2 -> "c"))
+    assert(t.readTable("sinks/sink_es").get.count() == 1)
+    assert(graft.pipeline.PipelineRunner.observedMetrics(t.root, spark) == metrics)
+    // txn idempotence holds over it, and the next commit writes the new format
+    assert(t.append(Seq((2, "c")).toDF("id", "v"), Some("b2")).alreadyCommitted)
+    assert(t.state().version == 3)
+    t.append(Seq((3, "d")).toDF("id", "v"), Some("b3"))
+    assert(keys(node(4)) == Set("format", "schemas", "snapshots"))
+    assert(node(4).get("format").asText() == "graft-snapshot-v3")
+    assert(t.state().txnKeys == Set("b1", "b2", "group-0", "b3") && t.read().get.count() == 3)
+    assert(graft.pipeline.PipelineRunner.observedMetrics(t.root, spark) == metrics)
     // files that differ only in which columns they hold record the union
     // (a file without a column reads it as null) ...
     val u = tmpTable()
@@ -228,29 +283,29 @@ class SnapshotTableSpec extends SparkSpec {
     val t = tmpTable()
     t.append(Seq((1, "a")).toDF("id", "v"), Some("data-1"))
     val files = t.state().files
-    val c = t.commit("ack-1", """{"n":1}""")
+    val c = t.commit("ack-1", Some("""{"n":1}"""))
     assert(!c.alreadyCommitted && c.addedFiles == 0 && c.addedBytes == 0)
-    val retry = t.commit("ack-1", """{"n":2}""")
+    val retry = t.commit("ack-1", Some("""{"n":2}"""))
     assert(retry.alreadyCommitted && retry.snapshotId == c.snapshotId)
     val st = t.state()
     assert(st.version == 2, "the rejected retry must not add a version")
     assert(st.files == files && st.schema.isDefined)
-    val snap = t.snapshotForTxn("ack-1").get
+    val snap = st.snapshotOf("ack-1").get
     assert(snap.operation == "metadata" && snap.added.isEmpty)
     assert(snap.summary.contains("""{"n":1}"""))
-    assert(t.snapshotForTxn("data-1").get.summary.isEmpty)
+    assert(st.snapshotOf("data-1").get.summary.isEmpty)
     assert(t.read().get.count() == 1)
     // a table of metadata commits alone holds no files and reads as empty
     val log = tmpTable()
-    log.commit("group-0", "{}")
-    assert(log.read().isEmpty && log.state().txnKeys.keySet == Set("group-0"))
+    log.commit("group-0", Some("{}"))
+    assert(log.read().isEmpty && log.state().txnKeys == Set("group-0"))
   }
 
   test("a listed data file deleted out of band fails the read by name") {
     val t = tmpTable()
     t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
     t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
-    val gone = t.snapshotForTxn("b2").get.added.head.path
+    val gone = t.state().snapshotOf("b2").get.added.head.path
     val name = gone.stripPrefix("data/")
     new java.io.File(s"${t.root}/$gone").delete()
     new java.io.File(s"${t.root}/data/.$name.crc").delete()
@@ -314,7 +369,7 @@ class SnapshotTableSpec extends SparkSpec {
     new java.io.File(s"${t.root}/metadata/.v000001.json.crc").delete()
     val e = intercept[IllegalStateException](t.read())
     assert(e.getMessage.contains("v000001.json is a graft-snapshot-v1 version doc") &&
-      e.getMessage.contains("reads graft-snapshot-v2 only"), e.getMessage)
+      e.getMessage.contains("reads graft-snapshot-v2 and graft-snapshot-v3"), e.getMessage)
   }
 
   test("one commit lists slices of several tables; each reads its own files and schema") {
@@ -333,7 +388,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(slices.forall(_.files.nonEmpty) && slices(1).files.forall(_.path.startsWith("b/c/data/")))
     // moved but not committed: invisible
     assert(log.readTable("a").isEmpty && log.state().version == 0)
-    val c = log.commit("t-1", "{}", slices)
+    val c = log.commit("t-1", Some("{}"), slices)
     assert(!c.alreadyCommitted && c.addedFiles == slices.map(_.files.size).sum)
     assert(log.liveVersions() == Seq(1L) && new java.io.File(s"$root/metadata/v000001.json").exists())
     val st = log.state()
@@ -344,7 +399,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(log.readTable("b/c").get.count() == 1 && log.read().isEmpty)
     // a retry of the key loses and deletes the files it moved in
     val again = log.moveIn(staged(b), "b/c")
-    assert(log.commit("t-1", "{}", Seq(SnapshotTable.Slice("b/c", again, None))).alreadyCommitted)
+    assert(log.commit("t-1", Some("{}"), Seq(SnapshotTable.Slice("b/c", again, None))).alreadyCommitted)
     assert(again.forall(f => !new java.io.File(s"$root/${f.path}").exists()))
     // files moved and never committed are orphans of their table's data dir
     val stray = log.moveIn(staged(b), "b/c")
@@ -387,7 +442,7 @@ class SnapshotTableSpec extends SparkSpec {
     val expected = parquet(before)
     assert(expected.size >= 3 && expected.forall(_._1.matches("k=[xy]/j=[12]/part-.*")), expected)
     assert(before.exists(_._1 == "_SUCCESS") && onDisk().exists(_.endsWith(".parquet.crc")))
-    val r = t.commitStagedDir(staged, Some("s1"))
+    val r = t.commit("s1", None, Seq(SnapshotTable.Slice("", t.moveIn(staged), None)))
     assert(r.addedFiles == expected.size && r.addedBytes == expected.map(_._2).sum)
     assert(t.state().files.map(_.size).sorted == expected.map(_._2).sorted)
     // the data files moved, with their .crc; everything else stayed
