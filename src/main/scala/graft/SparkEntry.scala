@@ -230,10 +230,15 @@ object SparkEntry {
       val root = ScratchDir("graft-q-tt")
       val tbl = new graft.checkpoint.SnapshotTable(root, s)
       val base = t(s, dir)
-      tbl.append(base.filter(pmod(col("turn_idx"), lit(3)) === 0), Some("batch-a"))
-      tbl.append(base.filter(pmod(col("turn_idx"), lit(3)) =!= 0), Some("batch-b"))
+      val staging = tbl.stagingDir("batch")
+      for ((txn, third) <- Seq("batch-a" -> true, "batch-b" -> false)) {
+        val batch = base.filter((pmod(col("turn_idx"), lit(3)) === 0) === third)
+        batch.write.options(graft.io.LocalFs.writeOptions).mode("overwrite").parquet(staging)
+        tbl.commit(txn, None,
+          Seq(graft.checkpoint.SnapshotTable.Slice("", tbl.moveIn(staging), Some(batch.schema))))
+      }
       (1L to 2L).map { v =>
-        tbl.readVersion(v).get.groupBy("role")
+        tbl.stateAt(v).flatMap(tbl.readTable("", _)).get.groupBy("role")
           .agg(count(lit(1)).as("events"))
           .withColumn("version", lit(v))
       }.reduce(_ unionByName _)

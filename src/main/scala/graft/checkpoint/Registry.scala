@@ -108,10 +108,10 @@ final class Registry(val root: String, spark: SparkSession,
   def isCommitted(group: Int): Boolean = log().txnKeys.contains(Registry.groupTxn(group))
 
   /** this runner's private staging dir: the run's single fan-out write
-    * lands here, partitioned by group and sink. Its `_tmp-` name lets
-    * [[SnapshotTable.expireSnapshots]] reclaim it once aged when the run
-    * was killed before its cleanup. */
-  def stagingRunDir: String = s"$root/_tmp-run-$runId"
+    * lands here, partitioned by group and sink. [[SnapshotTable.stagingDir]]
+    * names it, so [[SnapshotTable.expireSnapshots]] reclaims it once aged
+    * when the run was killed before its cleanup. */
+  val stagingRunDir: String = commitLog.stagingDir("run")
 
   /** one group's slice of the run's staged fan-out. */
   def stagingGroupDir(group: Int): String = s"$stagingRunDir/group=$group"
@@ -119,7 +119,7 @@ final class Registry(val root: String, spark: SparkSession,
   /** this runner's offsets staging: a sibling of [[stagingRunDir]], not
     * inside it, since the fan-out write (which runs at the same time) clears
     * its whole output dir first. */
-  def stagingOffsetsDir: String = s"$root/_tmp-offsets-$runId"
+  val stagingOffsetsDir: String = commitLog.stagingDir("offsets")
 
   /** one group's slice of the run's staged offsets. */
   def stagedOffsets(group: Int): String = s"$stagingOffsetsDir/slice=$group"

@@ -2,6 +2,7 @@ package graft.checkpoint
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -68,14 +69,15 @@ import graft.io.LocalFs
   * and multi-writer races effectively-once — the same role as the
   * reference's registrar ACK gate (filebeat/beater/acker.go:37-68).
   *
-  * Operations: [[append]] (a DataFrame staged through a temp dir) and
-  * [[commit]] (files moved in with [[moveIn]], of any of the log's tables,
-  * plus a txn key and an optional `summary` string — Iceberg's snapshot
-  * summary, where the root log keeps each group's counts for metrics read
-  * with no Spark job; no files makes it METADATA-ONLY). Every table is
-  * APPEND-ONLY, so the newest version lists every file ever committed;
-  * every version's metadata is retained, so any historical snapshot
-  * remains readable (time travel).
+  * Operations: one write, one read. A writer stages parquet under a
+  * [[stagingDir]], moves it into any of the log's tables with [[moveIn]],
+  * then [[commit]]s the moved files with a txn key and an optional
+  * `summary` string — Iceberg's snapshot summary, where the root log keeps
+  * each group's counts for metrics read with no Spark job; no files makes
+  * it METADATA-ONLY. A reader takes [[state]] or [[stateAt]] a version and
+  * [[readTable]]s it. Every table is APPEND-ONLY, so the newest version
+  * lists every file ever committed; every version's metadata is retained,
+  * so any historical snapshot remains readable (time travel).
   *
   * The version doc (`graft-snapshot-v3`) records each fact once: it is
   * `{format, schemas, snapshots}`, each snapshot `{id, run, txn?, summary?,
@@ -167,9 +169,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     }
   }
 
-  /** snapshot-isolated read of the current table state. None when empty. */
-  def read(): Option[DataFrame] = readTable("")
-
   /** snapshot-isolated read of one of the log's tables in `st` (default:
     * the newest version): the files its snapshots added, with the table's
     * recorded schema. None when the table holds no file. */
@@ -196,15 +195,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     else if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSeq
     else Seq.empty
 
-  /** committed state AT `version`; None once expired (or never committed). */
+  /** committed state AT `version`; None once expired (or never committed).
+    * A time-travel read is `stateAt(v).flatMap(readTable(t, _))`: every
+    * commit is one version. */
   def stateAt(version: Long): Option[TableState] =
     if (version < 1 || !fs.exists(versionPath(version))) None else Some(readMeta(version))
-
-  /** time-travel read: the table exactly as of `version`. None when the
-    * version is expired/unknown or held no files. Every commit is one
-    * version. */
-  def readVersion(version: Long): Option[DataFrame] =
-    stateAt(version).flatMap(readTable("", _))
 
   // ------------------------------------------------------------- writing
 
@@ -214,35 +209,41 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * already committed returns `alreadyCommitted` with the original
     * snapshot id and deletes the slices' files (a racing loser's copies).
     * No slices makes it a METADATA-ONLY commit (operation `metadata`). No
-    * Spark job runs. */
+    * Spark job runs. Each attempt reads the newest state: a writer that
+    * committed since owns v(N+1), so the publish fails and the next
+    * attempt re-reads. */
   def commit(txn: String, summary: Option[String], slices: Seq[Slice] = Seq.empty,
-             id: String = newSnapshotId()): CommitResult =
-    commitMoved(state(), slices, Some(txn), summary, id)
+             id: String = newSnapshotId()): CommitResult = {
+    val moved = slices.flatMap(_.files)
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      attempt += 1
+      val st = state()
+      st.snapshotOf(txn).foreach { s =>
+        // another writer (or a previous run of this job) already committed
+        // this transaction: our files are redundant — remove and defer
+        moved.foreach(f => fs.delete(new Path(root, f.path), false))
+        return committed(s)
+      }
+      val snap = SnapshotInfo(id, runId, Some(txn), moved, summary)
+      if (casCommit(st, buildMeta(st, snap, nextSchemas(st, slices))))
+        return CommitResult(snap.id, alreadyCommitted = false,
+          moved.map(_.size).sum, moved.size, owned = true)
+    }
+    throw new java.io.IOException(
+      s"commit into $root failed after $MaxCommitAttempts CAS attempts — " +
+        "the metadata pointer is not advancing (filesystem fault?)")
+  }
 
   /** a fresh snapshot id of this writer, for a caller that names a
     * [[commit]] before making it. */
   def newSnapshotId(): String = s"s-$runId-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** a fresh private staging dir under the table root, for a caller to
-    * write parquet into and [[moveIn]]. A dir left by a writer that died
-    * is reclaimed by [[expireSnapshots]] once aged. */
-  def stagingDir(): String =
-    new Path(root, s"_tmp-append-$runId-${java.util.UUID.randomUUID()}").toString
-
-  /** append a DataFrame as one snapshot: write it to a [[stagingDir]],
-    * [[moveIn]] its files, then commit them against the state read before
-    * the write (a writer that committed since owns v(N+1), so the first
-    * publish fails and the retry re-reads). A txn key already committed
-    * skips the write. */
-  def append(df: DataFrame, txn: Option[String]): CommitResult = {
-    val st = state()
-    txn.flatMap(st.snapshotOf).foreach(s => return committed(s))
-    val tmp = stagingDir()
-    try {
-      df.write.options(LocalFs.writeOptions).mode("overwrite").parquet(tmp)
-      commitMoved(st, Seq(Slice("", moveIn(tmp), Some(df.schema))), txn, None, newSnapshotId())
-    } finally fs.delete(new Path(tmp), true)
-  }
+  /** this writer's private staging dir for `kind`, `<root>/_tmp-<kind>-<runId>`:
+    * a caller writes parquet into it and [[moveIn]]s it. The one namer of
+    * the `_tmp-` dirs that [[expireSnapshots]] reclaims once aged, when
+    * the writer died before its cleanup. */
+  def stagingDir(kind: String): String = new Path(root, s"$StagingPrefix$kind-$runId").toString
 
   /** move the `.parquet` files under `stagedDir` (at any depth) into
     * `table`'s data dir with run-unique names; returns their entries,
@@ -289,7 +290,7 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     // own mtime: a live write keeps adding fresh files into an old dir.
     for (f <- entries(metaDir, n => n.startsWith(".tmp-") || n.startsWith("m-"))
          if f.getModificationTime < cutoff) fs.delete(f.getPath, false)
-    for (f <- entries(new Path(root), _.startsWith("_tmp-")) if newestMtime(f) < cutoff)
+    for (f <- entries(new Path(root), _.startsWith(StagingPrefix)) if newestMtime(f) < cutoff)
       fs.delete(f.getPath, true)
     val versions = liveVersions()
     // no version vouches for any file (another layout's tables may sit here)
@@ -365,32 +366,6 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       (next.fold(m - s.table)(x => m.updated(s.table, x.toDDL)), first - s.table)
     }._1
   }
-
-  /** commit pre-moved slices with txn idempotence via the CAS loop; the
-    * first attempt commits against `current`, each retry re-reads. */
-  private def commitMoved(current: TableState, slices: Seq[Slice], txn: Option[String],
-                          summary: Option[String], id: String): CommitResult = {
-    val moved = slices.flatMap(_.files)
-    var st = current
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      if (attempt > 1) st = state()
-      txn.flatMap(st.snapshotOf).foreach { s =>
-        // another writer (or a previous run of this job) already committed
-        // this transaction: our files are redundant — remove and defer
-        moved.foreach(f => fs.delete(new Path(root, f.path), false))
-        return committed(s)
-      }
-      val snap = SnapshotInfo(id, runId, txn, moved, summary)
-      if (casCommit(st, buildMeta(st, snap, nextSchemas(st, slices))))
-        return CommitResult(snap.id, alreadyCommitted = false,
-          moved.map(_.size).sum, moved.size, owned = true)
-    }
-    throw new java.io.IOException(
-      s"append into $root failed after $MaxCommitAttempts CAS attempts — " +
-        "the metadata pointer is not advancing (filesystem fault?)")
-  }
 }
 
 object SnapshotTable {
@@ -453,7 +428,6 @@ object SnapshotTable {
     /** the snapshot that committed `txn` */
     def snapshotOf(txn: String): Option[SnapshotInfo] = snapshots.find(_.txn.contains(txn))
     def schemaOf(table: String): Option[StructType] = schemaDdl.get(table).map(parseSchema)
-    def schema: Option[StructType] = schemaOf("")
   }
 
   private def parseSchema(ddl: String): StructType = StructType.fromDDL(ddl)
@@ -485,6 +459,9 @@ object SnapshotTable {
 
   /** the log's dir under the table root */
   private val LogDir = "metadata"
+
+  /** the name prefix of every staging dir under the root ([[SnapshotTable.stagingDir]]) */
+  private val StagingPrefix = "_tmp-"
 
   /** the scan's file list, given rather than discovered: the entries of
     * one table version, so planning never touches the filesystem. A case
@@ -534,11 +511,16 @@ object SnapshotTable {
     n.elements().asScala.map(f => FileEntry(f.get("path").asText(), f.get("size").asLong())).toSeq
 
   /** read the version doc at `path`, version `version`; a doc of a format
-    * not [[Readable]] is refused by name. Unknown keys are ignored: v2's
-    * derived keys, and the `manifests` that older writers pointed at (the
-    * snapshot history lists every file). */
+    * not [[Readable]] is refused by name, and so is a torn one (empty, or
+    * cut off mid-write). Unknown keys are ignored: v2's derived keys, and
+    * the `manifests` that older writers pointed at (the snapshot history
+    * lists every file). */
   private def parseMeta(fs: FileSystem, path: Path, version: Long): TableState = {
-    val doc = Mapper.readTree(readBytes(fs, path))
+    val bytes = readBytes(fs, path)
+    def torn(cause: Throwable) =
+      new IllegalStateException(s"$path is a torn or truncated version doc (${bytes.length} bytes)", cause)
+    val doc = try Mapper.readTree(bytes) catch { case e: JsonProcessingException => throw torn(e) }
+    if (doc.isMissingNode) throw torn(null)
     val format = Option(doc.get("format")).map(_.asText()).getOrElse("none")
     if (!Readable.contains(format))
       throw new IllegalStateException(

@@ -50,8 +50,7 @@ import graft.model.Sinks
   */
 object PipelineRunner {
 
-  final case class GroupResult(group: Int, counts: Map[String, Long],
-                               writeBytes: Map[String, Long] = Map.empty)
+  final case class GroupResult(group: Int, counts: Map[String, Long])
 
   /** deterministic conv bucket in [0, groups) — NOT Spark's hash() so the
     * assignment is engine-independent and replay-stable. A null conv_id
@@ -108,9 +107,8 @@ object PipelineRunner {
              groups: Option[Int] = None, offsets: Option[StructType] = None): Option[GroupResult] = {
     val counts = staged.counts(group)
     val staging = reg.stagingGroupDir(group)
-    val writeBytes = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0).map { s =>
-      s -> reg.moveIn(txn, Registry.sinkTable(s), s"$staging/sink=$s", Some(staged.schema)).addedBytes
-    }.toMap
+    for (s <- Sinks.All if counts.getOrElse(s, 0L) > 0)
+      reg.moveIn(txn, Registry.sinkTable(s), s"$staging/sink=$s", Some(staged.schema))
     offsets.foreach(schema =>
       reg.moveIn(txn, Registry.OffsetsTable, reg.stagedOffsets(group), Some(schema)))
 
@@ -122,7 +120,7 @@ object PipelineRunner {
     val groupsJson = groups.fold("")(n => s""""groups":$n,""")
     val won = reg.ack(txn, s"""{$groupsJson"counts":$lineage}""")
     reg.cleanupStaging(group) // what is left of the staging is garbage
-    if (won) Some(GroupResult(group, counts, writeBytes)) else None
+    if (won) Some(GroupResult(group, counts)) else None
   }
 
   /** Run (or resume) the pipeline over `input`, writing under `root`.

@@ -11,10 +11,10 @@ import graft.route._
   * DataFrame transform (harvest → processors → publish in the reference,
   * libbeat/publisher/pipeline/client.go:84-146, re-expressed set-at-a-time).
   *
-  * Stays entirely inside whole-stage codegen until the (broadcast) enrich
-  * join; no shuffle is introduced by parse/route at all — at 10^12 rows the
-  * only wide stages are the metric aggregations and the optional
-  * pre-sink `sortWithinPartitions`.
+  * [[transform]] stays entirely inside whole-stage codegen: the enrich is
+  * inline, not a join, and parse/route introduce no shuffle at all — at
+  * 10^12 rows the only wide stages are the metric aggregations and the
+  * optional pre-sink `sortWithinPartitions`.
   */
 object TranscriptPipeline {
 

@@ -273,7 +273,7 @@ object StreamingPipeline {
         // the fingerprint is observed on the staged write itself: ONE job
         // per micro-batch, no persist
         val sig = Observation()
-        val staging = table.stagingDir()
+        val staging = table.stagingDir("curated")
         try {
           rows.observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text))").as("sig"))
             .sortWithinPartitions("conv_id", "turn_idx")

@@ -18,12 +18,12 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("append advances one version per commit; reads are snapshot-isolated") {
     val t = tmpTable()
-    assert(t.state().version == 0 && t.read().isEmpty)
-    val r1 = t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), txn = None)
+    assert(t.state().version == 0 && t.readTable("").isEmpty)
+    val r1 = appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
     assert(!r1.alreadyCommitted && t.state().version == 1)
-    val r2 = t.append(Seq((3, "c")).toDF("id", "v"), txn = None)
+    val r2 = appendTo(t, Seq((3, "c")).toDF("id", "v"), None)
     assert(t.state().version == 2 && r2.snapshotId != r1.snapshotId)
-    assert(t.read().get.count() == 3)
+    assert(t.readTable("").get.count() == 3)
     // metadata records real file sizes
     assert(t.state().files.forall(_.size > 0))
     assert(r1.addedBytes > 0 && r2.addedBytes > 0)
@@ -31,11 +31,11 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("txn keys make appends effectively-once") {
     val t = tmpTable()
-    val first = t.append(Seq((1, "a")).toDF("id", "v"), txn = Some("batch-1"))
-    val retry = t.append(Seq((1, "a")).toDF("id", "v"), txn = Some("batch-1"))
+    val first = appendTo(t, Seq((1, "a")).toDF("id", "v"), Some("batch-1"))
+    val retry = appendTo(t, Seq((1, "a")).toDF("id", "v"), Some("batch-1"))
     assert(!first.alreadyCommitted && retry.alreadyCommitted)
     assert(retry.snapshotId == first.snapshotId)
-    assert(t.read().get.count() == 1)
+    assert(t.readTable("").get.count() == 1)
     assert(t.state().version == 1, "the rejected retry must not add a version")
   }
 
@@ -45,12 +45,12 @@ class SnapshotTableSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = (1 to 4).map { i =>
-      Future(t.append(Seq((i, s"w$i")).toDF("id", "v"), txn = Some(s"w-$i")))
+      Future(appendTo(t, Seq((i, s"w$i")).toDF("id", "v"), Some(s"w-$i")))
     }
     val results = fs.map(Await.result(_, 2.minutes))
     assert(results.forall(!_.alreadyCommitted))
     assert(t.state().version == 4)
-    assert(t.read().get.count() == 4)
+    assert(t.readTable("").get.count() == 4)
     // every committed snapshot id is distinct and recorded in history
     assert(t.state().snapshots.map(_.id).distinct.size == 4)
   }
@@ -61,55 +61,55 @@ class SnapshotTableSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val racers = (1 to 3).map { _ =>
-      Future(t.append(Seq((42, "x")).toDF("id", "v"), txn = Some("the-batch")))
+      Future(appendTo(t, Seq((42, "x")).toDF("id", "v"), Some("the-batch")))
     }
     val results = racers.map(Await.result(_, 2.minutes))
     assert(results.count(!_.alreadyCommitted) == 1)
     assert(results.map(_.snapshotId).distinct.size == 1)
-    assert(t.read().get.count() == 1)
+    assert(t.readTable("").get.count() == 1)
   }
 
   test("a reader's resolved snapshot is immune to commits that land after it") {
     val t = tmpTable()
-    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
-    val view = t.read().get // resolves version 1's file list NOW
-    t.append(Seq((3, "c")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
+    val view = t.readTable("").get // resolves version 1's file list NOW
+    appendTo(t, Seq((3, "c")).toDF("id", "v"), None)
     // the append advanced the table, but the in-flight reader still sees
     // its snapshot
     assert(view.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
       Set((1, "a"), (2, "b")))
-    assert(t.read().get.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+    assert(t.readTable("").get.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
       Set((1, "a"), (2, "b"), (3, "c")))
   }
 
   test("historical snapshots stay readable (metadata retained per version)") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
-    t.append(Seq((2, "b")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(t, Seq((2, "b")).toDF("id", "v"), None)
     // the v1 metadata file still resolves the v1 file list
     val metaDir = new java.io.File(s"${t.root}/metadata")
     assert(metaDir.listFiles().count(_.getName.matches("v\\d+\\.json")) == 2)
   }
 
-  test("time travel: readVersion sees the table as of a commit") {
+  test("time travel: stateAt reads the table as of a commit") {
     val t = tmpTable()
-    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
-    t.append(Seq((3, "c")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), None)
+    appendTo(t, Seq((3, "c")).toDF("id", "v"), None)
     // a later commit grows the live file set; history must not move
-    t.append(Seq((4, "d")).toDF("id", "v"), None)
+    appendTo(t, Seq((4, "d")).toDF("id", "v"), None)
     assert(t.liveVersions() == Seq(1L, 2L, 3L))
-    assert(t.readVersion(1).get.count() == 2)
-    assert(t.readVersion(2).get.count() == 3)
-    assert(t.readVersion(2).get.where(col("id") === 4).isEmpty, "v2 predates the third append")
-    assert(t.readVersion(3).get.where(col("id") === 4).select("v")
+    assert(t.readTable("", t.stateAt(1).get).get.count() == 2)
+    assert(t.readTable("", t.stateAt(2).get).get.count() == 3)
+    assert(t.readTable("", t.stateAt(2).get).get.where(col("id") === 4).isEmpty, "v2 predates the third append")
+    assert(t.readTable("", t.stateAt(3).get).get.where(col("id") === 4).select("v")
       .first().getString(0) == "d")
-    assert(t.readVersion(0).isEmpty && t.readVersion(9).isEmpty)
+    assert(t.stateAt(0).isEmpty && t.stateAt(9).isEmpty)
   }
 
   test("expireSnapshots reclaims crashed writers' temp debris") {
     val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark)
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), None)
     // plant the crash shapes: a candidate-metadata temp (died before
     // publishAtomic), append/merge staging dirs (died before cleanup), a
     // killed pipeline run's staged fan-out and offsets, and a manifest file
@@ -143,7 +143,7 @@ class SnapshotTableSpec extends SparkSpec {
       dir(s"$root/_tmp-offsets-rlive"), file(s"$root/metadata/m-live-writer-0.json"))
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     for (f <- fresh) assert(f.exists(), s"fresh temp state is protected by the grace window: $f")
-    assert(t.read().get.count() == 1)
+    assert(t.readTable("").get.count() == 1)
     // a root whose first run was killed before its first commit: no
     // version, no metadata/ dir, only the run's staging — swept the same
     val unborn = scratchDir("graft-snaptbl")
@@ -161,7 +161,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("expireSnapshots keeps an aged staging dir while a fresh file is inside") {
     val root = scratchDir("graft-snaptbl")
     val t = new SnapshotTable(root, spark)
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), None)
     // a LIVE long merge: its staging dir (and the task dirs under it) were
     // created hours ago, but a task is still writing a part file right now
     val live = new java.io.File(s"$root/_tmp-merge-long-writer")
@@ -178,18 +178,18 @@ class SnapshotTableSpec extends SparkSpec {
     part.setLastModified(old)
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     assert(!live.exists())
-    assert(t.read().get.count() == 1)
+    assert(t.readTable("").get.count() == 1)
   }
 
   test("versions record the data schema; a doc without one still reads") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), Some("b1"))
-    t.append(Seq((2, "c")).toDF("id", "v"), Some("b2"))
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), Some("b1"))
+    appendTo(t, Seq((2, "c")).toDF("id", "v"), Some("b2"))
     val st = t.state()
     val inferred = spark.read.parquet(st.files.map(f => s"${t.root}/${f.path}"): _*).schema
-    assert(st.schema.contains(inferred))
-    assert(t.stateAt(1).get.schema.contains(inferred))
-    assert(t.read().get.schema == inferred)
+    assert(st.schemaOf("").contains(inferred))
+    assert(t.stateAt(1).get.schemaOf("").contains(inferred))
+    assert(t.readTable("").get.schema == inferred)
     // an ack: a sink slice and a lineage summary in one commit
     val sinkRows = Seq(("c1", 1)).toDF("conv_id", "turn_idx")
     val staged = scratchDir("graft-snaptbl-staged")
@@ -233,46 +233,46 @@ class SnapshotTableSpec extends SparkSpec {
     mapper.writeValue(docFile(3), v2)
     new java.io.File(s"${t.root}/metadata/.v000003.json.crc").delete()
     val old = t.state()
-    assert(old.version == 3 && old.schema.isEmpty)
+    assert(old.version == 3 && old.schemaOf("").isEmpty)
     assert(old.txnKeys == Set("b1", "b2", "group-0") && old.snapshots.forall(_.operation == "append"))
-    val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    val rows = t.readTable("").get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(rows == Map(1 -> "a", 2 -> "c"))
     assert(t.readTable("sinks/sink_es").get.count() == 1)
     assert(graft.pipeline.PipelineRunner.observedMetrics(t.root, spark) == metrics)
     // txn idempotence holds over it, and the next commit writes the new format
-    assert(t.append(Seq((2, "c")).toDF("id", "v"), Some("b2")).alreadyCommitted)
+    assert(appendTo(t, Seq((2, "c")).toDF("id", "v"), Some("b2")).alreadyCommitted)
     assert(t.state().version == 3)
-    t.append(Seq((3, "d")).toDF("id", "v"), Some("b3"))
+    appendTo(t, Seq((3, "d")).toDF("id", "v"), Some("b3"))
     assert(keys(node(4)) == Set("format", "schemas", "snapshots"))
     assert(node(4).get("format").asText() == "graft-snapshot-v3")
-    assert(t.state().txnKeys == Set("b1", "b2", "group-0", "b3") && t.read().get.count() == 3)
+    assert(t.state().txnKeys == Set("b1", "b2", "group-0", "b3") && t.readTable("").get.count() == 3)
     assert(graft.pipeline.PipelineRunner.observedMetrics(t.root, spark) == metrics)
     // files that differ only in which columns they hold record the union
     // (a file without a column reads it as null) ...
     val u = tmpTable()
-    u.append(Seq((1, "a")).toDF("id", "v"), None)
-    u.append(Seq((2, "b", 3L)).toDF("id", "v", "w"), None)
-    assert(u.state().schema.map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")))
-    val both = u.read().get.collect().map(r => (r.getInt(0), r.getString(1), r.get(2))).toSet
+    appendTo(u, Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(u, Seq((2, "b", 3L)).toDF("id", "v", "w"), None)
+    assert(u.state().schemaOf("").map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")))
+    val both = u.readTable("").get.collect().map(r => (r.getInt(0), r.getString(1), r.get(2))).toSet
     assert(both == Set((1, "a", null), (2, "b", 3L)))
     // ... while files that disagree on a column's type record none: reads infer
     val w = tmpTable()
-    w.append(Seq((1, "a")).toDF("id", "v"), None)
-    w.append(Seq((2L, "b")).toDF("id", "v"), None)
-    assert(w.state().schema.isEmpty && w.read().get.count() == 2)
+    appendTo(w, Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(w, Seq((2L, "b")).toDF("id", "v"), None)
+    assert(w.state().schemaOf("").isEmpty && w.readTable("").get.count() == 2)
   }
 
   test("time travel window is bounded by expireSnapshots retention") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
-    t.append(Seq((2, "b")).toDF("id", "v"), None)
-    t.append(Seq((3, "c")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(t, Seq((2, "b")).toDF("id", "v"), None)
+    appendTo(t, Seq((3, "c")).toDF("id", "v"), None)
     t.expireSnapshots(keepVersions = 2, orphanGraceMs = 0)
     assert(t.liveVersions() == Seq(2L, 3L))
-    assert(t.readVersion(1).isEmpty, "expired versions are gone")
-    assert(t.readVersion(2).get.count() == 2)
-    assert(t.readVersion(3).get.count() == 3)
-    assert(t.read().get.count() == 3)
+    assert(t.stateAt(1).isEmpty, "expired versions are gone")
+    assert(t.readTable("", t.stateAt(2).get).get.count() == 2)
+    assert(t.readTable("", t.stateAt(3).get).get.count() == 3)
+    assert(t.readTable("").get.count() == 3)
   }
 
   /** every message along an exception's cause chain */
@@ -281,7 +281,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("metadata-only commit: no files, summary round-trips, txn effectively-once") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), Some("data-1"))
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), Some("data-1"))
     val files = t.state().files
     val c = t.commit("ack-1", Some("""{"n":1}"""))
     assert(!c.alreadyCommitted && c.addedFiles == 0 && c.addedBytes == 0)
@@ -289,47 +289,46 @@ class SnapshotTableSpec extends SparkSpec {
     assert(retry.alreadyCommitted && retry.snapshotId == c.snapshotId)
     val st = t.state()
     assert(st.version == 2, "the rejected retry must not add a version")
-    assert(st.files == files && st.schema.isDefined)
+    assert(st.files == files && st.schemaOf("").isDefined)
     val snap = st.snapshotOf("ack-1").get
     assert(snap.operation == "metadata" && snap.added.isEmpty)
     assert(snap.summary.contains("""{"n":1}"""))
     assert(st.snapshotOf("data-1").get.summary.isEmpty)
-    assert(t.read().get.count() == 1)
+    assert(t.readTable("").get.count() == 1)
     // a table of metadata commits alone holds no files and reads as empty
     val log = tmpTable()
     log.commit("group-0", Some("{}"))
-    assert(log.read().isEmpty && log.state().txnKeys == Set("group-0"))
+    assert(log.readTable("").isEmpty && log.state().txnKeys == Set("group-0"))
   }
 
   test("a listed data file deleted out of band fails the read by name") {
     val t = tmpTable()
-    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
-    t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
+    appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    appendTo(t, Seq((3, "c")).toDF("id", "v"), Some("b2"))
     val gone = t.state().snapshotOf("b2").get.added.head.path
     val name = gone.stripPrefix("data/")
     new java.io.File(s"${t.root}/$gone").delete()
     new java.io.File(s"${t.root}/data/.$name.crc").delete()
     // planning touches no file, so the reads resolve; running them fails
     // on the missing file, by name — never a silently shorter result
-    val reads = Seq(t.read(), t.readVersion(2), t.readTable("")).map(_.get)
+    val reads = Seq(t.readTable(""), t.readTable("", t.stateAt(2).get)).map(_.get)
     reads.foreach { df =>
       assert(df.inputFiles.exists(_.endsWith(name)))
       val e = intercept[Exception](df.collect())
       assert(messages(e).contains(name), messages(e))
     }
     // a version that does not list the file still reads in full
-    assert(t.readVersion(1).get.count() == 2)
     assert(t.readTable("", t.stateAt(1).get).get.count() == 2)
   }
 
   test("a stray unreferenced parquet file under data/ is never read") {
     val t = tmpTable()
-    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
     val tmp = scratchDir("graft-stray")
     Seq((9, "stray")).toDF("id", "v").write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.copy(part.toPath, java.nio.file.Paths.get(s"${t.root}/data/f-stray-0.parquet"))
-    for (df <- Seq(t.read(), t.readVersion(1), t.readTable("")).map(_.get)) {
+    for (df <- Seq(t.readTable(""), t.readTable("", t.stateAt(1).get)).map(_.get)) {
       assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
       assert(!df.inputFiles.exists(_.contains("f-stray")))
     }
@@ -337,39 +336,46 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("listing-free reads return what a listing read of the same files returns") {
     val t = tmpTable()
-    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
-    t.append(Seq((3, "c")).toDF("id", "v"), Some("b2"))
-    t.append(Seq((4, "d")).toDF("id", "v"), Some("b4"))
-    t.append(Seq((5, "e")).toDF("id", "v"), Some("b3"))
+    appendTo(t, Seq((1, "a"), (2, "b")).toDF("id", "v"), Some("b1"))
+    appendTo(t, Seq((3, "c")).toDF("id", "v"), Some("b2"))
+    appendTo(t, Seq((4, "d")).toDF("id", "v"), Some("b4"))
+    appendTo(t, Seq((5, "e")).toDF("id", "v"), Some("b3"))
     def listed(files: Seq[SnapshotTable.FileEntry]) =
       spark.read.parquet(files.map(f => s"${t.root}/${f.path}"): _*)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
     for (v <- t.liveVersions()) {
       val st = t.stateAt(v).get
-      assert(st.schema.isDefined, s"v$v records its schema")
-      val df = t.readVersion(v).get
+      assert(st.schemaOf("").isDefined, s"v$v records its schema")
+      val df = t.readTable("", st).get
       assert(df.schema == listed(st.files).schema)
       assert(rows(df) == rows(listed(st.files)), s"v$v")
     }
-    assert(rows(t.readVersion(2).get) == Seq((1, "a"), (2, "b"), (3, "c")))
-    assert(rows(t.read().get) == Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")))
-    // a read of an earlier state takes that state's files
-    assert(rows(t.readTable("", t.stateAt(3).get).get) == rows(listed(t.stateAt(3).get.files)))
+    assert(rows(t.readTable("", t.stateAt(2).get).get) == Seq((1, "a"), (2, "b"), (3, "c")))
+    assert(rows(t.readTable("").get) == Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")))
   }
 
   test("a version doc of another format is refused by name") {
     val t = tmpTable()
-    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    appendTo(t, Seq((1, "a")).toDF("id", "v"), None)
     val doc = new java.io.File(s"${t.root}/metadata/v000001.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val written = Files.readAllBytes(doc.toPath)
     val node = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     node.put("format", "graft-snapshot-v1")
     mapper.writeValue(doc, node)
     new java.io.File(s"${t.root}/metadata/.v000001.json.crc").delete()
-    val e = intercept[IllegalStateException](t.read())
+    val e = intercept[IllegalStateException](t.readTable(""))
     assert(e.getMessage.contains("v000001.json is a graft-snapshot-v1 version doc") &&
       e.getMessage.contains("reads graft-snapshot-v2 and graft-snapshot-v3"), e.getMessage)
+    // a doc a crash cut short, empty or mid-write, is refused by name too
+    for (torn <- Seq(Array.emptyByteArray, written.take(written.length / 2))) {
+      Files.write(doc.toPath, torn)
+      for (op <- Seq(() => t.readTable(""), () => t.commit("b2", None))) {
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("v000001.json is a torn or truncated version doc"), e.getMessage)
+      }
+    }
   }
 
   test("one commit lists slices of several tables; each reads its own files and schema") {
@@ -392,11 +398,11 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!c.alreadyCommitted && c.addedFiles == slices.map(_.files.size).sum)
     assert(log.liveVersions() == Seq(1L) && new java.io.File(s"$root/metadata/v000001.json").exists())
     val st = log.state()
-    assert(st.schemaDdl.keySet == Set("a", "b/c") && st.schema.isEmpty)
+    assert(st.schemaDdl.keySet == Set("a", "b/c") && st.schemaOf("").isEmpty)
     assert(log.readTable("a").get.collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
       Set(1 -> "a", 2 -> "b"))
     assert(log.readTable("b/c").get.columns.toSeq == Seq("key", "n"))
-    assert(log.readTable("b/c").get.count() == 1 && log.read().isEmpty)
+    assert(log.readTable("b/c").get.count() == 1 && log.readTable("").isEmpty)
     // a retry of the key loses and deletes the files it moved in
     val again = log.moveIn(staged(b), "b/c")
     assert(log.commit("t-1", Some("{}"), Seq(SnapshotTable.Slice("b/c", again, None))).alreadyCommitted)
@@ -449,6 +455,6 @@ class SnapshotTableSpec extends SparkSpec {
     val after = onDisk()
     assert(parquet(listed()).isEmpty && !after.exists(_.endsWith(".parquet.crc")), after)
     assert(debris.forall(after.contains) && after.contains("_SUCCESS"), after)
-    assert(t.read().get.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+    assert(t.readTable("").get.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
   }
 }

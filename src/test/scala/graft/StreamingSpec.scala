@@ -124,8 +124,8 @@ class StreamingSpec extends SparkSpec {
     val out = tmpDir("stream-out4")
     input.limit(200).write.mode("overwrite").parquet(src)
     // a root of the layout before the one root log: a sink with its own log
-    new graft.checkpoint.SnapshotTable(s"$out/sinks/${Sinks.Es}", spark)
-      .append(Seq(("c1", 1)).toDF("conv_id", "turn_idx"), Some("group-0"))
+    appendTo(new graft.checkpoint.SnapshotTable(s"$out/sinks/${Sinks.Es}", spark),
+      Seq(("c1", 1)).toDF("conv_id", "turn_idx"), Some("group-0"))
     def parquet() = java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
       .asScala.count(_.toString.endsWith(".parquet"))
     val before = parquet()
@@ -181,7 +181,7 @@ class StreamingSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
 
     val table = new graft.checkpoint.SnapshotTable(s"$out/curated", spark)
-    val curated = table.read().get
+    val curated = table.readTable("").get
     // batch twin: quality survivors' distinct fingerprints
     val survivors = base.filter(col("text").isNotNull &&
       graft.textops.TextOps.gopherReason(col("text")).isNull)
@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSpec {
     StreamingPipeline.startCuratedIngest(
       StreamingPipeline.fromDirectory(spark, src), out, tmpDir("curate-ckpt-b"),
       trigger = Trigger.AvailableNow()).awaitTermination(120000)
-    assert(table.read().get.count() == expected, "replay must not duplicate")
+    assert(table.readTable("").get.count() == expected, "replay must not duplicate")
     assert(table.state().version == versionBefore,
       "replayed batches must not commit new snapshots")
   }
