@@ -2,11 +2,11 @@ package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.functions.deterministic_id
 import graft.io.LocalFs
+import graft.pipeline.TranscriptPipeline
 
 /** Checkpoint registry — the Spark-native rebuild of Filebeat's registrar
   * (filebeat/registrar/registrar.go:139-214) and the filestream cursor store
@@ -24,7 +24,8 @@ import graft.io.LocalFs
   *                               (`{"groups":N,"counts":{…}}`); write stats
   *                               are the sizes of the files it lists
   *   <root>/sinks/<sink>/data/   a table per sink, in [[Registry.stored]]
-  *                               layout (no `doc_id`: [[readSink]] derives it)
+  *                               layout: the event columns alone, from which
+  *                               [[readSink]] derives the rest
   *   <root>/registry/data/       the offsets: per-conversation high-water marks
   *   <root>/_tmp-run-<id>/       a live run's staged fan-out (`group=<g>/sink=<s>`)
   *   <root>/_tmp-offsets-<id>/   and its staged offsets (`slice=<g>`), written
@@ -206,14 +207,13 @@ final class Registry(val root: String, spark: SparkSession,
       throw new IllegalArgumentException("no committed groups"))
 
   /** One sink's rows in the newest version of the root log: every acked
-    * group's, no other. `doc_id` is derived here, not read (the table
-    * stores no copy of it); on files of older roots that still hold one,
-    * the derived value replaces the stored, equal, value. A query that
-    * never selects it computes no hash. */
+    * group's, no other, with [[TranscriptPipeline.transform]]'s columns
+    * derived from the stored event ([[TranscriptPipeline.fromEvents]]).
+    * Files of older roots that still hold copies of derived columns (24
+    * or 25 columns, with or without a recorded schema) read the same. */
   def readSink(sink: String): Option[DataFrame] =
     commitLog.readTable(Registry.sinkTable(sink), log())
-      .map(_.withColumn("doc_id", deterministic_id(col("conv_id"), col("turn_idx")))
-        .withColumn("sink", lit(sink)))
+      .map(TranscriptPipeline.fromEvents(_, sink))
 }
 
 object Registry {
@@ -229,12 +229,14 @@ object Registry {
   /** a sink's table, a dir under the root */
   def sinkTable(sink: String): String = s"$SinksDir/$sink"
 
-  /** The layout every writer of a sink table stores: routed rows without
-    * `doc_id`, which is 64 incompressible hex characters per row and a
-    * pure function of two stored columns ([[Registry.readSink]] derives it
-    * on read — as Beats keeps `_id` in `@metadata`, outside the stored
-    * document, libbeat/beat/event.go:55-60). */
-  def stored(routed: DataFrame): DataFrame = routed.drop("doc_id")
+  /** The layout every writer of a sink table stores: the routed rows'
+    * event columns ([[TranscriptPipeline.EventColumns]]) and the `group`
+    * and `sink` partition columns. The parse fields, the enrich lookups
+    * and `doc_id` are pure functions of the event, which
+    * [[Registry.readSink]] derives on read — as Beats keeps `_id` in
+    * `@metadata`, outside the stored document, libbeat/beat/event.go:55-60. */
+  def stored(routed: DataFrame): DataFrame =
+    routed.select((TranscriptPipeline.EventColumns :+ "group" :+ "sink").map(col): _*)
 
   /** process-unique fence id. The leading letter is LOAD-BEARING: the id
     * becomes a directory-name component, and a non-numeric first character

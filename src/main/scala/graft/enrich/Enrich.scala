@@ -40,19 +40,21 @@ object Enrich {
     * profile) for dims that are static vocabulary tables. Semantics are
     * identical to [[enrich]] (left join, null on miss — pinned by
     * EnrichSpec); use [[enrich]] when the dim is data-dependent or large. */
-  def enrichInline(df: DataFrame): DataFrame = {
+  def enrichInline(df: DataFrame): DataFrame = df.select(col("*") +: inlineColumns: _*)
+
+  /** [[enrichInline]]'s lookups as columns over `tool` and `role`, for a
+    * caller that adds them in a projection of its own. */
+  def inlineColumns: Seq[Column] = {
     import graft.model.Lookups
     def strMap(entries: Seq[(String, String)]): Column =
       map(entries.sortBy(_._1).flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    val rp = map(graft.model.Lookups.RoleMeta.sortBy(_._1)
+    val rp = map(Lookups.RoleMeta.sortBy(_._1)
       .flatMap { case (k, _, p) => Seq(lit(k), lit(p)) }: _*)
-    df.withColumn("tool_kind",
-        try_element_at(strMap(Lookups.ToolMeta.map(t => t._1 -> t._2)), col("tool")))
-      .withColumn("tool_team",
-        try_element_at(strMap(Lookups.ToolMeta.map(t => t._1 -> t._3)), col("tool")))
-      .withColumn("role_class",
-        try_element_at(strMap(Lookups.RoleMeta.map(r => r._1 -> r._2)), col("role")))
-      .withColumn("role_priority", try_element_at(rp, col("role")))
+    Seq(
+      try_element_at(strMap(Lookups.ToolMeta.map(t => t._1 -> t._2)), col("tool")).as("tool_kind"),
+      try_element_at(strMap(Lookups.ToolMeta.map(t => t._1 -> t._3)), col("tool")).as("tool_team"),
+      try_element_at(strMap(Lookups.RoleMeta.map(r => r._1 -> r._2)), col("role")).as("role_class"),
+      try_element_at(rp, col("role")).as("role_priority"))
   }
 
   /** Salted repartition for skew-heavy keys (hot conv_ids): spreads each key

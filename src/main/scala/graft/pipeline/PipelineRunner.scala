@@ -19,15 +19,17 @@ import graft.model.Sinks
   *    acks independently. A root's group count is fixed by its first run
   *    (each ack records it): another count would re-bucket conversations
   *    that acked groups already committed
-  *  - per run, two input passes that run at the same time: ONE transform
+  *  - per run, two input passes that run at the same time: ONE routing
   *    pass ([[stage]]) fans out every pending group to sink_es / sink_ls /
   *    dropped in one `partitionBy(group, sink)` parquet write with
   *    observe()-attached counters, never a global sort; and, on a thread
-  *    of its own, ONE status-only pass whose per-conversation offsets are
-  *    staged per group. Neither reads the other's output and they stage
-  *    into disjoint dirs, so the two cost the longer of their walls, not
-  *    the sum. Sinks store no `doc_id`:
-  *    [[graft.checkpoint.Registry.readSink]] derives it
+  *    of its own, ONE offsets pass whose per-conversation offsets are
+  *    staged per group. Both route by the status-only fast path
+  *    ([[TranscriptPipeline.sinkFast]]). Neither reads the other's output
+  *    and they stage into disjoint dirs, so the two cost the longer of
+  *    their walls, not the sum. Sinks store the event alone:
+  *    [[graft.checkpoint.Registry.readSink]] derives the parse fields, the
+  *    enrich columns and `doc_id`
   *  - per group: its sink and offsets slices move into their tables, then
   *    ONE commit of the root log lists them all under txn key `group-<g>`
   *    with the group's lineage (its counts) as summary — the ACK, no Spark
@@ -65,8 +67,8 @@ object PipelineRunner {
     * included, zeros left out) and the staged files' schema. */
   final case class Staged(counts: Map[Int, Map[String, Long]], schema: StructType)
 
-  /** The fan-out: ONE job writes `routed` (transform output plus a `group`
-    * column) as [[graft.checkpoint.Registry.stored]] rows into this run's
+  /** The fan-out: ONE job writes `routed` (events with a `sink` and a
+    * `group` column) as [[graft.checkpoint.Registry.stored]] rows into this run's
     * `reg.stagingRunDir`, partitioned by group and sink (outil selector
     * fan-out, libbeat/outputs/outil/select.go:90-93). The counts of each
     * (group in `groups`, sink) are observe() accumulators of the same job,
@@ -157,10 +159,12 @@ object PipelineRunner {
         .withColumn("committed_at", udf(() => now).asNondeterministic()())
 
       // the fan-out pass — ONE job over every pending group, run beside the
-      // offsets pass: neither reads the other's output. The group column is
-      // added AFTER transform (parse projects away extra columns).
+      // offsets pass: neither reads the other's output. It needs only the
+      // route, so it plans neither the parse's field extraction nor the
+      // enrich lookups; `stage` stores the event columns alone, which
+      // projects away any other input column.
       val staged = alongside(reg.stageOffsets(offsets)) {
-        stage(TranscriptPipeline.transform(pendingInput).withColumn("group", bucketCol(groups)),
+        stage(TranscriptPipeline.sinkFast(pendingInput).withColumn("group", bucketCol(groups)),
           reg, pending)
       }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -39,23 +39,37 @@ object TranscriptPipeline {
     default = Sinks.Ls
   )
 
-  /** parse stage: flatten the serverlog struct next to the core columns. */
+  /** The event as it arrives, and all a sink file stores of it: every
+    * other column of [[transform]] is a pure function of these. */
+  val EventColumns: Seq[String] = Seq("conv_id", "turn_idx", "role", "tool", "ts", "text")
+
+  /** parse stage: flatten the serverlog struct next to the event columns. */
   def parse(df: DataFrame): DataFrame =
     df.withColumn("_p", serverlog_parse(col("text")))
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-        col("ts"), col("text"), col("_p.*"))
+      .select(EventColumns.map(col) :+ col("_p.*"): _*)
 
   /** full transform; adds `sink` and a deterministic `doc_id`. The enrich
     * step uses the inline (map-literal) path: the dims are static vocabulary
     * tables, so the lookup stays inside whole-stage codegen with no join
     * operator — semantics identical to the broadcast join (EnrichSpec). */
-  def transform(df: DataFrame): DataFrame = {
-    val parsed = parse(df)
-    val enriched = graft.enrich.Enrich.enrichInline(parsed)
-    enriched
-      .withColumn("sink", selector.sinkColumn)
-      .withColumn("doc_id", deterministic_id(col("conv_id"), col("turn_idx")))
-  }
+  def transform(df: DataFrame): DataFrame =
+    derive(df, selector.sinkColumn.as("sink"), docId)
+
+  /** A sink table's rows from the events it stores: [[transform]]'s
+    * columns by [[transform]]'s own expressions, with `doc_id` and then
+    * `sink` (the table's name, not a route) last. Only the event columns
+    * are read, so a stored copy of a derived column (older layouts) is
+    * replaced by the derived, equal, value; a query that selects no parsed
+    * field plans no parse. */
+  def fromEvents(events: DataFrame, sink: String): DataFrame =
+    derive(events, docId, lit(sink).as("sink"))
+
+  private def docId = deterministic_id(col("conv_id"), col("turn_idx")).as("doc_id")
+
+  /** [[parse]], then the enrich lookups and `last` in ONE projection: one
+    * plan node, not a `withColumn` each, to analyse per read. */
+  private def derive(df: DataFrame, last: Column*): DataFrame =
+    parse(df).select((col("*") +: graft.enrich.Enrich.inlineColumns) ++ last: _*)
 
   /** routed rows destined for real sinks (excludes predicate-filtered). */
   def routed(df: DataFrame): DataFrame =

@@ -55,9 +55,11 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val reg = new Registry(root, batch.sparkSession)
         // observed BEFORE stage drops `filtered` rows: the fingerprint
-        // covers every routed row, the txn key format of earlier roots
+        // covers every routed row, the txn key format of earlier roots. It
+        // and the fan-out need only the route, so the batch is routed by
+        // the status fast path
         val sig = Observation()
-        val routed = TranscriptPipeline.transform(batch)
+        val routed = TranscriptPipeline.sinkFast(batch)
           .observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text, sink))").as("sig"))
           .withColumn("group", lit(0))
         try {

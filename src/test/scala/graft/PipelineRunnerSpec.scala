@@ -314,9 +314,9 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     val crashed = new Registry(root, spark)
     val g0 = input.filter(bucket(4) === 0)
     val staging = crashed.stagingGroupDir(0)
-    Registry.stored(TranscriptPipeline.transform(g0))
+    Registry.stored(TranscriptPipeline.sinkFast(g0).withColumn("group", lit(0)))
       .filter(col("sink") =!= TranscriptPipeline.Filtered)
-      .write.mode("overwrite").partitionBy("sink").parquet(staging)
+      .write.mode("overwrite").partitionBy("group", "sink").parquet(crashed.stagingRunDir)
     val moved = Sinks.All.map(s => crashed.commitSinkStaged(s, 0, s"$staging/sink=$s")) :+
       crashed.mergeOffsets(0, g0.groupBy(col("conv_id").as("partition_key"))
         .agg(max("turn_idx").as("max_turn_idx"), count(lit(1)).as("row_count"))
@@ -529,22 +529,46 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  // --- sink layout: `doc_id` is derived on read, never stored ------------
+  // --- sink layout: a sink stores the event, the rest is derived on read --
 
-  /** readSink's rows equal transform's rows of the same sink, as multisets,
-    * `doc_id` included, and its columns are the transform's with `doc_id`
-    * and `sink` last, in that order */
-  private def assertSinksMatchTransform(root: String): Unit = {
-    val routed = TranscriptPipeline.transform(input)
+  /** readSink's rows equal the rows transform routes to the same sink from
+    * `source` (the root's input), as multisets over every column, and its
+    * columns are the transform's, with their types, `doc_id` and `sink`
+    * last, in that order */
+  private def assertSinksMatchTransform(root: String,
+                                        source: org.apache.spark.sql.DataFrame = input): Unit = {
+    val routed = TranscriptPipeline.transform(source)
     val order = routed.columns.filterNot(Set("doc_id", "sink")).toSeq :+ "doc_id" :+ "sink"
-    for (s <- Sinks.All if routed.filter(col("sink") === s).count() > 0) {
-      val keys = Seq("conv_id", "turn_idx", "doc_id", "text").map(col)
-      val want = routed.filter(col("sink") === s).select(keys: _*)
-      val read = new Registry(root, spark).readSink(s).get
-      val got = read.select(keys: _*)
-      assert(got.count() == want.count(), s"$s rows")
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$s rows differ")
-      assert(read.columns.toSeq == order, s"$s columns")
+    // set operations refuse a map column: compare its sorted entries
+    def comparable(df: org.apache.spark.sql.DataFrame) = df.select(order.map(c =>
+      df.schema(c).dataType match {
+        case _: org.apache.spark.sql.types.MapType => array_sort(map_entries(col(c))).as(c)
+        case _ => col(c)
+      }): _*)
+    val reg = new Registry(root, spark)
+    for (s <- Sinks.All) {
+      val want = routed.filter(col("sink") === s)
+      reg.readSink(s) match {
+        case None => assert(want.isEmpty, s"$s: transform routes rows the root has no table for")
+        case Some(read) =>
+          assert(read.columns.toSeq == order, s"$s columns")
+          assert(read.schema.map(_.dataType.catalogString) ==
+            order.map(routed.schema(_).dataType.catalogString), s"$s types")
+          val (got, exp) = (comparable(read), comparable(want))
+          assert(got.count() == exp.count(), s"$s rows")
+          assert(got.exceptAll(exp).isEmpty && exp.exceptAll(got).isEmpty, s"$s rows differ")
+      }
+    }
+  }
+
+  /** readSink(s) re-routed by the selector over its derived `status` and
+    * `tool` gives `s` on every row: the stored routing and the reading
+    * parser agree */
+  private def assertDerivedRoutesAgree(root: String): Unit = {
+    val reg = new Registry(root, spark)
+    for (s <- Sinks.All; read <- reg.readSink(s)) {
+      val strays = read.filter(TranscriptPipeline.selector.sinkColumn =!= s)
+      assert(strays.isEmpty, s"$s holds rows the derived columns route elsewhere")
     }
   }
 
@@ -574,47 +598,65 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
   }
 
   test("sink files store no doc_id: every committed file's footer lacks it") {
-    val root = tmpDir()
-    PipelineRunner.run(input, root, groups = 2)
-    val files = Sinks.All.flatMap(tableFiles(root, _))
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      val cols = footerColumns(f)
-      assert(cols.contains("conv_id") && cols.contains("turn_idx"), s"$f: $cols")
-      assert(!cols.contains("doc_id"), s"$f stores doc_id: $cols")
+    // the second input carries a column the event does not have
+    for (in <- Seq(input, input.withColumn("source_host", lit("h1")))) {
+      val root = tmpDir()
+      PipelineRunner.run(in, root, groups = 2)
+      val files = Sinks.All.flatMap(tableFiles(root, _))
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val cols = footerColumns(f)
+        assert(cols == TranscriptPipeline.EventColumns, s"$f stores more than the event: $cols")
+      }
     }
   }
 
-  /** a root whose group 0 was committed the old way — its staged slices
-    * still hold doc_id, its sink commits carry `recordSchema`'s schema (the
-    * slices' own with `true`, none with `false`) and its ack the lineage of
-    * exactly those rows — resumed by one run that writes groups 1-3 in the
-    * new layout; returns the root and the sinks group 0 wrote */
-  private def resumedOverOldLayout(recordSchema: Boolean): (String, Seq[String]) = {
-    val root = tmpDir()
+  /** commits groups `gs` of a groups = 4 root the way the production-path
+    * benchmark's traced replay does, and as roots of older layouts hold
+    * them: each group's transform rows (all 25 columns, or 24 without
+    * `doc_id` with `docId = false`) staged per sink, moved in with
+    * `recordSchema`'s schema (the slices' own with `true`, none with
+    * `false`), then acked with the replay's lineage; returns the sinks
+    * the groups wrote */
+  private def commitOldLayout(root: String, gs: Seq[Int], recordSchema: Boolean,
+                              docId: Boolean = true): Seq[String] = {
     val old = new Registry(root, spark)
-    val g0 = TranscriptPipeline.transform(input.filter(bucket(4) === 0))
-    val staging = old.stagingGroupDir(0)
-    g0.filter(col("sink") =!= TranscriptPipeline.Filtered)
-      .write.mode("overwrite").partitionBy("sink").parquet(staging)
-    val schema =
-      if (recordSchema) Some(org.apache.spark.sql.types.StructType(g0.schema.filterNot(_.name == "sink")))
-      else None
-    val counts = g0.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val written = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0)
-    written.foreach(s => old.commitSinkStaged(s, 0, s"$staging/sink=$s", schema))
-    val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    assert(old.commitGroup(0, s"""{"group":0,"counts":$lineage,"writes":{},"snapshots":{}}"""))
+    val written = gs.flatMap { g =>
+      val all = TranscriptPipeline.transform(input.filter(bucket(4) === g))
+      val rows = if (docId) all else all.drop("doc_id")
+      val staging = old.stagingGroupDir(g)
+      rows.filter(col("sink") =!= TranscriptPipeline.Filtered)
+        .write.mode("overwrite").partitionBy("sink").parquet(staging)
+      val schema =
+        if (recordSchema) Some(org.apache.spark.sql.types.StructType(rows.schema.filterNot(_.name == "sink")))
+        else None
+      val counts = rows.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val sinks = Sinks.All.filter(s => counts.getOrElse(s, 0L) > 0)
+      sinks.foreach(s => old.commitSinkStaged(s, g, s"$staging/sink=$s", schema))
+      val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      assert(old.commitGroup(g, s"""{"group":$g,"counts":$lineage,"writes":{},"snapshots":{}}"""))
+      sinks
+    }
     old.cleanupRunStaging()
+    written.distinct
+  }
 
+  /** a root whose group 0 was committed in an older layout
+    * ([[commitOldLayout]]), resumed by one run that writes groups 1-3 in
+    * the event-only layout; returns the root and the sinks group 0 wrote */
+  private def resumedOverOldLayout(recordSchema: Boolean, docId: Boolean = true): (String, Seq[String]) = {
+    val root = tmpDir()
+    val written = commitOldLayout(root, Seq(0), recordSchema, docId)
     assert(PipelineRunner.run(input, root, groups = 4).map(_.group) == Seq(1, 2, 3))
-    val layouts = tableFiles(root, Sinks.Ls).map(f => footerColumns(f).contains("doc_id")).toSet
+    val layouts = tableFiles(root, Sinks.Ls).map(f => footerColumns(f) == TranscriptPipeline.EventColumns).toSet
     assert(layouts == Set(true, false), s"sink_ls must mix both layouts: $layouts")
     (root, written)
   }
 
   test("a root mixing the old (doc_id stored) and new layouts reads the same") {
     assertSinksMatchTransform(resumedOverOldLayout(recordSchema = false)._1)
+    // the layout before sinks stored the event alone: 24 columns, schema recorded
+    assertSinksMatchTransform(resumedOverOldLayout(recordSchema = true, docId = false)._1)
   }
 
   test("resuming over an old-layout slice keeps a recorded sink schema") {
@@ -627,12 +669,33 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     assertSinksMatchTransform(root)
   }
 
+  test("a root in the traced replay's shape (25 stored columns, no recorded schema) reads the same") {
+    val root = tmpDir()
+    commitOldLayout(root, 0 until 4, recordSchema = false)
+    assert(Sinks.All.forall(s => new Registry(root, spark).commitLog.state()
+      .schemaOf(Registry.sinkTable(s)).isEmpty), "no schema is recorded")
+    assertSinksMatchTransform(root)
+  }
+
+  test("every row a sink holds re-routes to that sink through its derived columns") {
+    val clean = tmpDir()
+    PipelineRunner.run(input, clean, groups = 4)
+    val replayed = tmpDir()
+    commitOldLayout(replayed, 0 until 4, recordSchema = false)
+    for (root <- Seq(clean, resumedOverOldLayout(recordSchema = true)._1, replayed))
+      assertDerivedRoutesAgree(root)
+  }
+
   test("plan pin: the fan-out and a sink scan compute no doc_id hash") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    def digests(plan: SparkPlan) = collect(plan) { case p => p.expressions }.flatten
-      .flatMap(_.collect { case d: graft.functions.DigestHex => d })
+    def found(plan: SparkPlan)(pick: PartialFunction[Expression, Expression]) =
+      collect(plan) { case p => p.expressions }.flatten.flatMap(_.collect(pick))
+    def digests(plan: SparkPlan) = found(plan) { case d: graft.functions.DigestHex => d }
+    def parses(plan: SparkPlan) = found(plan) { case p: graft.functions.ServerlogParse => p }
+    def statuses(plan: SparkPlan) = found(plan) { case p: graft.functions.ServerlogStatus => p }
     // a private copy of the input: no plan another spec cached (a cached
     // transform would hide the hash in both directions) can match it
     val src = tmpDir()
@@ -658,25 +721,32 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     // the one write into the run's staging dir itself is the fan-out (the
     // offsets write goes to a sibling of it)
     val writes = plans.asScala.toSeq.flatMap(p => collect(p) {
-      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => w.outputPath.toString
+      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => w.outputPath.toString -> p
     })
-    val fanout = writes.filter(_.matches(".*/_tmp-run-[^/]+"))
+    val fanout = writes.filter(_._1.matches(".*/_tmp-run-[^/]+"))
     assert(fanout.size == 1, s"${fanout.size} fan-out plans")
     // the two staging writes run at once, and each clears its output dir
     // first: neither may hold the other
-    assert(writes.size == 2, writes)
-    for (a <- writes; b <- writes if a != b)
+    assert(writes.size == 2, writes.map(_._1))
+    for ((a, _) <- writes; (b, _) <- writes if a != b)
       assert(!s"$b/".startsWith(s"$a/"), s"$b is inside $a")
     plans.asScala.foreach(p => assert(digests(p).isEmpty, s"hash in a run plan:\n$p"))
+    // the fan-out routes by the status fast path and extracts no field
+    plans.asScala.foreach(p => assert(parses(p).isEmpty, s"parse in a run plan:\n$p"))
+    assert(statuses(fanout.head._2).nonEmpty, s"the fan-out routes by status:\n${fanout.head._2}")
 
     val reg = new Registry(root, spark)
     for (s <- Sinks.All; df <- reg.readSink(s)) {
       val scan = df.select("sink", "conv_id", "text")
       scan.collect()
       assert(digests(scan.queryExecution.executedPlan).isEmpty, s"$s scan hashes")
+      assert(parses(scan.queryExecution.executedPlan).isEmpty, s"$s scan parses")
       val withId = df.select("doc_id")
       withId.collect()
       assert(digests(withId.queryExecution.executedPlan).nonEmpty, s"$s doc_id is derived")
+      val status = df.select("status")
+      status.collect()
+      assert(parses(status.queryExecution.executedPlan).size == 1, s"$s status is derived by one parse")
     }
   }
 
@@ -695,7 +765,8 @@ class PipelineRunnerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
       new Registry(root, spark).commitLog.readTable(Registry.sinkTable(s))
         .map(_.schema.fields.map(f => f.name -> f.dataType).toSeq)
     for (s <- Sinks.All) assert(fields(streamed, s) == fields(batch, s), s)
-    assert(fields(batch, Sinks.Ls).exists(!_.map(_._1).contains("doc_id")))
+    assert(fields(batch, Sinks.Ls).exists(_.map(_._1) == TranscriptPipeline.EventColumns))
+    assertSinksMatchTransform(streamed, spark.read.schema(stream.schema).parquet(src))
 
     // the same read-committed rows per sink
     val keys = Seq("conv_id", "turn_idx", "doc_id", "text").map(col)
