@@ -187,7 +187,6 @@ final class Registry(val root: String, spark: SparkSession,
   def cleanupRunStaging(): Unit = {
     fs.delete(new Path(stagingRunDir), true)
     fs.delete(new Path(stagingOffsetsDir), true)
-    dropEmptyScopes()
   }
 
   /** drop this runner's staging dirs once emptied, so a runner that cleans

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -80,43 +79,29 @@ object BinaryKernel {
 }
 
 /** `gunzip(bin)` → binary; null on corrupt stream (dead-letter, not crash). */
-case class GzipDecompress(child: Expression) extends UnaryExpression {
+case class GzipDecompress(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "gunzip"
-  override protected def nullSafeEval(input: Any): Any =
-    BinaryKernel.gunzip(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.BinaryKernel.gunzip($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): Array[Byte] = BinaryKernel.gunzip(input)
   override protected def withNewChildInternal(newChild: Expression): GzipDecompress =
     copy(child = newChild)
 }
 
 /** `deflate_len(bin)` → int: fixed-config raw-DEFLATE byte length. */
-case class DeflateLen(child: Expression) extends UnaryExpression {
+case class DeflateLen(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "deflate_len"
-  override protected def nullSafeEval(input: Any): Any =
-    BinaryKernel.deflateLen(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BinaryKernel.deflateLen($c);")
+  def evalInput(input: Array[Byte]): Int = BinaryKernel.deflateLen(input)
   override protected def withNewChildInternal(newChild: Expression): DeflateLen =
     copy(child = newChild)
 }
 
 /** `detect_mime(bin)` → string mime type by magic bytes. */
-case class DetectMime(child: Expression) extends UnaryExpression {
+case class DetectMime(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = StringType
   override def prettyName: String = "detect_mime"
-  override protected def nullSafeEval(input: Any): Any =
-    BinaryKernel.sniffMime(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BinaryKernel.sniffMime($c);")
+  def evalInput(input: Array[Byte]): UTF8String = BinaryKernel.sniffMime(input)
   override protected def withNewChildInternal(newChild: Expression): DetectMime =
     copy(child = newChild)
 }
@@ -125,7 +110,8 @@ case class DetectMime(child: Expression) extends UnaryExpression {
   * variant (actions/truncate_fields.go:54-60): cap the UTF-8 encoding at
   * maxBytes, backing off to the previous code-point boundary (a UTF-8
   * continuation byte has the form 10xxxxxx). Zero-copy slice of the input. */
-case class TruncateUtf8Bytes(child: Expression, maxBytes: Int) extends UnaryExpression {
+case class TruncateUtf8Bytes(child: Expression, maxBytes: Int)
+    extends UnaryKernelExpression[UTF8String] {
   require(maxBytes >= 0, s"maxBytes must be >= 0: $maxBytes")
   override def dataType: DataType = StringType
   override def prettyName: String = "truncate_utf8_bytes"
@@ -142,14 +128,6 @@ case class TruncateUtf8Bytes(child: Expression, maxBytes: Int) extends UnaryExpr
     UTF8String.fromBytes(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("truncExpr", this, classOf[TruncateUtf8Bytes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TruncateUtf8Bytes =
     copy(child = newChild)
 }
@@ -164,7 +142,7 @@ case class TruncateUtf8Bytes(child: Expression, maxBytes: Int) extends UnaryExpr
   * the deterministic-id path at 10^12 rows. The algorithm is validated at
   * plan time, like the reference's config check (fingerprint/config.go). */
 case class DigestHex(child: Expression, algo: String = "SHA-256")
-    extends UnaryExpression {
+    extends UnaryKernelExpression[UTF8String] {
   java.security.MessageDigest.getInstance(algo) // plan-time config validation
 
   override def dataType: DataType = StringType
@@ -188,14 +166,6 @@ case class DigestHex(child: Expression, algo: String = "SHA-256")
       i += 1
     }
     UTF8String.fromBytes(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("digestExpr", this, classOf[DigestHex].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): DigestHex =

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -182,7 +181,7 @@ object BpeKernel {
   * table (see [[BpeKernel]] for semantics and the rank-consistency
   * precondition). */
 case class BpeEncodeWords(child: Expression, merges: Seq[(String, String)])
-  extends UnaryExpression {
+  extends UnaryKernelExpression[ArrayData] {
 
   override def dataType: DataType =
     ArrayType(ArrayType(StringType, containsNull = false), containsNull = false)
@@ -191,7 +190,7 @@ case class BpeEncodeWords(child: Expression, merges: Seq[(String, String)])
 
   @transient private lazy val table = new BpeKernel.MergeTable(merges)
 
-  def evalWords(words: ArrayData): ArrayData = {
+  def evalInput(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val out = new Array[ArrayData](n)
     var i = 0
@@ -202,16 +201,6 @@ case class BpeEncodeWords(child: Expression, merges: Seq[(String, String)])
       i += 1
     }
     new GenericArrayData(out.asInstanceOf[Array[Any]])
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalWords(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeExpr", this, classOf[BpeEncodeWords].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.evalWords($c);
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeEncodeWords =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -479,7 +478,7 @@ object CefKernel {
   * line carries no `CEF:<digits>|` header, matching the processor's
   * missing-header failure).
   */
-case class DecodeCef(child: Expression) extends UnaryExpression {
+case class DecodeCef(child: Expression) extends UnaryKernelExpression[UTF8String] {
 
   override def dataType: DataType = CefKernel.schema
   override def nullable: Boolean = true
@@ -499,17 +498,6 @@ case class DecodeCef(child: Expression) extends UnaryExpression {
     val s = scratch.get()
     s.reset()
     CefKernel.parse(b, n, s)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cefExpr", this, classOf[DecodeCef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): DecodeCef =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -160,7 +159,7 @@ object ContainerKernel {
 /** `container_line(line)` → typed container-log struct (never null:
   * undecodable lines come back `valid=false`, the reference's drop). */
 case class ContainerLine(child: Expression, format: String = "auto",
-                         criFlags: Boolean = true) extends UnaryExpression {
+                         criFlags: Boolean = true) extends UnaryKernelExpression[UTF8String] {
   require(Seq("auto", "docker", "json-file", "cri").contains(format),
     s"unknown container log format '$format'")
 
@@ -170,16 +169,6 @@ case class ContainerLine(child: Expression, format: String = "auto",
 
   def evalInput(input: UTF8String): InternalRow =
     ContainerKernel.decode(input, format, criFlags)
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("containerExpr", this, classOf[ContainerLine].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): ContainerLine =
     copy(child = newChild)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -560,7 +559,7 @@ object Dissect {
   * inverts thread scaling on a memory-bound host). */
 case class DissectExpr(child: Expression, pattern: String,
                        trimMode: Dissect.TrimMode = Dissect.TrimNone,
-                       trimChars: String = " ") extends UnaryExpression {
+                       trimChars: String = " ") extends UnaryKernelExpression[UTF8String] {
   @transient private lazy val compiled = Dissect.compile(pattern, trimMode, trimChars)
   // compile eagerly on the driver too, so bad patterns fail at plan time
   private val planTimeSchema: StructType = {
@@ -577,19 +576,8 @@ case class DissectExpr(child: Expression, pattern: String,
   override def nullable: Boolean = true
   override def prettyName: String = "dissect"
 
-  override protected def nullSafeEval(input: Any): Any =
-    compiled.runStruct(input.asInstanceOf[UTF8String], states.get())
-
   def evalInput(input: UTF8String): InternalRow =
     compiled.runStruct(input, states.get())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dissectExpr", this, classOf[DissectExpr].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): DissectExpr =
     copy(child = newChild)
@@ -605,7 +593,7 @@ case class DissectExpr(child: Expression, pattern: String,
   * iteration order is unspecified); `element_at` lookups are unaffected. */
 case class DissectMapExpr(child: Expression, pattern: String,
                           trimMode: Dissect.TrimMode = Dissect.TrimNone,
-                          trimChars: String = " ") extends UnaryExpression {
+                          trimChars: String = " ") extends UnaryKernelExpression[UTF8String] {
   @transient private lazy val compiled = Dissect.compile(pattern, trimMode, trimChars)
   // fail bad patterns at plan time
   Dissect.compile(pattern, trimMode, trimChars)
@@ -614,18 +602,7 @@ case class DissectMapExpr(child: Expression, pattern: String,
   override def nullable: Boolean = true
   override def prettyName: String = "dissect_map"
 
-  override protected def nullSafeEval(input: Any): Any =
-    compiled.runMap(input.asInstanceOf[UTF8String])
-
   def evalInput(input: UTF8String): ArrayBasedMapData = compiled.runMap(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dissectMapExpr", this, classOf[DissectMapExpr].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayBasedMapData) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): DissectMapExpr =
     copy(child = newChild)

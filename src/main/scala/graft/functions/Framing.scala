@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -127,7 +126,7 @@ object FramingKernel {
 
 /** `frame_split(stream)` → array&lt;string&gt; of frames, in order. */
 case class FrameSplit(child: Expression, delimiter: String = "\n",
-                      rfc6587: Boolean = true) extends UnaryExpression {
+                      rfc6587: Boolean = true) extends UnaryKernelExpression[UTF8String] {
   require(delimiter.nonEmpty, "framing delimiter must be non-empty")
 
   private val delimBytes = delimiter.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -140,16 +139,6 @@ case class FrameSplit(child: Expression, delimiter: String = "\n",
     new GenericArrayData(
       FramingKernel.frames(input.getBytes, delimBytes, rfc6587)
         .asInstanceOf[Array[AnyRef]])
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("frameSplit", this, classOf[FrameSplit].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData) $ref.evalInput($c);
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): FrameSplit =
     copy(child = newChild)

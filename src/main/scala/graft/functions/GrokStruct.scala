@@ -3,8 +3,8 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, UnsafeRowWriter}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -123,7 +123,7 @@ private[functions] final class GrokState(pattern: String, nFields: Int) {
   * does not match (≈ `dissect_parsing_error` tagging → dead-letter routing).
   */
 case class GrokStruct(child: Expression, pattern: String, fields: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernelExpression[UTF8String] {
   java.util.regex.Pattern.compile(pattern) // plan-time pattern validation
 
   override def dataType: DataType = StructType(
@@ -135,20 +135,6 @@ case class GrokStruct(child: Expression, pattern: String, fields: Seq[String])
   @transient private lazy val state: ThreadLocal[GrokState] =
     ThreadLocal.withInitial(() => new GrokState(pattern, fields.length))
 
-  override protected def nullSafeEval(input: Any): Any =
-    state.get().parse(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // register `this` once per codegen'd operator; per-row cost is one
-    // virtual call + the (pre-compiled) matcher run
-    val ref = ctx.addReferenceObj("grokExpr", this, classOf[GrokStruct].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
-
-  /** public entry for generated code */
   def evalInput(input: UTF8String): InternalRow = state.get().parse(input)
 
   override protected def withNewChildInternal(newChild: Expression): GrokStruct =

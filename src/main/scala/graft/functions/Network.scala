@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -243,19 +243,11 @@ object IpOps {
 /** `is_valid_ip(s)` → boolean: the string parses as a strict IPv4/IPv6
   * literal (Go `net.ParseIP` semantics — the convert processor's `ip` type
   * check and the dissect `|ip` suffix). */
-case class IsValidIp(child: Expression) extends UnaryExpression {
+case class IsValidIp(child: Expression) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "is_valid_ip"
 
   def evalInput(input: UTF8String): Boolean = IpOps.isValidIp(input.toString)
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("validIp", this, classOf[IsValidIp].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): IsValidIp =
     copy(child = newChild)
@@ -266,7 +258,7 @@ case class IsValidIp(child: Expression) extends UnaryExpression {
   * `network` condition leaf (conditions/network.go:158-178; invalid IP →
   * false, like Check). */
 case class IpInNetworks(child: Expression, networks: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernelExpression[UTF8String] {
   @transient private lazy val matchers = IpOps.compileMatchers(networks)
   IpOps.compileMatchers(networks) // plan-time config validation
 
@@ -276,14 +268,6 @@ case class IpInNetworks(child: Expression, networks: Seq[String])
   def evalInput(input: UTF8String): Boolean = {
     val ip = IpOps.parse(input.toString)
     ip != null && IpOps.anyContains(matchers, ip)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ipInNets", this, classOf[IpInNetworks].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): IpInNetworks =
@@ -296,7 +280,7 @@ case class IpInNetworks(child: Expression, networks: Seq[String])
   * add_network_direction.go:67-106). */
 case class NetworkDirection(left: Expression, right: Expression,
                             internalNetworks: Seq[String])
-    extends BinaryExpression {
+    extends BinaryKernelExpression[UTF8String, UTF8String] {
   @transient private lazy val matchers = IpOps.compileMatchers(internalNetworks)
   IpOps.compileMatchers(internalNetworks)
 
@@ -319,17 +303,6 @@ case class NetworkDirection(left: Expression, right: Expression,
     else if (si) Outbound
     else if (di) Inbound
     else External
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    evalInput(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("netDir", this, classOf[NetworkDirection].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      ${ev.value} = $ref.evalInput($a, $b);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): NetworkDirection =
@@ -411,28 +384,18 @@ object CommunityIdKernel {
 
 /** `community_id(struct(src_ip, dst_ip, src_port, dst_port, protocol))` →
   * the Community ID v1 flow hash string; NULL on bad addresses. */
-case class CommunityId(child: Expression, seed: Int = 0) extends UnaryExpression {
+case class CommunityId(child: Expression, seed: Int = 0)
+    extends UnaryKernelExpression[InternalRow] {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "community_id"
 
-  def evalInput(row: org.apache.spark.sql.catalyst.InternalRow): UTF8String = {
+  def evalInput(row: InternalRow): UTF8String = {
     if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) ||
       row.isNullAt(3) || row.isNullAt(4)) return null
     CommunityIdKernel.hash(row.getUTF8String(0).toString,
       row.getUTF8String(1).toString, row.getInt(2), row.getInt(3),
       row.getInt(4), seed)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cidExpr", this, classOf[CommunityId].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CommunityId =

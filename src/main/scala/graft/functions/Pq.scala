@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -128,7 +127,7 @@ object PqKernel {
 
 /** `pq_encode(vec)` → array<int> of m subspace codes. */
 case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-  extends UnaryExpression {
+  extends UnaryKernelExpression[ArrayData] {
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   // returns null on a dimension mismatch even for a non-null input, so the
@@ -136,36 +135,20 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
   override def nullable: Boolean = true
   override def prettyName: String = "pq_encode"
 
-  def evalInput(v: Any): Any = PqKernel.encode(v.asInstanceOf[ArrayData], codebooks)
-  override protected def nullSafeEval(v: Any): Any = evalInput(v)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEnc", this, classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
+  def evalInput(v: ArrayData): ArrayData = PqKernel.encode(v, codebooks)
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
 }
 
 /** `pq_dot_table(q_vec)` → array<float> flat m×ksub ADC table. */
 case class PqDotTable(child: Expression, codebooks: Array[Array[Array[Float]]])
-  extends UnaryExpression {
+  extends UnaryKernelExpression[ArrayData] {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   // null on dimension mismatch (same contract as PqEncode)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_dot_table"
 
-  def evalInput(v: Any): Any = PqKernel.dotTable(v.asInstanceOf[ArrayData], codebooks)
-  override protected def nullSafeEval(v: Any): Any = evalInput(v)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqTbl", this, classOf[PqDotTable].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
+  def evalInput(v: ArrayData): ArrayData = PqKernel.dotTable(v, codebooks)
   override protected def withNewChildInternal(newChild: Expression): PqDotTable =
     copy(child = newChild)
 }
@@ -173,21 +156,13 @@ case class PqDotTable(child: Expression, codebooks: Array[Array[Array[Float]]])
 /** `pq_adc_score(codes, dot_table)` → double approximate cosine; the
   * codeword-norm table rides along as a plan-time constant. */
 case class PqAdcScore(left: Expression, right: Expression,
-                      norm2: Array[Double], ksub: Int) extends BinaryExpression {
+                      norm2: Array[Double], ksub: Int)
+    extends BinaryKernelExpression[ArrayData, ArrayData] {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc_score"
 
-  def evalInput(codes: Any, table: Any): Any =
-    PqKernel.score(codes.asInstanceOf[ArrayData], table.asInstanceOf[ArrayData],
-      norm2, ksub)
-  override protected def nullSafeEval(codes: Any, table: Any): Any =
-    evalInput(codes, table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqScore", this, classOf[PqAdcScore].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      ${ev.value} = ((java.lang.Double) $ref.evalInput($a, $b)).doubleValue();
-    """)
-  }
+  def evalInput(codes: ArrayData, table: ArrayData): Double =
+    PqKernel.score(codes, table, norm2, ksub)
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): PqAdcScore =
     copy(left = newLeft, right = newRight)

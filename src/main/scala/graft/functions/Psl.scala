@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,7 +161,7 @@ object PslKernel {
   * malformed or is itself a public suffix. */
 case class RegisteredDomain(child: Expression,
                             rules: Seq[String] = PslKernel.FullRules)
-    extends UnaryExpression {
+    extends UnaryKernelExpression[UTF8String] {
   @transient private lazy val compiled = new PslKernel.Compiled(rules)
 
   override def dataType: DataType = StringType
@@ -172,17 +171,6 @@ case class RegisteredDomain(child: Expression,
   def evalInput(input: UTF8String): UTF8String = {
     val rd = compiled.registeredDomain(input.toString)
     if (rd == null) null else UTF8String.fromString(rd)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pslExpr", this, classOf[RegisteredDomain].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): RegisteredDomain =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -126,7 +125,7 @@ object RepetitionKernel {
 }
 
 /** `ngram_char_fracs(text, n)` → struct(top_gram, top_frac, dup_frac). */
-case class NgramCharFracs(child: Expression, n: Int) extends UnaryExpression {
+case class NgramCharFracs(child: Expression, n: Int) extends UnaryKernelExpression[UTF8String] {
   require(n >= 1 && n <= 32, s"n-gram size out of range: $n")
 
   override def dataType: DataType = RepetitionKernel.schema
@@ -134,16 +133,6 @@ case class NgramCharFracs(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "ngram_char_fracs"
 
   def evalInput(input: UTF8String): InternalRow = RepetitionKernel.eval(input, n)
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("repExpr", this, classOf[NgramCharFracs].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): NgramCharFracs =
     copy(child = newChild)

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -467,7 +466,7 @@ final class ServerlogRowWriter {
   * allocation-free fast path: [[ServerlogRowWriter.status]], the same first
   * phase that decides `serverlog_parse(text).status`, without the field
   * extraction. */
-case class ServerlogStatus(child: Expression) extends UnaryExpression {
+case class ServerlogStatus(child: Expression) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = StringType
   override def prettyName: String = "serverlog_status"
 
@@ -477,14 +476,6 @@ case class ServerlogStatus(child: Expression) extends UnaryExpression {
 
   def evalInput(input: UTF8String): UTF8String = writers.get().status(input)
 
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("serverlogStatus", this, classOf[ServerlogStatus].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.evalInput($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ServerlogStatus =
     copy(child = newChild)
 }
@@ -493,7 +484,7 @@ case class ServerlogStatus(child: Expression) extends UnaryExpression {
   * [[ServerlogKernel.schema]]). Native expression with codegen (a single
   * call inside whole-stage codegen) — not a UDF, per the engine's
   * north-star parse-stage requirement. */
-case class ServerlogParse(child: Expression) extends UnaryExpression {
+case class ServerlogParse(child: Expression) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = ServerlogKernel.schema
   override def nullable: Boolean = true
   override def prettyName: String = "serverlog_parse"
@@ -506,15 +497,6 @@ case class ServerlogParse(child: Expression) extends UnaryExpression {
     ThreadLocal.withInitial(() => new ServerlogRowWriter)
 
   def evalInput(input: UTF8String): InternalRow = writers.get().parse(input)
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("serverlogExpr", this, classOf[ServerlogParse].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): ServerlogParse =
     copy(child = newChild)

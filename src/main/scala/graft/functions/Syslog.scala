@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -723,7 +722,7 @@ object SyslogKernel {
   */
 case class SyslogParse(child: Expression, mode: String,
                        defaultYear: Int, defaultTzSeconds: Int)
-  extends UnaryExpression {
+  extends UnaryKernelExpression[UTF8String] {
 
   require(mode == "rfc3164" || mode == "rfc5424" || mode == "auto",
     s"unknown syslog format '$mode' (rfc3164|rfc5424|auto)")
@@ -755,17 +754,6 @@ case class SyslogParse(child: Expression, mode: String,
     if (use5424) SyslogKernel.parse5424(b, n, s)
     else SyslogKernel.parse3164(b, n, s, defaultYear)
     SyslogKernel.emit(b, s, defaultTzSeconds)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("syslogExpr", this, classOf[SyslogParse].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): SyslogParse =

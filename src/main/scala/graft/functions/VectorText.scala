@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernels for the vector/text similarity expressions. Kept as plain
-  * static methods so whole-stage codegen emits a single call — the per-row
-  * hot path allocates nothing beyond its result.
+/** Static kernels for the vector/text similarity expressions; each
+  * expression's `evalInput` is one call into them, which both the
+  * interpreted and the generated path make ([[UnaryKernelExpression]]). The
+  * per-row hot path allocates nothing beyond its result.
   */
 object VectorTextKernel {
 
@@ -290,28 +291,20 @@ object VectorTextKernel {
 }
 
 /** `simhash64(tokens)` — 64-bit SimHash of an array<string> column. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryKernelExpression[ArrayData] {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    VectorTextKernel.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorTextKernel.simhash64($c);")
+  def evalInput(input: ArrayData): Long = VectorTextKernel.simhash64(input)
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }
 
 /** `minhash_sig(shingles, k)` — array<long> MinHash signature. */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, k: Int) extends UnaryKernelExpression[ArrayData] {
   require(k > 0 && k <= 512, s"minhash k out of range: $k")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    VectorTextKernel.minhashSig(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorTextKernel.minhashSig($c, $k);")
+  def evalInput(input: ArrayData): ArrayData = VectorTextKernel.minhashSig(input, k)
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
@@ -320,16 +313,13 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   * bucket keys straight from a token array, one kernel pass (shingle hash +
   * signature + band fold, zero intermediate arrays). */
 case class MinHashBandsTokens(child: Expression, w: Int, k: Int, bands: Int)
-    extends UnaryExpression {
+    extends UnaryKernelExpression[ArrayData] {
   require(w > 0 && k > 0 && k <= 512 && bands > 0 && k % bands == 0,
     s"minhash bands config invalid: w=$w k=$k bands=$bands")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_bands_tokens"
-  override protected def nullSafeEval(input: Any): Any =
-    VectorTextKernel.minhashBandsTokens(input.asInstanceOf[ArrayData], w, k, bands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorTextKernel.minhashBandsTokens($c, $w, $k, $bands);")
+  def evalInput(input: ArrayData): ArrayData =
+    VectorTextKernel.minhashBandsTokens(input, w, k, bands)
   override protected def withNewChildInternal(newChild: Expression): MinHashBandsTokens =
     copy(child = newChild)
 }
@@ -337,16 +327,12 @@ case class MinHashBandsTokens(child: Expression, w: Int, k: Int, bands: Int)
 /** `shingle_jaccard_packed(a_tokens, b_tokens, w)` — exact shingle-set
   * intersection/union counts packed `(inter << 32) | union`. */
 case class ShingleJaccardPacked(left: Expression, right: Expression, w: Int)
-    extends BinaryExpression {
+    extends BinaryKernelExpression[ArrayData, ArrayData] {
   require(w > 0, s"shingle width must be positive: $w")
   override def dataType: DataType = LongType
   override def prettyName: String = "shingle_jaccard_packed"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorTextKernel.shingleJaccardPacked(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorTextKernel.shingleJaccardPacked($a, $b, $w);")
+  def evalInput(a: ArrayData, b: ArrayData): Long =
+    VectorTextKernel.shingleJaccardPacked(a, b, w)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleJaccardPacked =
     copy(left = l, right = r)
 }
@@ -373,15 +359,12 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
 /** `hyperplane_bucket(vec, planes, seed)` — random-hyperplane LSH bucket id
   * in hash table `seed`. */
 case class HyperplaneBucket(child: Expression, planes: Int, seed: Int = 0)
-    extends UnaryExpression {
+    extends UnaryKernelExpression[ArrayData] {
   require(planes > 0 && planes <= 30, s"planes out of range: $planes")
   override def dataType: DataType = IntegerType
   override def prettyName: String = "hyperplane_bucket"
-  override protected def nullSafeEval(input: Any): Any =
-    VectorTextKernel.hyperplaneBucket(input.asInstanceOf[ArrayData], planes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorTextKernel.hyperplaneBucket($c, $planes, $seed);")
+  def evalInput(input: ArrayData): Int =
+    VectorTextKernel.hyperplaneBucket(input, planes, seed)
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
     copy(child = newChild)
 }
@@ -391,12 +374,12 @@ case class HyperplaneBucket(child: Expression, planes: Int, seed: Int = 0)
   * (an IVF coarse quantizer is small by definition: nlist × dim floats), so
   * assignment is a pure per-row computation — no join, no shuffle. */
 case class NearestCentroids(child: Expression, centroids: Array[Array[Float]],
-                            nprobe: Int) extends UnaryExpression {
+                            nprobe: Int) extends UnaryKernelExpression[ArrayData] {
   require(centroids.nonEmpty && nprobe > 0 && nprobe <= centroids.length)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
 
-  private def doAssign(v: ArrayData): GenericArrayData = {
+  def evalInput(v: ArrayData): GenericArrayData = {
     val n = centroids.length
     val sims = new Array[Double](n)
     var ci = 0
@@ -441,32 +424,16 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Float]],
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    doAssign(input.asInstanceOf[ArrayData])
-
-  /** public entry for generated code */
-  def evalInput(input: ArrayData): GenericArrayData = doAssign(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfExpr", this, classOf[NearestCentroids].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.evalInput($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
 }
 
 /** `fnv1a32(s)` — the reference kafka fields-hash partitioner's hash
   * (libbeat/outputs/kafka/partition.go:216-238). */
-case class Fnv1a32(child: Expression) extends UnaryExpression {
+case class Fnv1a32(child: Expression) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "fnv1a32"
-  override protected def nullSafeEval(input: Any): Any =
-    VectorTextKernel.fnv1a32(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorTextKernel.fnv1a32($c);")
+  def evalInput(input: UTF8String): Int = VectorTextKernel.fnv1a32(input)
   override protected def withNewChildInternal(newChild: Expression): Fnv1a32 =
     copy(child = newChild)
 }

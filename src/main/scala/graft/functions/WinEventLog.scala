@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -462,24 +461,13 @@ object WinEventLogKernel {
 
 /** `decode_wineventlog(xml)` → typed winlog struct; NULL on undecodable
   * input (→ the processor's error/dead-letter path, processor.go:90-97). */
-case class DecodeWinEventLog(child: Expression) extends UnaryExpression {
+case class DecodeWinEventLog(child: Expression) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = WinEventLogKernel.schema
   override def nullable: Boolean = true
   override def prettyName: String = "decode_wineventlog"
 
   def evalInput(input: UTF8String): InternalRow =
     WinEventLogKernel.decode(input.toString)
-
-  override protected def nullSafeEval(input: Any): Any =
-    evalInput(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winevtExpr", this, classOf[DecodeWinEventLog].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): DecodeWinEventLog =
     copy(child = newChild)

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -128,24 +127,13 @@ object XmlKernel {
 /** `decode_xml_map(xml[, to_lower])` → map<string,string> of dotted leaf
   * paths; NULL on malformed input. */
 case class XmlToMap(child: Expression, toLower: Boolean = false)
-    extends UnaryExpression {
+    extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = MapType(StringType, StringType)
   override def nullable: Boolean = true
   override def prettyName: String = "decode_xml_map"
 
-  override protected def nullSafeEval(input: Any): Any =
-    XmlKernel.evalToMap(input.asInstanceOf[UTF8String], toLower)
-
   def evalInput(input: UTF8String): ArrayBasedMapData =
     XmlKernel.evalToMap(input, toLower)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("xmlExpr", this, classOf[XmlToMap].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayBasedMapData) $ref.evalInput($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): XmlToMap =
     copy(child = newChild)

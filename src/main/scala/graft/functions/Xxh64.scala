@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -104,16 +103,10 @@ object Xxh64Kernel {
 
 /** `xxh64_hex(s)` → 16-char lowercase hex XXH64 digest, seed 0 — bit-parity
   * with the reference fingerprint processor's xxhash method. */
-case class Xxh64Hex(child: Expression, seed: Long = 0L) extends UnaryExpression {
+case class Xxh64Hex(child: Expression, seed: Long = 0L) extends UnaryKernelExpression[UTF8String] {
   override def dataType: DataType = StringType
   override def prettyName: String = "xxh64_hex"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Xxh64Kernel.hashHex(input.asInstanceOf[UTF8String], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Xxh64Kernel.hashHex($c, ${seed}L);")
+  def evalInput(input: UTF8String): UTF8String = Xxh64Kernel.hashHex(input, seed)
 
   override protected def withNewChildInternal(newChild: Expression): Xxh64Hex =
     copy(child = newChild)

@@ -1,11 +1,12 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.UnaryKernelExpression
 
 /** REAL video container support: a from-scratch RIFF/AVI parser
   * (the standard `RIFF('AVI ') { LIST(hdrl){avih, LIST(strl){strh,strf}},
@@ -252,37 +253,23 @@ object Avi {
 /** `video_meta(content)` → struct(codec, width, height,
   * micro_sec_per_frame, total_frames, n_chunks, data_bytes) via the real
   * RIFF/AVI container walk; null on undecodable bytes (dead-letter). */
-case class VideoMeta(child: Expression) extends UnaryExpression {
+case class VideoMeta(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = Avi.metaSchema
   override def nullable: Boolean = true
   override def prettyName: String = "video_meta"
-  override protected def nullSafeEval(input: Any): Any =
-    Avi.metaKernel(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.multimodal.Avi.metaKernel($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): InternalRow = Avi.metaKernel(input)
   override protected def withNewChildInternal(newChild: Expression): VideoMeta =
     copy(child = newChild)
 }
 
 /** `video_frames(content, everyN)` → array<binary> of every-Nth video data
   * chunk (each element is a decodable JPEG for MJPEG streams). */
-case class VideoFrames(child: Expression, everyN: Int) extends UnaryExpression {
+case class VideoFrames(child: Expression, everyN: Int) extends UnaryKernelExpression[Array[Byte]] {
   require(everyN > 0)
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "video_frames"
-  override protected def nullSafeEval(input: Any): Any =
-    Avi.framesKernel(input.asInstanceOf[Array[Byte]], everyN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-        graft.multimodal.Avi.framesKernel($c, $everyN);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): ArrayData = Avi.framesKernel(input, everyN)
   override protected def withNewChildInternal(newChild: Expression): VideoFrames =
     copy(child = newChild)
 }
@@ -290,18 +277,11 @@ case class VideoFrames(child: Expression, everyN: Int) extends UnaryExpression {
 /** `avi_pack(struct(seed, width, height, fps, frames))` → binary: the
   * deterministic hand-rolled AVI of [[Avi.packKernel]] (synthesis side of
   * the video oracle — parsed back by the REAL container walk). */
-case class AviPack(child: Expression) extends UnaryExpression {
+case class AviPack(child: Expression) extends UnaryKernelExpression[InternalRow] {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "avi_pack"
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
+  def evalInput(r: InternalRow): Array[Byte] =
     Avi.packKernel(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.multimodal.Avi.packKernel(
-        $c.getLong(0), $c.getInt(1), $c.getInt(2), $c.getInt(3), $c.getInt(4));
-    """)
   override protected def withNewChildInternal(newChild: Expression): AviPack =
     copy(child = newChild)
 }

@@ -2,12 +2,13 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.UnaryKernelExpression
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with a
   * typed header, processed by Catalyst expressions and per-partition batch
@@ -490,7 +491,7 @@ object Multimodal {
 
 /** `media_meta(content)` → struct(kind, width, height, channels,
   * sample_rate, n_frames, payload_len); null on bad magic (dead-letter). */
-case class MediaMeta(child: Expression) extends UnaryExpression {
+case class MediaMeta(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = StructType(Seq(
     StructField("kind", StringType), StructField("width", IntegerType),
     StructField("height", IntegerType), StructField("channels", IntegerType),
@@ -498,42 +499,28 @@ case class MediaMeta(child: Expression) extends UnaryExpression {
     StructField("payload_len", IntegerType)))
   override def nullable: Boolean = true
   override def prettyName: String = "media_meta"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.metaKernel(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.multimodal.Multimodal.metaKernel($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): InternalRow = Multimodal.metaKernel(input)
   override protected def withNewChildInternal(newChild: Expression): MediaMeta =
     copy(child = newChild)
 }
 
 /** `media_resize(content, w, h)` — real resample for real images, header
   * rewrite for the GRFT fixture (see kernel note). */
-case class MediaResize(child: Expression, w: Int, h: Int) extends UnaryExpression {
+case class MediaResize(child: Expression, w: Int, h: Int)
+    extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "media_resize"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.resizeKernel(input.asInstanceOf[Array[Byte]], w, h)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.multimodal.Multimodal.resizeKernel($c, $w, $h);")
+  def evalInput(input: Array[Byte]): Array[Byte] = Multimodal.resizeKernel(input, w, h)
   override protected def withNewChildInternal(newChild: Expression): MediaResize =
     copy(child = newChild)
 }
 
 /** `media_frames(content, everyN)` → array<binary> of every-Nth frame. */
-case class MediaFrames(child: Expression, everyN: Int) extends UnaryExpression {
+case class MediaFrames(child: Expression, everyN: Int) extends UnaryKernelExpression[Array[Byte]] {
   require(everyN > 0)
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
   override def prettyName: String = "media_frames"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.framesKernel(input.asInstanceOf[Array[Byte]], everyN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.multimodal.Multimodal.framesKernel($c, $everyN);")
+  def evalInput(input: Array[Byte]): ArrayData = Multimodal.framesKernel(input, everyN)
   override protected def withNewChildInternal(newChild: Expression): MediaFrames =
     copy(child = newChild)
 }
@@ -541,18 +528,11 @@ case class MediaFrames(child: Expression, everyN: Int) extends UnaryExpression {
 /** `audio_meta(content)` → struct(encoding, sample_rate, channels, bits,
   * frames, duration_ms, mean_abs) — REAL WAV/AIFF/AU decode via the JDK's
   * javax.sound.sampled; null on undecodable bytes (dead-letter). */
-case class AudioMeta(child: Expression) extends UnaryExpression {
+case class AudioMeta(child: Expression) extends UnaryKernelExpression[Array[Byte]] {
   override def dataType: DataType = Multimodal.audioMetaSchema
   override def nullable: Boolean = true
   override def prettyName: String = "audio_meta"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.audioMetaKernel(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.multimodal.Multimodal.audioMetaKernel($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): InternalRow = Multimodal.audioMetaKernel(input)
   override protected def withNewChildInternal(newChild: Expression): AudioMeta =
     copy(child = newChild)
 }
@@ -560,38 +540,26 @@ case class AudioMeta(child: Expression) extends UnaryExpression {
 /** `wav_pack(struct(seed, sample_rate, channels, frames))` → binary: the
   * deterministic hand-rolled PCM16-LE WAV of [[Multimodal.wavPackKernel]]
   * (synthesis side of the audio oracle — decoded by the REAL JDK parser). */
-case class WavPack(child: Expression) extends UnaryExpression {
+case class WavPack(child: Expression) extends UnaryKernelExpression[InternalRow] {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "wav_pack"
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+  def evalInput(r: InternalRow): Array[Byte] =
     Multimodal.wavPackKernel(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.multimodal.Multimodal.wavPackKernel(
-        $c.getLong(0), $c.getInt(1), $c.getInt(2), $c.getInt(3));
-    """)
   override protected def withNewChildInternal(newChild: Expression): WavPack =
     copy(child = newChild)
 }
 
 /** `audio_samples(content, maxSamples)` → array<double> of normalized
   * PCM samples in [-1, 1), channel-interleaved; null when undecodable. */
-case class AudioSamples(child: Expression, maxSamples: Int) extends UnaryExpression {
+case class AudioSamples(child: Expression, maxSamples: Int)
+    extends UnaryKernelExpression[Array[Byte]] {
   require(maxSamples > 0 && maxSamples <= (1 << 26),
     s"maxSamples out of range: $maxSamples")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "audio_samples"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.audioSamplesKernel(input.asInstanceOf[Array[Byte]], maxSamples)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-        graft.multimodal.Multimodal.audioSamplesKernel($c, $maxSamples);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): ArrayData =
+    Multimodal.audioSamplesKernel(input, maxSamples)
   override protected def withNewChildInternal(newChild: Expression): AudioSamples =
     copy(child = newChild)
 }
@@ -601,21 +569,15 @@ case class AudioSamples(child: Expression, maxSamples: Int) extends UnaryExpress
   * decode (exact-integer interpolation — see
   * [[Multimodal.audioResampleKernel]]); null on undecodable bytes. */
 case class AudioResample(child: Expression, dstRate: Int, maxFrames: Int)
-  extends UnaryExpression {
+  extends UnaryKernelExpression[Array[Byte]] {
   require(dstRate > 0 && dstRate <= 768000, s"dstRate out of range: $dstRate")
   require(maxFrames > 0 && maxFrames <= (1 << 26),
     s"maxFrames out of range: $maxFrames")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "audio_resample"
-  override protected def nullSafeEval(input: Any): Any =
-    Multimodal.audioResampleKernel(input.asInstanceOf[Array[Byte]], dstRate, maxFrames)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData)
-        graft.multimodal.Multimodal.audioResampleKernel($c, $dstRate, $maxFrames);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
+  def evalInput(input: Array[Byte]): ArrayData =
+    Multimodal.audioResampleKernel(input, dstRate, maxFrames)
   override protected def withNewChildInternal(newChild: Expression): AudioResample =
     copy(child = newChild)
 }

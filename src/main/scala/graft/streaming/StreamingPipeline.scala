@@ -15,13 +15,15 @@ import graft.pipeline.{PipelineRunner, TranscriptPipeline}
   * the north-rule deliverable; this module shows the identical transform
   * running incrementally:
   *
-  *  - parse/enrich/route are stateless narrow ops + broadcast joins, so
-  *    [[TranscriptPipeline.transform]] applies to a streaming DataFrame
-  *    unchanged — one definition, two execution modes.
-  *  - [[startSnapshotSinks]] runs each micro-batch through the batch
-  *    runner's fan-out and commit protocol, with the streaming checkpoint as
-  *    the cursor (filebeat/registrar semantics: offsets only advance after
-  *    the batch's one commit, its sink files and ack together).
+  *  - parse/enrich/route are stateless narrow ops (the enrich is an inline
+  *    lookup, not a join), so [[TranscriptPipeline.transform]] applies to a
+  *    streaming DataFrame unchanged — one definition, two execution modes.
+  *  - [[startSnapshotSinks]] routes each micro-batch through
+  *    [[TranscriptPipeline.sinkFast]] (the status fast path, as the batch
+  *    runner does) into the batch runner's fan-out and commit protocol,
+  *    with the streaming checkpoint as the cursor (filebeat/registrar
+  *    semantics: offsets only advance after the batch's one commit, its
+  *    sink files and ack together).
   *  - [[windowedMetrics]] is the observer counter set as a watermarked
   *    windowed aggregation (libbeat/publisher/pipeline/monitoring.go:94-104).
   *  - [[convOffsets]] mirrors the per-file State high-water mark
