@@ -176,11 +176,13 @@ object SparkEntry {
           | message, CAST(NULL AS VARCHAR) AS script_error, status
           | FROM parsed""".stripMargin),
 
-    // --- enrich stage (broadcast hash join against lookup dims) ---
+    // --- enrich stage (the lookups as map literals, in codegen) ---
+    // "broadcast" still holds: the dims reach every task inside the task
+    // binary Spark broadcasts. No hash relation is built and there is no
+    // join key, so there is nothing to salt.
     Query("q_enrich_broadcast", (s, dir) =>
-      graft.enrich.Enrich.enrich(t(s, dir))
-        .select("conv_id", "turn_idx", "tool", "role",
-          "tool_kind", "tool_team", "role_class", "role_priority"),
+      t(s, dir).select(Seq("conv_id", "turn_idx", "tool", "role").map(col) ++
+        graft.enrich.Enrich.columns: _*),
       oracle = OracleCte.transcripts + "," + OracleCte.lookups +
         """ SELECT conv_id, turn_idx, t.tool AS tool, t.role AS role,
           | tool_kind, tool_team, role_class, role_priority

@@ -1,7 +1,7 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -216,8 +216,22 @@ final class Registry(val root: String, spark: SparkSession,
 }
 
 object Registry {
+  private val GroupTxnPrefix = "group-"
+
   /** a batch run group's txn key (its snapshot in the root log). */
-  def groupTxn(group: Int): String = s"group-$group"
+  def groupTxn(group: Int): String = s"$GroupTxnPrefix$group"
+
+  /** whether `txn` is a batch run group's key ([[groupTxn]]) */
+  def isGroupTxn(txn: String): Boolean = txn.startsWith(GroupTxnPrefix)
+
+  /** a streaming micro-batch's txn key: its batch id and the content
+    * fingerprint `observation` holds as `sig` (0 for an empty batch, whose
+    * fingerprint is null). Old roots replay to no-ops only while this
+    * format stays byte-identical. */
+  def batchTxn(batchId: Long, observation: Observation): String = {
+    val fp = Option(observation.get("sig")).fold(0L)(_.asInstanceOf[Long])
+    s"batch-$batchId-${java.lang.Long.toHexString(fp)}"
+  }
 
   /** the offsets table, a dir under the root */
   val OffsetsTable = "registry"

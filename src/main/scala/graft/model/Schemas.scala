@@ -46,9 +46,10 @@ object Sinks {
   val All: Seq[String] = Seq(Es, Ls, Dropped)
 }
 
-/** Static lookup data for the enrich stage (≈ translate_sid / add_fields
-  * broadcast-join pattern, libbeat/processors/translate_sid/translatesid.go:76-118).
-  * Small and broadcastable by construction.
+/** Static lookup data for the enrich stage (≈ translate_sid / add_fields,
+  * libbeat/processors/translate_sid/translatesid.go:76-118), the dims'
+  * one definition: `graft.enrich.Enrich.columns` compiles them into
+  * per-row map lookups, and `OracleCte.lookups` states them in SQL.
   */
 object Lookups {
   /** {V,D,I,W,E,F} → long level names

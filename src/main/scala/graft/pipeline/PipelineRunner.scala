@@ -102,8 +102,9 @@ object PipelineRunner {
   /** Commit one staged group under `txn`: move each sink's slice (and,
     * given the offsets' schema, the group's [[graft.checkpoint.Registry.stagedOffsets]]
     * slice) into its table, then ack them all in ONE commit with the
-    * lineage, then drop the group's staging. None when a concurrent
-    * runner's ack won. `groups`: a batch run's group count, recorded in the
+    * lineage. None when a concurrent runner's ack won. The staging left
+    * behind is dropped by the caller's `cleanupRunStaging`, once per run or
+    * micro-batch. `groups`: a batch run's group count, recorded in the
     * lineage. */
   def commit(reg: Registry, txn: String, group: Int, staged: Staged,
              groups: Option[Int] = None, offsets: Option[StructType] = None): Option[GroupResult] = {
@@ -120,9 +121,8 @@ object PipelineRunner {
     // snapshot's sink file entries carry their sizes.
     val lineage = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val groupsJson = groups.fold("")(n => s""""groups":$n,""")
-    val won = reg.ack(txn, s"""{$groupsJson"counts":$lineage}""")
-    reg.cleanupStaging(group) // what is left of the staging is garbage
-    if (won) Some(GroupResult(group, counts)) else None
+    if (reg.ack(txn, s"""{$groupsJson"counts":$lineage}""")) Some(GroupResult(group, counts))
+    else None
   }
 
   /** Run (or resume) the pipeline over `input`, writing under `root`.
@@ -200,7 +200,7 @@ object PipelineRunner {
     * acked groups' conversations be ingested again. Acks that record no
     * count (written before counts were recorded) are not checked. */
   private def requireGroups(root: String, log: SnapshotTable.TableState, groups: Int): Unit =
-    for (s <- log.snapshots if s.txn.exists(_.startsWith("group-"));
+    for (s <- log.snapshots if s.txn.exists(Registry.isGroupTxn);
          json <- s.summary; n <- Option(Mapper.readTree(json).get("groups"))
          if n.asInt != groups)
       throw new IllegalArgumentException(

@@ -49,9 +49,9 @@ object TranscriptPipeline {
       .select(EventColumns.map(col) :+ col("_p.*"): _*)
 
   /** full transform; adds `sink` and a deterministic `doc_id`. The enrich
-    * step uses the inline (map-literal) path: the dims are static vocabulary
-    * tables, so the lookup stays inside whole-stage codegen with no join
-    * operator — semantics identical to the broadcast join (EnrichSpec). */
+    * lookups are map literals ([[graft.enrich.Enrich.columns]]), so they
+    * stay inside whole-stage codegen with no join operator; EnrichSpec pins
+    * them to a left join of the dims. */
   def transform(df: DataFrame): DataFrame =
     derive(df, selector.sinkColumn.as("sink"), docId)
 
@@ -69,7 +69,7 @@ object TranscriptPipeline {
   /** [[parse]], then the enrich lookups and `last` in ONE projection: one
     * plan node, not a `withColumn` each, to analyse per read. */
   private def derive(df: DataFrame, last: Column*): DataFrame =
-    parse(df).select((col("*") +: graft.enrich.Enrich.inlineColumns) ++ last: _*)
+    parse(df).select((col("*") +: graft.enrich.Enrich.columns) ++ last: _*)
 
   /** routed rows destined for real sinks (excludes predicate-filtered). */
   def routed(df: DataFrame): DataFrame =

@@ -25,7 +25,8 @@ import graft.pipeline.{PipelineRunner, TranscriptPipeline}
   *    semantics: offsets only advance after the batch's one commit, its
   *    sink files and ack together).
   *  - [[windowedMetrics]] is the observer counter set as a watermarked
-  *    windowed aggregation (libbeat/publisher/pipeline/monitoring.go:94-104).
+  *    windowed aggregation (libbeat/publisher/pipeline/monitoring.go:94-104),
+  *    routed by [[TranscriptPipeline.sinkFast]] as the batch metrics are.
   *  - [[convOffsets]] mirrors the per-file State high-water mark
   *    (filebeat/input/file/state.go:29-43) with mapGroupsWithState.
   */
@@ -66,8 +67,7 @@ object StreamingPipeline {
           .withColumn("group", lit(0))
         try {
           val staged = PipelineRunner.stage(routed, reg, Seq(0))
-          val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
-          PipelineRunner.commit(reg, s"batch-$batchId-${java.lang.Long.toHexString(fp)}", 0, staged)
+          PipelineRunner.commit(reg, Registry.batchTxn(batchId, sig), 0, staged)
         } finally reg.cleanupRunStaging()
         ()
       }
@@ -76,10 +76,12 @@ object StreamingPipeline {
 
   /** watermarked per-window × sink counts (observer metrics, streaming form).
     * The watermark bounds state: late rows beyond `lateness` are dropped the
-    * same way the reference's close_timeout abandons stale harvesters. */
+    * same way the reference's close_timeout abandons stale harvesters. Like
+    * [[TranscriptPipeline.metrics]], it routes by the status fast path: a
+    * count reads no parsed field. */
   def windowedMetrics(input: DataFrame, windowLen: String = "1 hour",
                       lateness: String = "10 minutes"): DataFrame =
-    TranscriptPipeline.transform(input.withWatermark("ts", lateness))
+    TranscriptPipeline.sinkFast(input.withWatermark("ts", lateness))
       .groupBy(window(col("ts"), windowLen), col("sink"))
       .agg(count(lit(1)).as("events"))
 
@@ -282,8 +284,7 @@ object StreamingPipeline {
           rows.observe(sig, expr("bit_xor(xxhash64(conv_id, turn_idx, text))").as("sig"))
             .sortWithinPartitions("conv_id", "turn_idx")
             .write.options(LocalFs.writeOptions).mode("overwrite").parquet(staging)
-          val fp = Option(sig.get("sig")).fold(0L)(_.asInstanceOf[Long]) // null: empty batch
-          table.commit(s"batch-$batchId-${java.lang.Long.toHexString(fp)}", None,
+          table.commit(Registry.batchTxn(batchId, sig), None,
             Seq(SnapshotTable.Slice("", table.moveIn(staging), Some(rows.schema))))
         } finally {
           val dir = new org.apache.hadoop.fs.Path(staging)

@@ -44,18 +44,13 @@ class CodegenParitySpec extends SparkSpec {
     }
   }
 
-  test("sketch kernels: minhash_bands_tokens, shingle_jaccard_packed, ordered_topk") {
+  test("sketch kernels: minhash_bands_tokens, shingle_jaccard_packed") {
     codegenParity("minhash_bands_tokens") {
       texts.select(minhash_bands_tokens(split(col("t"), " "), 3, 32, 16).as("r"))
     }
     codegenParity("shingle_jaccard_packed") {
       texts.select(shingle_jaccard_packed(
         split(col("t"), " "), split(reverse(col("t")), " "), 3).as("r"))
-    }
-    codegenParity("ordered_topk") {
-      Seq(("a", 3, "z"), ("a", 1, "x"), ("a", 2, "y"), ("b", 9, "q"))
-        .toDF("k", "o", "v")
-        .groupBy("k").agg(ordered_topk(col("o"), col("v"), 2).as("r"))
     }
   }
 

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
+import graft.model.Lookups
+import graft.pipeline.TranscriptPipeline
 import graft.sources.Transcripts
 
 /** enrich-path equivalence + fast-digest parity. */
@@ -12,16 +14,24 @@ class EnrichSpec extends SparkSpec {
   lazy val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
 
   test("inline (map-literal) enrich ≡ broadcast-join enrich") {
-    val cols = Seq("conv_id", "turn_idx", "tool", "role",
-      "tool_kind", "tool_team", "role_class", "role_priority").map(col)
-    val joined = Enrich.enrich(t).select(cols: _*)
-    val inline = Enrich.enrichInline(t).select(cols: _*)
+    // the sf0.001 keys, plus a tool and a role no dim holds and null keys
+    val extra = Seq[(String, String)](("ghost", "alien"), (null, null)).toDF("tool", "role")
+    val keys = t.select("tool", "role").unionByName(extra)
+    val cols = Seq("tool", "role", "tool_kind", "tool_team", "role_class", "role_priority").map(col)
+    val joined = keys
+      .join(broadcast(Lookups.ToolMeta.toDF("tool", "tool_kind", "tool_team")), Seq("tool"), "left")
+      .join(broadcast(Lookups.RoleMeta.toDF("role", "role_class", "role_priority")), Seq("role"), "left")
+      .select(cols: _*)
+    val inline = keys.select(col("*") +: Enrich.columns: _*).select(cols: _*)
     assert(joined.exceptAll(inline).isEmpty && inline.exceptAll(joined).isEmpty)
+    val misses = extra.select(Enrich.columns: _*).collect()
+    assert(misses.length == 2 && misses.forall(r => (0 until 4).forall(r.isNullAt)),
+      misses.toSeq)
   }
 
   test("inline enrich plan has no join operator") {
-    val plan = Enrich.enrichInline(t).queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
+    val plan = TranscriptPipeline.transform(t).queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
   }
 
   test("sha256_hex ≡ sha2(s, 256) including empty and unicode") {

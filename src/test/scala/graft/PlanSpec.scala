@@ -134,14 +134,6 @@ class PlanSpec extends SparkSpec {
       s"actions chain must not add shuffles beyond the source window:\n$plan")
   }
 
-  test("enrich broadcast join never shuffles the fact side") {
-    val parsed = TranscriptPipeline.parse(
-      graft.sources.Transcripts.fromEvents(spark, "/root/testdata/sf0.001"))
-    val plan = graft.enrich.Enrich.enrich(parsed).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"))
-    assert(!plan.contains("SortMergeJoin"))
-  }
-
   test("ANN top-k plans contain no per-query window and no global sort") {
     // the per-query top-k must be the bounded TopKByScore aggregate: a
     // row_number window sorts EVERY candidate of a query in one task — a

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.enrich.Enrich
 import graft.sources.Transcripts
 
 /** Hot-conversation skew handling: the synthesized corpus gives one conv
@@ -199,15 +198,5 @@ class SkewSpec extends SparkSpec {
     val keepers = rows.count(_.getString(1).contains("ACCEPT ALL COOKIES"))
     assert(keepers == 1, s"boilerplate kept $keepers times")
     assert(rows.count(r => r.getInt(3) == 1) == n - 1)
-  }
-
-  test("salted repartition spreads the hot conv across partitions") {
-    val df = Transcripts.synthesize(spark, 20000L, 400L)
-    val salted = Enrich.saltedRepartition(df, "conv_id", saltBuckets = 8, numPartitions = 8)
-    val sizes = salted.groupBy(spark_partition_id().as("pid")).count()
-      .select("count").collect().map(_.getLong(0))
-    val (mx, mn) = (sizes.max, sizes.min)
-    // near-even spread: no partition holds more than 2× the smallest
-    assert(mx <= 2 * mn, s"still skewed after salting: max=$mx min=$mn sizes=${sizes.toSeq}")
   }
 }

@@ -377,12 +377,21 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("winmetrics")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
+    val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
     q.stop()
 
     val rows = spark.table("winmetrics").collect()
     assert(rows.map(_.getLong(2)).sum == events.length.toLong)
     assert(rows.map(_.getString(1)).toSet.subsetOf(
       Set(Sinks.Es, Sinks.Ls, Sinks.Dropped, TranscriptPipeline.Filtered)))
+    // per-sink totals over all windows are the batch metrics' counts
+    val perSink = rows.groupBy(_.getString(1)).map { case (k, rs) => k -> rs.map(_.getLong(2)).sum }
+    val batch = TranscriptPipeline.metrics(events.toSeq.toDF()).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perSink == batch)
+    // counting sinks routes by the status fast path, never the full parse
+    assert(plan.contains("serverlog_status") && !plan.contains("serverlog_parse"), plan)
   }
 
   test("stateless parse expressions run under Structured Streaming: syslog + CEF") {
