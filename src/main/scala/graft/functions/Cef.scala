@@ -179,11 +179,14 @@ object CefKernel {
     catch { case _: NumberFormatException => false }
   }
 
-  private[graft] def validGoBool(s: String): Boolean = s match {
-    case "1" | "t" | "T" | "TRUE" | "true" | "True" |
-         "0" | "f" | "F" | "FALSE" | "false" | "False" => true
-    case _ => false
+  /** Go strconv.ParseBool: the boolean, or null for any other string. */
+  private[graft] def parseGoBool(s: String): java.lang.Boolean = s match {
+    case "1" | "t" | "T" | "TRUE" | "true" | "True"    => true
+    case "0" | "f" | "F" | "FALSE" | "false" | "False" => false
+    case _                                             => null
   }
+
+  private[graft] def validGoBool(s: String): Boolean = parseGoBool(s) != null
 
   /** net.ParseMAC after insertMACSeparators (types.go:92-130): EUI-48/64 as
     * bare hex, or hex pairs with `:`/`-`, or dotted 4-hex groups. */

@@ -430,11 +430,7 @@ object Dissect {
           case "long"   => parseGoInt(s)
           case "float"  => java.lang.Float.parseFloat(s)
           case "double" => java.lang.Double.parseDouble(s)
-          case "boolean" => s match {
-            case "1" | "t" | "T" | "true" | "TRUE" | "True"    => true
-            case "0" | "f" | "F" | "false" | "FALSE" | "False" => false
-            case _                                             => null
-          }
+          case "boolean" => CefKernel.parseGoBool(s)
           case "ip" => if (IpOps.isValidIp(s)) UTF8String.fromString(s) else null
         }
       } catch { case _: NumberFormatException => null }

@@ -33,8 +33,7 @@ object PslKernel {
     * (publicsuffix.org's public_suffix_list.dat, MPL-2.0 public data; the
     * sandbox has no egress, so a distro snapshot is checked in the same way
     * the reference bakes the generated table into publicsuffix/table.go).
-    * Parsed once per JVM; ~9.5k rules. This is the DEFAULT rule set — the
-    * subset below remains only as a tiny self-contained fixture. */
+    * Parsed once per JVM; ~9.5k rules. This is the DEFAULT rule set. */
     lazy val FullRules: Seq[String] = {
     val in = getClass.getResourceAsStream("/graft/public_suffix_list.dat")
     require(in != null, "bundled /graft/public_suffix_list.dat missing")
@@ -42,16 +41,6 @@ object PslKernel {
       java.nio.charset.StandardCharsets.UTF_8))
     finally in.close()
   }
-
-  /** Representative subset of the Public Suffix List (publicsuffix.org). */
-  val DefaultRules: Seq[String] = Seq(
-    "com", "net", "org", "io", "co", "edu", "gov", "mil", "info", "biz",
-    "uk", "co.uk", "org.uk", "ac.uk", "gov.uk",
-    "au", "com.au", "net.au", "org.au",
-    "jp", "co.jp", "ne.jp", "or.jp",
-    "de", "fr", "it", "nl", "cn", "com.cn",
-    "github.io", "gitlab.io", "s3.amazonaws.com", "blogspot.com",
-    "*.ck", "!www.ck")
 
   /** Parse publicsuffix.org list-format content into rule specs: one rule
     * per line, `//` comment lines and blanks skipped, everything after the

@@ -163,116 +163,30 @@ object WinEventLogKernel {
     acc
   }
 
-  // --- Minimal element tree built with the JDK StAX pull parser. The first
-  // implementation parsed with the shared hardened DOM builder; the pull
-  // parser is spec-conformant XML with a fraction of the allocation (no
-  // org.w3c.dom node machinery), ~3× the events/s, and IDENTICAL observable
-  // semantics for everything this decoder reads: local-name element match
-  // (like Go encoding/xml), direct-chardata text, attribute lookup by local
-  // name, XML line-ending normalization, entity/DOCTYPE hardening (DTD
-  // support off → a DOCTYPE or undefined entity is a per-row parse error,
-  // exactly like the disallow-doctype DOM configuration).
-  private final class XNode(val name: String) {
-    var attrNames: Array[String] = null
-    var attrValues: Array[String] = null
-    var kids: java.util.ArrayList[XNode] = null
-    val text = new java.lang.StringBuilder()
-    def attr(n: String): String = {
-      if (attrNames == null) return ""
-      var i = 0
-      while (i < attrNames.length) {
-        if (attrNames(i) == n) return attrValues(i)
-        i += 1
-      }
-      ""
-    }
-    def hasAttr(n: String): Boolean = {
-      if (attrNames == null) return false
-      var i = 0
-      while (i < attrNames.length) { if (attrNames(i) == n) return true; i += 1 }
-      false
-    }
-  }
-
-  private val staxFactories: ThreadLocal[javax.xml.stream.XMLInputFactory] =
-    ThreadLocal.withInitial { () =>
-      val f = javax.xml.stream.XMLInputFactory.newInstance()
-      f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
-      f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-        java.lang.Boolean.FALSE)
-      f
-    }
-
-  /** Parse to the minimal tree; null on malformed input (expected per-row
-    * outcome — nothing reaches stderr). The reader is driven to
-    * END_DOCUMENT so trailing garbage is a parse error, like DOM. */
-  private def parseTree(xml: String): XNode = {
-    var reader: javax.xml.stream.XMLStreamReader = null
-    try {
-      reader = staxFactories.get()
-        .createXMLStreamReader(new java.io.StringReader(xml))
-      var root: XNode = null
-      var top: XNode = null
-      val stack = new java.util.ArrayDeque[XNode]()
-      while (reader.hasNext) {
-        reader.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            val n = new XNode(reader.getLocalName)
-            val na = reader.getAttributeCount
-            if (na > 0) {
-              n.attrNames = Array.tabulate(na)(reader.getAttributeLocalName)
-              n.attrValues = Array.tabulate(na)(reader.getAttributeValue)
-            }
-            if (top == null) root = n
-            else {
-              if (top.kids == null) top.kids = new java.util.ArrayList[XNode](4)
-              top.kids.add(n)
-            }
-            stack.push(n)
-            top = n
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            stack.pop()
-            top = stack.peek()
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS |
-              javax.xml.stream.XMLStreamConstants.CDATA =>
-            if (top != null)
-              top.text.append(reader.getTextCharacters, reader.getTextStart,
-                reader.getTextLength)
-          case _ => // comments, PIs, whitespace outside the root
-        }
-      }
-      root
-    } catch {
-      case _: javax.xml.stream.XMLStreamException => null
-      case _: RuntimeException                    => null // factory property quirks
-    } finally {
-      if (reader != null)
-        try reader.close() catch { case _: javax.xml.stream.XMLStreamException => }
-    }
-  }
-
-  private def children(e: XNode): Iterator[XNode] =
+  // --- Reads the XmlNode tree by local name (like Go encoding/xml):
+  // elements, attributes, and direct character data. The tree's reader
+  // normalizes line endings and rejects a DOCTYPE or an undefined entity
+  // (a per-row decode failure).
+  private def children(e: XmlNode): Iterator[XmlNode] =
     if (e.kids == null) Iterator.empty
     else scala.jdk.CollectionConverters.ListHasAsScala(e.kids).asScala.iterator
 
-  private def localName(e: XNode): String = e.name
-
-  private def child(e: XNode, name: String): XNode = {
+  private def child(e: XmlNode, name: String): XmlNode = {
     if (e == null || e.kids == null) return null // absent parent ⇒ absent child
     var i = 0
     while (i < e.kids.size()) {
       val c = e.kids.get(i)
-      if (c.name == name) return c
+      if (c.local == name) return c
       i += 1
     }
     null
   }
 
   /** direct character data of an element (Go `xml:",chardata"`). */
-  private def text(e: XNode): String =
+  private def text(e: XmlNode): String =
     if (e == null) "" else e.text.toString
 
-  private def attr(e: XNode, name: String): String =
+  private def attr(e: XmlNode, name: String): String =
     if (e == null) "" else e.attr(name)
 
   private def utf8(s: String): UTF8String =
@@ -302,26 +216,26 @@ object WinEventLogKernel {
       new GenericArrayData(h.valuesIterator.map(UTF8String.fromString).toArray[Any]))
 
   /** KeyValue children of a wrapper element (event.go:266-296). */
-  private def kvPairs(wrapper: XNode): Seq[(String, String)] =
+  private def kvPairs(wrapper: XmlNode): Seq[(String, String)] =
     if (wrapper == null) Nil
     else children(wrapper).map { c =>
       val nameAttr = attr(c, "Name")
-      val k = if (nameAttr.nonEmpty) nameAttr else localName(c)
+      val k = if (nameAttr.nonEmpty) nameAttr else c.local
       (k, text(c))
     }.toSeq
 
   /** Full decode; null on any reference-equivalent unmarshal error. */
   def decode(xml: String): InternalRow = {
-    val root = parseTree(xml)
+    val root = XmlNode.parse(xml)
     if (root == null) return null
     try decodeDoc(root)
     catch { case DecodeError => null }
   }
 
-  private def decodeDoc(root: XNode): InternalRow = {
+  private def decodeDoc(root: XmlNode): InternalRow = {
     val sys = child(root, "System")
     val provider = child(sys, "Provider")
-    def sysOrNull(name: String): XNode =
+    def sysOrNull(name: String): XmlNode =
       if (sys == null) null else child(sys, name)
 
     val eventId = {
@@ -391,14 +305,14 @@ object WinEventLogKernel {
     if (userDataWrapper != null && userDataInner == null) throw DecodeError
     val userData = addPairs(kvPairs(userDataInner))
     if (userData != null)
-      userData("xml_name") = localName(userDataInner) // Put overwrites (event.go:145)
+      userData("xml_name") = userDataInner.local // Put overwrites (event.go:145)
 
     val rendering = child(root, "RenderingInfo")
     def rend(name: String): String = text(if (rendering == null) null else child(rendering, name))
     val renderedKeywords: Seq[String] = {
       val kw = if (rendering == null) null else child(rendering, "Keywords")
       if (kw == null) Nil
-      else children(kw).filter(localName(_) == "Keyword").map(text).toSeq
+      else children(kw).filter(_.local == "Keyword").map(text).toSeq
     }
     val errorCode = {
       val ped = child(root, "ProcessingErrorData")

@@ -5,6 +5,119 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** One element of the tree [[XmlNode.parse]] builds — the repo's one XML
+  * reader, shared by `decode_xml_map` and `decode_wineventlog`. `name` is
+  * the qualified name as written (`prefix:local`); attributes are kept in
+  * document order under their qualified names, namespace declarations
+  * (`xmlns`, `xmlns:<p>`) among them; `text` is every character and CDATA
+  * run directly inside the element, concatenated. Each decoder reads what it
+  * needs: `decode_xml_map` the qualified names, `decode_wineventlog` the
+  * local names (Go `xml.Name.Local`). */
+private[functions] final class XmlNode(val name: String) {
+  var attrNames: Array[String] = null
+  var attrValues: Array[String] = null
+  var kids: java.util.ArrayList[XmlNode] = null
+  val text = new java.lang.StringBuilder()
+
+  def local: String = XmlNode.local(name)
+
+  /** value of the first attribute whose local name is `n`, else "". */
+  def attr(n: String): String = {
+    val i = attrIndex(n)
+    if (i < 0) "" else attrValues(i)
+  }
+  def hasAttr(n: String): Boolean = attrIndex(n) >= 0
+
+  private def attrIndex(n: String): Int = {
+    if (attrNames == null) return -1
+    var i = 0
+    while (i < attrNames.length) {
+      if (XmlNode.local(attrNames(i)) == n) return i
+      i += 1
+    }
+    -1
+  }
+}
+
+private[functions] object XmlNode {
+
+  /** Go's split of a name at its colon (encoding/xml `nsname`): the part
+    * after it, unless either side is empty. */
+  def local(qname: String): String = {
+    val i = qname.indexOf(':')
+    if (i <= 0 || i == qname.length - 1) qname else qname.substring(i + 1)
+  }
+
+  // the reader splits some names at the colon even when namespace-unaware
+  private def qname(prefix: String, local: String): String =
+    if (prefix == null || prefix.isEmpty) local else s"$prefix:$local"
+
+  // Hardened: no DTD support and no external entities, so an entity other
+  // than the five predefined ones is a parse error. Namespace-unaware, like
+  // Go's encoding/xml, which never rejects an undeclared prefix.
+  private val factories: ThreadLocal[javax.xml.stream.XMLInputFactory] =
+    ThreadLocal.withInitial { () =>
+      val f = javax.xml.stream.XMLInputFactory.newInstance()
+      f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
+      f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
+        java.lang.Boolean.FALSE)
+      f.setProperty(javax.xml.stream.XMLInputFactory.IS_NAMESPACE_AWARE, java.lang.Boolean.FALSE)
+      f
+    }
+
+  /** The root element; null on malformed input, which is an expected
+    * per-row outcome, so nothing reaches stderr. A DOCTYPE and a leading
+    * U+FEFF are malformed here: the StAX reader on Spark's classpath would
+    * skip them, not reject them. The reader is driven to END_DOCUMENT, so
+    * content after the root is a parse error too. */
+  def parse(xml: String): XmlNode = {
+    if (xml.startsWith("\uFEFF")) return null
+    var reader: javax.xml.stream.XMLStreamReader = null
+    try {
+      reader = factories.get().createXMLStreamReader(new java.io.StringReader(xml))
+      var root: XmlNode = null
+      var top: XmlNode = null
+      val stack = new java.util.ArrayDeque[XmlNode]()
+      while (reader.hasNext) {
+        reader.next() match {
+          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
+            val n = new XmlNode(qname(reader.getPrefix, reader.getLocalName))
+            val na = reader.getAttributeCount
+            if (na > 0) {
+              n.attrNames = Array.tabulate(na)(i =>
+                qname(reader.getAttributePrefix(i), reader.getAttributeLocalName(i)))
+              n.attrValues = Array.tabulate(na)(reader.getAttributeValue)
+            }
+            if (top == null) root = n
+            else {
+              if (top.kids == null) top.kids = new java.util.ArrayList[XmlNode](4)
+              top.kids.add(n)
+            }
+            stack.push(n)
+            top = n
+          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
+            stack.pop()
+            top = stack.peek()
+          case javax.xml.stream.XMLStreamConstants.CHARACTERS |
+              javax.xml.stream.XMLStreamConstants.CDATA =>
+            if (top != null)
+              top.text.append(reader.getTextCharacters, reader.getTextStart,
+                reader.getTextLength)
+          case javax.xml.stream.XMLStreamConstants.DTD => return null
+          case _ => // comments, PIs, whitespace outside the root
+        }
+      }
+      root
+    } catch {
+      case _: javax.xml.stream.XMLStreamException => null
+      case _: RuntimeException                    => null // factory property quirks
+    } finally {
+      if (reader != null)
+        try reader.close() catch { case _: javax.xml.stream.XMLStreamException => }
+    }
+  }
+}
+
 /** decode_xml_fields (libbeat/processors/decode_xml +
   * libbeat/common/encoding/xml/decode.go:55-120) — the columnar analogue:
   * XML decoded with the reference's structural rules (child elements nest,
@@ -15,45 +128,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * flatten convention as `Actions.addLabels`. Parse failure → NULL map
   * (ignore_failure → dead-letter routing, like every other decode here).
   *
-  * Uses the JDK's DOM parser with DTD/external-entity processing disabled
-  * (no XXE surface) — zero external dependencies.
+  * Walks the [[XmlNode]] tree. Keys are qualified names (`prefix:local`),
+  * namespace declarations are attributes, and an element's attributes are
+  * emitted sorted by qualified name (the case table in ActionsSpec pins the
+  * output order).
   */
 object XmlKernel {
 
-  private val factories: ThreadLocal[javax.xml.parsers.DocumentBuilder] =
-    ThreadLocal.withInitial { () =>
-      val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-      f.setFeature("http://xml.org/sax/features/external-general-entities", false)
-      f.setFeature("http://xml.org/sax/features/external-parameter-entities", false)
-      f.setXIncludeAware(false)
-      f.setExpandEntityReferences(false)
-      f.newDocumentBuilder()
-    }
-
-  /** Quiet handler: malformed XML is an EXPECTED per-row outcome (→ null
-    * map), so nothing may reach stderr — the JDK default handler prints a
-    * "[Fatal Error]" line per failure, which at 10^12 rows is an I/O flood. */
-  private object SilentErrors extends org.xml.sax.ErrorHandler {
-    def warning(e: org.xml.sax.SAXParseException): Unit = ()
-    def error(e: org.xml.sax.SAXParseException): Unit = ()
-    def fatalError(e: org.xml.sax.SAXParseException): Unit = throw e
-  }
-
-  /** Hardened DOM parse shared by every XML decode kernel; null on malformed
-    * input (per-row expected outcome, silent — see [[SilentErrors]]). */
-  private[functions] def parseDoc(xml: String): org.w3c.dom.Document =
-    try {
-      val b = factories.get()
-      b.reset()
-      b.setErrorHandler(SilentErrors) // reset() restores the printing default
-      b.parse(new org.xml.sax.InputSource(new java.io.StringReader(xml)))
-    } catch { case _: Exception => null }
-
   /** decode + flatten; null on malformed XML. */
   def toFlatMap(xml: String, toLower: Boolean): Seq[(String, String)] = {
-    val doc = parseDoc(xml)
-    if (doc == null) return null
+    val root = XmlNode.parse(xml)
+    if (root == null) return null
 
     // LinkedHashMap: insertion-ordered output with map-overwrite semantics —
     // the reference builds Go maps, where addAttributes runs at EndElement
@@ -68,28 +153,15 @@ object XmlKernel {
 
     // reference shape: an element is (children-or-lists ++ attributes) with
     // cdata under #text when children exist, or the scalar itself otherwise
-    def walk(e: org.w3c.dom.Element, path: String): Unit = {
-      val attrs = e.getAttributes
+    def walk(e: XmlNode, path: String): Unit = {
       // group child elements by name to detect repeats (→ lists)
       val kids = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[org.w3c.dom.Element]]
-      val text = new StringBuilder
-      val nodes = e.getChildNodes
-      var i = 0
-      while (i < nodes.getLength) {
-        nodes.item(i) match {
-          case c: org.w3c.dom.Element =>
-            kids.getOrElseUpdate(key(c.getTagName),
-              scala.collection.mutable.ArrayBuffer.empty) += c
-          case t if t.getNodeType == org.w3c.dom.Node.TEXT_NODE ||
-            t.getNodeType == org.w3c.dom.Node.CDATA_SECTION_NODE =>
-            text.append(t.getNodeValue)
-          case _ =>
-        }
-        i += 1
+        .empty[String, scala.collection.mutable.ArrayBuffer[XmlNode]]
+      if (e.kids != null) e.kids.forEach { c =>
+        kids.getOrElseUpdate(key(c.name), scala.collection.mutable.ArrayBuffer.empty) += c
       }
-      val cdata = text.toString.trim
-      if (kids.isEmpty && attrs.getLength == 0) {
+      val cdata = e.text.toString.trim
+      if (kids.isEmpty && e.attrNames == null) {
         out(path) = cdata // pure leaf
       } else {
         if (cdata.nonEmpty) out(s"$path.#text") = cdata
@@ -102,16 +174,12 @@ object XmlKernel {
       }
       // attributes LAST: they overwrite same-named children, like the
       // reference's EndElement addAttributes into the Go map
-      i = 0
-      while (i < attrs.getLength) {
-        val a = attrs.item(i)
-        out(s"$path.${key(a.getNodeName)}") = a.getNodeValue
-        i += 1
-      }
+      if (e.attrNames != null)
+        for (i <- e.attrNames.indices.sortBy(e.attrNames(_)))
+          out(s"$path.${key(e.attrNames(i))}") = e.attrValues(i)
     }
 
-    val root = doc.getDocumentElement
-    walk(root, key(root.getTagName))
+    walk(root, key(root.name))
     out.toSeq
   }
 

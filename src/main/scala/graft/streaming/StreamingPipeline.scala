@@ -297,7 +297,10 @@ object StreamingPipeline {
 
   /** convenience: tail a directory of parquet transcript files as a stream
     * (the harvester/prospector analogue — the table format does the file
-    * discovery and offset bookkeeping that prospector.go hand-rolls). */
+    * discovery and offset bookkeeping that prospector.go hand-rolls). `ts`
+    * is declared `timestamp`, not the files' own `timestamp_ntz`: the
+    * watermarks of `dedupStream` and `startCuratedIngest` need TIMESTAMP
+    * (`EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE` otherwise). */
   def fromDirectory(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema("conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")

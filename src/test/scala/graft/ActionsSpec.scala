@@ -294,6 +294,48 @@ class ActionsSpec extends SparkSpec {
     assert(dtd.isNullAt(0))
   }
 
+  test("decode_xml_map case table: entries in order, both to_lower settings") {
+    import graft.functions.decode_xml_map
+    import scala.jdk.CollectionConverters._
+    val in = getClass.getResourceAsStream("/graft/decode_xml_map.json")
+    val cases =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in).get("cases")
+      finally in.close()
+    assert(cases.size() >= 40, s"only ${cases.size()} cases")
+    val all = cases.elements().asScala.toSeq
+    // null in the table = a null map (malformed input)
+    def want(j: com.fasterxml.jackson.databind.JsonNode): Seq[(String, String)] =
+      if (j.isNull) null else j.elements().asScala.map(e => (e.get(0).asText(), e.get(1).asText())).toSeq
+    // map_entries keeps the map's entry order
+    val rows = all.map(_.get("xml").asText()).toDF("x")
+      .select(map_entries(decode_xml_map(col("x"))),
+        map_entries(decode_xml_map(col("x"), toLower = true))).collect()
+    for ((c, r) <- all.zip(rows); (key, i) <- Seq("map" -> 0, "map_lower" -> 1)) {
+      val got =
+        if (r.isNullAt(i)) null
+        else r.getSeq[org.apache.spark.sql.Row](i).map(e => (e.getString(0), e.getString(1)))
+      assert(got == want(c.get(key)), s"$key [${c.get("name").asText()}]")
+    }
+  }
+
+  test("one XML reader: local names under any prefix; a DOCTYPE or a leading BOM is malformed") {
+    import graft.functions.{WinEventLogKernel, XmlKernel}
+    val event = "<e:Event><e:System><e:EventID>4672</e:EventID>" +
+      "<e:Channel>Security</e:Channel></e:System></e:Event>"
+    // an undeclared prefix is no error (as in Go encoding/xml): the
+    // wineventlog decoder matches local names, decode_xml_map keeps the
+    // qualified ones
+    val r = WinEventLogKernel.decode(event)
+    assert(r != null && r.getUTF8String(0).toString == "Security" &&
+      r.getUTF8String(1).toString == "4672")
+    assert(XmlKernel.toFlatMap(event, false) ==
+      Seq("e:Event.e:System.e:EventID" -> "4672", "e:Event.e:System.e:Channel" -> "Security"))
+    for (bad <- Seq("<!DOCTYPE Event>" + event, "\uFEFF" + event)) {
+      assert(WinEventLogKernel.decode(bad) == null, bad)
+      assert(XmlKernel.toFlatMap(bad, false) == null, bad)
+    }
+  }
+
   test("urldecode round-trips percent-encoding") {
     val df = Seq("a%20b%2Fc", "plain").toDF("s")
       .select(Actions.urlDecode(col("s")).as("d")).as[String].collect()
@@ -353,18 +395,50 @@ class ActionsSpec extends SparkSpec {
     assert(fp.getString(0) == fp.getString(1))
   }
 
-  test("XXH64 kernel: branch parity with Spark's XXH64 at seed 42, spec vector at seed 0") {
-    import graft.functions.Xxh64Kernel
-    // every input length 0..130 (empty, <4, <8, <32, ≥32 stripes + all tail
-    // combinations) must agree with Spark's own XXH64 at Spark's seed
-    for (n <- 0 to 130) {
-      val bytes = Array.tabulate[Byte](n)(i => ((i * 131) ^ (i >> 3)).toByte)
-      val expected = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, n, 42L)
-      assert(Xxh64Kernel.hash(bytes, n, 42L) == expected, s"len=$n")
-    }
-    // the published spec vector for seed 0 pins the seed handling
-    assert(Xxh64Kernel.hash(Array.emptyByteArray, 0, 0L) == 0xEF46DB3751D8E999L)
+  test("xxh64_hex golden table: every length 0..130 at seed 0") {
+    import graft.functions.method_digest
+    // lengths 0..130 reach every XXH64 branch: the empty input, the <4, <8
+    // and <32-byte tails, and 32-byte stripes followed by every tail length
+    val golden = Seq(
+      "ef46db3751d8e999", "e934a84adb052768", "28105d394690fecb", "a83378d1eb86ec62",
+      "9882e57ed36c4cfc", "a4f368ad8dec9bad", "6ded3ca98a71009d", "f0aef407b44730f8",
+      "a5bc8d8944331fe7", "a2852f960c31b119", "f8abb7f5e6907fb3", "aa89eac21870476f",
+      "3e242b8c1a8f2048", "e71d3e4a72a9ed7b", "461c268aed47f3ee", "fc475824c96708d2",
+      "e8c3e8c0203e3080", "0b16b13252de7233", "35564b6e34415b25", "292588ab64ef235a",
+      "b87a86b91db237b9", "c589358241643d07", "061c8efc37511b87", "b259e55faf0d3a25",
+      "01904fb22e599680", "e04e088005d9c9d2", "12ac7836ba254bf3", "e9c471af034e0166",
+      "90d50ee2d78a2cb2", "c3dede6eaba68b4a", "cc6971bdb72e8e53", "fde643635593f757",
+      "534cce89aa6534b7", "2a0a8254786e20de", "e923c62e7f554458", "ad90415ac699cdf4",
+      "5d8d53e0a543cd20", "5240b4bf5968a05d", "b594cfcd4d6436cd", "e61b70aa2da0e26e",
+      "ac4383c8e0b2939e", "cf8185c5d6c8faf9", "936b6b4ff16e75b5", "89324df8ca34eef5",
+      "9e21f764f74a73f7", "a75704f6f9ca79dd", "a99a8c60423f33dd", "6573e0d30ec2742e",
+      "cb99fc8c365b4335", "40eb16ca7aaae2b3", "0f3ea3dd4b7769f1", "54432178a35d154d",
+      "6d59ca22e06feb61", "20067079c0e77c83", "a2e78ac2542f319c", "0711fa777767c3f8",
+      "60a4df650bc588d9", "6c053a06900892bc", "6b7c60bed4a8a72a", "6c16f81b981460f3",
+      "ca65363174b90ef3", "0e61ef8a64fbeac6", "1d1964ef4ea392e8", "95116af90d48de50",
+      "38e43422f942db63", "5cd7d27974a3f37b", "5b9a243718e9b34c", "0d413b317217f142",
+      "edd8669f8114b785", "cf791d9131fbffbe", "165fbcd9a145fe7c", "11db4ad4b9fd58c2",
+      "9c4aa7ad3331acc3", "cd5a539600d9d379", "f8d9be726594b2d2", "b89886ac115b5930",
+      "1305c8d471da823c", "4c62f997b7fb2bbd", "acfce06cf45c8fda", "bc512129197b910c",
+      "d872e3eaf5d254d3", "415581233ad9a867", "4cc5cce9a2a635af", "58978581f86b850f",
+      "65737ac3e6e5b6fd", "c5f1d50576c2589b", "a1b892ca2559c02b", "7fa484ad170ac7db",
+      "edfe346f369341f7", "7b1be525d91a0272", "08502e19b6deb3df", "f489e3c38822de0d",
+      "382fd23fc42deb8a", "e6f127bd68601114", "ab8c38a292364931", "4c80f08ca53b78b5",
+      "d16e48640f5850b3", "6ffecf4756b1c560", "9d966c3be3359379", "9a370fc22b4c2fe6",
+      "3bd5c3576bacbb43", "89725a418f33d51c", "8182bf1bee944f30", "d9401e00b45503db",
+      "4370601b5a56a58e", "5edc60c69fd2696b", "5708d7ac7189150b", "5f2139cc78c1511f",
+      "4603b3adc03e6cdc", "7b4f99dc1424ad86", "a149202c9db542cf", "1eb8e1af66ab7213",
+      "5cc154b2d9eab728", "e3d44f46c76e2570", "dbb63a6697d95f7d", "6cb72e2c996be4ce",
+      "1a6b87f116902289", "06c18c5de055392d", "f600d10f8416e6cd", "d4adc6a01be6a04b",
+      "df990b75b6424bdf", "94dee084db31da08", "1eede6bea5a30766", "5fedd33dc7572f9d",
+      "451e0feaccc40718", "d43de46e92bbf702", "76fc1edb711616b8", "b5b3e7d44a84dfda",
+      "2d5ae6907ad2576c", "ef07b0abf4be656e", "9c956f4e6786b274")
+    // the published spec vector for the empty input at seed 0
+    assert(golden.head == "ef46db3751d8e999")
+    val bytes = (0 to 130).map(n => Array.tabulate[Byte](n)(i => ((i * 131) ^ (i >> 3)).toByte))
+    val got = bytes.toDF("b").select(method_digest(col("b").cast("string"), "xxhash"))
+      .as[String].collect()
+    assert(got.toSeq == golden)
   }
 
   test("fingerprint_fields is bit-identical to the reference processor (fingerprint_test.go goldens)") {

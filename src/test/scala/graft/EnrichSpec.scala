@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
 import graft.model.Lookups
-import graft.pipeline.TranscriptPipeline
 import graft.sources.Transcripts
 
 /** enrich-path equivalence + fast-digest parity. */
@@ -27,11 +26,6 @@ class EnrichSpec extends SparkSpec {
     val misses = extra.select(Enrich.columns: _*).collect()
     assert(misses.length == 2 && misses.forall(r => (0 until 4).forall(r.isNullAt)),
       misses.toSeq)
-  }
-
-  test("inline enrich plan has no join operator") {
-    val plan = TranscriptPipeline.transform(t).queryExecution.executedPlan.toString
-    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
   }
 
   test("sha256_hex ≡ sha2(s, 256) including empty and unicode") {

@@ -77,11 +77,6 @@ class PipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(joined.count() == 0)
   }
 
-  test("transform enrich is join-free (inline map literals)") {
-    val plan = TranscriptPipeline.transform(input).queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"inline enrich must not join:\n$plan")
-  }
-
   test("condition algebra compiles to Catalyst predicates") {
     import spark.implicits._
     val df = Seq(("a", 5.0), ("b", 15.0)).toDF("name", "v")
@@ -90,5 +85,11 @@ class PipelineSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val sel = Selector(Seq(SelectorRule(Regexp("name", "^a"), "x")), "y")
     val sinks = df.withColumn("s", sel.sinkColumn).select("s").collect().map(_.getString(0))
     assert(sinks.toSeq == Seq("x", "y"))
+    // has_fields: every listed field is non-null; an empty list is rejected
+    // when the predicate is built
+    val tagged = Seq(("a", "t"), ("b", null)).toDF("name", "tag")
+    val has = tagged.filter(HasFields(Seq("name", "tag")).toColumn).select("name").as[String]
+    assert(has.collect().toSeq == Seq("a"))
+    intercept[IllegalArgumentException](HasFields(Nil).toColumn)
   }
 }

@@ -42,6 +42,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*(1)"), s"no codegen span:\n$plan")
     assert(!plan.contains("*(2)"), s"transform should be ONE codegen span:\n$plan")
     assert(!plan.contains("Exchange"), s"transform must not shuffle:\n$plan")
+    assert(!plan.contains("Join"), s"transform must not join:\n$plan")
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       "no UDFs on the hot path")
     // the parse expression is evaluated once and fields projected from it —
